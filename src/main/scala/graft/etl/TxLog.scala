@@ -7,7 +7,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, expr, input_file_name, lit, not, pmod, shiftleft}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, input_file_name, lit, not, pmod, shiftleft}
 
 /** Minimal ACID table format over plain parquet: an ordered commit log of
   * immutable version files, each an atomic unit of add/remove file
@@ -428,26 +428,112 @@ object TxLog {
     versions(table).exists(v =>
       readActions(table, v).exists(a => a.op == "txn" && a.path == txn))
 
-  /** Attempt to publish `actions` as version `v`; true iff this writer
-    * won the race for that version number. */
   /** Automatic checkpoint cadence (round 15 — the Delta every-10-commits
     * pattern): each Nth committed version publishes a checkpoint so
     * snapshot replay stays O(N + files), not O(table age), without any
     * caller ever thinking about it. Best-effort and idempotent: a failed
     * or raced checkpoint write costs nothing (replay falls back to the
-    * previous one), and [[checkpoint]] remains callable manually. 0
-    * disables (tests that pin exact log layouts). */
-  private def CheckpointEvery: Long =
-    sys.props.get("graft.txlog.checkpoint.every").map(_.toLong).getOrElse(10L)
+    * previous one), and [[checkpoint]] remains callable manually. */
+  private val CheckpointEvery = 10L
 
+  /** The CAS: publish `actions` as version `v`; true iff this writer won
+    * the race for that version number. Only [[commitLoop]] and the
+    * version-1 claims of [[create]], [[convert]] and [[cloneTable]] call
+    * it. */
   private def tryCommit(table: String, v: Long, actions: Seq[Action]): Boolean = {
     val ok = CommitStore.of(table).tryPut(table, f"$v%020d.json",
       actions.map(render).mkString("\n"))
-    if (ok && CheckpointEvery > 0 && v % CheckpointEvery == 0)
+    if (ok && v % CheckpointEvery == 0)
       try checkpoint(table)
       catch { case _: Throwable => () } // best-effort; replay needs no cp
     ok
   }
+
+  /** What a writer's check at the claim target decides. */
+  private sealed trait AtBase
+  /** Attempt to publish `actions` as version base + 1. */
+  private final case class Claim(actions: Seq[Action]) extends AtBase
+  /** What the pass read or staged is stale: run the pass again. */
+  private case object Rebase extends AtBase
+  /** Nothing to commit: the writer returns None. */
+  private case object Skip extends AtBase
+
+  /** Validate-then-claim (FORMAT.md §3), the one commit loop behind every
+    * writer. `pass` reads and stages (None: nothing to commit) and
+    * returns the writer's check at a claim target. Per attempt the loop
+    * reads `base` = last version FIRST, runs the check AS OF base, then
+    * claims base + 1 through [[tryCommit]]; a CAS loss re-reads base and
+    * re-checks, so no commit can slip between a check and its claim (a
+    * check read AFTER the claim target leaves a window where a racer's
+    * rewrite passes unseen — the TxLogSpec storm test). [[Rebase]] re-runs
+    * the pass; its staged files stay unreferenced (vacuum GCs them).
+    * Returns the version this writer published. */
+  private def commitLoop(table: String)(pass: => Option[Long => AtBase]): Option[Long] = {
+    while (true) {
+      val atBase = pass match {
+        case Some(check) => check
+        case None => return None
+      }
+      var rebase = false
+      while (!rebase) {
+        val base = versions(table).lastOption.getOrElse(0L)
+        atBase(base) match {
+          case Claim(acts) => if (tryCommit(table, base + 1, acts)) return Some(base + 1)
+          case Rebase => rebase = true
+          case Skip => return None
+        }
+      }
+    }
+    None // unreachable
+  }
+
+  private type Dvs = Map[String, (String, Long)]
+
+  /** Did a commit up to the claim target remove one of `files` or change
+    * its deletion vector? (`state` is the replay AS OF base.) Anything
+    * built from those files' rows would then resurrect or lose a racer's
+    * change: rebase. */
+  private def filesMoved(files: Seq[String], dv0: Dvs,
+                         state: (Seq[Action], Dvs)): Boolean = {
+    val (addsB, dvB) = state
+    val live = addsB.map(_.path).toSet
+    !files.forall(live) || files.exists(f => dvB.get(f) != dv0.get(f))
+  }
+
+  /** The CHECK-constraint set a writer last enforced. A DDL commit racing
+    * the write changes the set at the claim target: [[changedAt]] adopts
+    * the new set and reports the move, [[reenforceAt]] re-validates the
+    * rows against it — the mirror image of addConstraint's
+    * validate-then-claim. */
+  private final class Enforced(table: String) {
+    private var cs = constraintsOf(table)
+    def enforce(rows: DataFrame): Unit = enforceConstraints(table, rows, cs)
+    def changedAt(base: Long): Boolean = {
+      val csB = constraintsOf(table, Some(base))
+      val moved = csB != cs
+      cs = csB
+      moved
+    }
+    def reenforceAt(base: Long, rows: DataFrame): Unit =
+      if (changedAt(base)) enforce(rows)
+  }
+
+  /** Identity watermarks now, the snapshot a staging pass assigns from. */
+  private def watermarks(table: String): Map[String, Option[Long]] =
+    identityColsOf(table).keys.map(n => n -> identityWatermark(table, n)).toMap
+
+  /** Did a racer advance a watched identity watermark past the pass's
+    * snapshot by the claim target? Then assigned ranges would collide and
+    * a supplied-column watermark would regress the sequence: restage. */
+  private def watermarkMoved(table: String, base: Long,
+                             wmSnap: Map[String, Option[Long]],
+                             watched: Iterable[String]): Boolean =
+    watched.exists(n =>
+      identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None))
+
+  /** Absolute path of a table-relative file. */
+  private def absPath(table: String, rel: String): String =
+    Paths.get(table, rel).toAbsolutePath.toString
 
   /** Parquet staging writes go through a per-session clone (shared
     * SparkContext, own SQLConf) pinned to INT64 TIMESTAMP_MICROS: the
@@ -479,6 +565,11 @@ object TxLog {
     * stats-less add (correct, just never skipped). */
   private def stage(spark: SparkSession, table: String, df: DataFrame): Seq[Action] =
     stage(spark, table, df, partColsOf(table))
+
+  /** Staged-file sizing (see [[stage]]): coalesce toward this many bytes
+    * per file, never below this many partitions. */
+  private val StageTargetBytes = 128L * 1024 * 1024
+  private val MinStageParts = 8
 
   private def stage(spark: SparkSession, table: String, df: DataFrame,
                     partCols: Seq[String], sized: Boolean = true): Seq[Action] = {
@@ -519,18 +610,12 @@ object TxLog {
     // never to a single giant file. Coalescing after a shuffle merges
     // reduce partitions without reducing map parallelism; for
     // shuffle-free frames the merged scan is exactly the small frame the
-    // estimate proved. Override via -Dgraft.txlog.stage.targetBytes /
-    // -Dgraft.txlog.stage.minParts (a production deployment on real
-    // file sizes would tune both).
+    // estimate proved.
     val stagedDf = if (!sized) stagedDf0 else {
-      val targetBytes = sys.props.get("graft.txlog.stage.targetBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      val minParts = sys.props.get("graft.txlog.stage.minParts")
-        .map(_.toInt).getOrElse(8)
       val parts0 = stagedDf0.rdd.getNumPartitions
       val est = stagedDf0.queryExecution.optimizedPlan.stats.sizeInBytes
-      val target = (est / targetBytes + 1)
-        .max(BigInt(minParts)).min(BigInt(parts0)).toInt
+      val target = (est / StageTargetBytes + 1)
+        .max(BigInt(MinStageParts)).min(BigInt(parts0)).toInt
       if (target < parts0) stagedDf0.coalesce(target) else stagedDf0
     }
     stagedDf.createOrReplaceGlobalTempView(gv)
@@ -608,10 +693,8 @@ object TxLog {
     // harvest footers in parallel: each is a small metadata read, but on
     // an object store a wide commit (OPTIMIZE into N files) would pay
     // N round-trips serially — bound the pool, keep the driver loop
-    def harvest(p: String): Option[String] = {
-      val abs = Paths.get(table, p).toAbsolutePath.toString
-      TxStats.fromFooter(conf, abs).map(TxStats.encode)
-    }
+    def harvest(p: String): Option[String] =
+      TxStats.fromFooter(conf, absPath(table, p)).map(TxStats.encode)
     val finalPaths = staged.map(_._1)
     val stats: Map[String, Option[String]] =
       if (finalPaths.sizeIs <= 2) finalPaths.map(p => p -> harvest(p)).toMap
@@ -729,24 +812,20 @@ object TxLog {
       Some(java.util.Base64.getEncoder.encodeToString(
         sqlPredicate.getBytes(StandardCharsets.UTF_8)))), tsAction(commitTs, "ADD CONSTRAINT"))
     // validate-then-claim (the storm-test discipline, applied to DDL):
-    // validate the rows AS OF base, then claim base+1 — an append
-    // landing in between takes base+1, the CAS fails, and the loop
-    // REVALIDATES against the new rows, so a racing writer can never
-    // slip violating rows under a freshly validated constraint
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+    // validate the rows AS OF base — an append landing before the claim
+    // takes base+1 and the loop REVALIDATES against the new rows, so a
+    // racing writer can never slip violating rows under a freshly
+    // validated constraint
+    commitLoop(table)(Some { base =>
       if (base > 0 && snapshot(table, Some(base)).nonEmpty) {
         val bad = read(spark, table, asOf = Some(base))
-          .filter(not(coalesce(org.apache.spark.sql.functions.expr(sqlPredicate),
-            lit(true))))
+          .filter(not(coalesce(expr(sqlPredicate), lit(true))))
           .limit(1).count()
         require(bad == 0L,
           s"cannot add CHECK constraint $name ($sqlPredicate): existing rows violate it")
       }
-      if (tryCommit(table, base + 1, act)) committed = base + 1
-    }
-    committed
+      Claim(act)
+    }).get
   }
 
   /** Drop a CHECK constraint (no-op commit if absent — idempotent DDL). */
@@ -754,9 +833,7 @@ object TxLog {
                      commitTs: Option[Long] = None): Long = {
     safeField(name, "constraint name")
     val act = Seq(Action("unconstraint", name), tsAction(commitTs, "DROP CONSTRAINT"))
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, act)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(act))).get
   }
 
   /** Widenings ALTER COLUMN TYPE accepts: value-preserving AND verified
@@ -795,9 +872,7 @@ object TxLog {
                   newType: org.apache.spark.sql.types.DataType,
                   commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+    commitLoop(table)(Some { base =>
       // cross-cutting invariants re-read AT THE CLAIM TARGET on every
       // retry (round-14, ADVICE r13 — the dropColumn rationale): racing
       // partition/generated-column DDL must not slip between a one-shot
@@ -821,10 +896,8 @@ object TxLog {
           "(value-preserving widenings only; rewrite the table otherwise)")
       val widened = org.apache.spark.sql.types.StructType(declared.fields.map(
         f => if (f.name == name) f.copy(dataType = newType) else f))
-      val acts = Seq(schemaAction(widened), tsAction(commitTs, "ALTER COLUMN"))
-      if (tryCommit(table, base + 1, acts)) committed = base + 1
-    }
-    committed
+      Claim(Seq(schemaAction(widened), tsAction(commitTs, "ALTER COLUMN")))
+    }).get
   }
 
   // ------------------------------------------------ table properties
@@ -859,9 +932,7 @@ object TxLog {
       Action("property", k, Some(java.util.Base64.getEncoder.encodeToString(
         v.getBytes(StandardCharsets.UTF_8))))
     } :+ tsAction(commitTs, "SET TBLPROPERTIES")
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, acts)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(acts))).get
   }
 
   /** UNSET TBLPROPERTIES (absent keys are a no-op — idempotent DDL). */
@@ -871,9 +942,7 @@ object TxLog {
     keys.foreach(safeField(_, "property key"))
     val acts = keys.map(Action("unproperty", _)) :+
       tsAction(commitTs, "UNSET TBLPROPERTIES")
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, acts)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(acts))).get
   }
 
   // --------------------------------------- protocol (reader features)
@@ -920,9 +989,7 @@ object TxLog {
   def addColumns(table: String, cols: org.apache.spark.sql.types.StructType,
                  commitTs: Option[Long] = None): Long = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+    commitLoop(table)(Some { base =>
       val declared = schemaOf(table, Some(base)).getOrElse(
         throw new IllegalStateException(
           s"$table has no declared schema to evolve"))
@@ -946,10 +1013,8 @@ object TxLog {
           "or rewrite the table")
       val widened = org.apache.spark.sql.types.StructType(
         declared.fields ++ cols.fields.map(_.copy(nullable = true)))
-      val act = Seq(schemaAction(widened), tsAction(commitTs, "ADD COLUMNS"))
-      if (tryCommit(table, base + 1, act)) committed = base + 1
-    }
-    committed
+      Claim(Seq(schemaAction(widened), tsAction(commitTs, "ADD COLUMNS")))
+    }).get
   }
 
   // --------------------------------------- column mapping (RENAME)
@@ -1001,9 +1066,7 @@ object TxLog {
     require(!partColsOf(table).contains(oldName),
       s"RENAME COLUMN: $oldName is a partition column of $table; " +
         "partition columns cannot be renamed (rewrite into a new table)")
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+    commitLoop(table)(Some { base =>
       val declared = schemaOf(table, Some(base)).getOrElse(
         throw new IllegalStateException(s"$table has no declared schema"))
       require(declared.fieldNames.contains(oldName),
@@ -1026,12 +1089,10 @@ object TxLog {
         .flatMap { e => Seq(Action("undefault", oldName),
           Action("default", newName, Some(java.util.Base64.getEncoder
             .encodeToString(e.getBytes(StandardCharsets.UTF_8))))) }
-      val acts = protocolAction(table, "column-mapping").toSeq ++ rekeyDefault ++
+      Claim(protocolAction(table, "column-mapping").toSeq ++ rekeyDefault ++
         Seq(Action("rename", s"$oldName>$newName"),
-          schemaAction(renamed), tsAction(commitTs, "RENAME COLUMN"))
-      if (tryCommit(table, base + 1, acts)) committed = base + 1
-    }
-    committed
+          schemaAction(renamed), tsAction(commitTs, "RENAME COLUMN")))
+    }).get
   }
 
   /** Physical names tombstoned by DROP COLUMN at any version ≤ asOf
@@ -1072,9 +1133,7 @@ object TxLog {
   def dropColumn(table: String, name: String,
                  commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+    commitLoop(table)(Some { base =>
       // cross-cutting invariants re-read AT THE CLAIM TARGET on every
       // retry, like append() does for constraints (round-14, ADVICE r13):
       // a concurrent ADD CONSTRAINT / SET BLOOM / generated-column DDL
@@ -1128,11 +1187,9 @@ object TxLog {
       val undef =
         if (defaultsOf(table, Some(base)).contains(name))
           Seq(Action("undefault", name)) else Nil
-      val acts = unmap ++ undef ++ Seq(Action("drop", phys),
-        schemaAction(narrowed), tsAction(commitTs, "DROP COLUMN"))
-      if (tryCommit(table, base + 1, acts)) committed = base + 1
-    }
-    committed
+      Claim(unmap ++ undef ++ Seq(Action("drop", phys),
+        schemaAction(narrowed), tsAction(commitTs, "DROP COLUMN")))
+    }).get
   }
 
   // ------------------------------------------------- bloom-index DDL
@@ -1172,9 +1229,7 @@ object TxLog {
     val act = Seq(Action("bloom",
       cols.map(physicalOf(rm, _)).mkString(",")),
       tsAction(commitTs, "SET BLOOM"))
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, act)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(act))).get
   }
 
   // ----------------------------------------------- generated columns
@@ -1245,9 +1300,7 @@ object TxLog {
       stored.getBytes(StandardCharsets.UTF_8))
     val acts = Seq(Action("gencol", name, Some(enc)),
       tsAction(commitTs, "ADD GENERATED COLUMN"))
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, acts)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(acts))).get
   }
 
   /** Apply the table's generated columns to an incoming frame:
@@ -1314,9 +1367,7 @@ object TxLog {
   def setColumnDefault(spark: SparkSession, table: String, name: String,
                        sqlExpr: String, commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+    commitLoop(table)(Some { base =>
       val declared = schemaOf(table, Some(base)).getOrElse(
         throw new IllegalStateException(
           s"$table has no declared schema — CREATE or write first"))
@@ -1351,11 +1402,9 @@ object TxLog {
             "inside the expression")
       val enc = java.util.Base64.getEncoder.encodeToString(
         stored.getBytes(StandardCharsets.UTF_8))
-      val acts = Seq(Action("default", name, Some(enc)),
-        tsAction(commitTs, "SET DEFAULT"))
-      if (tryCommit(table, base + 1, acts)) committed = base + 1
-    }
-    committed
+      Claim(Seq(Action("default", name, Some(enc)),
+        tsAction(commitTs, "SET DEFAULT")))
+    }).get
   }
 
   /** `ALTER TABLE … ALTER COLUMN name DROP DEFAULT` (absent declaration
@@ -1364,9 +1413,7 @@ object TxLog {
                         commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
     val acts = Seq(Action("undefault", name), tsAction(commitTs, "DROP DEFAULT"))
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, acts)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(acts))).get
   }
 
   /** Fill declared DEFAULTs into an incoming frame: absent defaulted
@@ -1475,9 +1522,7 @@ object TxLog {
       s"$start $step $allowExplicitInsert".getBytes(StandardCharsets.UTF_8))
     val acts = Seq(Action("identity", name, Some(enc)),
       tsAction(commitTs, "ADD IDENTITY"))
-    var v = versions(table).lastOption.getOrElse(0L) + 1
-    while (!tryCommit(table, v, acts)) v = versions(table).last + 1
-    v
+    commitLoop(table)(Some(_ => Claim(acts))).get
   }
 
   /** Assign identity values into `df` for every declared identity column
@@ -1555,8 +1600,7 @@ object TxLog {
       }
     }
     lazy val scanned: Map[String, Long] = {
-      val files = adds.filter(_.op == "add")
-        .map(a => Paths.get(table, a.path).toAbsolutePath.toString)
+      val files = adds.filter(_.op == "add").map(a => absPath(table, a.path))
       if (files.isEmpty) Map.empty
       else {
         val aggs = watch.map { n =>
@@ -1827,7 +1871,7 @@ object TxLog {
     require(partCols.nonEmpty,
       s"a partition predicate requires a partitioned table; $table is " +
         "unpartitioned")
-    val base = boundRead(spark, table, adds.map(a => s"$table/${a.path}"), None)
+    val base = boundRead(spark, table, adds.map(_.path), None)
     val conds = base.filter(cond).queryExecution.optimizedPlan.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
@@ -1910,33 +1954,16 @@ object TxLog {
         "partition columns")
       in
     }
-    var committed = -1L
-    while (committed < 0) {
-      // identity: the append snapshot-assign-restage discipline
-      // (round-16, ADVICE r15 #1 — replaced-region rows are NEW rows;
-      // omitted identity columns assign, explicit BY DEFAULT supply
-      // advances the watermark). Identity-free tables take this outer
-      // loop exactly once.
-      val wmSnap = identityColsOf(table).keys
-        .map(n => n -> identityWatermark(table, n)).toMap
-      val (df, idBases) = assignIdentity(table, df1, wmSnap)
-      val decl = enforceSchema(table, df, mergeSchema = false)
-      var cs0 = constraintsOf(table)
-      enforceConstraints(table, df, cs0)
-      val staged = stage(spark, table, df)
-      val idActs = identityWmActions(spark, table, staged, idBases,
-        df1.columns.toSeq, wmSnap)
-      val adds = (staged ++ decl ++ idActs) :+
-        tsAction(commitTs, "REPLACEWHERE")
-      val watched = idBases.keySet ++ idActs.map(_.path)
-      var restage = false
-      while (committed < 0 && !restage) {
-        val base = versions(table).lastOption.getOrElse(0L)
-        val csB = constraintsOf(table, Some(base))
-        if (csB != cs0) { enforceConstraints(table, df, csB); cs0 = csB }
-        if (watched.exists(n =>
-          identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None)))
-          restage = true
+    // identity: the append snapshot-assign-restage discipline (round-16,
+    // ADVICE r15 #1 — replaced-region rows are NEW rows; omitted identity
+    // columns assign, explicit BY DEFAULT supply advances the watermark)
+    commitLoop(table) {
+      val s = stageRows(spark, table, df1) { df =>
+        (partCols, enforceSchema(table, df, mergeSchema = false).toSeq)
+      }
+      val adds = s.actions :+ tsAction(commitTs, "REPLACEWHERE")
+      Some { base =>
+        if (s.movedAt(base)) Rebase
         else {
           val (liveAdds, dvs) = replayState(table, Some(base))
           val victims = liveAdds.filter(classify)
@@ -1944,12 +1971,10 @@ object TxLog {
             "replaceWhere over files carrying deletion vectors: OPTIMIZE " +
               "first to materialize the deletes (the whole-file swap would " +
               "drop the DV state silently otherwise)")
-          val removes = victims.map(a => Action("remove", a.path))
-          if (tryCommit(table, base + 1, removes ++ adds)) committed = base + 1
+          Claim(victims.map(a => Action("remove", a.path)) ++ adds)
         }
       }
-    }
-    committed
+    }.get
   }
 
   /** CONVERT TO TXLOG: adopt an existing plain-parquet directory as a
@@ -1991,10 +2016,8 @@ object TxLog {
     // schema-evolved directory declares the widest shape)
     val schema = spark.read.option("mergeSchema", "true").parquet(table).schema
     val conf = spark.sessionState.newHadoopConf()
-    val adds = rels.map { r =>
-      val abs = Paths.get(table, r).toAbsolutePath.toString
-      Action("add", r, TxStats.fromFooter(conf, abs).map(TxStats.encode))
-    }
+    val adds = rels.map(r => Action("add", r,
+      TxStats.fromFooter(conf, absPath(table, r)).map(TxStats.encode)))
     val acts = (adds :+ schemaAction(schema)) :+ tsAction(commitTs, "CONVERT")
     if (!tryCommit(table, 1L, acts)) throw new IllegalStateException(
       s"CONVERT: $table gained a commit while converting — version 1 taken")
@@ -2018,48 +2041,30 @@ object TxLog {
     require(partCols.nonEmpty,
       s"overwritePartitions requires a partitioned table; $table is " +
         "unpartitioned (use overwrite)")
-    var committed = -1L
-    while (committed < 0) {
-      // identity: the append snapshot-assign-restage discipline
-      // (round-16, ADVICE r15 #1); identity continues across the
-      // overwrite like [[overwrite]] — a redefined partition's rows are
-      // NEW rows, never a sequence reset. Identity-free tables take
-      // this outer loop exactly once.
-      val wmSnap = identityColsOf(table).keys
-        .map(n => n -> identityWatermark(table, n)).toMap
-      val (df, idBases) = assignIdentity(table, df1, wmSnap)
-      val decl = enforceSchema(table, df, mergeSchema = false)
-      var cs0 = constraintsOf(table)
-      enforceConstraints(table, df, cs0)
-      val staged = stage(spark, table, df)
-      val idActs = identityWmActions(spark, table, staged, idBases,
-        df1.columns.toSeq, wmSnap)
-      val adds = (staged ++ decl ++ idActs) :+
-        tsAction(commitTs, "OVERWRITE PARTITIONS")
+    // identity: the append snapshot-assign-restage discipline (round-16,
+    // ADVICE r15 #1); identity continues across the overwrite like
+    // [[overwrite]] — a redefined partition's rows are NEW rows, never a
+    // sequence reset
+    commitLoop(table) {
+      val s = stageRows(spark, table, df1) { df =>
+        (partCols, enforceSchema(table, df, mergeSchema = false).toSeq)
+      }
+      val adds = s.actions :+ tsAction(commitTs, "OVERWRITE PARTITIONS")
       val touched = adds.flatMap(_.part).toSet
       require(touched.nonEmpty, "overwritePartitions: empty incoming frame " +
         "names no partition — nothing to overwrite")
-      val watched = idBases.keySet ++ idActs.map(_.path)
-      var restage = false
-      while (committed < 0 && !restage) {
-        val base = versions(table).lastOption.getOrElse(0L)
-        val csB = constraintsOf(table, Some(base))
-        if (csB != cs0) { enforceConstraints(table, df, csB); cs0 = csB }
-        if (watched.exists(n =>
-          identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None)))
-          restage = true
+      Some { base =>
+        if (s.movedAt(base)) Rebase
         else {
           val (liveAdds, dvs) = replayState(table, Some(base))
           val victims = liveAdds.filter(_.part.exists(touched))
           require(victims.forall(a => !dvs.contains(a.path)),
             "overwritePartitions over files carrying deletion vectors: " +
               "OPTIMIZE first to materialize the deletes")
-          val removes = victims.map(a => Action("remove", a.path))
-          if (tryCommit(table, base + 1, removes ++ adds)) committed = base + 1
+          Claim(victims.map(a => Action("remove", a.path)) ++ adds)
         }
       }
-    }
-    committed
+    }.get
   }
 
   /** `input_file_name()` returns a percent-ENCODED URI; a partitioned
@@ -2073,6 +2078,51 @@ object TxLog {
       scala.util.Try(Paths.get(java.net.URI.create(h)).toString).getOrElse(h)
     }
     (rel: String) => decoded.exists(_.endsWith("/" + rel))
+  }
+
+  /** The read half of a copy-on-write verb: of the live files `adds0`
+    * (with DVs `dv0`), those holding a row `matches` keeps — one
+    * distributed `input_file_name()` scan, driver state bounded by FILE
+    * count — and a scan of just those files. Both scans bind the
+    * DECLARED schema (evolved tables: absent columns surface as null in
+    * the predicate, and rewrites keep the full declared width) and read
+    * through the DVs, so already-deleted rows neither match nor get
+    * resurrected. `pruned` lists the files with their commit-log stats
+    * so pushed filters skip whole files. None when no file matches. */
+  private def cowRead(spark: SparkSession, table: String, adds0: Seq[Action],
+                      dv0: Dvs, pruned: Boolean)(
+      matches: DataFrame => DataFrame): Option[(Seq[String], DataFrame)] = {
+    def scan(adds: Seq[Action], dvs: Dvs): DataFrame = applyDvs(spark, table,
+      if (pruned) prunedBoundRead(spark, table, adds, None)
+      else boundRead(spark, table, adds.map(_.path), None), dvs)
+    if (adds0.isEmpty) None
+    else {
+      val hits = matches(scan(adds0, dv0).withColumn("_graft_file", input_file_name()))
+        .select("_graft_file").distinct()
+        .collect().map(_.getString(0))
+      // input_file_name is scheme-qualified; match on the relative suffix
+      // (data/<uuid>/part-*.parquet is unique within the table)
+      val affected = adds0.map(_.path).filter(fileHitSet(hits.toIndexedSeq))
+      if (affected.isEmpty) None
+      else Some(affected -> scan(adds0.filter(a => affected.contains(a.path)),
+        dv0.filter { case (f, _) => affected.contains(f) }))
+    }
+  }
+
+  /** Do the files live in `state` (the replay AS OF the claim target)
+    * that the pass did not read carry any of the (broadcast) merge
+    * `keys`? One bounded scan of only those files — zero when none
+    * landed. A MERGE committing beside them would leave two live rows
+    * per matched key: rebase. */
+  private def keysLanded(spark: SparkSession, table: String,
+                         state: (Seq[Action], Dvs), read0: Set[String],
+                         keys: DataFrame, keyCols: Seq[String]): Boolean = {
+    val (addsB, dvB) = state
+    val newFiles = addsB.map(_.path).filterNot(read0)
+    newFiles.nonEmpty &&
+      applyDvs(spark, table, boundRead(spark, table, newFiles, None),
+        dvB.filter { case (f, _) => newFiles.contains(f) })
+        .join(keys, keyCols, "left_semi").limit(1).count() > 0
   }
 
   /** Validate incoming rows against the given constraint set (ONE
@@ -2102,6 +2152,41 @@ object TxLog {
     }
   }
 
+  /** One staging pass of an append-family writer (append, appendOnce,
+    * overwrite, replaceWhere, overwritePartitions): identity assignment
+    * pins the ranges this staging uses (one watermark snapshot feeds
+    * assignment, the committed idwm and the claim-time check), then the
+    * writer's schema/partition declaration, CHECK enforcement BEFORE
+    * staging, the staged files and their watermark actions. */
+  private final class Staged(table: String, val rows: DataFrame,
+                             val actions: Seq[Action], cs: Enforced,
+                             wmSnap: Map[String, Option[Long]],
+                             watched: Set[String]) {
+    /** The shared claim-target check: re-enforce a changed constraint
+      * set on the staged rows; true when a racer advanced a watched
+      * identity watermark (restage). */
+    def movedAt(base: Long): Boolean = {
+      cs.reenforceAt(base, rows)
+      watermarkMoved(table, base, wmSnap, watched)
+    }
+  }
+
+  /** Run one [[Staged]] pass over `df1`; `declare` returns the partition
+    * columns to stage by and the declaration actions to commit. */
+  private def stageRows(spark: SparkSession, table: String, df1: DataFrame)(
+      declare: DataFrame => (Seq[String], Seq[Action])): Staged = {
+    val wmSnap = watermarks(table)
+    val (df, idBases) = assignIdentity(table, df1, wmSnap)
+    val (partCols, declActs) = declare(df)
+    val cs = new Enforced(table)
+    cs.enforce(df)
+    val staged = stage(spark, table, df, partCols)
+    val idActs = identityWmActions(spark, table, staged, idBases,
+      df1.columns.toSeq, wmSnap)
+    new Staged(table, df, staged ++ declActs ++ idActs, cs, wmSnap,
+      idBases.keySet ++ idActs.map(_.path))
+  }
+
   /** Transactional blind append: always safe to retry verbatim — the
     * action set does not depend on the snapshot it lands on (the schema
     * check runs once up front; a racing widening of the same columns
@@ -2115,40 +2200,15 @@ object TxLog {
              commitTs: Option[Long] = None,
              partitionBy: Seq[String] = Nil): Long = {
     val df1 = applyColumnPolicies(table, df0)
-    var committed = -1L
-    while (committed < 0) {
-      // identity assignment pins the ranges this STAGING uses (one
-      // watermark snapshot feeds assignment, the committed idwm, and the
-      // claim-time conflict check); a racer advancing any watched
-      // watermark forces a RESTAGE — assigned ranges would collide, and
-      // a supplied-column idwm would regress the sequence. Identity-free
-      // tables take this outer loop exactly once.
-      val wmSnap = identityColsOf(table).keys
-        .map(n => n -> identityWatermark(table, n)).toMap
-      val (df, idBases) = assignIdentity(table, df1, wmSnap)
-      val decl = enforceSchema(table, df, mergeSchema)
-      val (partCols, partActs) = partDecl(table, df, partitionBy)
-      var cs0 = constraintsOf(table)
-      enforceConstraints(table, df, cs0)
-      val staged = stage(spark, table, df, partCols)
-      val idActs = identityWmActions(spark, table, staged, idBases,
-        df1.columns.toSeq, wmSnap)
-      val adds = (staged ++ decl ++ partActs ++ idActs) :+
-        tsAction(commitTs, "WRITE")
-      val watched = idBases.keySet ++ idActs.map(_.path)
-      var restage = false
-      while (committed < 0 && !restage) {
-        val base = versions(table).lastOption.getOrElse(0L)
-        // a DDL commit racing this write re-validates at the claim target
-        val csB = constraintsOf(table, Some(base))
-        if (csB != cs0) { enforceConstraints(table, df, csB); cs0 = csB }
-        if (watched.exists(n =>
-          identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None)))
-          restage = true
-        else if (tryCommit(table, base + 1, adds)) committed = base + 1
+    commitLoop(table) {
+      val s = stageRows(spark, table, df1) { df =>
+        val decl = enforceSchema(table, df, mergeSchema)
+        val (partCols, partActs) = partDecl(table, df, partitionBy)
+        (partCols, decl.toSeq ++ partActs)
       }
-    }
-    committed
+      val adds = s.actions :+ tsAction(commitTs, "WRITE")
+      Some(base => if (s.movedAt(base)) Rebase else Claim(adds))
+    }.get
   }
 
   /** Exactly-once append: the commit carries `txn` as a marker action and
@@ -2167,40 +2227,23 @@ object TxLog {
     safeField(txn, "txn marker") // fail BEFORE staging, not at commit render
     if (txnSeen(table, txn)) return None
     val df1 = applyColumnPolicies(table, df0)
-    var committed = -1L
-    while (committed < 0) {
-      // identity: same snapshot-assign-restage discipline as append
-      val wmSnap = identityColsOf(table).keys
-        .map(n => n -> identityWatermark(table, n)).toMap
-      val (df, idBases) = assignIdentity(table, df1, wmSnap)
-      val decl = enforceSchema(table, df, mergeSchema = false)
-      val (partCols, partActs) = partDecl(table, df, partitionBy)
-      var cs0 = constraintsOf(table)
-      enforceConstraints(table, df, cs0)
-      val staged = stage(spark, table, df, partCols)
-      val idActs = identityWmActions(spark, table, staged, idBases,
-        df1.columns.toSeq, wmSnap)
-      val adds = (staged ++ decl ++ partActs ++ idActs) :+
-        Action("txn", txn) :+ tsAction(commitTs, "STREAMING WRITE")
-      val watched = idBases.keySet ++ idActs.map(_.path)
-      // check-then-CAS with the claim target read FIRST: if the same
-      // txn's replay lands between the marker check and the commit,
-      // base+1 is taken, the CAS fails, and the loop re-checks — the
-      // marker can never slip through the gap (same TOCTOU class as the
-      // deleteWhere/optimize validation ordering)
-      var restage = false
-      while (committed < 0 && !restage) {
-        val base = versions(table).lastOption.getOrElse(0L)
-        if (txnSeen(table, txn)) return None
-        val csB = constraintsOf(table, Some(base))
-        if (csB != cs0) { enforceConstraints(table, df, csB); cs0 = csB }
-        if (watched.exists(n =>
-          identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None)))
-          restage = true
-        else if (tryCommit(table, base + 1, adds)) committed = base + 1
+    commitLoop(table) {
+      val s = stageRows(spark, table, df1) { df =>
+        val decl = enforceSchema(table, df, mergeSchema = false)
+        val (partCols, partActs) = partDecl(table, df, partitionBy)
+        (partCols, decl.toSeq ++ partActs)
+      }
+      val adds = s.actions :+ Action("txn", txn) :+
+        tsAction(commitTs, "STREAMING WRITE")
+      // the marker re-check runs at the claim target: if the same txn's
+      // replay lands between it and the commit, base+1 is taken, the CAS
+      // fails, and the loop re-checks — the marker never slips through
+      Some { base =>
+        if (txnSeen(table, txn)) Skip
+        else if (s.movedAt(base)) Rebase
+        else Claim(adds)
       }
     }
-    Some(committed)
   }
 
   /** TRUNCATE TABLE: one commit removing every live file (and thereby
@@ -2213,19 +2256,16 @@ object TxLog {
     * committed first) or wholly survives (it committed after) — never
     * half. Returns the committed version, or None when already empty
     * (no content commit for a no-op, mirroring the DML family). */
-  def truncate(table: String, commitTs: Option[Long] = None): Option[Long] = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
+  def truncate(table: String, commitTs: Option[Long] = None): Option[Long] =
+    commitLoop(table)(Some { base =>
       val live = snapshot(table, Some(base))
-      if (live.isEmpty) return None
       // CDF-enabled tables record the truncated rows as deletes (round-15,
       // ADVICE r14 #2): without a cdc record this commit would wedge every
       // streaming readChangeFeed forever. The SparkSession-free signature
       // is kept for the common case; row capture borrows the active
       // session (one bounded read of the snapshot being dropped, restaged
       // per CAS attempt because the snapshot may have moved).
-      val cdc =
+      lazy val cdc =
         if (!cdfEnabled(table)) Nil
         else {
           val s = SparkSession.getActiveSession
@@ -2236,12 +2276,10 @@ object TxLog {
           cdcStage(s, table, read(s, table, Some(base))
             .withColumn(ChangeTypeCol, lit("delete")))
         }
-      val acts = live.map(Action("remove", _)) ++ cdc :+
-        tsAction(commitTs, "TRUNCATE")
-      if (tryCommit(table, base + 1, acts)) committed = base + 1
-    }
-    Some(committed)
-  }
+      if (live.isEmpty) Skip
+      else Claim(live.map(Action("remove", _)) ++ cdc :+
+        tsAction(commitTs, "TRUNCATE"))
+    })
 
   /** Publish a MARKER-ONLY commit carrying `txn` (no file actions):
     * the "this logical batch completed" record a multi-statement
@@ -2253,13 +2291,7 @@ object TxLog {
                    commitTs: Option[Long] = None): Option[Long] = {
     safeField(txn, "txn marker")
     val acts = Seq(Action("txn", txn), tsAction(commitTs, "TXN MARKER"))
-    var committed = -1L
-    while (committed < 0) {
-      val base = versions(table).lastOption.getOrElse(0L)
-      if (txnSeen(table, txn)) return None
-      if (tryCommit(table, base + 1, acts)) committed = base + 1
-    }
-    Some(committed)
+    commitLoop(table)(Some(_ => if (txnSeen(table, txn)) Skip else Claim(acts)))
   }
 
   /** Transactional overwrite: removes the files of the snapshot the
@@ -2272,56 +2304,43 @@ object TxLog {
     val df1 = applyColumnPolicies(table, df0)
     // identity CONTINUES across an overwrite (a content replace resets
     // rows, never the counter — the SQL sequence rule); same
-    // snapshot-assign discipline as append. Restage-on-conflict is
-    // subsumed here: the CAS loop below recomputes removes per attempt,
-    // and identity conflicts restart via the same watched check.
-    val wmSnap = identityColsOf(table).keys
-      .map(n => n -> identityWatermark(table, n)).toMap
-    val (df, idBases) = assignIdentity(table, df1, wmSnap)
-    // a full content replace REDEFINES the schema (no merge flag needed);
-    // time travel before it binds the contemporary declaration, so old
-    // snapshots keep reading with their own columns/types
-    val decl =
-      if (schemaOf(table).exists(d => d.map(f => (f.name, f.dataType)) ==
-        df.schema.map(f => (f.name, f.dataType)))) None
-      else Some(schemaAction(df.schema))
-    val (partCols, partActs) = partDecl(table, df, partitionBy,
-      replacesAll = true)
-    var cs0 = constraintsOf(table)
-    enforceConstraints(table, df, cs0)
-    val staged = stage(spark, table, df, partCols)
-    val idActs = identityWmActions(spark, table, staged, idBases,
-      df1.columns.toSeq, wmSnap)
-    val adds = (staged ++ decl ++ partActs ++ idActs) :+
-      tsAction(commitTs, "OVERWRITE")
-    val watched = idBases.keySet ++ idActs.map(_.path)
-    var committed = -1L
-    while (committed < 0) {
-      if (watched.exists(n =>
-        identityWatermark(table, n) != wmSnap.getOrElse(n, None)))
-        // a racer advanced an identity watermark since staging: restart
-        // the whole overwrite against the new sequence state
-        return overwrite(spark, table, df0, commitTs, partitionBy)
-      val base = versions(table).lastOption.getOrElse(0L)
-      val csB = constraintsOf(table, Some(base))
-      if (csB != cs0) { enforceConstraints(table, df, csB); cs0 = csB }
-      val removes = snapshot(table, Some(base)).map(Action("remove", _))
-      // CDF record (round-15, ADVICE r14 #2): a content replace is
-      // delete(old rows) + insert(new rows) to a row-level consumer —
-      // without it the commit wedges streaming readChangeFeed. Skipped
-      // when nothing is removed (add-only commits derive their inserts at
-      // read time, the merge() rule); restaged per CAS attempt because
-      // the removed snapshot may have moved.
-      val cdc =
-        if (removes.isEmpty || !cdfEnabled(table)) Nil
-        else cdcStage(spark, table,
-          read(spark, table, Some(base))
-            .withColumn(ChangeTypeCol, lit("delete"))
-            .unionByName(df.withColumn(ChangeTypeCol, lit("insert")),
-              allowMissingColumns = true))
-      if (tryCommit(table, base + 1, removes ++ adds ++ cdc)) committed = base + 1
-    }
-    committed
+    // snapshot-assign-restage discipline as append
+    commitLoop(table) {
+      val s = stageRows(spark, table, df1) { df =>
+        // a full content replace REDEFINES the schema (no merge flag
+        // needed); time travel before it binds the contemporary
+        // declaration, so old snapshots keep reading with their own
+        // columns/types
+        val decl =
+          if (schemaOf(table).exists(d => d.map(f => (f.name, f.dataType)) ==
+            df.schema.map(f => (f.name, f.dataType)))) None
+          else Some(schemaAction(df.schema))
+        val (partCols, partActs) = partDecl(table, df, partitionBy,
+          replacesAll = true)
+        (partCols, decl.toSeq ++ partActs)
+      }
+      val adds = s.actions :+ tsAction(commitTs, "OVERWRITE")
+      Some { base =>
+        if (s.movedAt(base)) Rebase
+        else {
+          val removes = snapshot(table, Some(base)).map(Action("remove", _))
+          // CDF record (round-15, ADVICE r14 #2): a content replace is
+          // delete(old rows) + insert(new rows) to a row-level consumer —
+          // without it the commit wedges streaming readChangeFeed. Skipped
+          // when nothing is removed (add-only commits derive their inserts
+          // at read time, the merge() rule); restaged per CAS attempt
+          // because the removed snapshot may have moved.
+          val cdc =
+            if (removes.isEmpty || !cdfEnabled(table)) Nil
+            else cdcStage(spark, table,
+              read(spark, table, Some(base))
+                .withColumn(ChangeTypeCol, lit("delete"))
+                .unionByName(s.rows.withColumn(ChangeTypeCol, lit("insert")),
+                  allowMissingColumns = true))
+          Claim(removes ++ adds ++ cdc)
+        }
+      }
+    }.get
   }
 
   /** Transactional row-level DELETE, copy-on-write: rewrite ONLY the
@@ -2351,69 +2370,38 @@ object TxLog {
   def deleteWhere(spark: SparkSession, table: String,
                   cond: Column, commitTs: Option[Long] = None): Option[Long] = {
     val hit = coalesce(cond, lit(false))
-    while (true) {
-      val (adds0, dv0) = replayState(table, None)
-      val read0 = adds0.map(_.path)
-      if (read0.isEmpty) return None
-      def absOf(rel: Seq[String]): Seq[String] =
-        rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
-      // bind the DECLARED schema (evolved tables: absent columns must
-      // surface as null in the predicate, and survivors must keep the
-      // full declared width, not whichever footer gets sampled); read
-      // through the DVs so already-MoR-deleted rows neither match nor
-      // get resurrected into the rewrite
-      val hits = applyDvs(spark, table,
-          prunedBoundRead(spark, table, adds0, None), dv0)
-        .withColumn("_graft_file", input_file_name())
-        .filter(hit).select("_graft_file").distinct()
-        .collect().map(_.getString(0))
-      // input_file_name is scheme-qualified; match on the relative suffix
-      // (data/<uuid>/part-*.parquet is unique within the table)
-      val affected = read0.filter(fileHitSet(hits.toIndexedSeq))
-      if (affected.isEmpty) return None
-      val affectedDvs = dv0.filter { case (f, _) => affected.contains(f) }
-      val scanAff = applyDvs(spark, table,
-        prunedBoundRead(spark, table,
-          adds0.filter(a => affected.contains(a.path)), None), affectedDvs)
-      val survivors = scanAff.filter(not(hit))
-      val adds =
-        if (survivors.isEmpty) Seq.empty // whole files deleted: no rewrite
-        else stage(spark, table, survivors)
-      // CDF record (property-gated): exactly the deleted rows — the
-      // survivors merely move files, which is not a row change
-      val cdc = cdcStage(spark, table,
-        scanAff.filter(hit).withColumn(ChangeTypeCol, lit("delete")))
-      val removes = affected.map(Action("remove", _)) ++ cdc :+
-        tsAction(commitTs, "DELETE")
-      // validate-then-CAS, in THAT order relative to the claim target:
-      // read base = last version FIRST, validate the affected set
-      // against the snapshot AS OF base, then claim base+1 — if any
-      // commit lands in between, base+1 is taken, the CAS fails, and
-      // the loop re-validates. Validating against a snapshot read
-      // AFTER the claim target (the previous code) leaves a window
-      // where a racer's rewrite of an affected file passes unseen and
-      // this commit resurrects its rows (row duplication — caught by
-      // the TxLogSpec storm test).
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).last
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
-        // a racer rewriting an affected file OR changing its DV both
-        // invalidate the survivor set — rebase on either
-        if (!affected.forall(live) ||
-            affected.exists(f => dvB.get(f) != dv0.get(f)))
-          restart = true
-        else if (tryCommit(table, base + 1, removes ++ adds)) {
-          done = true; committed = base + 1
-        } // else: lost the CAS — loop re-reads base and re-validates
-      }
-      if (done) return Some(committed)
-    }
-    None
+    cowDelete(spark, table, commitTs)(_.filter(hit), _.filter(not(hit)))
   }
+
+  /** The copy-on-write DELETE both [[deleteWhere]] and [[deleteMatched]]
+    * run: `matched` keeps a scan's deleted rows, `unmatched` its
+    * survivors. The survivors of the affected files re-stage (none when
+    * a file is wholly deleted) and remove(affected)+add(staged) publish
+    * as ONE commit; a racer rewriting an affected file OR changing its
+    * DV invalidates the survivor set — rebase on either. */
+  private def cowDelete(spark: SparkSession, table: String,
+                        commitTs: Option[Long])(
+      matched: DataFrame => DataFrame,
+      unmatched: DataFrame => DataFrame): Option[Long] =
+    commitLoop(table) {
+      val (adds0, dv0) = replayState(table, None)
+      cowRead(spark, table, adds0, dv0, pruned = true)(matched).map {
+        case (affected, scanAff) =>
+          val survivors = unmatched(scanAff)
+          val adds =
+            if (survivors.isEmpty) Seq.empty // whole files deleted: no rewrite
+            else stage(spark, table, survivors)
+          // CDF record (property-gated): exactly the deleted rows — the
+          // survivors merely move files, which is not a row change
+          val cdc = cdcStage(spark, table,
+            matched(scanAff).withColumn(ChangeTypeCol, lit("delete")))
+          val acts = (affected.map(Action("remove", _)) ++ cdc :+
+            tsAction(commitTs, "DELETE")) ++ adds
+          (base: Long) =>
+            if (filesMoved(affected, dv0, replayState(table, Some(base)))) Rebase
+            else Claim(acts)
+      }
+    }
 
   /** Transactional keyed DELETE, copy-on-write — the engine half of SQL
     * `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN DELETE` (the
@@ -2431,53 +2419,9 @@ object TxLog {
                     keyCols: Seq[String],
                     commitTs: Option[Long] = None): Option[Long] = {
     require(keyCols.nonEmpty, "deleteMatched requires at least one key column")
-    val keys = source.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
-    import org.apache.spark.sql.functions.broadcast
-    while (true) {
-      val (adds0, dv0) = replayState(table, None)
-      val read0 = adds0.map(_.path)
-      if (read0.isEmpty) return None
-      def absOf(rel: Seq[String]): Seq[String] =
-        rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
-      val hits = applyDvs(spark, table,
-          prunedBoundRead(spark, table, adds0, None), dv0)
-        .withColumn("_graft_file", input_file_name())
-        .join(broadcast(keys), keyCols, "left_semi")
-        .select("_graft_file").distinct()
-        .collect().map(_.getString(0))
-      val affected = read0.filter(fileHitSet(hits.toIndexedSeq))
-      if (affected.isEmpty) return None
-      val affectedDvs = dv0.filter { case (f, _) => affected.contains(f) }
-      val scanAff = applyDvs(spark, table,
-        prunedBoundRead(spark, table,
-          adds0.filter(a => affected.contains(a.path)), None), affectedDvs)
-      val survivors = scanAff.join(broadcast(keys), keyCols, "left_anti")
-      val adds =
-        if (survivors.isEmpty) Seq.empty
-        else stage(spark, table, survivors)
-      // CDF record (property-gated): exactly the key-matched rows
-      val cdc = cdcStage(spark, table,
-        scanAff.join(broadcast(keys), keyCols, "left_semi")
-          .withColumn(ChangeTypeCol, lit("delete")))
-      val removes = affected.map(Action("remove", _)) ++ cdc :+
-        tsAction(commitTs, "DELETE")
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).last
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
-        if (!affected.forall(live) ||
-            affected.exists(f => dvB.get(f) != dv0.get(f)))
-          restart = true
-        else if (tryCommit(table, base + 1, removes ++ adds)) {
-          done = true; committed = base + 1
-        }
-      }
-      if (done) return Some(committed)
-    }
-    None
+    val keys = broadcast(source.select(keyCols.map(col): _*).distinct())
+    cowDelete(spark, table, commitTs)(
+      _.join(keys, keyCols, "left_semi"), _.join(keys, keyCols, "left_anti"))
   }
 
   /** Transactional row-level UPDATE, copy-on-write — the engine half of
@@ -2499,102 +2443,74 @@ object TxLog {
                   commitTs: Option[Long] = None): Option[Long] = {
     require(assignments.nonEmpty, "updateWhere requires at least one assignment")
     val hit = coalesce(cond, lit(false))
-    while (true) {
+    commitLoop(table) {
       val (adds0, dv0) = replayState(table, None)
-      val read0 = adds0.map(_.path)
-      if (read0.isEmpty) return None
-      def absOf(rel: Seq[String]): Seq[String] =
-        rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
-      schemaOf(table).foreach { d =>
-        val unknown = assignments.keys.filterNot(d.fieldNames.contains)
-        require(unknown.isEmpty,
-          s"updateWhere: columns not in the declared schema: ${unknown.mkString(", ")}")
-      }
-      // generated columns: direct assignment refused, and the rewrite
-      // below RECOMPUTES them from the post-assignment row — without
-      // this, updating a base column left the stored generated value
-      // stale, silently breaking GENERATED ALWAYS AS (round 14)
-      val gens = generatedColsOf(table)
-      assignments.keys.foreach(k => require(!gens.contains(k),
-        s"updateWhere must not assign generated column $k — it is " +
-          "recomputed from the post-update row"))
-      // identity values are a monotone sequence owned by the engine —
-      // an UPDATE rewriting them could duplicate live ids or regress
-      // the watermark contract (round-16, ADVICE r15 #1: the uncovered-
-      // verb posture is loud refusal; Delta refuses the same)
-      val idCols = identityColsOf(table)
-      assignments.keys.foreach(k => require(!idCols.contains(k),
-        s"updateWhere must not assign IDENTITY column $k — identity " +
-          "values are engine-assigned and immutable under UPDATE"))
-      val hits = applyDvs(spark, table,
-          prunedBoundRead(spark, table, adds0, None), dv0)
-        .withColumn("_graft_file", input_file_name())
-        .filter(hit).select("_graft_file").distinct()
-        .collect().map(_.getString(0))
-      val affected = read0.filter(fileHitSet(hits.toIndexedSeq))
-      if (affected.isEmpty) return None
-      val affectedDvs = dv0.filter { case (f, _) => affected.contains(f) }
-      val scan = applyDvs(spark, table,
-        prunedBoundRead(spark, table,
-          adds0.filter(a => affected.contains(a.path)), None), affectedDvs)
-      val assigned = scan.select(scan.schema.fields.map { f =>
-        assignments.get(f.name) match {
-          case Some(v) => org.apache.spark.sql.functions
-            .when(hit, v.cast(f.dataType))
-            .otherwise(org.apache.spark.sql.functions.col(f.name)).as(f.name)
-          case None => org.apache.spark.sql.functions.col(f.name)
+      if (adds0.isEmpty) None
+      else {
+        schemaOf(table).foreach { d =>
+          val unknown = assignments.keys.filterNot(d.fieldNames.contains)
+          require(unknown.isEmpty,
+            s"updateWhere: columns not in the declared schema: ${unknown.mkString(", ")}")
         }
-      }.toIndexedSeq: _*)
-      // recompute generated columns over the post-assignment row
-      // (identity for unchanged rows — generation is deterministic)
-      val rewritten =
-        if (gens.isEmpty) assigned
-        else assigned.select(assigned.schema.fields.map { f =>
-          gens.get(f.name)
-            .map(e => expr(e).cast(f.dataType).as(f.name))
-            .getOrElse(org.apache.spark.sql.functions.col(f.name))
-        }.toIndexedSeq: _*)
-      var cs0 = constraintsOf(table)
-      enforceConstraints(table, rewritten, cs0)
-      // CDF record (property-gated): pre/post image pairs of exactly the
-      // hit rows — the unchanged rows of affected files merely move files
-      val cdc = cdcStage(spark, table, {
-        val pre = scan.filter(hit)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val post0 = scan.filter(hit).select(scan.schema.fields.map { f =>
-          assignments.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(org.apache.spark.sql.functions.col(f.name))
-        }.toIndexedSeq: _*)
-        val post = (if (gens.isEmpty) post0
-          else post0.select(post0.schema.fields.map { f =>
-            gens.get(f.name).map(e => expr(e).cast(f.dataType).as(f.name))
-              .getOrElse(org.apache.spark.sql.functions.col(f.name))
-          }.toIndexedSeq: _*))
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        pre.unionByName(post)
-      })
-      val adds = (stage(spark, table, rewritten) ++ cdc) :+
-        tsAction(commitTs, "UPDATE")
-      val removes = affected.map(Action("remove", _))
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).last
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
-        val csB = constraintsOf(table, Some(base))
-        if (csB != cs0) { enforceConstraints(table, rewritten, csB); cs0 = csB }
-        if (!affected.forall(live) ||
-            affected.exists(f => dvB.get(f) != dv0.get(f)))
-          restart = true
-        else if (tryCommit(table, base + 1, removes ++ adds)) {
-          done = true; committed = base + 1
+        // generated columns: direct assignment refused, and the rewrite
+        // below RECOMPUTES them from the post-assignment row — without
+        // this, updating a base column left the stored generated value
+        // stale, silently breaking GENERATED ALWAYS AS (round 14)
+        val gens = generatedColsOf(table)
+        assignments.keys.foreach(k => require(!gens.contains(k),
+          s"updateWhere must not assign generated column $k — it is " +
+            "recomputed from the post-update row"))
+        // identity values are a monotone sequence owned by the engine —
+        // an UPDATE rewriting them could duplicate live ids or regress
+        // the watermark contract (round-16, ADVICE r15 #1: the uncovered-
+        // verb posture is loud refusal; Delta refuses the same)
+        val idCols = identityColsOf(table)
+        assignments.keys.foreach(k => require(!idCols.contains(k),
+          s"updateWhere must not assign IDENTITY column $k — identity " +
+            "values are engine-assigned and immutable under UPDATE"))
+        // the post-update rows: assignments (only where `hit` holds when
+        // `guarded`), then generated columns recomputed over the
+        // post-assignment row (identity for unchanged rows — generation
+        // is deterministic)
+        def updated(rows: DataFrame, guarded: Boolean): DataFrame = {
+          val assigned = rows.select(rows.schema.fields.map { f =>
+            assignments.get(f.name) match {
+              case Some(v) if guarded => org.apache.spark.sql.functions
+                .when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+              case Some(v) => v.cast(f.dataType).as(f.name)
+              case None => col(f.name)
+            }
+          }.toIndexedSeq: _*)
+          if (gens.isEmpty) assigned
+          else assigned.select(assigned.schema.fields.map { f =>
+            gens.get(f.name)
+              .map(e => expr(e).cast(f.dataType).as(f.name))
+              .getOrElse(col(f.name))
+          }.toIndexedSeq: _*)
+        }
+        cowRead(spark, table, adds0, dv0, pruned = true)(_.filter(hit)).map {
+          case (affected, scan) =>
+            val rewritten = updated(scan, guarded = true)
+            val cs = new Enforced(table)
+            cs.enforce(rewritten)
+            // CDF record (property-gated): pre/post image pairs of exactly
+            // the hit rows — the unchanged rows of affected files merely
+            // move files
+            val cdc = cdcStage(spark, table,
+              scan.filter(hit).withColumn(ChangeTypeCol, lit("update_preimage"))
+                .unionByName(updated(scan.filter(hit), guarded = false)
+                  .withColumn(ChangeTypeCol, lit("update_postimage"))))
+            val acts = affected.map(Action("remove", _)) ++
+              ((stage(spark, table, rewritten) ++ cdc) :+
+                tsAction(commitTs, "UPDATE"))
+            (base: Long) => {
+              val state = replayState(table, Some(base))
+              cs.reenforceAt(base, rewritten)
+              if (filesMoved(affected, dv0, state)) Rebase else Claim(acts)
+            }
         }
       }
-      if (done) return Some(committed)
     }
-    None
   }
 
   // ------------------------------------------- deletion vectors (MoR)
@@ -2630,10 +2546,8 @@ object TxLog {
     * sidecar" and start costing real driver memory and per-read planning
     * time (round-12 ADVICE #4): reads and MoR deletes WARN past it,
     * recommending optimize (which materializes the DVs away). 4M
-    * positions ≈ 64 MB of driver rows — loud well before harm.
-    * Overridable for tests via -Dgraft.txlog.dv.warn=N. */
-  private def DvCompactThreshold: Long =
-    sys.props.get("graft.txlog.dv.warn").map(_.toLong).getOrElse(4L << 20)
+    * positions ≈ 64 MB of driver rows — loud well before harm. */
+  private val DvCompactThreshold = 4L << 20
 
   private def warnDvCardinality(table: String, total: Long, where: String): Unit =
     if (total > DvCompactThreshold)
@@ -2678,7 +2592,7 @@ object TxLog {
       val open = org.apache.spark.sql.graft.GraftSqlBridge
         .serializableHadoopOpen(spark)
       val meta = dvs.toSeq.map { case (file, (sidecar, _)) =>
-        (file, Paths.get(table, sidecar).toAbsolutePath.toString)
+        (file, absPath(table, sidecar))
       }
       val sess = spark
       import sess.implicits._
@@ -2717,7 +2631,6 @@ object TxLog {
   private def applyDvs(spark: SparkSession, table: String, df: DataFrame,
                        dvs: Map[String, (String, Long)]): DataFrame = {
     if (dvs.isEmpty) return df
-    import org.apache.spark.sql.functions.broadcast
     val total = dvs.values.map(_._2).sum
     val frame = dvFrame(spark, table, dvs)
     // above the threshold the merge hint is load-bearing: Catalyst cannot
@@ -2757,97 +2670,88 @@ object TxLog {
   def deleteWhereMerge(spark: SparkSession, table: String, cond: Column,
                        commitTs: Option[Long] = None): Option[Long] = {
     val hit = coalesce(cond, lit(false))
-    while (true) {
+    val committed = commitLoop(table) {
       val (adds0, dv0) = replayState(table, None)
       val read0 = adds0.map(_.path)
-      if (read0.isEmpty) return None
-      // attach the (file-key, position) columns ON the scan (metadata
-      // columns resolve only there), THEN anti-join the existing DVs so
-      // already-deleted rows can't re-match
-      val keyed = withDvKey(boundRead(spark, table,
-        read0.map(p => Paths.get(table, p).toAbsolutePath.toString), None))
-      val alive =
-        if (dv0.isEmpty) keyed
-        else keyed.join(
-          org.apache.spark.sql.functions.broadcast(dvFrame(spark, table, dv0)),
-          Seq("_graft_key", "_graft_pos"), "left_anti")
-      // Matched (file, position) pairs are grouped per file, merged with
-      // the file's existing DV, sorted and WRITTEN ON EXECUTORS — the
-      // driver receives one (fileKey, sidecarRel, cardinality) row per
-      // AFFECTED FILE, never the positions themselves (round-14, VERDICT
-      // r13 #2: the prior path collected every matched position, so a MoR
-      // delete matching 10^8 rows at 100 TB OOMed the driver while the
-      // READ side already had its distributed threshold). One shuffle on
-      // the file key; per-task state is one file's position set, bounded
-      // by that file's row count — the same bound the eventual read-side
-      // anti-join pays per file. Sidecars that lose the CAS below stay
-      // unreferenced and age out via vacuum, exactly like the staged
-      // data files of a losing append.
-      val open = org.apache.spark.sql.graft.GraftSqlBridge
-        .serializableHadoopOpen(spark)
-      val create = org.apache.spark.sql.graft.GraftSqlBridge
-        .serializableHadoopCreate(spark)
-      val tableAbs = Paths.get(table).toAbsolutePath.toString
-      val priorRel: Map[String, String] = dv0.map { case (f, (rel, _)) => f -> rel }
-      val sess = spark
-      import sess.implicits._
-      val written: Array[(String, String, Long)] = alive.filter(hit)
-        .select(org.apache.spark.sql.functions.col("_graft_key"),
-          org.apache.spark.sql.functions.col("_graft_pos"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (key, it) =>
-          val fresh = it.map(_._2).toArray
-          val existing: Array[Long] = priorRel.get(key) match {
-            case Some(rel) =>
-              val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-                open(s"$tableAbs/$rel")))
-              try { val n = in.readLong().toInt; Array.fill(n)(in.readLong()) }
-              finally in.close()
-            case None => Array.empty[Long]
-          }
-          val merged = (existing ++ fresh).distinct.sorted
-          val rel = s"dv/${UUID.randomUUID()}.bin"
-          val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-            create(s"$tableAbs/$rel")))
-          try { out.writeLong(merged.length.toLong); merged.foreach(out.writeLong) }
-          finally out.close()
-          (key, rel, merged.length.toLong)
-        }.collect()
-      if (written.isEmpty) return None
-      val byFile: Map[String, (String, Long)] =
-        written.map { case (f, rel, n) => f -> (rel, n) }.toMap
-      val affected = read0.filter(byFile.contains)
-      // CDF record (property-gated): the newly-deleted rows in full — the
-      // DV delta alone names positions, not content
-      val cdc = cdcStage(spark, table,
-        alive.filter(hit).drop("_graft_key", "_graft_pos")
-          .withColumn(ChangeTypeCol, lit("delete")))
-      val dvActions = affected.map { f =>
-        val (rel, n) = byFile(f)
-        Action("dv", f, Some(s"$rel:$n"))
-      } ++ cdc ++ protocolAction(table, "deletion-vectors") :+
-        tsAction(commitTs, "DELETE")
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).last
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
-        if (!affected.forall(live) ||
-            affected.exists(f => dvB.get(f) != dv0.get(f)))
-          restart = true // racer rewrote a file or landed a DV: rebase
-        else if (tryCommit(table, base + 1, dvActions)) {
-          done = true; committed = base + 1
+      if (read0.isEmpty) None
+      else {
+        // attach the (file-key, position) columns ON the scan (metadata
+        // columns resolve only there), THEN anti-join the existing DVs so
+        // already-deleted rows can't re-match
+        val keyed = withDvKey(boundRead(spark, table, read0, None))
+        val alive =
+          if (dv0.isEmpty) keyed
+          else keyed.join(
+            broadcast(dvFrame(spark, table, dv0)),
+            Seq("_graft_key", "_graft_pos"), "left_anti")
+        // Matched (file, position) pairs are grouped per file, merged with
+        // the file's existing DV, sorted and WRITTEN ON EXECUTORS — the
+        // driver receives one (fileKey, sidecarRel, cardinality) row per
+        // AFFECTED FILE, never the positions themselves (round-14, VERDICT
+        // r13 #2: the prior path collected every matched position, so a MoR
+        // delete matching 10^8 rows at 100 TB OOMed the driver while the
+        // READ side already had its distributed threshold). One shuffle on
+        // the file key; per-task state is one file's position set, bounded
+        // by that file's row count — the same bound the eventual read-side
+        // anti-join pays per file. Sidecars that lose the CAS below stay
+        // unreferenced and age out via vacuum, exactly like the staged
+        // data files of a losing append.
+        val open = org.apache.spark.sql.graft.GraftSqlBridge
+          .serializableHadoopOpen(spark)
+        val create = org.apache.spark.sql.graft.GraftSqlBridge
+          .serializableHadoopCreate(spark)
+        val tableAbs = Paths.get(table).toAbsolutePath.toString
+        val priorRel: Map[String, String] = dv0.map { case (f, (rel, _)) => f -> rel }
+        val sess = spark
+        import sess.implicits._
+        val written: Array[(String, String, Long)] = alive.filter(hit)
+          .select(org.apache.spark.sql.functions.col("_graft_key"),
+            org.apache.spark.sql.functions.col("_graft_pos"))
+          .as[(String, Long)]
+          .groupByKey(_._1)
+          .mapGroups { (key, it) =>
+            val fresh = it.map(_._2).toArray
+            val existing: Array[Long] = priorRel.get(key) match {
+              case Some(rel) =>
+                val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+                  open(s"$tableAbs/$rel")))
+                try { val n = in.readLong().toInt; Array.fill(n)(in.readLong()) }
+                finally in.close()
+              case None => Array.empty[Long]
+            }
+            val merged = (existing ++ fresh).distinct.sorted
+            val rel = s"dv/${UUID.randomUUID()}.bin"
+            val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+              create(s"$tableAbs/$rel")))
+            try { out.writeLong(merged.length.toLong); merged.foreach(out.writeLong) }
+            finally out.close()
+            (key, rel, merged.length.toLong)
+          }.collect()
+        if (written.isEmpty) None
+        else {
+          val byFile: Map[String, (String, Long)] =
+            written.map { case (f, rel, n) => f -> (rel, n) }.toMap
+          val affected = read0.filter(byFile.contains)
+          // CDF record (property-gated): the newly-deleted rows in full —
+          // the DV delta alone names positions, not content
+          val cdc = cdcStage(spark, table,
+            alive.filter(hit).drop("_graft_key", "_graft_pos")
+              .withColumn(ChangeTypeCol, lit("delete")))
+          val dvActions = affected.map { f =>
+            val (rel, n) = byFile(f)
+            Action("dv", f, Some(s"$rel:$n"))
+          } ++ cdc ++ protocolAction(table, "deletion-vectors") :+
+            tsAction(commitTs, "DELETE")
+          // a racer rewriting a file or landing a DV on it: rebase
+          Some((base: Long) =>
+            if (filesMoved(affected, dv0, replayState(table, Some(base)))) Rebase
+            else Claim(dvActions))
         }
       }
-      if (done) {
-        warnDvCardinality(table, dvCardinality(table), "after deleteWhereMerge")
-        return Some(committed)
-      }
     }
-    None
+    if (committed.nonEmpty)
+      warnDvCardinality(table, dvCardinality(table), "after deleteWhereMerge")
+    committed
   }
 
   /** Transactional MERGE (keyed upsert), copy-on-write — the
@@ -2895,7 +2799,7 @@ object TxLog {
       require(source.columns.contains(n),
         s"merge on identity key column $n requires the source to supply it")
     }
-    val dupKeys = source.groupBy(keyCols.map(org.apache.spark.sql.functions.col): _*)
+    val dupKeys = source.groupBy(keyCols.map(col): _*)
       .count().filter(org.apache.spark.sql.functions.col("count") > 1).limit(1).count()
     require(dupKeys == 0L,
       s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
@@ -2905,9 +2809,9 @@ object TxLog {
     // evolution rule); survivors null-fill via the allowMissingColumns
     // union below, and readers bind the union declaration
     val decl = enforceSchema(table, source, mergeSchema)
-    var cs0 = constraintsOf(table)
-    enforceConstraints(table, source, cs0)
-    val keys = source.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
+    val cs = new Enforced(table)
+    cs.enforce(source)
+    val keys = broadcast(source.select(keyCols.map(col): _*).distinct())
     // ---- IDENTITY (round-16, ADVICE r15 #1): classify supply once.
     // identity columns must not be merge KEYS with an omitted source
     // column (there would be nothing to match on); explicit supply
@@ -2965,60 +2869,17 @@ object TxLog {
       (if (pin) s2.localCheckpoint(true) else s2, bases.toMap)
     }
     val idSuppliedCols = idSupplied.filter(_._2).keys.toSeq
-    while (true) {
+    commitLoop(table) {
       val (adds0, dv0) = replayState(table, None)
-      val read0 = adds0.map(_.path)
-      def absOf(rel: Seq[String]): Seq[String] =
-        rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
-      val wmSnap = idDecls.keys
-        .map(n => n -> identityWatermark(table, n)).toMap
-      if (read0.isEmpty) { // empty table: MERGE degenerates to append
-        // no live rows to inherit from — every omitted id draws fresh;
-        // add-only commit (no CDF rewrite), so no pin needed
-        val (srcFinal, idBases) = resolveIds(None, wmSnap, pin = false)
-        val staged = stage(spark, table, srcFinal)
-        val idActs = identityWmActions(spark, table, staged, idBases,
-          idSuppliedCols, wmSnap)
-        val adds = (staged ++ decl ++ idActs) :+ tsAction(commitTs, "MERGE")
-        val watched = idBases.keySet ++ idActs.map(_.path)
-        var committed = -1L
-        var restarted = false
-        while (committed < 0 && !restarted) {
-          val base = versions(table).lastOption.getOrElse(0L)
-          val csB = constraintsOf(table, Some(base))
-          if (csB != cs0) { enforceConstraints(table, source, csB); cs0 = csB }
-          // a racer appending between "table is empty" and this commit may
-          // carry matching keys — same conflict as below: rebase (the
-          // outer pass re-reads a non-empty snapshot and merges properly)
-          val nowLive = snapshot(table, Some(base))
-          if (watched.exists(n =>
-            identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None)))
-            restarted = true // racer advanced a watermark: re-assign
-          else if (nowLive.nonEmpty &&
-              boundRead(spark, table, absOf(nowLive), None)
-                .join(org.apache.spark.sql.functions.broadcast(keys), keyCols, "left_semi")
-                .limit(1).count() > 0)
-            restarted = true
-          else if (tryCommit(table, base + 1, adds)) committed = base + 1
-        }
-        if (committed > 0) return committed
-        // else: fall through the outer while to re-run against the
-        // now-non-empty snapshot
-      } else {
-      val hits = applyDvs(spark, table,
-          boundRead(spark, table, absOf(read0), None), dv0)
-        .withColumn("_graft_file", input_file_name())
-        .join(org.apache.spark.sql.functions.broadcast(keys), keyCols, "left_semi")
-        .select("_graft_file").distinct()
-        .collect().map(_.getString(0))
-      val affected = read0.filter(fileHitSet(hits.toIndexedSeq))
-      val affectedDvs = dv0.filter { case (f, _) => affected.contains(f) }
-      val scanAffOpt =
-        if (affected.isEmpty) None
-        else Some(applyDvs(spark, table,
-          boundRead(spark, table, absOf(affected), None), affectedDvs))
-      val survivors = scanAffOpt.map(
-        _.join(org.apache.spark.sql.functions.broadcast(keys), keyCols, "left_anti"))
+      val wmSnap = watermarks(table)
+      // an empty table has no affected file: MERGE degenerates to an
+      // append of the source (its claim-time check still catches a racer
+      // appending matching keys first)
+      val hitRead = cowRead(spark, table, adds0, dv0, pruned = false)(
+        _.join(keys, keyCols, "left_semi"))
+      val affected = hitRead.map(_._1).getOrElse(Nil)
+      val scanAffOpt = hitRead.map(_._2)
+      val survivors = scanAffOpt.map(_.join(keys, keyCols, "left_anti"))
       // ---- identity resolution for this pass: matched keys inherit the
       // target row's id (the earliest along the step direction when the
       // target holds several rows per key — deterministic winner), the
@@ -3036,7 +2897,7 @@ object TxLog {
               (if (step > 0) org.apache.spark.sql.functions.min(col(n))
                else org.apache.spark.sql.functions.max(col(n))).as(s"__t_$n")
             }
-            scanAff.groupBy(keyCols.map(org.apache.spark.sql.functions.col): _*)
+            scanAff.groupBy(keyCols.map(col): _*)
               .agg(aggs.head, aggs.tail: _*)
           }
           resolveIds(tIds, wmSnap,
@@ -3047,13 +2908,13 @@ object TxLog {
       // UNION declaration under schema evolution, so source-only columns
       // survive alignment (survivors null-fill in the union below)
       val declared = {
-        val base = schemaOf(table).getOrElse(source.schema)
-        org.apache.spark.sql.types.StructType(base.fields ++
-          source.schema.fields.filterNot(f => base.fieldNames.contains(f.name)))
+        val d = schemaOf(table).getOrElse(source.schema)
+        org.apache.spark.sql.types.StructType(d.fields ++
+          source.schema.fields.filterNot(f => d.fieldNames.contains(f.name)))
       }
       def aligned(df: DataFrame): DataFrame =
         df.select(declared.fieldNames.filter(df.columns.contains)
-          .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+          .map(col).toIndexedSeq: _*)
       val staged = survivors match {
         case Some(surv) => aligned(surv).unionByName(aligned(srcFinal),
           allowMissingColumns = true)
@@ -3067,9 +2928,9 @@ object TxLog {
       val cdc = scanAffOpt.map { scanAff =>
         cdcStage(spark, table, {
           val tKeys = scanAff
-            .select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
+            .select(keyCols.map(col): _*).distinct()
           val pre = aligned(scanAff)
-            .join(org.apache.spark.sql.functions.broadcast(keys), keyCols, "left_semi")
+            .join(keys, keyCols, "left_semi")
             .withColumn(ChangeTypeCol, lit("update_preimage"))
           val post = aligned(srcFinal).join(tKeys, keyCols, "left_semi")
             .withColumn(ChangeTypeCol, lit("update_postimage"))
@@ -3090,52 +2951,28 @@ object TxLog {
       val adds = (stagedActs ++ decl ++ cdc ++ idActs) :+
         tsAction(commitTs, "MERGE")
       val watched = idBases.keySet ++ idActs.map(_.path)
-      val removes = affected.map(Action("remove", _))
-      val read0Set = read0.toSet
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).last
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
-        val csB = constraintsOf(table, Some(base))
-        if (csB != cs0) { enforceConstraints(table, source, csB); cs0 = csB }
-        // a racer advancing a watched identity watermark forces a rebase
-        // (assigned ranges would collide; re-assign on the next pass)
-        val wmRaced = watched.exists(n =>
-          identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None))
-        // concurrent-append conflict detection (round-12 ADVICE #2): a
-        // racer's APPEND may itself carry rows matching the merge keys —
-        // committing alongside it would leave two live rows per matched
-        // key, silently breaking the keyed-upsert invariant (Delta raises
-        // ConcurrentAppendException here; we REBASE instead — the restart
-        // re-reads the snapshot, the racer's file joins `affected`, and
-        // the upsert replaces its rows too). Probe cost: one bounded scan
-        // of ONLY the files added since the read snapshot, broadcast
-        // semi-joined to the keys — zero when no appends raced. Sustained
-        // key-matching append storms could livelock the rebase; that
-        // trade (progress-vs-failure) mirrors every rebase loop here.
-        val newFiles = addsB.map(_.path).filterNot(read0Set)
-        lazy val newFilesCarryKeys = {
-          val dvNew = dvB.filter { case (f, _) => newFiles.contains(f) }
-          applyDvs(spark, table,
-            boundRead(spark, table, absOf(newFiles), None), dvNew)
-            .join(org.apache.spark.sql.functions.broadcast(keys), keyCols, "left_semi")
-            .limit(1).count() > 0
-        }
-        if (wmRaced || !affected.forall(live) ||
-            affected.exists(f => dvB.get(f) != dv0.get(f)) ||
-            (newFiles.nonEmpty && newFilesCarryKeys))
-          restart = true // racer rewrote a file, changed a DV, advanced a watermark, or appended matching keys: rebase
-        else if (tryCommit(table, base + 1, removes ++ adds)) {
-          done = true; committed = base + 1
-        }
+      val acts = affected.map(Action("remove", _)) ++ adds
+      val read0 = adds0.map(_.path).toSet
+      Some { base =>
+        val state = replayState(table, Some(base))
+        cs.reenforceAt(base, source)
+        // rebase when a racer advanced a watched identity watermark
+        // (assigned ranges would collide), rewrote an affected file or
+        // changed its DV, or APPENDED rows carrying the merge keys
+        // (round-12 ADVICE #2: committing alongside such an append would
+        // leave two live rows per matched key, silently breaking the
+        // keyed-upsert invariant — Delta raises ConcurrentAppendException
+        // here; the rebase folds the racer's file into `affected` and
+        // replaces its rows too). The key probe runs last and only over
+        // files added since the read — zero cost when no append raced.
+        // Sustained key-matching append storms could livelock the rebase;
+        // that trade (progress-vs-failure) mirrors every rebase loop here.
+        if (watermarkMoved(table, base, wmSnap, watched) ||
+            filesMoved(affected, dv0, state) ||
+            keysLanded(spark, table, state, read0, keys, keyCols)) Rebase
+        else Claim(acts)
       }
-      if (done) return committed
-      } // end non-empty-snapshot branch
-    }
-    -1L // unreachable
+    }.get
   }
 
   /** One WHEN clause of a general [[mergeClauses]] MERGE. `kind` is
@@ -3295,11 +3132,11 @@ object TxLog {
     require(dupKeys == 0L,
       s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
         "which clause row wins would be nondeterministic")
-    var cs0 = constraintsOf(table)
+    val cs = new Enforced(table)
     // marker column: distinguishes "matched" from "source key columns
     // happen to be null" after the left join
     val srcAliased = source.withColumn("_graft_src_hit", lit(true)).alias("s")
-    val keys = source.select(keyCols.map(col): _*).distinct()
+    val keys = broadcast(source.select(keyCols.map(col): _*).distinct())
 
     // guard_i = base && !cond_1..i-1 && cond_i — ordered first-match-wins,
     // NULL condition results count as false (SQL)
@@ -3348,49 +3185,45 @@ object TxLog {
       else df.select(declared.fields.map(f =>
         gens.get(f.name).map(e => expr(e).cast(f.dataType).as(f.name))
           .getOrElse(col(f.name))).toIndexedSeq: _*)
-    def absOf(rel: Seq[String]): Seq[String] =
-      rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
+    val matchedCol = coalesce(col("_graft_src_hit"), lit(false))
+    val mGuards = guards(matched, matchedCol)
+    val sGuards = guards(notMatchedBySource, not(matchedCol))
+    val iGuards = guards(notMatched, lit(true))
+    val anyChange = (mGuards ++ sGuards).reduceOption(_ || _).getOrElse(lit(false))
+    val deleted = (mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource))
+      .collect { case (g, c) if c.kind == "delete" => g }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    // join CONDITION (not USING): USING coalesces the key columns away,
+    // which would break `s.<key>` / `t.<key>` references in clause
+    // conditions and assignments. A residual ON remainder folds into the
+    // match itself (NULL = false, the SQL MERGE rule).
+    val onKeys = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
+      .reduce(_ && _)
+    val onCond = residual
+      .map(r => onKeys && coalesce(r, lit(false))).getOrElse(onKeys)
 
-    while (true) {
+    commitLoop(table) {
       val (adds0, dv0) = replayState(table, None)
       val read0 = adds0.map(_.path)
       // identity: one watermark snapshot per pass feeds assignment, the
       // committed idwm, and the claim-time conflict check (the append
       // discipline); a racer advancing a watched watermark rebases
-      val wmSnap = idDecls.keys
-        .map(n => n -> identityWatermark(table, n)).toMap
-      val matchedCol = coalesce(col("_graft_src_hit"), lit(false))
-      val mGuards = guards(matched, matchedCol)
-      val sGuards = guards(notMatchedBySource, not(matchedCol))
-      val iGuards = guards(notMatched, lit(true))
-      val anyChange = (mGuards ++ sGuards).reduceOption(_ || _).getOrElse(lit(false))
-      val deleted = (mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource))
-        .collect { case (g, c) if c.kind == "delete" => g }
-        .reduceOption(_ || _).getOrElse(lit(false))
-
-      // join CONDITION (not USING): USING coalesces the key columns
-      // away, which would break `s.<key>` / `t.<key>` references in
-      // clause conditions and assignments. A residual ON remainder folds
-      // into the match itself (NULL = false, the SQL MERGE rule).
-      val onKeys = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
-        .reduce(_ && _)
-      val onCond = residual
-        .map(r => onKeys && coalesce(r, lit(false))).getOrElse(onKeys)
+      val wmSnap = watermarks(table)
 
       // ---- inserts: source rows matching NO live target row (key equal
       // AND residual true), through the insert clauses (computed against
-      // the read snapshot; the claim loop below restarts if new keys land
+      // the read snapshot; the claim check below rebases if new keys land
       // meanwhile). Without a residual the anti-join needs only the
       // distinct target keys; with one it must see the target columns the
       // residual reads — still one broadcastable-source join shape.
       val unmatchedSrc =
         if (read0.isEmpty) srcAliased
         else if (residual.isEmpty) srcAliased.join(
-          applyDvs(spark, table, boundRead(spark, table, absOf(read0), None), dv0)
+          applyDvs(spark, table, boundRead(spark, table, read0, None), dv0)
             .select(keyCols.map(col): _*).distinct(),
           keyCols, "left_anti")
         else srcAliased.join(
-          applyDvs(spark, table, boundRead(spark, table, absOf(read0), None), dv0)
+          applyDvs(spark, table, boundRead(spark, table, read0, None), dv0)
             .alias("t"),
           onCond, "left_anti")
       val idBases = scala.collection.mutable.Map.empty[String, Long]
@@ -3422,33 +3255,19 @@ object TxLog {
           }
         }
 
-      // ---- affected files + rewritten survivors (+ the joined frame,
-      // kept for the CDF record below)
-      val (affected, rewritten, joinedOpt) =
-        if (read0.isEmpty || (matched.isEmpty && notMatchedBySource.isEmpty))
-          (Seq.empty[String], None: Option[DataFrame], None: Option[DataFrame])
-        else {
-          val scanAll = applyDvs(spark, table,
-            boundRead(spark, table, absOf(read0), None), dv0)
-            .withColumn("_graft_file", input_file_name()).alias("t")
-          val hits = scanAll.join(srcAliased, onCond, "left_outer")
-            .filter(anyChange)
-            .select(col("_graft_file")).distinct()
-            .collect().map(_.getString(0))
-          val aff = read0.filter(fileHitSet(hits.toIndexedSeq))
-          if (aff.isEmpty) (aff, None, None)
-          else {
-            val affDvs = dv0.filter { case (f, _) => aff.contains(f) }
-            val scanAff = applyDvs(spark, table,
-              boundRead(spark, table, absOf(aff), None), affDvs).alias("t")
-            val joined = scanAff.join(srcAliased, onCond, "left_outer")
-            val surv = joined.filter(not(deleted))
-              .select(declared.fields.map(f => survivorCol(f,
-                mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)))
-                .toIndexedSeq: _*)
-            (aff, Some(surv), Some(joined))
-          }
-        }
+      // ---- affected files: those holding a row some clause would CHANGE
+      // (+ the joined frame of just those, kept for the CDF record below)
+      val hitRead =
+        if (matched.isEmpty && notMatchedBySource.isEmpty) None
+        else cowRead(spark, table, adds0, dv0, pruned = false)(
+          _.alias("t").join(srcAliased, onCond, "left_outer").filter(anyChange))
+      val affected = hitRead.map(_._1).getOrElse(Nil)
+      val joinedOpt = hitRead.map { case (_, scanAff) =>
+        scanAff.alias("t").join(srcAliased, onCond, "left_outer") }
+      val rewritten = joinedOpt.map(_.filter(not(deleted))
+        .select(declared.fields.map(f => survivorCol(f,
+          mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)))
+          .toIndexedSeq: _*))
 
       val stagedFrame: Option[DataFrame] = (rewritten, inserts) match {
         case (Some(r), Some(i)) => Some(regen(r.unionByName(i)))
@@ -3459,75 +3278,58 @@ object TxLog {
           if (i.limit(1).count() == 0) None else Some(regen(i))
         case (None, None) => None
       }
-      if (stagedFrame.isEmpty && affected.isEmpty) return None
-      stagedFrame.foreach(enforceConstraints(table, _, cs0))
-      // CDF record (property-gated, and only for change commits — an
-      // affected-free merge is add-only and its inserts derive at read):
-      // update pre/post pairs per firing update clause, deletes per
-      // firing delete clause, plus this commit's insert rows
-      val cdcActs: Seq[Action] =
-        if (affected.isEmpty) Nil
-        else cdcStage(spark, table, {
-          val joined = joinedOpt.get
-          val allGcs = mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)
-          val tCols = declared.fields.map(f =>
-            tBase(f).cast(f.dataType).as(f.name)).toIndexedSeq
-          val updateAny = allGcs
-            .collect { case (g, c) if c.kind == "update" => g }
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val pre = joined.filter(updateAny).select(tCols: _*)
-            .withColumn(ChangeTypeCol, lit("update_preimage"))
-          val post = regen(joined.filter(updateAny)
-            .select(declared.fields.map(f => survivorCol(f, allGcs))
-              .toIndexedSeq: _*))
-            .withColumn(ChangeTypeCol, lit("update_postimage"))
-          val dels = joined.filter(deleted).select(tCols: _*)
-            .withColumn(ChangeTypeCol, lit("delete"))
-          (Seq(pre, post, dels) ++ inserts.map(i =>
-            regen(i).withColumn(ChangeTypeCol, lit("insert"))))
-            .reduce(_ unionByName _)
-        })
-      val stagedActs = stagedFrame.map(stage(spark, table, _)).getOrElse(Nil)
-      val idActs = identityWmActions(spark, table, stagedActs, idBases.toMap,
-        idSuppliedCols, wmSnap)
-      val adds = (stagedActs ++ cdcActs ++ decl ++ idActs) :+
-        tsAction(commitTs, "MERGE")
-      val watched = idBases.keySet ++ idActs.map(_.path)
-      val removes = affected.map(Action("remove", _))
-      val read0Set = read0.toSet
-
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).lastOption.getOrElse(0L)
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
-        val csB = constraintsOf(table, Some(base))
-        val newFiles = addsB.map(_.path).filterNot(read0Set)
-        lazy val newFilesCarryKeys = {
-          val dvNew = dvB.filter { case (f, _) => newFiles.contains(f) }
-          applyDvs(spark, table,
-            boundRead(spark, table, absOf(newFiles), None), dvNew)
-            .join(org.apache.spark.sql.functions.broadcast(keys), keyCols, "left_semi")
-            .limit(1).count() > 0
-        }
-        if (csB != cs0) { cs0 = csB; restart = true }
-        else if (watched.exists(n =>
-            identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None)) ||
-            !affected.forall(live) ||
-            affected.exists(f => dvB.get(f) != dv0.get(f)) ||
-            (newFiles.nonEmpty &&
-              (notMatchedBySource.nonEmpty || newFilesCarryKeys)))
-          restart = true // watermark advanced, file rewritten/DV'd, or keys appended: rebase
-        else if (tryCommit(table, base + 1, removes ++ adds)) {
-          done = true; committed = base + 1
+      if (stagedFrame.isEmpty && affected.isEmpty) None
+      else {
+        stagedFrame.foreach(cs.enforce)
+        // CDF record (property-gated, and only for change commits — an
+        // affected-free merge is add-only and its inserts derive at
+        // read): update pre/post pairs per firing update clause, deletes
+        // per firing delete clause, plus this commit's insert rows
+        val cdcActs: Seq[Action] = joinedOpt.map { joined =>
+          cdcStage(spark, table, {
+            val allGcs = mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)
+            val tCols = declared.fields.map(f =>
+              tBase(f).cast(f.dataType).as(f.name)).toIndexedSeq
+            val updateAny = allGcs
+              .collect { case (g, c) if c.kind == "update" => g }
+              .reduceOption(_ || _).getOrElse(lit(false))
+            val pre = joined.filter(updateAny).select(tCols: _*)
+              .withColumn(ChangeTypeCol, lit("update_preimage"))
+            val post = regen(joined.filter(updateAny)
+              .select(declared.fields.map(f => survivorCol(f, allGcs))
+                .toIndexedSeq: _*))
+              .withColumn(ChangeTypeCol, lit("update_postimage"))
+            val dels = joined.filter(deleted).select(tCols: _*)
+              .withColumn(ChangeTypeCol, lit("delete"))
+            (Seq(pre, post, dels) ++ inserts.map(i =>
+              regen(i).withColumn(ChangeTypeCol, lit("insert"))))
+              .reduce(_ unionByName _)
+          })
+        }.getOrElse(Nil)
+        val stagedActs = stagedFrame.map(stage(spark, table, _)).getOrElse(Nil)
+        val idActs = identityWmActions(spark, table, stagedActs, idBases.toMap,
+          idSuppliedCols, wmSnap)
+        val acts = affected.map(Action("remove", _)) ++
+          ((stagedActs ++ cdcActs ++ decl ++ idActs) :+ tsAction(commitTs, "MERGE"))
+        val watched = idBases.keySet ++ idActs.map(_.path)
+        val read0Set = read0.toSet
+        // rebase on a changed constraint set (the staged rows must
+        // re-validate), an advanced watermark, a rewritten/DV'd affected
+        // file, or new files since the read: a racing append's rows would
+        // be subject to BY SOURCE clauses, so with any BY SOURCE clause
+        // every new file rebases, otherwise only key-carrying ones
+        Some { base =>
+          val state = replayState(table, Some(base))
+          if (cs.changedAt(base)) Rebase
+          else if (watermarkMoved(table, base, wmSnap, watched) ||
+              filesMoved(affected, dv0, state) ||
+              (notMatchedBySource.nonEmpty &&
+                state._1.exists(a => !read0Set(a.path))) ||
+              keysLanded(spark, table, state, read0Set, keys, keyCols)) Rebase
+          else Claim(acts)
         }
       }
-      if (done) return Some(committed)
-      // else: rebase — re-run the whole pass against the new snapshot
     }
-    None // unreachable
   }
 
   /** Transactional OPTIMIZE: rewrite the current snapshot's files into
@@ -3577,98 +3379,79 @@ object TxLog {
     require(zorderBy.isEmpty || zorderBy.size == 2,
       "ZORDER BY interleaves exactly two numeric columns (the Morton " +
         "spread is 2-way; N-way needs a different bit stride)")
-    while (true) {
+    commitLoop(table) {
       val (all0, dvAll0) = replayState(table, None)
-      if (all0.isEmpty) return None
       // OPTIMIZE … WHERE (partition-scoped compaction): rewrite ONLY the
       // files of the named partitions — at 100 TB, compacting today's
       // ingest must not read yesterday's table. Exact by the
       // single-valued-file invariant; non-partition predicates refused.
-      val adds0 = where match {
-        case None => all0
-        case Some(c) => partitionSplit(spark, table, c, all0)._1
-      }
-      if (adds0.isEmpty) return None // nothing in the named region
-      val read0 = adds0.map(_.path)
-      val dv0 = {
-        val scoped = read0.toSet
-        dvAll0.filter { case (f, _) => scoped(f) }
-      }
-      // bind the DECLARED schema: on an evolved table a bare parquet
-      // read takes whichever footer it samples first and could compact
-      // the new columns away. DVs are applied, so compaction MATERIALIZES
-      // merge-on-read deletes (the rewrite drops the rows; the
-      // add-resets-DV replay rule clears the vectors) — the PURGE
-      // semantics of the production formats.
-      val base = applyDvs(spark, table,
-        boundRead(spark, table, read0.map(p => s"$table/$p"), None), dv0)
-      val compact =
-        if (zorderBy.nonEmpty) {
-          // 2-way Morton interleave of the low 16 bits of each key
-          // (the q76 layout, applied as a compaction): range-partition
-          // + in-partition sort on the z-value, then DROP it — the
-          // schema is unchanged, but each output file now covers a
-          // compact rectangle in (a, b) space, so footer min/max prune
-          // on EITHER column. At 100 TB the range exchange samples
-          // boundaries; no global sort materializes.
-          base.withColumn("_graft_z", zKey(zorderBy))
-            .repartitionByRange(targetFiles, col("_graft_z"))
-            .sortWithinPartitions(col("_graft_z"))
-            .drop("_graft_z")
+      val adds0 =
+        if (all0.isEmpty) all0
+        else where.fold(all0)(c => partitionSplit(spark, table, c, all0)._1)
+      // empty table, or nothing in the named region
+      if (adds0.isEmpty) None
+      else {
+        val read0 = adds0.map(_.path)
+        val dv0 = {
+          val scoped = read0.toSet
+          dvAll0.filter { case (f, _) => scoped(f) }
         }
-        else if (sortBy.isEmpty) {
-          val partCols = partColsOf(table)
-          if (partCols.isEmpty) base.coalesce(targetFiles)
-          // partitioned: hash on the partition tuple, so each value
-          // lands wholly in ONE task and the partitionBy writer emits
-          // exactly one compacted file per partition — partition-aligned
-          // compaction with up-to-|partitions|-way parallelism (session
-          // shuffle parallelism, NOT targetFiles: "one file" is per
-          // partition here), no global coalesce bottleneck at scale
-          else base.repartition(
-            partCols.map(org.apache.spark.sql.functions.col): _*)
-        }
-        else base
-          .repartitionByRange(targetFiles,
-            sortBy.map(org.apache.spark.sql.functions.col): _*)
-          .sortWithinPartitions(
-            sortBy.map(org.apache.spark.sql.functions.col): _*)
-      // a compaction REARRANGES rows, it never changes content — mark
-      // every action dataChange=false so CDC consumers (changes(), the
-      // streaming source) skip the rewrite instead of re-delivering
-      // every survivor row (round-12 ADVICE #1). Exception: when DVs are
-      // being materialized the rewrite DOES change visible content
-      // layout semantics for historical readers — but not table content;
-      // the deleted rows were already invisible, so dataChange stays
-      // false (Delta marks DV-materializing OPTIMIZE the same way).
-      // OPTIMIZE's layout (INTO n FILES / per-partition compaction) IS
-      // the caller's ask — the stage-side file sizing must not re-merge it
-      val adds = stage(spark, table, compact, partColsOf(table), sized = false)
-        .map(_.copy(dataChange = false)) :+ tsAction(commitTs, "OPTIMIZE")
-      val removes = read0.map(Action("remove", _, None, dataChange = false))
-      // same validate-then-CAS ordering as deleteWhere: base first,
-      // validate read0 as of base, claim base+1 — a CAS loss forces
-      // re-validation, so a racer's removal of a file we read can
-      // never slip between the check and the commit
-      var done = false
-      var restart = false
-      var committed = -1L
-      while (!done && !restart) {
-        val base = versions(table).last
-        val (addsB, dvB) = replayState(table, Some(base))
-        val live = addsB.map(_.path).toSet
+        // bind the DECLARED schema: on an evolved table a bare parquet
+        // read takes whichever footer it samples first and could compact
+        // the new columns away. DVs are applied, so compaction MATERIALIZES
+        // merge-on-read deletes (the rewrite drops the rows; the
+        // add-resets-DV replay rule clears the vectors) — the PURGE
+        // semantics of the production formats.
+        val rows = applyDvs(spark, table, boundRead(spark, table, read0, None), dv0)
+        val compact =
+          if (zorderBy.nonEmpty) {
+            // 2-way Morton interleave of the low 16 bits of each key
+            // (the q76 layout, applied as a compaction): range-partition
+            // + in-partition sort on the z-value, then DROP it — the
+            // schema is unchanged, but each output file now covers a
+            // compact rectangle in (a, b) space, so footer min/max prune
+            // on EITHER column. At 100 TB the range exchange samples
+            // boundaries; no global sort materializes.
+            rows.withColumn("_graft_z", zKey(zorderBy))
+              .repartitionByRange(targetFiles, col("_graft_z"))
+              .sortWithinPartitions(col("_graft_z"))
+              .drop("_graft_z")
+          }
+          else if (sortBy.isEmpty) {
+            val partCols = partColsOf(table)
+            if (partCols.isEmpty) rows.coalesce(targetFiles)
+            // partitioned: hash on the partition tuple, so each value
+            // lands wholly in ONE task and the partitionBy writer emits
+            // exactly one compacted file per partition — partition-aligned
+            // compaction with up-to-|partitions|-way parallelism (session
+            // shuffle parallelism, NOT targetFiles: "one file" is per
+            // partition here), no global coalesce bottleneck at scale
+            else rows.repartition(partCols.map(col): _*)
+          }
+          else rows
+            .repartitionByRange(targetFiles, sortBy.map(col): _*)
+            .sortWithinPartitions(sortBy.map(col): _*)
+        // a compaction REARRANGES rows, it never changes content — mark
+        // every action dataChange=false so CDC consumers (changes(), the
+        // streaming source) skip the rewrite instead of re-delivering
+        // every survivor row (round-12 ADVICE #1). Exception: when DVs are
+        // being materialized the rewrite DOES change visible content
+        // layout semantics for historical readers — but not table content;
+        // the deleted rows were already invisible, so dataChange stays
+        // false (Delta marks DV-materializing OPTIMIZE the same way).
+        // OPTIMIZE's layout (INTO n FILES / per-partition compaction) IS
+        // the caller's ask — the stage-side file sizing must not re-merge it
+        val adds = stage(spark, table, compact, partColsOf(table), sized = false)
+          .map(_.copy(dataChange = false)) :+ tsAction(commitTs, "OPTIMIZE")
+        val acts = read0.map(Action("remove", _, None, dataChange = false)) ++ adds
         // a racer removing a read file OR landing a DV on one both
         // invalidate the compacted content (the rewrite would resurrect
         // the racer's deleted rows) — rebase on either
-        if (!read0.forall(live) ||
-            read0.exists(f => dvB.get(f) != dv0.get(f))) restart = true
-        else if (tryCommit(table, base + 1, removes ++ adds)) {
-          done = true; committed = base + 1
-        }
+        Some((base: Long) =>
+          if (filesMoved(read0, dv0, replayState(table, Some(base)))) Rebase
+          else Claim(acts))
       }
-      if (done) return Some(committed)
     }
-    None
   }
 
   /** VACUUM: delete data files unreferenced by the snapshots of the most
@@ -3844,8 +3627,7 @@ object TxLog {
         s"(first: ${(missingData ++ missingDv).headOption.getOrElse("")})")
     val targetSchema = schemaOf(table, Some(toVersion))
     val targetCs = constraintsOf(table, Some(toVersion))
-    while (true) {
-      val base = versions(table).last
+    commitLoop(table)(Some { base =>
       if (renameMap(table, Some(toVersion)) != renameMap(table, Some(base)))
         throw new UnsupportedOperationException(
           s"RESTORE $table to $toVersion crosses a column RENAME — " +
@@ -3890,7 +3672,6 @@ object TxLog {
               sql.getBytes(StandardCharsets.UTF_8))))
         }
       val diff = removes ++ readds ++ dvFixes ++ schemaFix ++ csFixes
-      if (diff.isEmpty) return None
       // CDF record (round-15, ADVICE r14 #2): re-surfaced rows ARE new
       // rows and rolled-back rows ARE deletes to a row-level consumer —
       // a restore without a cdc record wedges streaming readChangeFeed.
@@ -3900,7 +3681,7 @@ object TxLog {
       // insert. Only on CDF-enabled tables — which also suspends the
       // zero-data-I/O guarantee for exactly this verb, the property's
       // documented price.
-      val cdc =
+      lazy val cdc =
         if (!cdfEnabled(table) ||
             (removes.isEmpty && readds.isEmpty && dvFixes.isEmpty)) Nil
         else {
@@ -3909,21 +3690,19 @@ object TxLog {
               throw new IllegalStateException(
                 s"RESTORE of CDF-enabled $table needs an active " +
                   "SparkSession to record the row-level diff"))
-          def absOf(rel: Seq[String]): Seq[String] =
-            rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
           val dvChanged = dvFixes.map(_.path)
           val delPaths = removes.map(_.path) ++ dvChanged
           val insPaths = readds.map(_.path) ++ dvChanged
           val dels =
             if (delPaths.isEmpty) None
             else Some(applyDvs(s, table,
-              boundRead(s, table, absOf(delPaths), Some(base)),
+              boundRead(s, table, delPaths, Some(base)),
               dvB.filter { case (f, _) => delPaths.contains(f) })
               .withColumn(ChangeTypeCol, lit("delete")))
           val ins =
             if (insPaths.isEmpty) None
             else Some(applyDvs(s, table,
-              boundRead(s, table, absOf(insPaths), Some(toVersion)),
+              boundRead(s, table, insPaths, Some(toVersion)),
               dvT.filter { case (f, _) => insPaths.contains(f) })
               .withColumn(ChangeTypeCol, lit("insert")))
           val frame = (dels, ins) match {
@@ -3936,11 +3715,9 @@ object TxLog {
           }
           cdcStage(s, table, frame)
         }
-      if (tryCommit(table, base + 1,
-          (diff ++ cdc) :+ tsAction(commitTs, "RESTORE")))
-        return Some(base + 1)
-    }
-    None
+      if (diff.isEmpty) Skip
+      else Claim((diff ++ cdc) :+ tsAction(commitTs, "RESTORE"))
+    })
   }
 
   // ------------------------------------------------------------ clone
@@ -4038,7 +3815,7 @@ object TxLog {
           s"no adds in ($fromV, $hi] for $table and no declared schema " +
             "to shape an empty increment"))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else boundRead(spark, table, added.map(p => s"$table/$p"), Some(hi))
+    } else boundRead(spark, table, added, Some(hi))
   }
 
   /** Relative paths of the files a CDC consumer must deliver for
@@ -4119,8 +3896,8 @@ object TxLog {
     // actions (pre-round-16 logs) are simply never skipped.
     val conf = spark.sessionState.newHadoopConf()
     parts.map { r =>
-      Action("cdc", r, TxStats.fromFooter(conf,
-        Paths.get(table, r).toAbsolutePath.toString).map(TxStats.encode))
+      Action("cdc", r,
+        TxStats.fromFooter(conf, absPath(table, r)).map(TxStats.encode))
     }
   }
 
@@ -4153,14 +3930,13 @@ object TxLog {
               skipChangeCommits: Boolean = false): Seq[(String, String, Long)] =
     versions(table).filter(v => v > fromV && v <= toV).flatMap { v =>
       val acts = readActions(table, v)
-      def abs(p: String) = Paths.get(table, p).toAbsolutePath.toString
       val cdc = acts.collect { case Action("cdc", p, _, _, _) => p }
-      if (cdc.nonEmpty) cdc.map(p => ("cdc", abs(p), v))
+      if (cdc.nonEmpty) cdc.map(p => ("cdc", absPath(table, p), v))
       else {
         val isChange = acts.exists(a =>
           (a.op == "remove" && a.dataChange) || a.op == "dv")
         if (!isChange)
-          acts.collect { case Action("add", p, _, true, _) => ("insert", abs(p), v) }
+          acts.collect { case Action("add", p, _, true, _) => ("insert", absPath(table, p), v) }
         else if (skipChangeCommits) Nil
         // the two failure shapes are different user errors and get
         // different messages (round-15, ADVICE r14 #2): property off =
@@ -4220,8 +3996,6 @@ object TxLog {
     val declared = schemaOf(table, Some(hi)).getOrElse(
       throw new IllegalArgumentException(
         s"$table has no declared schema — CDF needs one"))
-    def absOf(rel: Seq[String]): Seq[String] =
-      rel.map(p => Paths.get(table, p).toAbsolutePath.toString)
     def shape(df: DataFrame, ct: Option[String], v: Long): DataFrame = {
       val dataCols = declared.fields.map(f =>
         (if (df.columns.contains(f.name)) col(f.name)
@@ -4246,8 +4020,7 @@ object TxLog {
           // (plus _change_type) keeps evolved feeds reading as before —
           // columns declared after v null-fill in shape()
           val entries = cdcActs.map(a =>
-            (Paths.get(table, a.path).toAbsolutePath.toString,
-              a.stats.flatMap(TxStats.decode)))
+            (absPath(table, a.path), a.stats.flatMap(TxStats.decode)))
           val df = schemaOf(table, Some(v)) match {
             case Some(s) => StatsFileIndex.scan(spark, entries,
               org.apache.spark.sql.types.StructType(s.fields :+
@@ -4272,7 +4045,7 @@ object TxLog {
               val priorDvs = dvsAt(table, Some(v - 1))
                 .filter { case (f, _) => removes.contains(f) }
               Seq(shape(applyDvs(spark, table,
-                boundRead(spark, table, absOf(removes), Some(v - 1)), priorDvs),
+                boundRead(spark, table, removes, Some(v - 1)), priorDvs),
                 Some("delete"), v))
             }
           // positions newly dead at v: fresh sidecars MINUS each file's
@@ -4304,7 +4077,7 @@ object TxLog {
                 if (small) org.apache.spark.sql.functions.broadcast(delta)
                 else hinted(delta)
               Seq(shape(withDvKey(
-                boundRead(spark, table, absOf(freshMap.keys.toSeq), Some(v - 1)))
+                boundRead(spark, table, freshMap.keys.toSeq, Some(v - 1)))
                 .join(right, Seq("_graft_key", "_graft_pos"), "left_semi")
                 .drop("_graft_key", "_graft_pos"),
                 Some("delete"), v))
@@ -4325,10 +4098,10 @@ object TxLog {
     }
   }
 
-  /** Scan `files` binding the DECLARED schema when one exists: with an
-    * evolved table, a bare parquet read would take whichever file's
-    * footer it samples first (older files silently drop the new
-    * columns); binding the log's declaration makes absent columns
+  /** Scan the table-relative `files` binding the DECLARED schema when
+    * one exists: with an evolved table, a bare parquet read would take
+    * whichever file's footer it samples first (older files silently drop
+    * the new columns); binding the log's declaration makes absent columns
     * surface as null — schema comes from the log, not the files, the
     * production-format read rule. Pre-schema tables read as before.
     *
@@ -4343,44 +4116,34 @@ object TxLog {
     * names. Driver-side Files.size over the known list replaces them. */
   private def boundRead(spark: SparkSession, table: String,
                         files: Seq[String],
-                        asOf: Option[Long]): DataFrame = {
-    val m = renameMap(table, asOf)
-    def entries: Seq[(String, Option[TxStats.FileStats])] =
-      files.map(f => (Paths.get(f).toAbsolutePath.toString, None))
-    schemaOf(table, asOf) match {
-      case Some(s) if m.nonEmpty =>
-        // column mapping: files carry PHYSICAL names; bind the physical
-        // schema at the scan, surface the logical one via aliases
-        val phys = org.apache.spark.sql.types.StructType(
-          s.fields.map(f => f.copy(name = physicalOf(m, f.name))))
-        StatsFileIndex.scan(spark, entries, phys)
-          .select(s.fieldNames.toSeq
-            .map(ln => col(physicalOf(m, ln)).as(ln)): _*)
-      case Some(s) => StatsFileIndex.scan(spark, entries, s)
-      case None    => spark.read.parquet(files: _*)
-    }
-  }
+                        asOf: Option[Long]): DataFrame =
+    boundScan(spark, table, files.map(f => (absPath(table, f), None)), asOf)
 
   /** [[boundRead]] with planning-time file skipping (round-16, VERDICT
-    * r15 #3): binds the declared schema exactly like boundRead, but
-    * lists the files through a [[StatsFileIndex]] carrying the commit
-    * log's per-file stats (footer harvest merged with partition
-    * point-stats via [[statsResolver]]), so the filters a query pushes
-    * prune WHOLE FILES during planning — the CDF read path's insert
-    * scans skip like the main table does. Conservative like every
-    * stats path: stats-less files are never skipped. */
+    * r15 #3): the entries carry the commit log's per-file stats (footer
+    * harvest merged with partition point-stats via [[statsResolver]]),
+    * so the filters a query pushes prune WHOLE FILES during planning —
+    * the CDF read path's insert scans skip like the main table does.
+    * Conservative like every stats path: stats-less files are never
+    * skipped. */
   private def prunedBoundRead(spark: SparkSession, table: String,
                               adds: Seq[Action],
                               asOf: Option[Long]): DataFrame = {
     val resolve = statsResolver(table, asOf)
-    val entries = adds.map(a =>
-      (Paths.get(table, a.path).toAbsolutePath.toString, resolve(a)))
+    boundScan(spark, table, adds.map(a => (absPath(table, a.path), resolve(a))), asOf)
+  }
+
+  /** The one schema-bound scan over (absolute path, stats) entries. */
+  private def boundScan(spark: SparkSession, table: String,
+                        entries: Seq[(String, Option[TxStats.FileStats])],
+                        asOf: Option[Long]): DataFrame = {
     val m = renameMap(table, asOf)
     schemaOf(table, asOf) match {
       case Some(s) if m.nonEmpty =>
-        // column mapping: bind the physical schema at the scan, alias
-        // to logical above it — pushed filters rewrite through the
-        // aliases into physical names, matching the physical-keyed stats
+        // column mapping: files carry PHYSICAL names; bind the physical
+        // schema at the scan, alias to logical above it — pushed filters
+        // rewrite through the aliases into physical names, matching the
+        // physical-keyed stats
         val phys = org.apache.spark.sql.types.StructType(
           s.fields.map(f => f.copy(name = physicalOf(m, f.name))))
         StatsFileIndex.scan(spark, entries, phys)
@@ -4459,7 +4222,7 @@ object TxLog {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
     val adds = snapshotAdds(table, asOf)
     require(adds.nonEmpty, s"empty snapshot for $table asOf=$asOf")
-    val base = boundRead(spark, table, adds.map(a => s"$table/${a.path}"), asOf)
+    val base = boundRead(spark, table, adds.map(_.path), asOf)
     val optimized = base.filter(cond).queryExecution.optimizedPlan
     if (optimized.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
       return Pruned(Seq.empty, adds) // predicate folded to false: scan elided
@@ -4511,8 +4274,8 @@ object TxLog {
     else {
       val conf = spark.sessionState.newHadoopConf()
       val (keptB, skippedB) = kept.partition { a =>
-        !probes.exists { case (c, v) => TxStats.bloomExcludes(conf,
-          Paths.get(table, a.path).toAbsolutePath.toString, c, v) }
+        !probes.exists { case (c, v) =>
+          TxStats.bloomExcludes(conf, absPath(table, a.path), c, v) }
       }
       Pruned(keptB, skipped ++ skippedB)
     }
@@ -4530,7 +4293,7 @@ object TxLog {
     val pr = prune(spark, table, cond, asOf)
     if (pr.kept.isEmpty) {
       // provably no matching row anywhere: empty frame, table schema
-      val all = snapshotAdds(table, asOf).map(a => s"$table/${a.path}")
+      val all = snapshotAdds(table, asOf).map(_.path)
       boundRead(spark, table, all, asOf).filter(lit(false))
     } else {
       // footer stats predate DVs, so pruning stays conservative: a kept
@@ -4538,7 +4301,7 @@ object TxLog {
       val keptSet = pr.kept.map(_.path).toSet
       val dvs = dvsAt(table, asOf).filter { case (f, _) => keptSet(f) }
       applyDvs(spark, table,
-        boundRead(spark, table, pr.kept.map(a => s"$table/${a.path}"), asOf),
+        boundRead(spark, table, pr.kept.map(_.path), asOf),
         dvs).filter(cond)
     }
   }
