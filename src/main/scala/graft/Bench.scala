@@ -336,7 +336,12 @@ object Bench {
     * queries slow RELATIVE TO THE SESSION flag. A real plan regression
     * moves one query against the session band and still flags (the
     * probes are pinned, so a regression in an unrelated query cannot
-    * raise its own bar). */
+    * raise its own bar).
+    *
+    * A third arm flags any entry above 6× its best (and the historical
+    * 1 s), whatever the factor and floor: a sub-second query that turns
+    * several times slower can sit under a ~2 s floor bar and inside a
+    * factor-scaled bar, and would otherwise never flag. */
   private[graft] def suspectsOf(results: Map[String, Double],
                          history: Map[String, Double],
                          hostFactor: Double,
@@ -344,8 +349,24 @@ object Bench {
     results.toSeq
       .filter { case (k, v) =>
         history.get(k).exists(b =>
-          v > 2 * b * hostFactor && v > math.max(1.0, floorBar)) }
+          (v > 2 * b * hostFactor && v > math.max(1.0, floorBar)) ||
+            (v > 6 * b && v > 1.0)) }
       .map(_._1).sorted
+
+  /** The median of the probe readings, taking the SMALLER middle value
+    * for an even count: with 2 probes the upper one would let a single
+    * slow probe set the whole session's factor or floor. */
+  private[graft] def lowerMedian(xs: Seq[Double]): Double =
+    xs.sorted.apply((xs.size - 1) / 2)
+
+  /** A host factor above 2 means every query reads over twice its best:
+    * a regression that slows all queries evenly would hide inside that
+    * factor, so the run says so instead of silently absorbing it. */
+  private[graft] def hostFactorWarning(hostFactor: Double): Option[String] =
+    if (hostFactor <= 2.0) None
+    else Some(f"[bench] WARNING host factor $hostFactor%.2f > 2: every " +
+      "suspect bar is scaled by it, so a uniform slowdown of all queries " +
+      "(a regression, not host load) would not flag; re-run on a quieter host")
 
   /** Pinned host-factor probes: mid-weight (1.5-2.5 s best-known), shape-
     * diverse (similarity join / NB scan+model join / dedup weight fold),
@@ -374,7 +395,7 @@ object Bench {
   /** Measure the session host factor: each pinned probe runs twice
     * (min-of-2 — these are floor-bound shapes whose best-knowns came
     * from warm second executions), ratio'd against its best-known;
-    * median over the probes, clamped to [1, 3]. Runs AFTER the untimed
+    * lower median over the probes, clamped to [1, 3]. Runs AFTER the untimed
     * warm-up so it reads steady state, and the ~10 s it costs replaces
     * judge archaeology about whether a slow artifact is host load. */
   private def hostFactorOf(spark: SparkSession, sfDir: String,
@@ -399,13 +420,12 @@ object Bench {
     val factor =
       if (ratios.size < 2) 1.0
       else {
-        val f = ratios.sorted.apply(ratios.size / 2)
-        math.min(3.0, math.max(1.0, f))
+        math.min(3.0, math.max(1.0, lowerMedian(ratios)))
       }
     val floors = FloorProbeNames.flatMap(minOf2)
     val floor =
       if (floors.size < 2) 0.5 // bar stays at the historical 1 s
-      else math.min(2.0, floors.sorted.apply(floors.size / 2))
+      else math.min(2.0, lowerMedian(floors))
     (factor, floor)
   }
 
@@ -520,6 +540,7 @@ object Bench {
     }
     // session host-factor + floor calibration (round 17 — see suspectsOf)
     val (hostFactor, sessionFloor) = hostFactorOf(spark, sfDir, history)
+    hostFactorWarning(hostFactor).foreach(System.err.println)
     if (hostFactor > 1.0 || sessionFloor > 0.5)
       System.err.println(f"[bench] host factor $hostFactor%.2f, session floor $sessionFloor%.2f s — suspect bar 2 x best x factor, absolute arm ${math.max(1.0, 2 * sessionFloor)}%.2f s")
     // pass 1: unbudgeted — every query MUST get a number. Visit by

@@ -6,7 +6,7 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, input_file_name, lit, not, pmod, shiftleft}
 
 /** Minimal ACID table format over plain parquet: an ordered commit log of
@@ -557,80 +557,125 @@ object TxLog {
       ws
     }
 
-  /** Write `df` as a new immutable data dir and return its `add`
-    * actions (paths relative to the table root), each carrying the
-    * file's column stats harvested from the parquet FOOTER the writer
-    * just produced — metadata-only I/O, the write path stays
-    * single-pass ([[TxStats]]). Harvest failure degrades to a
-    * stats-less add (correct, just never skipped). */
-  private def stage(spark: SparkSession, table: String, df: DataFrame): Seq[Action] =
-    stage(spark, table, df, partColsOf(table))
+  /** What one staging write produced: the data files' `add` actions and
+    * the change rows' `cdc` actions. */
+  private final case class StagedFiles(adds: Seq[Action], cdc: Seq[Action]) {
+    def all: Seq[Action] = adds ++ cdc
+  }
 
   /** Staged-file sizing (see [[stage]]): coalesce toward this many bytes
     * per file, never below this many partitions. */
   private val StageTargetBytes = 128L * 1024 * 1024
   private val MinStageParts = 8
 
-  private def stage(spark: SparkSession, table: String, df: DataFrame,
-                    partCols: Seq[String], sized: Boolean = true): Seq[Action] = {
-    val rel = s"data/${UUID.randomUUID()}"
+  /** Sacrificial partition column of a combined stage: true on change
+    * rows, false on data rows (the Delta `__is_cdc` virtual partition).
+    * Deliberately outside [[PartDirPrefix]], so partition-token parsing
+    * never sees it. */
+  private val IsCdcCol = "__graft_is_cdc"
+
+  /** Write a commit's new files in ONE Spark write job and return their
+    * actions (paths relative to the table root): `rows` become data
+    * files under `data/<uuid>/` (`add` actions), `changes` — a CDC frame,
+    * data columns plus `_change_type` — the commit's change record under
+    * `cdc/<uuid>/` (`cdc` actions). Either may be absent: a CDC-only
+    * write (overwrite, truncate, restore, a DV delete) stages no data
+    * rows. Each file carries the column stats harvested from the parquet
+    * FOOTER the writer just produced — metadata-only I/O, the write path
+    * stays single-pass ([[TxStats]]); harvest failure degrades to a
+    * stats-less action (correct, just never skipped).
+    *
+    * Both kinds go out as one union split by [[IsCdcCol]]: data rows carry
+    * an all-null `_change_type` column readers never bind (every reader
+    * binds the declared schema, and the stats token leaves the column
+    * out), and the change files then move under `cdc/` by metadata-only
+    * renames, the same step that flattens the partition directories. */
+  private def stage(spark: SparkSession, table: String,
+                    rows: Option[DataFrame], changes: Option[DataFrame],
+                    partCols: Seq[String], sized: Boolean = true): StagedFiles = {
+    if (rows.isEmpty && changes.isEmpty) return StagedFiles(Nil, Nil)
+    val rm = renameMap(table)
+    // two writes: column-mapped data files carry physical names and change
+    // rows logical ones; a schema-less table's readers bind file columns
+    if (rows.nonEmpty && changes.nonEmpty && (rm.nonEmpty || schemaOf(table).isEmpty)) {
+      val data = stage(spark, table, rows, None, partCols, sized)
+      return data.copy(cdc = stage(spark, table, None, changes, partCols, sized).cdc)
+    }
+    // a CDC-only write lands straight in its cdc directory
+    val rel = s"${if (rows.isEmpty) "cdc" else "data"}/${UUID.randomUUID()}"
     // hand the frame to the stats-bearing writer session via a global
     // temp view (the cross-session channel the public API provides)
     val gv = s"graft_txlog_stage_${UUID.randomUUID().toString.replace("-", "")}"
-    // column mapping: every data file carries PHYSICAL names, whatever
-    // the logical names say today — rename the frame at the write seam
-    // (single select, so logical-name swaps cannot mis-chain)
-    val rm = renameMap(table)
-    val physDf =
-      if (rm.isEmpty) df
-      else df.select(df.columns.toSeq.map(c =>
-        col(c).as(physicalOf(rm, c))): _*)
     // partitioned tables: split files by partition VALUE via sacrificial
     // duplicate columns — partitionBy moves the dups into hive dirs and
     // drops them from file content, so the real partition columns stay
-    // ordinary data columns in every file (identity-partition model)
-    partCols.foreach(c => require(physDf.columns.contains(c),
-      s"write to partitioned table $table is missing partition column $c"))
-    val stagedDf0 = partCols.foldLeft(physDf)(
-      (d, c) => d.withColumn(PartDirPrefix + c, col(c)))
+    // ordinary data columns in every file (identity-partition model).
+    // Change rows are not split by partition: the union null-fills their
+    // dups, so they share one directory.
+    val dataDf = rows.map { df =>
+      // column mapping: every data file carries PHYSICAL names, whatever
+      // the logical names say today — rename the frame at the write seam
+      // (single select, so logical-name swaps cannot mis-chain)
+      val physDf =
+        if (rm.isEmpty) df
+        else df.select(df.columns.toSeq.map(c =>
+          col(c).as(physicalOf(rm, c))): _*)
+      partCols.foreach(c => require(physDf.columns.contains(c),
+        s"write to partitioned table $table is missing partition column $c"))
+      partCols.foldLeft(physDf)((d, c) => d.withColumn(PartDirPrefix + c, col(c)))
+    }
+    val (stagedDf0, dirCols) = (dataDf, changes) match {
+      case (Some(d), Some(c)) =>
+        (d.withColumn(ChangeTypeCol, lit(null).cast("string"))
+          .withColumn(IsCdcCol, lit(false))
+          .unionByName(c.withColumn(IsCdcCol, lit(true)), allowMissingColumns = true),
+          IsCdcCol +: partCols.map(PartDirPrefix + _))
+      case (Some(d), None) => (d, partCols.map(PartDirPrefix + _))
+      case (None, c) => (c.get, Nil)
+    }
     // Output file sizing (round 17, guide §6 "aim for 128 MB - 1 GB
     // files"): the bench tables are deliberately re-spread to session
     // parallelism for scan-side parallelism (Tables.spread), so a naive
     // staged write of a few-MB frame produced 32 tiny part files per
     // commit — and every later CoW verb, footer harvest, file listing
     // and log replay paid O(files). COALESCE (merge-only, never a
-    // shuffle, applied AFTER identity assignment so assigned values are
-    // untouched) toward a byte target from the optimizer's size
-    // estimate — but never below MinStageParts: a caller staging ≤ that
-    // many partitions chose the layout deliberately (the fixtures'
-    // coalesce(1)/coalesce(2) determinism idiom), and OPTIMIZE (whose
-    // INTO n layout is the verb's whole point) opts out via `sized`.
-    // Unknown estimates are huge (8 EB default), so target ≥ current and
-    // nothing changes — estimation failure degrades to the old layout,
-    // never to a single giant file. Coalescing after a shuffle merges
-    // reduce partitions without reducing map parallelism; for
-    // shuffle-free frames the merged scan is exactly the small frame the
-    // estimate proved.
+    // shuffle) toward a byte target from the optimizer's size estimate,
+    // never below MinStageParts: a caller staging ≤ that many partitions
+    // chose the layout deliberately (the fixtures' coalesce(1)/coalesce(2)
+    // determinism idiom), and OPTIMIZE (whose INTO n layout is the verb's
+    // whole point) opts out via `sized`. The estimate comes from the
+    // optimized plan alone — nothing runs — and coalesce never ADDS
+    // partitions, so a target at or above the current count (an unknown
+    // estimate is a huge 8 EB default) changes nothing. Identity values
+    // were assigned upstream from partition-local ids; merging partitions
+    // keeps every assigned value unique (the values a row gets may differ
+    // between partitionings, their uniqueness never does). Coalescing
+    // after a shuffle merges reduce partitions without reducing map
+    // parallelism. A frame that ENDS in the caller's own coalesce(n) is
+    // the one case to read from the plan: the optimizer collapses two
+    // adjacent coalesces into the outer one, so ours takes n as a cap.
     val stagedDf = if (!sized) stagedDf0 else {
-      val parts0 = stagedDf0.rdd.getNumPartitions
       val est = stagedDf0.queryExecution.optimizedPlan.stats.sizeInBytes
-      val target = (est / StageTargetBytes + 1)
-        .max(BigInt(MinStageParts)).min(BigInt(parts0)).toInt
-      if (target < parts0) stagedDf0.coalesce(target) else stagedDf0
+      val callerParts = stagedDf0.queryExecution.analyzed match {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
+            if !r.shuffle => BigInt(r.numPartitions)
+        case _ => BigInt(Int.MaxValue)
+      }
+      stagedDf0.coalesce((est / StageTargetBytes + 1)
+        .max(BigInt(MinStageParts)).min(callerParts).toInt)
     }
     stagedDf.createOrReplaceGlobalTempView(gv)
     // declared bloom columns (stored physical) ride as per-write parquet
     // options, so every staged file (append, overwrite, CoW rewrite,
-    // optimize) embeds them
+    // optimize, change record) embeds them
     val bloomOpts = bloomColsOf(table)
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
     try {
       val w = writerSession(spark).table(s"global_temp.$gv")
         .write.options(bloomOpts).mode(SaveMode.ErrorIfExists)
-      (if (partCols.isEmpty) w
-       else w.partitionBy(partCols.map(PartDirPrefix + _): _*))
+      (if (dirCols.isEmpty) w else w.partitionBy(dirCols: _*))
         .parquet(s"$table/$rel")
-    } finally df.sparkSession.catalog.dropGlobalTempView(gv)
+    } finally stagedDf.sparkSession.catalog.dropGlobalTempView(gv)
     val conf = spark.sessionState.newHadoopConf()
     val root = Paths.get(table, rel)
     val parts: Seq[String] = {
@@ -663,21 +708,38 @@ object TxLog {
           s"but the table partitions by $partCols")
       Some(encodePartValues(partCols.map(c => c -> byName(c))))
     }
-    // FLATTEN the partitioned layout: the hive dirs exist only to carry
-    // the tuple out of the writer — once parsed into the log token they
-    // are a liability (a 4th path segment breaks the fixed-depth DV row
-    // key, and escaped values breed URI-decode hazards), so each file
-    // moves up to the standard `data/<uuid>/<name>` depth (atomic
-    // rename, metadata-only; the p<i>- prefix keeps same-named files
-    // from sibling partitions distinct). The table's on-disk layout is
-    // therefore IDENTICAL for partitioned and unpartitioned tables;
-    // partition placement lives in the log, where the protocol reads it.
+    // FLATTEN the hive layout: the dirs exist only to carry the partition
+    // tuple and the change flag out of the writer — once parsed into the
+    // log token they are a liability (a 4th path segment breaks the
+    // fixed-depth DV row key, and escaped values breed URI-decode
+    // hazards), so each data file moves up to the standard
+    // `data/<uuid>/<name>` depth and each change file to `cdc/<uuid>/`
+    // (atomic renames, metadata-only; the p<i>- prefix keeps same-named
+    // files from sibling partitions distinct — an unpartitioned table's
+    // data files, like change files, share one directory, so their names
+    // are already unique). The table's on-disk
+    // layout is therefore IDENTICAL for partitioned and unpartitioned
+    // tables; partition placement lives in the log, where the protocol
+    // reads it.
+    val (cdcParts, dataParts) =
+      if (rows.isEmpty) (parts, Nil)
+      else parts.partition(_.contains(s"/$IsCdcCol=true/"))
+    val cdcPaths = if (rows.isEmpty || cdcParts.isEmpty) cdcParts else {
+      val cdcRel = s"cdc/${UUID.randomUUID()}"
+      Files.createDirectories(Paths.get(table, cdcRel))
+      cdcParts.map { p =>
+        val to = s"$cdcRel/${p.split('/').last}"
+        Files.move(Paths.get(table, p), Paths.get(table, to))
+        to
+      }
+    }
     val staged: Seq[(String, Option[String])] =
-      if (partCols.isEmpty) parts.map(p => p -> None)
+      if (dirCols.isEmpty) dataParts.map(p => p -> None)
       else {
-        val moved = parts.zipWithIndex.map { case (p, i) =>
+        val moved = dataParts.zipWithIndex.map { case (p, i) =>
           val tok = partTokenOf(p)
-          val flat = s"$rel/p$i-${p.split('/').last}"
+          val name = p.split('/').last
+          val flat = if (partCols.isEmpty) s"$rel/$name" else s"$rel/p$i-$name"
           Files.move(Paths.get(table, p), Paths.get(table, flat))
           flat -> tok
         }
@@ -692,10 +754,13 @@ object TxLog {
       }
     // harvest footers in parallel: each is a small metadata read, but on
     // an object store a wide commit (OPTIMIZE into N files) would pay
-    // N round-trips serially — bound the pool, keep the driver loop
+    // N round-trips serially — bound the pool, keep the driver loop.
+    // A data file's all-null `_change_type` stays out of its token.
     def harvest(p: String): Option[String] =
-      TxStats.fromFooter(conf, absPath(table, p)).map(TxStats.encode)
-    val finalPaths = staged.map(_._1)
+      TxStats.fromFooter(conf, absPath(table, p)).map(fs =>
+        TxStats.encode(if (p.startsWith("cdc/")) fs
+                       else fs.copy(cols = fs.cols - ChangeTypeCol)))
+    val finalPaths = staged.map(_._1) ++ cdcPaths
     val stats: Map[String, Option[String]] =
       if (finalPaths.sizeIs <= 2) finalPaths.map(p => p -> harvest(p)).toMap
       else {
@@ -710,7 +775,9 @@ object TxLog {
             scala.concurrent.duration.Duration.Inf).toMap
         } finally pool.shutdown()
       }
-    staged.map { case (p, tok) => Action("add", p, stats(p), part = tok) }
+    StagedFiles(
+      staged.map { case (p, tok) => Action("add", p, stats(p), part = tok) },
+      cdcPaths.map(p => Action("cdc", p, stats(p))))
   }
 
   // ---------------------------------------------------------- schema
@@ -2097,9 +2164,12 @@ object TxLog {
       else boundRead(spark, table, adds.map(_.path), None), dvs)
     if (adds0.isEmpty) None
     else {
+      // distinct per partition, not through a shuffle: one job, and the
+      // driver still gets O(files × splits) names
       val hits = matches(scan(adds0, dv0).withColumn("_graft_file", input_file_name()))
-        .select("_graft_file").distinct()
-        .collect().map(_.getString(0))
+        .select("_graft_file").as(Encoders.STRING)
+        .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+        .collect().distinct
       // input_file_name is scheme-qualified; match on the relative suffix
       // (data/<uuid>/part-*.parquet is unique within the table)
       val affected = adds0.map(_.path).filter(fileHitSet(hits.toIndexedSeq))
@@ -2180,7 +2250,7 @@ object TxLog {
     val (partCols, declActs) = declare(df)
     val cs = new Enforced(table)
     cs.enforce(df)
-    val staged = stage(spark, table, df, partCols)
+    val staged = stage(spark, table, Some(df), None, partCols).adds
     val idActs = identityWmActions(spark, table, staged, idBases,
       df1.columns.toSeq, wmSnap)
     new Staged(table, df, staged ++ declActs ++ idActs, cs, wmSnap,
@@ -2273,8 +2343,8 @@ object TxLog {
               throw new IllegalStateException(
                 s"TRUNCATE of CDF-enabled $table needs an active " +
                   "SparkSession to record the deleted rows"))
-          cdcStage(s, table, read(s, table, Some(base))
-            .withColumn(ChangeTypeCol, lit("delete")))
+          stageChange(s, table, None)(read(s, table, Some(base))
+            .withColumn(ChangeTypeCol, lit("delete"))).cdc
         }
       if (live.isEmpty) Skip
       else Claim(live.map(Action("remove", _)) ++ cdc :+
@@ -2332,11 +2402,11 @@ object TxLog {
           // because the removed snapshot may have moved.
           val cdc =
             if (removes.isEmpty || !cdfEnabled(table)) Nil
-            else cdcStage(spark, table,
+            else stageChange(spark, table, None)(
               read(spark, table, Some(base))
                 .withColumn(ChangeTypeCol, lit("delete"))
                 .unionByName(s.rows.withColumn(ChangeTypeCol, lit("insert")),
-                  allowMissingColumns = true))
+                  allowMissingColumns = true)).cdc
           Claim(removes ++ adds ++ cdc)
         }
       }
@@ -2387,15 +2457,14 @@ object TxLog {
       val (adds0, dv0) = replayState(table, None)
       cowRead(spark, table, adds0, dv0, pruned = true)(matched).map {
         case (affected, scanAff) =>
-          val survivors = unmatched(scanAff)
-          val adds =
-            if (survivors.isEmpty) Seq.empty // whole files deleted: no rewrite
-            else stage(spark, table, survivors)
-          // CDF record (property-gated): exactly the deleted rows — the
-          // survivors merely move files, which is not a row change
-          val cdc = cdcStage(spark, table,
+          // the survivors re-stage beside the CDF record (property-gated):
+          // exactly the deleted rows — the survivors merely move files,
+          // which is not a row change. A wholly deleted file leaves a
+          // zero-row staged file (or none): it is no add.
+          val w = stageChange(spark, table, Some(unmatched(scanAff)))(
             matched(scanAff).withColumn(ChangeTypeCol, lit("delete")))
-          val acts = (affected.map(Action("remove", _)) ++ cdc :+
+          val adds = w.adds.filterNot(_.stats.flatMap(TxStats.decode).exists(_.rows == 0))
+          val acts = (affected.map(Action("remove", _)) ++ w.cdc :+
             tsAction(commitTs, "DELETE")) ++ adds
           (base: Long) =>
             if (filesMoved(affected, dv0, replayState(table, Some(base)))) Rebase
@@ -2419,9 +2488,43 @@ object TxLog {
                     keyCols: Seq[String],
                     commitTs: Option[Long] = None): Option[Long] = {
     require(keyCols.nonEmpty, "deleteMatched requires at least one key column")
-    val keys = broadcast(source.select(keyCols.map(col): _*).distinct())
-    cowDelete(spark, table, commitTs)(
-      _.join(keys, keyCols, "left_semi"), _.join(keys, keyCols, "left_anti"))
+    // a single key column with few distinct keys becomes a literal IN
+    // list: one collect, then neither the file-finding scan nor the
+    // rewrite broadcasts the keys again, and the scan skips files by their
+    // key stats. Null keys match nothing (SQL equality), so they drop.
+    val literal = keyCols match {
+      case Seq(k) if literalKey(source.select(k).schema.head.dataType) =>
+        val vals = source.select(k).collect().iterator
+          .map(_.get(0)).filter(_ != null).toSet
+        if (vals.sizeIs > MaxKeyLiterals) None
+        else Some(coalesce(col(k).isInCollection(vals), lit(false)))
+      case _ => None
+    }
+    literal match {
+      case Some(hit) =>
+        cowDelete(spark, table, commitTs)(_.filter(hit), _.filter(not(hit)))
+      case None =>
+        // only semi/anti joins read the keys, so duplicates are harmless —
+        // a distinct would cost every query that broadcasts them a shuffle
+        val keys = broadcast(source.select(keyCols.map(col): _*))
+        cowDelete(spark, table, commitTs)(
+          _.join(keys, keyCols, "left_semi"), _.join(keys, keyCols, "left_anti"))
+    }
+  }
+
+  /** Most distinct keys [[deleteMatched]] inlines as a literal IN list;
+    * beyond it the plan would carry too large an expression, and the keys
+    * go through a broadcast join instead. */
+  private val MaxKeyLiterals = 10000
+  /** Key types whose IN-list match is exactly the join's equality (no
+    * float signed zeros, no nested values). */
+  private def literalKey(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType | BooleanType | _: StringType => true
+      case _ => false
+    }
   }
 
   /** Transactional row-level UPDATE, copy-on-write — the engine half of
@@ -2493,16 +2596,15 @@ object TxLog {
             val rewritten = updated(scan, guarded = true)
             val cs = new Enforced(table)
             cs.enforce(rewritten)
-            // CDF record (property-gated): pre/post image pairs of exactly
-            // the hit rows — the unchanged rows of affected files merely
-            // move files
-            val cdc = cdcStage(spark, table,
+            // CDF record (property-gated), staged with the rewrite: pre/post
+            // image pairs of exactly the hit rows — the unchanged rows of
+            // affected files merely move files
+            val w = stageChange(spark, table, Some(rewritten))(
               scan.filter(hit).withColumn(ChangeTypeCol, lit("update_preimage"))
                 .unionByName(updated(scan.filter(hit), guarded = false)
                   .withColumn(ChangeTypeCol, lit("update_postimage"))))
             val acts = affected.map(Action("remove", _)) ++
-              ((stage(spark, table, rewritten) ++ cdc) :+
-                tsAction(commitTs, "UPDATE"))
+              (w.all :+ tsAction(commitTs, "UPDATE"))
             (base: Long) => {
               val state = replayState(table, Some(base))
               cs.reenforceAt(base, rewritten)
@@ -2734,9 +2836,9 @@ object TxLog {
           val affected = read0.filter(byFile.contains)
           // CDF record (property-gated): the newly-deleted rows in full —
           // the DV delta alone names positions, not content
-          val cdc = cdcStage(spark, table,
+          val cdc = stageChange(spark, table, None)(
             alive.filter(hit).drop("_graft_key", "_graft_pos")
-              .withColumn(ChangeTypeCol, lit("delete")))
+              .withColumn(ChangeTypeCol, lit("delete"))).cdc
           val dvActions = affected.map { f =>
             val (rel, n) = byFile(f)
             Action("dv", f, Some(s"$rel:$n"))
@@ -2799,11 +2901,7 @@ object TxLog {
       require(source.columns.contains(n),
         s"merge on identity key column $n requires the source to supply it")
     }
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .count().filter(org.apache.spark.sql.functions.col("count") > 1).limit(1).count()
-    require(dupKeys == 0L,
-      s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
-        "which row wins would be nondeterministic")
+    requireUniqueKeys(source, keyCols, "row")
     // mergeSchema = MERGE WITH SCHEMA EVOLUTION (round 14): source-only
     // columns widen the declaration in the SAME commit (append's
     // evolution rule); survivors null-fill via the allowMissingColumns
@@ -2811,7 +2909,7 @@ object TxLog {
     val decl = enforceSchema(table, source, mergeSchema)
     val cs = new Enforced(table)
     cs.enforce(source)
-    val keys = broadcast(source.select(keyCols.map(col): _*).distinct())
+    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked above
     // ---- IDENTITY (round-16, ADVICE r15 #1): classify supply once.
     // identity columns must not be merge KEYS with an omitted source
     // column (there would be nothing to match on); explicit supply
@@ -2920,15 +3018,15 @@ object TxLog {
           allowMissingColumns = true)
         case None       => aligned(srcFinal)
       }
-      // CDF record (property-gated): matched target rows as update
-      // pre-images, their replacing source rows as post-images, unmatched
-      // source rows as inserts. Only when the commit actually removes
-      // files — an affected-free merge is an add-only commit whose
-      // inserts derive at read time without cdc files.
-      val cdc = scanAffOpt.map { scanAff =>
-        cdcStage(spark, table, {
-          val tKeys = scanAff
-            .select(keyCols.map(col): _*).distinct()
+      // CDF record (property-gated), staged in the same write:
+      // matched target rows as update pre-images, their replacing source
+      // rows as post-images, unmatched source rows as inserts. Only when
+      // the commit actually removes files — an affected-free merge is an
+      // add-only commit whose inserts derive at read time without cdc
+      // files.
+      val w = scanAffOpt.map { scanAff =>
+        stageChange(spark, table, Some(staged)) {
+          val tKeys = scanAff.select(keyCols.map(col): _*)
           val pre = aligned(scanAff)
             .join(keys, keyCols, "left_semi")
             .withColumn(ChangeTypeCol, lit("update_preimage"))
@@ -2943,12 +3041,11 @@ object TxLog {
           // shape() rule (round-15, ADVICE r14 #1)
           pre.unionByName(post, allowMissingColumns = true)
             .unionByName(ins, allowMissingColumns = true)
-        })
-      }.getOrElse(Nil)
-      val stagedActs = stage(spark, table, staged)
-      val idActs = identityWmActions(spark, table, stagedActs, idBases,
+        }
+      }.getOrElse(stage(spark, table, Some(staged), None, partColsOf(table)))
+      val idActs = identityWmActions(spark, table, w.adds, idBases,
         idSuppliedCols, wmSnap)
-      val adds = (stagedActs ++ decl ++ cdc ++ idActs) :+
+      val adds = (w.adds ++ decl ++ w.cdc ++ idActs) :+
         tsAction(commitTs, "MERGE")
       val watched = idBases.keySet ++ idActs.map(_.path)
       val acts = affected.map(Action("remove", _)) ++ adds
@@ -2974,6 +3071,16 @@ object TxLog {
       }
     }.get
   }
+
+  /** Refuse a MERGE source with duplicate keys — otherwise which `winner`
+    * wins is nondeterministic. `isEmpty` fetches at most one row without
+    * the extra exchange a global `limit(1).count()` plans. */
+  private def requireUniqueKeys(source: DataFrame, keyCols: Seq[String],
+                                winner: String): Unit =
+    require(source.groupBy(keyCols.map(col): _*).count()
+      .filter(col("count") > 1).isEmpty,
+      s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
+        s"which $winner wins would be nondeterministic")
 
   /** One WHEN clause of a general [[mergeClauses]] MERGE. `kind` is
     * "update" / "delete" (matched and not-matched-by-source lists) or
@@ -3127,16 +3234,12 @@ object TxLog {
           spark.createDataFrame(empty, evolved), mergeSchema = true)
         (evolved, act)
       }
-    val dupKeys = source.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0L,
-      s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
-        "which clause row wins would be nondeterministic")
+    requireUniqueKeys(source, keyCols, "clause row")
     val cs = new Enforced(table)
     // marker column: distinguishes "matched" from "source key columns
     // happen to be null" after the left join
     val srcAliased = source.withColumn("_graft_src_hit", lit(true)).alias("s")
-    val keys = broadcast(source.select(keyCols.map(col): _*).distinct())
+    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked above
 
     // guard_i = base && !cond_1..i-1 && cond_i — ordered first-match-wins,
     // NULL condition results count as false (SQL)
@@ -3283,10 +3386,11 @@ object TxLog {
         stagedFrame.foreach(cs.enforce)
         // CDF record (property-gated, and only for change commits — an
         // affected-free merge is add-only and its inserts derive at
-        // read): update pre/post pairs per firing update clause, deletes
-        // per firing delete clause, plus this commit's insert rows
-        val cdcActs: Seq[Action] = joinedOpt.map { joined =>
-          cdcStage(spark, table, {
+        // read), staged in the same write: update pre/post pairs per
+        // firing update clause, deletes per firing delete clause, plus
+        // this commit's insert rows
+        val w = joinedOpt.map { joined =>
+          stageChange(spark, table, stagedFrame) {
             val allGcs = mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)
             val tCols = declared.fields.map(f =>
               tBase(f).cast(f.dataType).as(f.name)).toIndexedSeq
@@ -3304,13 +3408,12 @@ object TxLog {
             (Seq(pre, post, dels) ++ inserts.map(i =>
               regen(i).withColumn(ChangeTypeCol, lit("insert"))))
               .reduce(_ unionByName _)
-          })
-        }.getOrElse(Nil)
-        val stagedActs = stagedFrame.map(stage(spark, table, _)).getOrElse(Nil)
-        val idActs = identityWmActions(spark, table, stagedActs, idBases.toMap,
+          }
+        }.getOrElse(stage(spark, table, stagedFrame, None, partColsOf(table)))
+        val idActs = identityWmActions(spark, table, w.adds, idBases.toMap,
           idSuppliedCols, wmSnap)
         val acts = affected.map(Action("remove", _)) ++
-          ((stagedActs ++ cdcActs ++ decl ++ idActs) :+ tsAction(commitTs, "MERGE"))
+          ((w.all ++ decl ++ idActs) :+ tsAction(commitTs, "MERGE"))
         val watched = idBases.keySet ++ idActs.map(_.path)
         val read0Set = read0.toSet
         // rebase on a changed constraint set (the staged rows must
@@ -3441,7 +3544,8 @@ object TxLog {
         // false (Delta marks DV-materializing OPTIMIZE the same way).
         // OPTIMIZE's layout (INTO n FILES / per-partition compaction) IS
         // the caller's ask — the stage-side file sizing must not re-merge it
-        val adds = stage(spark, table, compact, partColsOf(table), sized = false)
+        val adds = stage(spark, table, Some(compact), None, partColsOf(table),
+          sized = false).adds
           .map(_.copy(dataChange = false)) :+ tsAction(commitTs, "OPTIMIZE")
         val acts = read0.map(Action("remove", _, None, dataChange = false)) ++ adds
         // a racer removing a read file OR landing a DV on one both
@@ -3713,7 +3817,7 @@ object TxLog {
             case _ => throw new IllegalStateException(
               "unreachable: content diff with no changed files")
           }
-          cdcStage(s, table, frame)
+          stageChange(s, table, None)(frame).cdc
         }
       if (diff.isEmpty) Skip
       else Claim((diff ++ cdc) :+ tsAction(commitTs, "RESTORE"))
@@ -3872,42 +3976,22 @@ object TxLog {
     * null for versions written before commit timestamps landed. */
   val CommitTimestampCol = "_commit_timestamp"
 
-  /** Stage a CDC frame (data columns + `_change_type`) under `cdc/` and
-    * return the "cdc" actions naming its part files. Like data staging,
-    * the files become meaningful only if the commit publishes — losing
-    * CAS rounds orphan theirs, and [[vacuum]] sweeps unreferenced cdc
-    * files past the age guard. */
-  private def stageCdc(spark: SparkSession, table: String,
-                       df: DataFrame): Seq[Action] = {
-    val rel = s"cdc/${UUID.randomUUID()}"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$table/$rel")
-    val root = Paths.get(table, rel)
-    val s = Files.walk(root)
-    val parts = try s.iterator().asScala
-      .filter(p => Files.isRegularFile(p) && {
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".parquet")
-      })
-      .map(p => s"$rel/${root.relativize(p).toString}").toSeq.sorted
-    finally s.close()
-    // footer stats ride the cdc action like add's (round-16, VERDICT
-    // r15 #3): the CDF read path lists sidecars through a stats index,
-    // so a filtered feed skips whole files at planning. Stats-less cdc
-    // actions (pre-round-16 logs) are simply never skipped.
-    val conf = spark.sessionState.newHadoopConf()
-    parts.map { r =>
-      Action("cdc", r,
-        TxStats.fromFooter(conf, absPath(table, r)).map(TxStats.encode))
-    }
+  /** Stage a change commit's data `rows` (none for a CDC-only commit:
+    * overwrite, truncate, restore, a DV delete) and, when the table has
+    * CDF on, its change record `changes` (data columns + `_change_type`)
+    * in the same write ([[stage]]). `changes` is evaluated lazily — only
+    * when the property asks for it. Like data files, the cdc files become
+    * meaningful only if the commit publishes — losing CAS rounds orphan
+    * theirs, and [[vacuum]] sweeps unreferenced cdc files past the age
+    * guard. */
+  private def stageChange(spark: SparkSession, table: String,
+                          rows: Option[DataFrame])(
+      changes: => DataFrame): StagedFiles = {
+    val cdc = if (cdfEnabled(table)) Some(changes) else None
+    val w = stage(spark, table, rows, cdc, partColsOf(table))
+    if (cdc.isEmpty) w
+    else w.copy(cdc = w.cdc ++ protocolAction(table, "change-data-feed"))
   }
-
-  /** The cdc actions for a row-level DML commit, or Nil when the table
-    * has CDF off. `rows` is evaluated lazily — an extra scan pass only
-    * when the property asks for it. */
-  private def cdcStage(spark: SparkSession, table: String,
-                       rows: => DataFrame): Seq[Action] =
-    if (!cdfEnabled(table)) Nil
-    else stageCdc(spark, table, rows) ++ protocolAction(table, "change-data-feed")
 
   /** STREAMING CDF plan for `(fromV, toV]`: per version, the files a
     * change-feed micro-batch reads and how each is tagged — `("cdc",

@@ -46,4 +46,26 @@ class BenchSuspectSpec extends AnyFunSuite {
     val tiny = Map("qf" -> 1.2)
     assert(Bench.suspectsOf(tiny, h, 1.0, 0.4) == Seq("qf"))
   }
+
+  test("a query far above its best flags even under a high floor bar") {
+    // 0.3 s best reading 1.9 s: 6.3x best, yet under the 2 s floor bar
+    // and under the 2 x best x factor bar at factor 3.5 — the 6x arm
+    // catches it; 5.5x (1.65 s) stays unflagged, and so does a 0.1 s
+    // best at 0.9 s (9x, but under the historical 1 s)
+    val h = Map("qs" -> 0.3, "qt" -> 0.3, "qu" -> 0.1)
+    val res = Map("qs" -> 1.9, "qt" -> 1.65, "qu" -> 0.9)
+    assert(Bench.suspectsOf(res, h, 3.5, 2.0) == Seq("qs"))
+  }
+
+  test("the probe median of two readings is the smaller one") {
+    assert(Bench.lowerMedian(Seq(2.4, 1.1)) == 1.1)
+    assert(Bench.lowerMedian(Seq(1.3, 3.0, 1.7)) == 1.7)
+    assert(Bench.lowerMedian(Seq(0.9)) == 0.9)
+  }
+
+  test("a host factor above 2 warns") {
+    assert(Bench.hostFactorWarning(1.0).isEmpty)
+    assert(Bench.hostFactorWarning(2.0).isEmpty)
+    assert(Bench.hostFactorWarning(2.27).exists(_.contains("2.27")))
+  }
 }
