@@ -596,8 +596,11 @@ object TxLog {
     if (rows.isEmpty && changes.isEmpty) return StagedFiles(Nil, Nil)
     val rm = renameMap(table)
     // two writes: column-mapped data files carry physical names and change
-    // rows logical ones; a schema-less table's readers bind file columns
-    if (rows.nonEmpty && changes.nonEmpty && (rm.nonEmpty || schemaOf(table).isEmpty)) {
+    // rows logical ones; a schema-less table's readers bind file columns;
+    // a declared `_change_type` or IsCdcCol column would be overwritten
+    val oneWrite = rm.isEmpty && schemaOf(table).exists(
+      !_.fieldNames.exists(Set(ChangeTypeCol, IsCdcCol)))
+    if (rows.nonEmpty && changes.nonEmpty && !oneWrite) {
       val data = stage(spark, table, rows, None, partCols, sized)
       return data.copy(cdc = stage(spark, table, None, changes, partCols, sized).cdc)
     }
@@ -624,6 +627,7 @@ object TxLog {
         s"write to partitioned table $table is missing partition column $c"))
       partCols.foldLeft(physDf)((d, c) => d.withColumn(PartDirPrefix + c, col(c)))
     }
+    val combined = dataDf.nonEmpty && changes.nonEmpty
     val (stagedDf0, dirCols) = (dataDf, changes) match {
       case (Some(d), Some(c)) =>
         (d.withColumn(ChangeTypeCol, lit(null).cast("string"))
@@ -755,10 +759,10 @@ object TxLog {
     // harvest footers in parallel: each is a small metadata read, but on
     // an object store a wide commit (OPTIMIZE into N files) would pay
     // N round-trips serially — bound the pool, keep the driver loop.
-    // A data file's all-null `_change_type` stays out of its token.
+    // A combined write's all-null data `_change_type` stays out of the token.
     def harvest(p: String): Option[String] =
       TxStats.fromFooter(conf, absPath(table, p)).map(fs =>
-        TxStats.encode(if (p.startsWith("cdc/")) fs
+        TxStats.encode(if (p.startsWith("cdc/") || !combined) fs
                        else fs.copy(cols = fs.cols - ChangeTypeCol)))
     val finalPaths = staged.map(_._1) ++ cdcPaths
     val stats: Map[String, Option[String]] =
@@ -2488,43 +2492,11 @@ object TxLog {
                     keyCols: Seq[String],
                     commitTs: Option[Long] = None): Option[Long] = {
     require(keyCols.nonEmpty, "deleteMatched requires at least one key column")
-    // a single key column with few distinct keys becomes a literal IN
-    // list: one collect, then neither the file-finding scan nor the
-    // rewrite broadcasts the keys again, and the scan skips files by their
-    // key stats. Null keys match nothing (SQL equality), so they drop.
-    val literal = keyCols match {
-      case Seq(k) if literalKey(source.select(k).schema.head.dataType) =>
-        val vals = source.select(k).collect().iterator
-          .map(_.get(0)).filter(_ != null).toSet
-        if (vals.sizeIs > MaxKeyLiterals) None
-        else Some(coalesce(col(k).isInCollection(vals), lit(false)))
-      case _ => None
-    }
-    literal match {
-      case Some(hit) =>
-        cowDelete(spark, table, commitTs)(_.filter(hit), _.filter(not(hit)))
-      case None =>
-        // only semi/anti joins read the keys, so duplicates are harmless —
-        // a distinct would cost every query that broadcasts them a shuffle
-        val keys = broadcast(source.select(keyCols.map(col): _*))
-        cowDelete(spark, table, commitTs)(
-          _.join(keys, keyCols, "left_semi"), _.join(keys, keyCols, "left_anti"))
-    }
-  }
-
-  /** Most distinct keys [[deleteMatched]] inlines as a literal IN list;
-    * beyond it the plan would carry too large an expression, and the keys
-    * go through a broadcast join instead. */
-  private val MaxKeyLiterals = 10000
-  /** Key types whose IN-list match is exactly the join's equality (no
-    * float signed zeros, no nested values). */
-  private def literalKey(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType |
-           TimestampType | BooleanType | _: StringType => true
-      case _ => false
-    }
+    // only semi/anti joins read the keys, so duplicates are harmless —
+    // a distinct would cost every query that broadcasts them a shuffle
+    val keys = broadcast(source.select(keyCols.map(col): _*))
+    cowDelete(spark, table, commitTs)(
+      _.join(keys, keyCols, "left_semi"), _.join(keys, keyCols, "left_anti"))
   }
 
   /** Transactional row-level UPDATE, copy-on-write — the engine half of

@@ -117,6 +117,37 @@ class TxLogCdfSingleWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def cdcFiles(t: String, v: Long): Seq[String] =
     TxLog.cdfPlan(t, v - 1, v).collect { case ("cdc", p, _) => p }
 
+  test("a declared _change_type column survives every CoW verb") {
+    // such a table keeps two writes: the one-write union would null it
+    def withCt(df: DataFrame) = df.withColumn(Ct, concat(lit("u"), col("id").cast("string")))
+    def mk(cdf: Boolean): String = {
+      val t = Files.createTempDirectory("graft-cdf1").resolve("t").toString
+      if (cdf) TxLog.setProperties(t, Map(TxLog.CdfProperty -> "true"))
+      TxLog.append(spark, t, withCt(rows(0, 599, 0, "q")).repartition(3), partitionBy = Seq("p"))
+      t
+    }
+    val (on, off) = (mk(cdf = true), mk(cdf = false))
+    val src = withCt(rows(300, 319, 3, "q").unionByName(rows(1000, 1009, 3, "q")))
+    Seq[(String, String => Any)](
+      "deleteWhere" -> (t => TxLog.deleteWhere(spark, t, col("id").between(10, 29))),
+      "deleteMatched" -> (t => TxLog.deleteMatched(spark, t,
+        spark.range(100, 120).select(col("id")), Seq("id"))),
+      "updateWhere" -> (t => TxLog.updateWhere(spark, t, col("id").between(200, 260),
+        Map("q" -> (col("q") + 10.0)))),
+      "merge" -> (t => TxLog.merge(spark, t, src, Seq("id"))),
+      "mergeClauses" -> (t => TxLog.mergeClauses(spark, t, src.withColumn("q", lit(9.0)),
+        Seq("id"), matched = Seq(MergeClause("update", None, Map("q" -> col("s.q")))),
+        notMatched = Nil))
+    ).foreach { case (name, run) =>
+      run(on); run(off)
+      withClue(s"$name: ") {
+        val got = sorted(TxLog.read(spark, on), "q", withCt = true)
+        assert(got == sorted(TxLog.read(spark, off), "q", withCt = true))
+        assert(TxLog.read(spark, on).filter(col(Ct).isNull).isEmpty)
+      }
+    }
+  }
+
   layouts.foreach { l =>
     test(s"every CoW verb records the exact change feed in one write: ${l.name}") {
       val on = table(l, cdf = true)
