@@ -11,19 +11,22 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-/** Stats-pruned `FileIndex` over an EXPLICIT file list (round-16,
-  * VERDICT r15 "what's missing" #3 — CDF read-path pruning): the same
-  * planning-time skipping contract as `graft.sources.TxLogFileIndex`
-  * (files whose commit-log stats PROVE no row matches the pushed data
-  * filters are never listed to the scan; stats-less files are never
-  * skipped, so correctness cannot depend on the stats), but over any
-  * caller-supplied `(absolutePath, stats)` set instead of a table
-  * snapshot. [[TxLog.changeFeed]] builds one per version for cdc
-  * sidecars and add-only insert files, which is what makes
-  * `table_changes(...) WHERE k = …` over a long feed read only the
-  * files that can hold k — at 100 TB the difference between "scan the
-  * whole change history" and "open a handful of files". Driver-side
-  * metadata only; O(files) per planning pass. */
+/** The engine's one `FileIndex`: planning-time data skipping over an
+  * EXPLICIT `(absolutePath, stats)` file list. `listFiles` receives every
+  * query's pushed data filters DURING PLANNING and hands the parquet scan
+  * only the files [[TxStats.mayMatch]] keeps — files whose commit-log
+  * stats PROVE no row matches are never listed, and stats-less files are
+  * never skipped, so correctness cannot depend on the stats (Spark
+  * re-applies the filters above the scan). Every snapshot read lists
+  * through it ([[TxLog.read]], and with it SQL SELECT over a catalog
+  * table), as do [[TxLog.changeFeed]]'s cdc sidecars and add-only insert
+  * files — at 100 TB the difference between "scan the whole table or
+  * change history" and "open a handful of files".
+  *
+  * Snapshot isolation: the file set is fixed at construction, so a
+  * concurrent commit never changes what a running query reads;
+  * `refresh()` is deliberately a no-op. Driver-side metadata only;
+  * O(files) per planning pass. */
 private[graft] final class StatsFileIndex(
     entries: Seq[(String, Option[TxStats.FileStats])])
     extends FileIndex with org.apache.spark.internal.Logging {
@@ -46,18 +49,15 @@ private[graft] final class StatsFileIndex(
 
   override def refresh(): Unit = () // immutable snapshot by construction
 
-  /** Files pruned by the LAST planning pass (observable next to the
-    * plan, the TxLogFileIndex diagnostic). */
+  /** Files pruned by the LAST planning pass: the skipping decision,
+    * observable next to the plan instead of only through result hashes. */
   @volatile var lastPrunedCount: Int = 0
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val kept = dataFilters.reduceOption(And) match {
       case None => statuses
-      case Some(pred) => statuses.filter {
-        case (_, Some(fs)) => fs.rows > 0 && TxStats.mayTrue(pred, fs)
-        case (_, None)     => true // stats-less file: never skipped
-      }
+      case Some(pred) => statuses.filter { case (_, fs) => TxStats.mayMatch(pred, fs) }
     }
     lastPrunedCount = statuses.size - kept.size
     if (lastPrunedCount > 0)

@@ -531,6 +531,14 @@ object TxLog {
     watched.exists(n =>
       identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None))
 
+  /** The checksum sibling Hadoop's local filesystem writes next to `p`. */
+  private def crcOf(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
+
+  /** A data or change file's name: any non-hidden parquet file (a
+    * partitioned stage's files are named `p<i>-part-*`). */
+  private def isPartFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
+
   /** Absolute path of a table-relative file. */
   private def absPath(table: String, rel: String): String =
     Paths.get(table, rel).toAbsolutePath.toString
@@ -728,12 +736,19 @@ object TxLog {
     val (cdcParts, dataParts) =
       if (rows.isEmpty) (parts, Nil)
       else parts.partition(_.contains(s"/$IsCdcCol=true/"))
+    // each file moves with its Hadoop `.crc` sibling, so the emptied
+    // hive dirs can be removed and VACUUM reclaims the checksum with it
+    def move(from: String, to: String): Unit = {
+      Files.move(Paths.get(table, from), Paths.get(table, to))
+      val (src, dst) = (crcOf(Paths.get(table, from)), crcOf(Paths.get(table, to)))
+      if (Files.exists(src)) Files.move(src, dst)
+    }
     val cdcPaths = if (rows.isEmpty || cdcParts.isEmpty) cdcParts else {
       val cdcRel = s"cdc/${UUID.randomUUID()}"
       Files.createDirectories(Paths.get(table, cdcRel))
       cdcParts.map { p =>
         val to = s"$cdcRel/${p.split('/').last}"
-        Files.move(Paths.get(table, p), Paths.get(table, to))
+        move(p, to)
         to
       }
     }
@@ -744,7 +759,7 @@ object TxLog {
           val tok = partTokenOf(p)
           val name = p.split('/').last
           val flat = if (partCols.isEmpty) s"$rel/$name" else s"$rel/p$i-$name"
-          Files.move(Paths.get(table, p), Paths.get(table, flat))
+          move(p, flat)
           flat -> tok
         }
         // drop the now-empty hive dirs (deepest first)
@@ -1927,41 +1942,46 @@ object TxLog {
       s"$c=${v.getOrElse("~")}" }.mkString(","))
   }
 
-  /** Split `adds` into (inside, outside) a partition predicate — exact
-    * by the single-valued-file invariant. The predicate is resolved and
-    * constant-folded by Catalyst against a read of the given files (the
-    * parquet relation keeps the Filter node; literal casts fold), must
-    * reference ONLY partition columns, and must be decidable for every
-    * file (provably all-in or all-out) — anything else fails loudly
-    * rather than guessing a region boundary. Driver-side metadata,
-    * O(files). */
-  private def partitionSplit(spark: SparkSession, table: String,
-                             cond: Column, adds: Seq[Action])
-      : (Seq[Action], Seq[Action]) = {
+  /** The files of `adds` inside an OPTIMIZE … WHERE partition predicate.
+    * The predicate is resolved and constant-folded by Catalyst against a
+    * read of the given files (the parquet relation keeps the Filter node;
+    * literal casts fold), then [[partitionRegion]] decides each file. */
+  private def regionFiles(spark: SparkSession, table: String,
+                          cond: Column, adds: Seq[Action]): Seq[Action] = {
     val partCols = partColsOf(table)
     require(partCols.nonEmpty,
-      s"a partition predicate requires a partitioned table; $table is " +
-        "unpartitioned")
+      s"OPTIMIZE WHERE requires a partitioned table; $table is unpartitioned")
     val base = boundRead(spark, table, adds.map(_.path), None)
     val conds = base.filter(cond).queryExecution.optimizedPlan.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
     require(conds.nonEmpty,
-      "partition predicate resolved to no filter; pass a real region predicate")
-    val pred = conds.reduce(
-      org.apache.spark.sql.catalyst.expressions.And.apply)
+      "OPTIMIZE WHERE predicate resolved to no filter; pass a real region predicate")
+    adds.filter(partitionRegion(table, "OPTIMIZE WHERE", partCols,
+      conds.reduce(org.apache.spark.sql.catalyst.expressions.And.apply)))
+  }
+
+  /** The region a resolved partition predicate names, as a per-file test
+    * (true = inside) — exact by the single-valued-file invariant. `pred`
+    * must reference ONLY partition columns, and every file must be
+    * provably all-in or all-out by its partition point-stats; anything
+    * else fails loudly, naming `verb`, rather than guessing a region
+    * boundary. Driver-side metadata, O(files). */
+  private def partitionRegion(table: String, verb: String, partCols: Seq[String],
+                              pred: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Action => Boolean = {
     val refs = pred.references.map(_.name).toSet
     require(refs.nonEmpty && refs.subsetOf(partCols.toSet),
-      s"partition predicate may reference only partition columns " +
+      s"$verb predicate may reference only partition columns " +
         s"(${partCols.mkString(", ")}); got ${refs.mkString(", ")}")
     val resolve = statsResolver(table, None)
-    adds.partition { a =>
+    a => {
       val fs = resolve(a).getOrElse(throw new IllegalStateException(
-        s"live file ${a.path} carries no partition tuple"))
+        s"$verb: live file ${a.path} carries no partition tuple"))
       val in = TxStats.mayTrue(pred, fs)
-      val out = TxStats.mayFalse(pred, fs)
-      require(in ^ out, s"partition predicate is not decidable for file " +
-        s"${a.path} — use equality/range/IN over partition columns")
+      require(in ^ TxStats.mayFalse(pred, fs), s"$verb predicate is not " +
+        s"partition-decidable for file ${a.path} — use equality/range/IN " +
+        "over partition columns")
       in
     }
   }
@@ -2005,26 +2025,11 @@ object TxLog {
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           e.eval(org.apache.spark.sql.catalyst.InternalRow.empty), e.dataType)
     }
-    val refs = pred.references.map(_.name).toSet
-    require(refs.nonEmpty && refs.subsetOf(partCols.toSet),
-      s"replaceWhere predicate may reference only partition columns " +
-        s"(${partCols.mkString(", ")}); got ${refs.mkString(", ")}")
+    val inRegion = partitionRegion(table, "replaceWhere", partCols, pred)
     // Delta's invariant: every incoming row is inside the region
     require(df1.filter(!cond || cond.isNull).limit(1).count() == 0L,
       "replaceWhere: the incoming frame has rows outside the predicate " +
         "region — the write would silently widen the region")
-    val resolve = statsResolver(table, None)
-    // a file is replaced iff provably all-in; kept iff provably all-out
-    def classify(a: Action): Boolean = {
-      val fs = resolve(a).getOrElse(throw new IllegalStateException(
-        s"replaceWhere: live file ${a.path} carries no partition tuple"))
-      val in = TxStats.mayTrue(pred, fs)
-      val out = TxStats.mayFalse(pred, fs)
-      require(in ^ out, s"replaceWhere predicate is not partition-" +
-        s"decidable for file ${a.path} — use equality/range/IN over " +
-        "partition columns")
-      in
-    }
     // identity: the append snapshot-assign-restage discipline (round-16,
     // ADVICE r15 #1 — replaced-region rows are NEW rows; omitted identity
     // columns assign, explicit BY DEFAULT supply advances the watermark)
@@ -2037,7 +2042,7 @@ object TxLog {
         if (s.movedAt(base)) Rebase
         else {
           val (liveAdds, dvs) = replayState(table, Some(base))
-          val victims = liveAdds.filter(classify)
+          val victims = liveAdds.filter(inRegion)
           require(victims.forall(a => !dvs.contains(a.path)),
             "replaceWhere over files carrying deletion vectors: OPTIMIZE " +
               "first to materialize the deletes (the whole-file swap would " +
@@ -3462,7 +3467,7 @@ object TxLog {
       // single-valued-file invariant; non-partition predicates refused.
       val adds0 =
         if (all0.isEmpty) all0
-        else where.fold(all0)(c => partitionSplit(spark, table, c, all0)._1)
+        else where.fold(all0)(c => regionFiles(spark, table, c, all0))
       // empty table, or nothing in the named region
       if (adds0.isEmpty) None
       else {
@@ -3577,20 +3582,25 @@ object TxLog {
         Files.deleteIfExists(p)
       } catch { case _: java.io.IOException => () }
     }
+    def deletePart(p: Path): Unit = {
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(crcOf(p))
+    }
     listDir(dataRoot).foreach { sub =>
       val dir = dataRoot.resolve(sub)
       if (Files.isDirectory(dir)) {
+        // aged before this pass: deleting its files refreshes its mtime
+        val dirOld = oldEnough(dir)
         listDir(dir).foreach { f =>
           val rel = s"data/$sub/$f"
-          if ((f.startsWith("part-") && f.endsWith(".parquet")) && !keep(rel)
-              && oldEnough(dir.resolve(f))) {
-            if (!dryRun) Files.deleteIfExists(dir.resolve(f))
+          if (isPartFile(f) && !keep(rel) && oldEnough(dir.resolve(f))) {
+            if (!dryRun) deletePart(dir.resolve(f))
             deleted += rel
           }
         }
         // sweep now-empty data dirs — but only past the age window too:
         // a racing stage's dir can momentarily hold just _SUCCESS/.crc
-        if (!dryRun && oldEnough(dir) &&
+        if (!dryRun && dirOld &&
             listDir(dir).forall(n => !n.endsWith(".parquet")))
           deleteResidual(dir)
       }
@@ -3631,15 +3641,15 @@ object TxLog {
       listDir(cdcRoot).foreach { sub =>
         val dir = cdcRoot.resolve(sub)
         if (Files.isDirectory(dir)) {
+          val dirOld = oldEnough(dir)
           listDir(dir).foreach { f =>
             val rel = s"cdc/$sub/$f"
-            if (f.startsWith("part-") && f.endsWith(".parquet") &&
-                !keepCdc(rel) && oldEnough(dir.resolve(f))) {
-              if (!dryRun) Files.deleteIfExists(dir.resolve(f))
+            if (isPartFile(f) && !keepCdc(rel) && oldEnough(dir.resolve(f))) {
+              if (!dryRun) deletePart(dir.resolve(f))
               deleted += rel
             }
           }
-          if (!dryRun && oldEnough(dir) &&
+          if (!dryRun && dirOld &&
               listDir(dir).forall(n => !n.endsWith(".parquet")))
             deleteResidual(dir)
         }
@@ -4189,7 +4199,9 @@ object TxLog {
     boundScan(spark, table, adds.map(a => (absPath(table, a.path), resolve(a))), asOf)
   }
 
-  /** The one schema-bound scan over (absolute path, stats) entries. */
+  /** The one schema-bound scan over (absolute path, stats) entries. A
+    * pre-schema table binds the schema of its first file's footer, read
+    * on the driver (no listing or inference job), so it prunes too. */
   private def boundScan(spark: SparkSession, table: String,
                         entries: Seq[(String, Option[TxStats.FileStats])],
                         asOf: Option[Long]): DataFrame = {
@@ -4206,8 +4218,25 @@ object TxLog {
           .select(s.fieldNames.toSeq
             .map(ln => col(physicalOf(m, ln)).as(ln)): _*)
       case Some(s) => StatsFileIndex.scan(spark, entries, s)
-      case None    => spark.read.parquet(entries.map(_._1): _*)
+      case None =>
+        require(entries.nonEmpty, s"no files to read in pre-schema table $table")
+        StatsFileIndex.scan(spark, entries, footerSchema(spark, entries.head._1))
     }
+  }
+
+  /** One parquet file's Spark schema from its footer alone — what
+    * parquet schema inference yields for that file, without its job. */
+  private def footerSchema(spark: SparkSession, file: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val path = new org.apache.hadoop.fs.Path(file)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path,
+        spark.sessionState.newHadoopConf()))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
   }
 
   /** Snapshot read, optionally AS OF a historical version, with the
@@ -4217,11 +4246,10 @@ object TxLog {
   def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
     val (adds, dvs) = replayState(table, asOf)
     require(adds.nonEmpty, s"empty snapshot for $table asOf=$asOf")
-    // round-16: the snapshot lists through [[StatsFileIndex]] (same
-    // bound-schema semantics as boundRead — see [[prunedBoundRead]]),
-    // so WHATEVER filters a query later pushes prune whole files at
-    // planning — including on DV-carrying and column-mapped tables,
-    // which the TxLogTable file-index relation refuses. Data-column
+    // the snapshot lists through [[StatsFileIndex]] (same bound-schema
+    // semantics as boundRead — see [[prunedBoundRead]]), so WHATEVER
+    // filters a query later pushes prune whole files at planning, on
+    // DV-carrying, column-mapped and pre-schema tables alike. Data-column
     // predicates push below the DV anti-join into the scan, so the
     // skipping composes with merge-on-read deletes.
     applyDvs(spark, table, prunedBoundRead(spark, table, adds, asOf), dvs)
@@ -4269,9 +4297,11 @@ object TxLog {
     * and constant-folded by CATALYST against the table's read schema
     * first (so `$"ts_col" >= "1995-01-01"` arrives as a typed
     * timestamp literal), then evaluated conservatively against each
-    * file's min/max/nullCount ([[TxStats.mayTrue]]): a file is skipped
-    * only when provably free of matches; missing or undecodable stats
-    * keep it. Driver-side metadata work only — O(files), no data I/O. */
+    * file's min/max/nullCount by the same keep-or-skip rule planning-time
+    * listing uses ([[TxStats.mayMatch]]): a file is skipped only when
+    * provably free of matches; missing or undecodable stats keep it,
+    * and a bloom step may then skip more. Driver-side metadata work
+    * only — O(files), no data I/O. */
   def prune(spark: SparkSession, table: String, cond: Column,
             asOf: Option[Long] = None): Pruned = {
     import org.apache.spark.sql.catalyst.expressions.And
@@ -4299,13 +4329,7 @@ object TxLog {
     // single-valued-file invariant) — partition predicates prune even
     // on files whose footer harvest failed
     val resolve = statsResolver(table, asOf)
-    val (kept, skipped) = adds.partition { a =>
-      resolve(a) match {
-        // a zero-row file can't produce a match regardless of predicate
-        case Some(fs) => fs.rows > 0 && TxStats.mayTrue(pred, fs)
-        case None     => true
-      }
-    }
+    val (kept, skipped) = adds.partition(a => TxStats.mayMatch(pred, resolve(a)))
     // bloom step: equality conjuncts on declared bloom columns probe the
     // STATS-SURVIVING files' embedded blooms (bounded driver metadata
     // I/O, after range pruning already shrank the candidate set). Only a

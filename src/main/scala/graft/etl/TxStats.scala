@@ -377,10 +377,15 @@ object TxStats {
     case _ => false
   }
 
-  /** May some row of a file with stats `fs` evaluate `e` to TRUE?
-    * (graft-visible: [[graft.sources.TxLogFileIndex]] evaluates the
-    * same contract on Catalyst-pushed data filters.) */
-  private[graft] def mayTrue(e: Expression, fs: FileStats): Boolean = e match {
+  /** The one keep-or-skip rule for a file under predicate `pred`, shared
+    * by planning-time listing ([[StatsFileIndex]]) and [[TxLog.prune]]:
+    * a stats-less file is always kept; a file with stats is kept unless
+    * it holds no rows or its stats prove no row satisfies `pred`. */
+  private[etl] def mayMatch(pred: Expression, fs: Option[FileStats]): Boolean =
+    fs.forall(s => s.rows > 0 && mayTrue(pred, s))
+
+  /** May some row of a file with stats `fs` evaluate `e` to TRUE? */
+  private[etl] def mayTrue(e: Expression, fs: FileStats): Boolean = e match {
     case And(l, r) => mayTrue(l, fs) && mayTrue(r, fs)
     case Or(l, r) => mayTrue(l, fs) || mayTrue(r, fs)
     case Not(c) => mayFalse(c, fs)

@@ -666,8 +666,9 @@ object Graph {
   /** Target wedge rows generated per task (q213): sizes the wedge stage's
     * partial-aggregate hash map below the spill threshold — ~1.5M map
     * entries × ~48 B ≈ 72 MB, comfortably inside a task's execution-memory
-    * share at any sane executor sizing. Measured at sf0.1 (AaProbe3):
-    * 2.3M rows/task spills (15.1 s), 1.0–1.5M never does (8.6–9.4 s). */
+    * share at any sane executor sizing. Measured at sf0.1
+    * (OPTIMIZATION_r16.md, "q213_adamic_adar"): 2.3M rows/task spills
+    * (15.1 s), 1.0–1.5M never does (8.6–9.4 s). */
   private[operators] val WedgeRowsPerTask = 1.5e6
 
   /** Degree past which a single center's C(deg, 2) wedge fan-out alone
@@ -675,7 +676,7 @@ object Graph {
     * tasks (round 17 — the smallest d with d(d−1)/2 > 1.5e6 ≈ 1733; see
     * the hub-skew guard in [[adamicAdar]]). The sf0.1 co-purchase graph's
     * max degree is 222, so the split path is exercised only by synthetic
-    * hubs (AaHubSplitSpec / AaHubProbe). */
+    * hubs (AaHubSplitSpec; OPTIMIZATION_r17.md §4). */
   private[operators] val AaHubDegree: Int =
     math.ceil((1.0 + math.sqrt(1.0 + 8.0 * WedgeRowsPerTask)) / 2.0).toInt
 
@@ -766,12 +767,12 @@ object Graph {
     // adjacency frame (|nodes| rows) so each wedge task generates
     // ~WedgeRowsPerTask rows keeps every partial map comfortably
     // in-memory: 9.4 s vs 36.0 s warm min-of-3 at sf0.1 for the
-    // aggregate core (AaProbe3 sweep: 96–256 tasks flat, 64 spills,
-    // 512 pays scheduling). Scale-adaptive by construction — the task
-    // count derives from the measured wedge count, not the local core
-    // count, and is capped at 4096 (a 100 TB graph with 10¹² wedges
-    // hits the cap and each task still carries a bounded ~2.4e8-row
-    // generate, far under the old per-core share).
+    // aggregate core (OPTIMIZATION_r16.md "q213_adamic_adar" sweep:
+    // 96–256 tasks flat, 64 spills, 512 pays scheduling). Scale-adaptive
+    // by construction — the task count derives from the measured wedge
+    // count, not the local core count, and is capped at 4096 (a 100 TB
+    // graph with 10¹² wedges hits the cap and each task still carries a
+    // bounded ~2.4e8-row generate, far under the old per-core share).
     val wedgeTasks = math.max(s.sparkContext.defaultParallelism,
       math.min(4096, math.ceil(wedgeRows / WedgeRowsPerTask).toInt))
     // The explicit (u, v) repartition BELOW the groupBy is the second half
@@ -782,8 +783,9 @@ object Graph {
     // 3.2M-entry maps). With the repartition, partial+final both run
     // post-exchange fully clustered and no aggregate map anywhere exceeds
     // ~WedgeRowsPerTask entries: 31-42 s → 27 s min-of-3 at 16g
-    // (AaProbe4), identical plan shape otherwise. Same data-derived task
-    // count as the generate stage — pairs ≤ wedges bounds the map.
+    // (OPTIMIZATION_r16.md "q213 follow-up"), identical plan shape
+    // otherwise. Same data-derived task count as the generate stage —
+    // pairs ≤ wedges bounds the map.
     // Hub-skew guard (round 17, VERDICT r16 #4 / guide §2.5): wedges are
     // generated per CENTER, so before this split a single node of degree
     // d emitted all C(d,2) rows from ONE task's row regardless of

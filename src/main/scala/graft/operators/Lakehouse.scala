@@ -581,11 +581,11 @@ object Lakehouse {
       .orderBy(col("col_name"))
   }
 
-  // -------------------------------------- q263 TxLog FileIndex table
+  // -------------------------------------- q263 TxLog SQL view
 
   /** q263 — the Catalyst-integrated read path, driver-verified: orders
-    * land as four year-bucketed single-file appends, the table opens
-    * through [[graft.sources.TxLogTable]] (commit-log FileIndex under a
+    * land as four year-bucketed single-file appends, the snapshot opens
+    * through [[graft.etl.TxLog.read]] (the commit-log stats index under a
     * stock parquet relation), and an ordinary SQL rollup with a
     * time-range predicate runs against a VIEW of it — planning pushes
     * the predicate into the index, which opens only the matching year
@@ -593,7 +593,7 @@ object Lakehouse {
     * pins that the pruned read returns EXACTLY the raw table's answer).
     * Alongside q260 (explicit readWhere protocol) this closes the loop:
     * both skip paths, one contract. */
-  def q263TxLogTable(s: SparkSession, dir: String): DataFrame = {
+  def q263TxLogView(s: SparkSession, dir: String): DataFrame = {
     val table = tempTable("graft-q263")
     val orders = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
@@ -601,7 +601,7 @@ object Lakehouse {
     Seq(y <= 1996, y === 1997 || y === 1998, y === 1999, y >= 2000)
       .foreach(b => graft.etl.TxLog.append(s, table,
         orders.filter(b).coalesce(1)))
-    graft.sources.TxLogTable(s, table)
+    graft.etl.TxLog.read(s, table)
       .createOrReplaceTempView("graft_q263_orders")
     s.sql(
       """SELECT o_orderpriority, count(*) AS n_orders,
@@ -2444,7 +2444,7 @@ object Lakehouse {
     "q275_txlog_cdc_stream" -> (q275TxLogCdcStream _),
     "q274_txlog_sql_insert" -> (q274TxLogSqlInsert _),
     "q273_txlog_asof_ts" -> (q273TxLogAsOfTs _),
-    "q263_txlog_table" -> (q263TxLogTable _),
+    "q263_txlog_table" -> (q263TxLogView _),
     "q261_txlog_describe" -> (q261TxLogDescribe _),
     "q260_txlog_skipping" -> (q260TxLogSkipping _),
     "q259_txlog_evolution" -> (q259TxLogEvolution _),

@@ -175,7 +175,8 @@ object Search {
     * rows, so each round's eager job is milliseconds (the q147/q191
     * bounded-round discipline; the q109/q136 one-DAG form stays right for
     * loops whose per-round state is corpus-scale). Measured min-of-3 at
-    * sf0.1: 6.6–10.1 s → 4.3–5.9 s, identical output (MmrProbe). */
+    * sf0.1: 6.6–10.1 s → 4.3–5.9 s, identical output
+    * (OPTIMIZATION_r16.md, "q207_mmr_diversify"). */
   def mmrDiversify(spark: SparkSession, embs: DataFrame, k: Int = MmrK,
                    shortlist: Int = MmrShortlist,
                    lambda: Double = MmrLambda): DataFrame = {

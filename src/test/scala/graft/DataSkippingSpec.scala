@@ -227,7 +227,7 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(agg.cols("day").tag == "date")
   }
 
-  test("TxLogTable: Catalyst pushes query filters into commit-log pruning") {
+  test("TxLog.read: Catalyst pushes query filters into commit-log pruning") {
     val t = rangedTable()
     // AQE off so executedPlan exposes the scan node's metrics directly
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -243,7 +243,7 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
         }.get
         (rows, n)
       }
-      val tab = graft.sources.TxLogTable(spark, t)
+      val tab = TxLog.read(spark, t)
       // plain filter: exact rows, one file opened
       val (r1, n1) = run(tab.filter(col("id") < 100L).select(col("id")))
       assert(r1.map(_.getLong(0)).sorted == (0L until 100L))
@@ -264,7 +264,8 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the pruning decision is OBSERVABLE next to the plan (round-12,
       // VERDICT #8), not only inferable from scan metrics: the index
       // counts the files its last planning pass skipped
-      val (tab2, idx) = graft.sources.TxLogTable.withIndex(spark, t)
+      val tab2 = TxLog.read(spark, t)
+      val idx = Scans.index(tab2)
       run(tab2.filter(col("id") < 100L).select(col("id")))
       assert(idx.lastPrunedCount == 2,
         s"expected 2 of 3 files pruned, got ${idx.lastPrunedCount}")
@@ -272,18 +273,18 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(idx.lastPrunedCount == 0, "unfiltered scan must prune nothing")
       // time travel: AS OF the first commit sees only its file
       val v1 = TxLog.versions(t).head
-      val old = graft.sources.TxLogTable(spark, t, asOf = Some(v1))
+      val old = TxLog.read(spark, t, asOf = Some(v1))
       assert(old.count() == 100L)
       // snapshot isolation: a new append is invisible to the open table
       import spark.implicits._
       TxLog.append(spark, t,
         Seq((999L, "xx", 0.0)).toDF("id", "lang", "score").coalesce(1))
       assert(tab.count() == 300L, "open table must keep its snapshot")
-      assert(graft.sources.TxLogTable(spark, t).count() == 301L)
+      assert(TxLog.read(spark, t).count() == 301L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("TxLogTable on an evolved table: union schema, conservative pruning") {
+  test("TxLog.read on an evolved table: union schema, conservative pruning") {
     import spark.implicits._
     val t = tmp()
     TxLog.append(spark, t,
@@ -291,7 +292,7 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
     TxLog.append(spark, t,
       (50L until 100L).map(i => (i, "fr", i / 10.0)).toDF("id", "lang", "score")
         .coalesce(1), mergeSchema = true)
-    val tab = graft.sources.TxLogTable(spark, t)
+    val tab = TxLog.read(spark, t)
     assert(tab.schema.fieldNames.toSeq == Seq("id", "lang", "score"))
     // filter on the EVOLVED column: the pre-evolution file has no stats
     // entry for it — conservatively kept (its rows read score as null,
@@ -301,11 +302,35 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == (71L until 100L))
     // time travel BEFORE evolution binds the contemporary schema
     val v1 = TxLog.versions(t).head
-    assert(graft.sources.TxLogTable(spark, t, asOf = Some(v1))
+    assert(TxLog.read(spark, t, asOf = Some(v1))
       .schema.fieldNames.toSeq == Seq("id", "lang"))
     // pruning on a pre-evolution column still fires across generations
     val pr = TxLog.prune(spark, t, col("id") < 50L)
     assert(pr.skipped.size == 1)
+  }
+
+  test("TxLog.read on a pre-schema (legacy) table binds the footer schema and prunes") {
+    val t = rangedTable()
+    // strip the schema declarations from every committed version: the
+    // pre-schema log codec
+    val log = Paths.get(t, "_graft_log")
+    Files.list(log).iterator().asScala.filter(_.toString.endsWith(".json"))
+      .foreach { f =>
+        val kept = Files.readAllLines(f, StandardCharsets.UTF_8).asScala
+          .filterNot(_.contains(""""op":"schema"""")).mkString("\n")
+        Files.write(f, kept.getBytes(StandardCharsets.UTF_8))
+      }
+    TxLog.invalidateActionCache(t) // hand-mutation is outside the contract
+    assert(TxLog.schemaOf(t).isEmpty)
+    val tab = TxLog.read(spark, t)
+    assert(tab.schema.fieldNames.toSeq == Seq("id", "lang", "score"))
+    val got = tab.filter(col("id") >= 100L && col("id") < 200L)
+      .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == (100L until 200L))
+    assert(Scans.index(tab).lastPrunedCount == 2,
+      "a pre-schema table must prune through the footer-bound index")
+    // the explicit-predicate path agrees
+    check(t, col("lang") === "fr", expectSkipped = Some(2))
   }
 
   test("describe folds exact metadata aggregates; refuses partial stats") {

@@ -9,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.GraftSession
 import graft.etl.TxLog
-import graft.sources.TxLogTable
 
 /** PARTITIONED BY for the TxLog format (round-13): identity
   * partitioning with per-add partition tuples, exact partition pruning
@@ -126,10 +125,16 @@ class TxLogPartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     TxLog.append(spark, t,
       df(Seq((1L, "en"), (2L, "fr"), (3L, "de"))),
       partitionBy = Seq("lang"))
-    val (frame, idx) = TxLogTable.withIndex(spark, t)
+    val frame = TxLog.read(spark, t)
+    val idx = Scans.index(frame)
     val n = frame.filter(col("lang") === "de").count()
     assert(n == 1L)
     assert(idx.lastPrunedCount == 2) // en + fr files never opened
+    // SQL over a view of the same snapshot prunes the same way
+    frame.createOrReplaceTempView("txpart_view")
+    assert(spark.sql("SELECT id FROM txpart_view WHERE lang = 'fr'")
+      .collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(idx.lastPrunedCount == 2)
   }
 
   test("date-typed partitions prune on range predicates") {
@@ -341,5 +346,66 @@ class TxLogPartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Set(2L, 3L))
     // the rewritten survivor file kept its partition tuple
     assert(TxLog.snapshotAdds(t).forall(_.part.isDefined))
+  }
+
+  test("VACUUM reclaims a partitioned table's data files and their dirs") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val t = tmp()
+    def rows(from: Long): DataFrame =
+      (from until from + 40L).map(i => (i, s"b${i % 4}")).toDF("id", "lang")
+        .repartition(2)
+    // the four-bucket history that used to strand every data file:
+    // append, append, OPTIMIZE, then a CDF-on copy-on-write delete
+    TxLog.append(spark, t, rows(0L), partitionBy = Seq("lang"))
+    TxLog.setProperties(t, Map(TxLog.CdfProperty -> "true"))
+    TxLog.append(spark, t, rows(40L))
+    TxLog.optimize(spark, t)
+    TxLog.deleteWhere(spark, t, col("id") % 10 === 3L)
+    val last = TxLog.versions(t).last
+    def ids(df: DataFrame): Seq[Long] =
+      df.select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
+    def feed(): Seq[(Long, String, Long)] =
+      TxLog.changeFeed(spark, t, last - 2, Some(last))
+        .select(col("id"), col(TxLog.ChangeTypeCol), col(TxLog.CommitVersionCol))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        .sorted.toSeq
+    val (now, prev, changes) =
+      (ids(TxLog.read(spark, t)), ids(TxLog.read(spark, t, Some(last - 1))), feed())
+    assert(changes.nonEmpty)
+    val root = java.nio.file.Paths.get(t)
+    val dataRoot = root.resolve("data")
+    def under(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.walk(p)
+      try s.iterator().asScala.filter(_ != p).toSeq finally s.close()
+    }
+    def parquet(p: java.nio.file.Path): Boolean = {
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".")
+    }
+    def rel(p: java.nio.file.Path): String = root.relativize(p).toString
+    val live = (TxLog.snapshot(t) ++ TxLog.snapshot(t, Some(last - 1))).toSet
+    val stale = under(dataRoot).filter(parquet).map(rel).filterNot(live)
+    assert(stale.exists(_.split('/').last.startsWith("p")),
+      s"expected unreferenced partitioned (p<i>-part-*) files, got $stale")
+    val deleted = TxLog.vacuum(t, retainVersions = 2, minAgeMillis = 0L)
+    assert(stale.toSet.subsetOf(deleted.toSet),
+      s"VACUUM left ${stale.toSet -- deleted} on disk")
+    // only live data files stay; every data dir still holds one, no hive
+    // dir survives the flatten, and no checksum outlives its file
+    val after = under(dataRoot)
+    assert(after.filter(parquet).map(rel).toSet == live)
+    after.filter(Files.isDirectory(_)).foreach { d =>
+      assert(!d.getFileName.toString.contains("="), s"hive dir $d left behind")
+      assert(Files.list(d).iterator().asScala.exists(parquet), s"empty data dir $d")
+    }
+    after.map(_.getFileName.toString).filter(_.endsWith(".parquet.crc")).foreach { c =>
+      assert(after.exists(_.getFileName.toString == c.stripPrefix(".").stripSuffix(".crc")),
+        s"stranded checksum $c")
+    }
+    // reads, time travel inside the retention window and the feed are unchanged
+    assert(ids(TxLog.read(spark, t)) == now)
+    assert(ids(TxLog.read(spark, t, Some(last - 1))) == prev)
+    assert(feed() == changes)
   }
 }

@@ -284,13 +284,40 @@ class TxLogRestoreHistorySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TxLog.read(spark, t).columns.toSeq == Seq("id", "s"))
   }
 
+  test("column mapping: TxLog.read and SQL SELECT prune on a renamed column") {
+    import spark.implicits._
+    val t = tmp()
+    // three single-file commits with disjoint key ranges, then a rename:
+    // files keep the physical name, stats stay keyed by it
+    Seq(0L until 100L, 100L until 200L, 200L until 300L).foreach { r =>
+      TxLog.append(spark, t, r.map(i => (i, s"r$i")).toDF("id", "s").coalesce(1))
+    }
+    TxLog.renameColumn(t, "id", "key")
+    val df = TxLog.read(spark, t)
+    assert(df.filter(col("key") < 100L).select(col("key"))
+      .collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    assert(Scans.index(df).lastPrunedCount == 2,
+      "a logical-name filter must prune through the physical-keyed stats")
+    val name = s"rename_prune_${System.nanoTime()}"
+    spark.sql(s"CREATE TABLE $name (key BIGINT, s STRING) USING " +
+      s"graft.sources.TxLogSource OPTIONS (path '$t')")
+    try {
+      val n = Scans.recordsRead(spark) {
+        assert(spark.sql(s"SELECT key, s FROM $name WHERE key >= 200")
+          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+          .toSeq == (200L until 300L).map(i => (i, s"r$i")))
+      }
+      assert(n <= 150L, s"key >= 200 should read 1 of 3 files, read $n rows")
+    } finally spark.sql(s"DROP TABLE $name")
+  }
+
   test("column mapping: capability gates, guards, clone carry") {
     import spark.implicits._
     val t = tmp()
     TxLog.append(spark, t, Seq((1L, "a")).toDF("id", "s").coalesce(1))
     TxLog.renameColumn(t, "s", "label")
-    // DSv2 relation routes through the mapping-aware reader (correct
-    // rows, logical names); the pruning file index refuses loudly
+    // DSv2 relation reads through the mapping-aware reader (correct
+    // rows, logical names)
     val name = s"rename_gate_${System.nanoTime()}"
     spark.sql(s"CREATE TABLE $name (id BIGINT, label STRING) USING " +
       s"graft.sources.TxLogSource OPTIONS (path '$t')")
@@ -298,9 +325,6 @@ class TxLogRestoreHistorySpec extends AnyFunSuite with BeforeAndAfterAll {
       val row = spark.sql(s"SELECT id, label FROM $name").head()
       assert(row.getLong(0) == 1L && row.getString(1) == "a")
     } finally spark.sql(s"DROP TABLE $name")
-    intercept[IllegalArgumentException] {
-      graft.sources.TxLogTable(spark, t)
-    }
     // the streaming tail WORKS on mapped tables (round 15 — the gate
     // was retired: the reader binds the physical-named schema twin)
     locally {

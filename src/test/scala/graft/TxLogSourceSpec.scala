@@ -29,7 +29,7 @@ class TxLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     (name, path)
   }
 
-  test("SQL INSERT INTO lands a TxLog commit; SELECT and TxLogTable see it") {
+  test("SQL INSERT INTO lands a TxLog commit; SELECT and TxLog.read see it") {
     val (t, path) = freshTable()
     // a freshly created table SELECTs empty, not an error
     assert(spark.sql(s"SELECT * FROM $t").count() == 0)
@@ -38,7 +38,7 @@ class TxLogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql(s"SELECT id FROM $t ORDER BY id").collect()
       .map(_.getLong(0)).toSeq == Seq(1L, 2L))
     // the API read path sees the SQL write (one format, two surfaces)
-    assert(graft.sources.TxLogTable(spark, path).select(col("id")).collect()
+    assert(TxLog.read(spark, path).select(col("id")).collect()
       .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
     // and the commit carries the schema declaration + footer stats
     assert(TxLog.schemaOf(path).exists(_.fieldNames.toSeq == Seq("id", "s")))

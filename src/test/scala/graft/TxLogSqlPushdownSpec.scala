@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -22,19 +20,7 @@ class TxLogSqlPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local("txlog-sql-pushdown", cores = 4)
   override def afterAll(): Unit = spark.stop()
 
-  /** Rows read from input sources while `body` runs (task metrics). */
-  private def recordsRead(body: => Unit): Long = {
-    val n = new LongAdder
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          n.add(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) } // let the listener bus drain
-    finally spark.sparkContext.removeSparkListener(l)
-    n.sum()
-  }
+  private def recordsRead(body: => Unit): Long = Scans.recordsRead(spark)(body)
 
   private def mkTable(): String = {
     import spark.implicits._
