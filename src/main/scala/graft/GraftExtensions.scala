@@ -31,8 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // tables (see TxLogSqlDml scaladoc; also installable per-session via
     // TxLogSqlDml.install)
     ext.injectPlannerStrategy(_ => graft.sources.TxLogDmlStrategy)
-    // delegating parser: OPTIMIZE / VACUUM maintenance statements for
-    // TxLog tables (not Spark grammar; everything else passes through)
+    // delegating parser: the TxLog maintenance verbs (OPTIMIZE, VACUUM,
+    // DESCRIBE HISTORY, RESTORE, ALTER TABLE, ... — see GraftSqlParser;
+    // not Spark grammar, everything else passes through)
     ext.injectParser((_, delegate) => new graft.sources.GraftSqlParser(delegate))
     // table-valued function: SELECT * FROM table_changes('path', from[, to])
     // — the SQL-visible batch change feed (see TableChanges scaladoc)

@@ -339,14 +339,13 @@ object TxLog {
         (adds ++ removes).exists(_.dataChange) || dvs > 0)
     }
 
-  /** [[history]] as a DataFrame (what the SQL verb returns). Built with
-    * a local relation — the history is O(versions) driver metadata, not
+  /** [[history]] as a DataFrame (what the SQL verb returns), one column
+    * per [[Commit]] field in declaration order. Built with a local
+    * relation — the history is O(versions) driver metadata, not
     * distributed data. */
   def historyDf(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     history(table).toDF()
-      .select(col("version"), col("timestamp"), col("operation"),
-        col("numAdds"), col("numRemoves"), col("numDvs"), col("dataChange"))
   }
 
   /** Table-level profile — the DESCRIBE DETAIL unit. `numRows` is the

@@ -805,7 +805,9 @@ object Graph {
     // the C(deg,2) wedge rows those tasks then emit into the (u,v)
     // exchange anyway. The (t, u, v) multiset is unchanged: strides
     // partition the position range exactly (AaHubSplitSpec asserts
-    // equality against the unsplit path).
+    // equality against the unsplit path). maxDeg is already on the
+    // driver, so a graph with no hub (the pinned data) plans the small
+    // branch alone: no Union, no second pass over nb.
     val nb2 = nb.filter(size(col("dsts")) >= 2)
     val smallWedges = nb2.filter(size(col("dsts")) < hubDegree)
       .repartition(wedgeTasks, col("src"))
@@ -824,7 +826,8 @@ object Graph {
       .filter(pmod(col("i").cast("long"), col("n")) === col("k"))
       .select(col("t"), col("u"),
         explode(expr("slice(dsts, i + 2, size(dsts))")).as("v"))
-    val wedges = smallWedges.unionByName(hubWedges)
+    val wedges = (if (maxDeg < hubDegree) smallWedges
+                  else smallWedges.unionByName(hubWedges))
       .repartition(wedgeTasks, col("u"), col("v"))
     val aaSum =
       if (maxDeg.toLong * 1443 < Long.MaxValue / 1000000000L) sum(col("t"))

@@ -1034,7 +1034,6 @@ object Lakehouse {
     graft.etl.TxLog.optimize(s, table, targetFiles = 1,
       commitTs = Some(4000L))
     graft.etl.TxLog.restore(table, 2L, commitTs = Some(5000L))
-    graft.sources.TxLogSqlDml.install(s)
     val hist = org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(s"DESCRIBE HISTORY '$table'").get)
     val counts = graft.etl.TxLog.versions(table)
@@ -1069,7 +1068,6 @@ object Lakehouse {
     val postDelete = graft.etl.TxLog.read(s, table)
       .withColumn("phase", lit("post_delete"))
       .localCheckpoint(eager = true) // pin the pre-restore snapshot
-    graft.sources.TxLogSqlDml.install(s)
     val res = org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"RESTORE TABLE '$table' TO TIMESTAMP AS OF 1500").get)
@@ -1106,7 +1104,6 @@ object Lakehouse {
     graft.etl.TxLog.append(s, src, r.coalesce(1), commitTs = Some(1000L))
     graft.etl.TxLog.deleteWhereMerge(s, src,
       col("o_orderpriority") === "1-URGENT", commitTs = Some(2000L))
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"CREATE TABLE '$dstDir' SHALLOW CLONE '$src'").get).head()
@@ -1202,7 +1199,6 @@ object Lakehouse {
         base.filter(pmod(col("o_orderkey"), lit(4L)) === p).coalesce(1),
         commitTs = Some(1000L * (p + 1)))
     }
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"OPTIMIZE '$table' INTO 8 FILES ZORDER BY (a, b)").get).collect()
@@ -1285,7 +1281,6 @@ object Lakehouse {
       commitTs = Some(4000L))
     graft.etl.TxLog.deleteWhereMerge(s, table,
       col("o_orderpriority") === "1-URGENT", commitTs = Some(5000L))
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"DESCRIBE DETAIL '$table'").get)
@@ -1309,7 +1304,6 @@ object Lakehouse {
     val r = Tables.orders(s, dir)
       .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n_orders"))
     graft.etl.TxLog.append(s, table, r.coalesce(1), commitTs = Some(1000L))
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"ALTER TABLE '$table' RENAME COLUMN n_orders TO order_count").get)
@@ -1637,7 +1631,6 @@ object Lakehouse {
         graft.etl.TxLog.decodePartValues(a.part.get).head._2.exists(p))
         .map(_.path).toSet
     val othersBefore = paths(_ != "1-URGENT")
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"OPTIMIZE '$table' WHERE o_orderpriority = '1-URGENT'").get)
@@ -1674,7 +1667,6 @@ object Lakehouse {
     graft.etl.TxLog.append(s, table, r.coalesce(1))
     graft.etl.TxLog.deleteWhereMerge(s, table,
       col("o_orderpriority") === "5-LOW")
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"SHOW PARTITIONS '$table'").get)
@@ -1749,7 +1741,6 @@ object Lakehouse {
         sum(col("o_totalprice")).as("sum_price"))
     graft.etl.TxLog.append(s, table, r.coalesce(1), commitTs = Some(1000L))
     val preCols = graft.etl.TxLog.schemaOf(table).get.length.toLong
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"ALTER TABLE '$table' DROP COLUMN sum_price").get).collect()
@@ -1816,7 +1807,6 @@ object Lakehouse {
     val nations = Tables.nation(s, dir).count()
     graft.etl.TxLog.append(s, table,
       Seq((1L, "seed")).toDF("id", "s").coalesce(1), commitTs = Some(1000L))
-    graft.sources.TxLogSqlDml.install(s)
     def run(sql: String) = org.apache.spark.sql.graft.GraftSqlBridge.ofRows(
       s, graft.sources.GraftSqlParser.maintenance(sql).get)
     run(s"ALTER TABLE '$table' SET TBLPROPERTIES " +
@@ -1853,7 +1843,6 @@ object Lakehouse {
     val n = Tables.nation(s, dir)
       .select(col("n_nationkey").cast("int").as("key"), col("n_name"))
     graft.etl.TxLog.append(s, table, n.coalesce(1), commitTs = Some(1000L))
-    graft.sources.TxLogSqlDml.install(s)
     org.apache.spark.sql.graft.GraftSqlBridge.ofRows(s,
       graft.sources.GraftSqlParser.maintenance(
         s"ALTER TABLE '$table' ALTER COLUMN key TYPE BIGINT").get).collect()

@@ -1,50 +1,65 @@
 package graft.sources
 
+import org.apache.spark.sql.{Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.{Command, LeafNode, LogicalPlan}
-import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** SQL maintenance statements for TxLog tables (the last SQL-surface gap
-  * after round-13's DML): a delegating parser that recognizes
+import graft.etl.TxLog
+
+/** SQL maintenance statements for TxLog tables: a delegating parser that
+  * recognizes these 18 verbs and hands EVERYTHING else to Spark's own
+  * parser byte-for-byte (they are not Spark grammar, so the only other
+  * door is ANTLR surgery):
   *
   * {{{
   *   OPTIMIZE t [INTO n FILES] [WHERE partition-predicate]
   *     [CLUSTER BY (c1, ...)] [ZORDER BY (a, b)]
   *   VACUUM t [RETAIN n VERSIONS]
+  *   VACUUM t [RETAIN n VERSIONS] DRY RUN
   *   DESCRIBE HISTORY t
   *   DESCRIBE DETAIL t
-  *   RESTORE [TABLE] t TO VERSION AS OF n
-  *   RESTORE [TABLE] t TO TIMESTAMP AS OF millis
+  *   RESTORE [TABLE] t TO {VERSION AS OF n | TIMESTAMP AS OF millis}
   *   CREATE TABLE '<path>' [SHALLOW] CLONE t [VERSION AS OF n]
-  *   SHOW PARTITIONS '<path>'
-  *   ALTER TABLE '<path>' ADD COLUMNS (name TYPE, ...)
-  *   ALTER TABLE '<path>' RENAME COLUMN old TO new
+  *   SHOW PARTITIONS t
+  *   SHOW TBLPROPERTIES t
+  *   TRUNCATE TABLE t
+  *   ALTER TABLE t ADD COLUMNS (name TYPE, ...)
+  *   ALTER TABLE t RENAME COLUMN old TO new
+  *   ALTER TABLE t DROP COLUMN name
+  *   ALTER TABLE t ALTER COLUMN name TYPE wider
+  *   ALTER TABLE t ALTER COLUMN name SET DEFAULT expr
+  *   ALTER TABLE t ALTER COLUMN name DROP DEFAULT
+  *   ALTER TABLE t SET TBLPROPERTIES ('k'='v', ...)
+  *   ALTER TABLE t UNSET TBLPROPERTIES ('k', ...)
   * }}}
   *
+  * `t` is a quoted table-root path, a session-catalog table created
+  * USING TxLogSource, or a [[GraftCatalog]] `cat.`path`` identifier.
   * The stock-grammar-clashing verbs (ALTER TABLE, SHOW TBLPROPERTIES /
-  * PARTITIONS, TRUNCATE) accept BOTH forms: a quoted path is always
-  * graft's, and an unquoted identifier is intercepted only when the
-  * active session's catalog says it is a TxLog table — every other
-  * table keeps flowing to Spark's own grammar byte-for-byte (round 14;
-  * previously these verbs were quoted-path-only).
+  * PARTITIONS, TRUNCATE) intercept an unquoted identifier only when the
+  * active session's catalog says it is a TxLog table; every other table
+  * keeps Spark's own grammar.
   *
-  * (t = a session-catalog table created USING TxLogSource, or a quoted
-  * table-root path) and hands EVERYTHING else to Spark's own parser
-  * byte-for-byte — the two verbs are not Spark grammar, so the only
-  * alternative door is ANTLR surgery. The produced plans are leaf
-  * commands planned by [[TxLogDmlStrategy]] into the same driver-side
-  * exec node as the DML statements, calling [[graft.etl.TxLog.optimize]]
-  * / [[graft.etl.TxLog.vacuum]] — CLUSTER BY is sort-clustering
-  * compaction (disjoint sort-key ranges per output file, feeding the
-  * footer-stats skipping), and VACUUM keeps the concurrent-writer mtime
-  * retention guard.
+  * Each verb parses straight to a [[TxLogCommand]], which Spark plans
+  * and runs itself (`ExecutedCommandExec`, once, eagerly): no planner
+  * strategy is involved, so the verbs work in any session. The command
+  * calls the matching [[graft.etl.TxLog]] entry point on the driver.
+  * CLUSTER BY is sort-clustering compaction (disjoint sort-key ranges
+  * per output file, feeding the footer-stats skipping); VACUUM keeps the
+  * concurrent-writer mtime retention guard, and DRY RUN lists what the
+  * same VACUUM would delete, deleting nothing.
   *
   * Install via `spark.sql.extensions=graft.GraftExtensions` (parsers,
-  * unlike strategies, have no imperative per-session hook). Mirrors the
-  * public Delta SQL surface's OPTIMIZE/VACUUM verbs as a PROTOCOL
-  * surface — the grammar here is original and minimal. */
+  * unlike strategies, have no imperative per-session hook), or plan a
+  * statement directly with [[GraftSqlParser.maintenance]]. Mirrors the
+  * public Delta SQL surface's maintenance verbs as a PROTOCOL surface;
+  * the grammar here is original and minimal. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
@@ -145,7 +160,7 @@ object GraftSqlParser {
     * making the SQL surface accept a narrower value domain than
     * TxLog.setProperties with no hint why — instead, scan pair-by-pair
     * with one anchored regex so commas INSIDE quoted tokens pass. */
-  private[sources] def parsePropPairs(raw: String): Map[String, String] = {
+  private def parsePropPairs(raw: String): Map[String, String] = {
     if (raw.trim.isEmpty) return Map.empty
     val PairRe = """\s*'([^']*)'\s*=\s*'([^']*)'\s*(?:,|$)""".r
     val out = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -162,7 +177,7 @@ object GraftSqlParser {
   }
 
   /** Parse `'k', 'k2'` (quoted key list). */
-  private[sources] def parsePropKeys(raw: String): Seq[String] = {
+  private def parsePropKeys(raw: String): Seq[String] = {
     if (raw.isEmpty) return Nil
     val KeyRe = """\s*'([^']*)'\s*""".r
     raw.split(",").toSeq.map {
@@ -171,6 +186,32 @@ object GraftSqlParser {
         s"UNSET TBLPROPERTIES expects 'key' entries, got: $other")
     }
   }
+
+  /** A statement on one TxLog table: `rows` gets the session and the
+    * table's root, resolved once, when the command runs. */
+  private def on(verb: String, ident: String,
+                 schema: StructType = new StructType())(
+      rows: (SparkSession, String) => Seq[Row]): Option[LogicalPlan] =
+    Some(TxLogCommand(verb, ident, schema,
+      spark => rows(spark, resolvePath(spark, ident))))
+
+  /** [[on]] for a verb that returns no rows. */
+  private def act(verb: String, ident: String)(
+      body: (SparkSession, String) => Any): Option[LogicalPlan] =
+    on(verb, ident) { (spark, path) => body(spark, path); Nil }
+
+  private val DryRunSchema = StructType.fromDDL("path STRING NOT NULL")
+  private val RestoreSchema = StructType.fromDDL(
+    "restored_to_version BIGINT NOT NULL, committed_version BIGINT")
+  private val CloneSchema = StructType.fromDDL("cloned_version BIGINT NOT NULL")
+  private val DetailSchema = StructType.fromDDL(
+    "numVersions BIGINT NOT NULL, numFiles BIGINT NOT NULL, numRows BIGINT, " +
+      "numDeletedRows BIGINT NOT NULL, numConstraints INT NOT NULL, " +
+      "bloomCols STRING NOT NULL, partitionColumns STRING NOT NULL")
+  private val PartitionsSchema = StructType.fromDDL(
+    "`partition` STRING NOT NULL, numFiles BIGINT NOT NULL, numRows BIGINT")
+  private val PropertiesSchema =
+    StructType.fromDDL("`key` STRING NOT NULL, `value` STRING NOT NULL")
 
   /** private[graft]: oracle queries plan maintenance statements directly
     * (GraftSqlBridge.ofRows) — Verify/Bench sessions are built without
@@ -181,52 +222,107 @@ object GraftSqlParser {
         def cols(g: String) = Option(g)
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           .getOrElse(Seq.empty)
-        Some(OptimizeTxLogTable(ident,
-          Option(files).map(_.toInt).getOrElse(1),
-          cols(cluster), cols(zorder),
-          Option(whereSql).map(_.trim).filter(_.nonEmpty)))
+        val targetFiles = Option(files).map(_.toInt).getOrElse(1)
+        val where = Option(whereSql).map(_.trim).filter(_.nonEmpty)
+        act("OPTIMIZE", ident) { (spark, path) =>
+          TxLog.optimize(spark, path, targetFiles = targetFiles,
+            sortBy = cols(cluster), zorderBy = cols(zorder),
+            where = where.map(expr))
+        }
       case VacuumRe(ident, retain, dry) =>
         val keep = Option(retain).map(_.toInt).getOrElse(2)
-        Some(if (dry != null) VacuumTxLogDryRun(ident, keep)
-             else VacuumTxLogTable(ident, keep))
-      case HistoryRe(ident) => Some(DescribeTxLogHistory(ident))
-      case DetailRe(ident) => Some(DescribeTxLogDetail(ident))
+        if (dry == null) act("VACUUM", ident) { (_, path) =>
+          TxLog.vacuum(path, retainVersions = keep)
+        }
+        else on("VACUUM DRY RUN", ident, DryRunSchema) { (_, path) =>
+          TxLog.vacuum(path, retainVersions = keep, dryRun = true).map(Row(_))
+        }
+      case HistoryRe(ident) =>
+        on("DESCRIBE HISTORY", ident, Encoders.product[TxLog.Commit].schema) {
+          (spark, path) => TxLog.historyDf(spark, path).collect().toSeq
+        }
+      case DetailRe(ident) =>
+        on("DESCRIBE DETAIL", ident, DetailSchema) { (_, path) =>
+          val t = TxLog.detail(path)
+          Seq(Row(t.numVersions, t.numFiles, t.numRows.map(Long.box).orNull,
+            t.numDeletedRows, t.numConstraints, t.bloomCols.mkString(","),
+            t.partitionColumns.mkString(",")))
+        }
       case ShowPartitionsRe(ident) if txLogIdent(ident) =>
-        Some(ShowTxLogPartitions(ident))
+        on("SHOW PARTITIONS", ident, PartitionsSchema) { (_, path) =>
+          TxLog.partitions(path).map { pi =>
+            Row(pi.values.map { case (c, v) =>
+                s"$c=${v.getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+              }.mkString("/"),
+              pi.numFiles, pi.numRows.map(Long.box).orNull)
+          }
+        }
       case RestoreVersionRe(ident, v) =>
-        Some(RestoreTxLogTable(ident, Some(v.toLong), None))
+        restore(ident, Some(v.toLong), None)
       case RestoreTimestampRe(ident, ts) =>
-        Some(RestoreTxLogTable(ident, None, Some(ts.toLong)))
+        restore(ident, None, Some(ts.toLong))
       case RenameColRe(ident, o, n) if txLogIdent(ident) =>
-        Some(AlterTxLogRenameColumn(ident, o, n))
+        act("ALTER", ident)((_, path) => TxLog.renameColumn(path, o, n))
       case DropColRe(ident, c) if txLogIdent(ident) =>
-        Some(AlterTxLogDropColumn(ident, c))
+        act("ALTER", ident)((_, path) => TxLog.dropColumn(path, c))
       case SetDefaultRe(ident, c, e) if txLogIdent(ident) =>
-        Some(AlterTxLogSetDefault(ident, c, e.trim))
+        act("ALTER", ident) { (spark, path) =>
+          TxLog.setColumnDefault(spark, path, c, e.trim)
+        }
       case DropDefaultRe(ident, c) if txLogIdent(ident) =>
-        Some(AlterTxLogDropDefault(ident, c))
+        act("ALTER", ident)((_, path) => TxLog.dropColumnDefault(path, c))
       case WidenColRe(ident, c, tpe) if txLogIdent(ident) =>
-        Some(AlterTxLogWidenColumn(ident, c, tpe))
+        act("ALTER", ident) { (_, path) =>
+          TxLog.widenColumn(path, c,
+            StructType.fromDDL(s"c $tpe").head.dataType)
+        }
       case TruncateRe(ident) if txLogIdent(ident) =>
-        Some(TruncateTxLogTable(ident))
+        act("TRUNCATE", ident)((_, path) => TxLog.truncate(path))
       case SetPropsRe(ident, pairs) if txLogIdent(ident) =>
-        Some(AlterTxLogSetProperties(ident, pairs.trim))
+        act("ALTER", ident) { (_, path) =>
+          TxLog.setProperties(path, parsePropPairs(pairs.trim))
+        }
       case UnsetPropsRe(ident, keys) if txLogIdent(ident) =>
-        Some(AlterTxLogUnsetProperties(ident, keys.trim))
+        act("ALTER", ident) { (_, path) =>
+          TxLog.unsetProperties(path, parsePropKeys(keys.trim))
+        }
       case ShowPropsRe(ident) if txLogIdent(ident) =>
-        Some(ShowTxLogProperties(ident))
+        on("SHOW TBLPROPERTIES", ident, PropertiesSchema) { (_, path) =>
+          TxLog.propertiesOf(path).toSeq.sortBy(_._1)
+            .map { case (k, v) => Row(k, v) }
+        }
       case AddColumnsRe(ident, colsDdl) if txLogIdent(ident) =>
-        Some(AlterTxLogAddColumns(ident, colsDdl.trim))
+        act("ALTER", ident) { (_, path) =>
+          TxLog.addColumns(path, StructType.fromDDL(colsDdl.trim))
+        }
       case CloneRe(dst, src, v) =>
-        Some(CloneTxLogTable(dst, src, Option(v).map(_.toLong)))
+        // the destination is always a quoted path: a table that does not
+        // exist yet cannot resolve through the catalog
+        on("CLONE", src, CloneSchema) { (_, srcPath) =>
+          val dstPath = TxLogSource.normalize(dst.substring(1, dst.length - 1))
+          Seq(Row(TxLog.cloneTable(srcPath, dstPath, Option(v).map(_.toLong))))
+        }
       case _ => None
+    }
+
+  /** RESTORE to a version, or to the last version committed at or before
+    * a timestamp; returns the target version and the committed restore
+    * version (null = live state already equal). */
+  private def restore(ident: String, version: Option[Long],
+                      timestamp: Option[Long]): Option[LogicalPlan] =
+    on("RESTORE", ident, RestoreSchema) { (_, path) =>
+      val v = version.getOrElse(
+        TxLog.versionAsOf(path, timestamp.get).getOrElse(
+          throw new IllegalArgumentException(
+            s"RESTORE $ident: no committed version at or before " +
+              s"timestamp ${timestamp.get}")))
+      Seq(Row(v, TxLog.restore(path, v).map(Long.box).orNull))
     }
 
   /** Resolve the statement's table reference to a TxLog root: a quoted
     * literal is a path; anything else is a session-catalog table whose
     * CREATE options carry the path. */
-  private[sources] def resolvePath(spark: org.apache.spark.sql.SparkSession,
-                                   ident: String): String = {
+  private def resolvePath(spark: SparkSession, ident: String): String = {
     val raw =
       if (ident.startsWith("'") && ident.endsWith("'"))
         ident.substring(1, ident.length - 1)
@@ -247,174 +343,17 @@ object GraftSqlParser {
   }
 }
 
-/** `OPTIMIZE` as a resolved leaf command (no children, no output — the
-  * analyzer passes it through; TxLogDmlStrategy plans it). */
-case class OptimizeTxLogTable(ident: String, targetFiles: Int,
-                              clusterBy: Seq[String],
-                              zorderBy: Seq[String] = Nil,
-                              whereSql: Option[String] = None)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `VACUUM` as a resolved leaf command. */
-case class VacuumTxLogTable(ident: String, retainVersions: Int)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `DESCRIBE HISTORY` as a resolved rows-returning leaf command: one
-  * audit row per committed version ([[graft.etl.TxLog.history]]). */
-case class DescribeTxLogHistory(ident: String)
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("timestamp", LongType)(),
-    AttributeReference("operation", StringType, nullable = false)(),
-    AttributeReference("numAdds", IntegerType, nullable = false)(),
-    AttributeReference("numRemoves", IntegerType, nullable = false)(),
-    AttributeReference("numDvs", IntegerType, nullable = false)(),
-    AttributeReference("dataChange", BooleanType, nullable = false)())
-}
-
-/** `RESTORE [TABLE] t TO VERSION|TIMESTAMP AS OF …` as a resolved
-  * rows-returning leaf command: exactly one of version/timestamp is set
-  * (the regexes guarantee it); returns the resolved target version and
-  * the committed restore version (null = live state already equal). */
-case class RestoreTxLogTable(ident: String, version: Option[Long],
-                             timestamp: Option[Long])
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("restored_to_version", LongType, nullable = false)(),
-    AttributeReference("committed_version", LongType)())
-}
-
-/** `CREATE TABLE '<path>' [SHALLOW] CLONE src [VERSION AS OF n]` as a
-  * resolved rows-returning leaf command: the destination is a QUOTED
-  * PATH (a not-yet-existing table cannot resolve through the catalog);
-  * the source may be either form. Returns the clone's version (1). */
-case class CloneTxLogTable(dst: String, src: String, version: Option[Long])
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("cloned_version", LongType, nullable = false)())
-}
-
-/** `ALTER TABLE '<path>' ADD COLUMNS (…)` as a resolved leaf command:
-  * quoted-path targets only (see class scaladoc); the column list stays
-  * raw DDL text, parsed by StructType.fromDDL at execution. */
-case class AlterTxLogAddColumns(ident: String, colsDdl: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `DESCRIBE DETAIL` as a resolved rows-returning leaf command: one
-  * table-profile row ([[graft.etl.TxLog.detail]]). */
-case class DescribeTxLogDetail(ident: String)
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("numVersions", LongType, nullable = false)(),
-    AttributeReference("numFiles", LongType, nullable = false)(),
-    AttributeReference("numRows", LongType)(),
-    AttributeReference("numDeletedRows", LongType, nullable = false)(),
-    AttributeReference("numConstraints", IntegerType, nullable = false)(),
-    AttributeReference("bloomCols", StringType, nullable = false)(),
-    AttributeReference("partitionColumns", StringType, nullable = false)())
-}
-
-/** `SHOW PARTITIONS '<path>'` as a resolved rows-returning leaf command
-  * (quoted-path form only, like ALTER — an unquoted name must keep
-  * flowing to Spark's own SHOW PARTITIONS for catalog tables): one row
-  * per live partition tuple from the commit log, zero data I/O
-  * ([[graft.etl.TxLog.partitions]]). */
-case class ShowTxLogPartitions(ident: String)
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("partition", StringType, nullable = false)(),
-    AttributeReference("numFiles", LongType, nullable = false)(),
-    AttributeReference("numRows", LongType)())
-}
-
-/** `ALTER TABLE '<path>' RENAME COLUMN old TO new` (quoted-path form
-  * only, like ADD COLUMNS): a metadata-only column-mapping commit. */
-case class AlterTxLogRenameColumn(ident: String, oldName: String,
-                                  newName: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `ALTER TABLE '<path>' DROP COLUMN name` (quoted-path form only): a
-  * metadata-only schema narrowing with a physical-name tombstone
-  * ([[graft.etl.TxLog.dropColumn]]). */
-case class AlterTxLogDropColumn(ident: String, colName: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `ALTER TABLE '<path>' ALTER COLUMN name TYPE wider` (quoted-path
-  * form only): metadata-only type widening
-  * ([[graft.etl.TxLog.widenColumn]]); the type text is parsed by
-  * StructType.fromDDL at execution. */
-case class AlterTxLogWidenColumn(ident: String, colName: String,
-                                 typeDdl: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `ALTER TABLE t ALTER COLUMN c SET DEFAULT expr`: a metadata-only
-  * commit declaring the WRITE-time fill for writers that omit the
-  * column ([[graft.etl.TxLog.setColumnDefault]]); the expression stays
-  * raw SQL text, validated (constant-only, declared type) at execution. */
-case class AlterTxLogSetDefault(ident: String, colName: String,
-                                exprSql: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `ALTER TABLE t ALTER COLUMN c DROP DEFAULT` (idempotent). */
-case class AlterTxLogDropDefault(ident: String, colName: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `ALTER TABLE '<path>' SET TBLPROPERTIES ('k'='v', …)`: free-form
-  * table metadata in the commit log ([[graft.etl.TxLog.setProperties]]).
-  * The pair list stays raw text, parsed at execution. */
-case class AlterTxLogSetProperties(ident: String, pairsRaw: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `ALTER TABLE '<path>' UNSET TBLPROPERTIES ('k', …)`. */
-case class AlterTxLogUnsetProperties(ident: String, keysRaw: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
-}
-
-/** `SHOW TBLPROPERTIES '<path>'`: one (key, value) row per live
-  * property, zero data I/O. */
-case class ShowTxLogProperties(ident: String)
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("key", StringType, nullable = false)(),
-    AttributeReference("value", StringType, nullable = false)())
-}
-
-/** `VACUUM '<path>' [RETAIN n VERSIONS] DRY RUN`: rows-returning
-  * preview — every file the real VACUUM would unlink right now (same
-  * retention AND the same mtime age window, so the preview matches the
-  * action, not a superset), with nothing deleted. The public Delta
-  * VACUUM DRY RUN posture. */
-case class VacuumTxLogDryRun(ident: String, retain: Int)
-    extends LeafNode with Command {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("path", StringType, nullable = false)())
-}
-
-/** `TRUNCATE TABLE '<path>'` (quoted-path form only — unquoted names
-  * keep flowing to Spark's own TRUNCATE for catalog tables): one commit
-  * removing every live file; identity (schema/partitioning/constraints)
-  * survives ([[graft.etl.TxLog.truncate]]). */
-case class TruncateTxLogTable(ident: String)
-    extends LeafNode with Command {
-  override def output: Seq[Attribute] = Nil
+/** One TxLog SQL statement as a Spark command. Spark plans it itself
+  * (`ExecutedCommandExec`) and runs `body` once, on the driver; the rows
+  * it returns must match `resultSchema`. `verb` and `target` only name
+  * the statement in plan strings. */
+case class TxLogCommand(verb: String, target: String,
+                        resultSchema: StructType,
+                        body: SparkSession => Seq[Row])
+    extends LeafRunnableCommand {
+  override val output: Seq[Attribute] =
+    DataTypeUtils.toAttributes(resultSchema)
+  override def run(spark: SparkSession): Seq[Row] = body(spark)
+  override def simpleString(maxFields: Int): String =
+    s"TxLogCommand $verb txlog($target)"
 }

@@ -44,6 +44,20 @@ class AaHubSplitSpec extends AnyFunSuite {
     assert(viaHub.nonEmpty)
   }
 
+  test("no hub, no hub branch: the plan has no Union unless a center reaches the threshold") {
+    import spark.implicits._
+    val lineitem = Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L))
+      .toDF("l_orderkey", "l_partkey")
+    def unions(hubDeg: Int) = graft.core.CacheScope.scoped {
+      Graph.adamicAdar(spark, lineitem, hubDegree = hubDeg)
+        .queryExecution.optimizedPlan.collect {
+          case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+        }.size
+    }
+    assert(unions(Int.MaxValue) == 0) // max degree 3 < threshold
+    assert(unions(3) == 1)            // part 3 has degree 3: hub branch
+  }
+
   test("strided chunks cover every position exactly once with near-equal work") {
     // pure check of the strided chunking used in the hub path:
     // n = ceil(C(deg,2)/T) chunks; chunk k enumerates positions
