@@ -93,14 +93,25 @@ object TxLog {
     * log-object I/O (list/read/publish) routes through the table's
     * [[CommitStore]] — POSIX link(2) by default, conditional-PUT object
     * store when the table declares one (round-14, VERDICT r13 #3). */
-  def versions(table: String): Seq[Long] =
-    CommitStore.of(table).list(table)
-      .collect { case VersionName(v) => v.toLong }.sorted
+  def versions(table: String): Seq[Long] = listLog(table)._1
 
   /** Checkpointed versions, ascending. */
-  def checkpoints(table: String): Seq[Long] =
-    CommitStore.of(table).list(table)
-      .collect { case CheckpointName(v) => v.toLong }.sorted
+  def checkpoints(table: String): Seq[Long] = listLog(table)._2
+
+  /** One listing of the log: (versions, checkpoints), both ascending. */
+  private def listLog(table: String): (Seq[Long], Seq[Long]) = {
+    val names = CommitStore.of(table).list(table)
+    (names.collect { case VersionName(v) => v.toLong }.sorted,
+      names.collect { case CheckpointName(v) => v.toLong }.sorted)
+  }
+
+  /** The log's payload codec: metadata payloads (schema JSON, SQL
+    * expressions, property values, partition tokens) ride base64 in the
+    * flat line shape, which has no escaping. */
+  private def b64(s: String): String =
+    java.util.Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
+  private def unb64(s: String): String =
+    new String(java.util.Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
 
   private def parseLine(line: String): Action = {
     // fixed flat shape written by `render` — no general JSON dep; the
@@ -123,14 +134,13 @@ object TxLog {
     * once published — the CAS admits a single writer per version, the
     * file is fully written BEFORE its atomic publish, it is never
     * rewritten, and even vacuum retains it — so (table, v) → actions is
-    * a pure function of the key. Every metadata replay (schemaOf /
-    * constraintsOf / propertiesOf / generatedColsOf / defaultsOf /
-    * partColsOf / renameMap / bloomColsOf / dvsAt / replayState) walks
-    * the whole log, and every WRITER runs several such replays per
-    * commit (policy gates + the CAS loop) — without the cache an append
-    * to a 10⁴-commit table re-reads tens of thousands of small files;
-    * with it, replay cost is in-memory traversal and the store is read
-    * once per version per JVM. Bounded access-order LRU so a long
+    * a pure function of the key. Every [[TableState]] reads through it:
+    * its metadata half walks the whole log, and every WRITER replays at
+    * least twice per commit (its pass and the claim check in
+    * [[commitLoop]]) — without the cache an append to a 10⁴-commit
+    * table re-reads tens of thousands of small files; with it, replay
+    * cost is in-memory traversal and the store is read once per version
+    * per JVM. Bounded access-order LRU so a long
     * test/bench session over thousands of throwaway tables cannot grow
     * without limit; eviction only costs a re-read. (External deletion
     * and re-creation of a table AT THE SAME PATH is outside the format's
@@ -196,76 +206,168 @@ object TxLog {
     * are never deleted, so time travel BEFORE the oldest checkpoint
     * still replays from scratch. */
   def snapshot(table: String, asOf: Option[Long] = None): Seq[String] =
-    snapshotAdds(table, asOf).map(_.path)
+    state(table, asOf).paths
 
   /** Live `add` actions (path + stats token) at `asOf` — what
     * stats-aware readers consume; [[snapshot]] is its path projection. */
   def snapshotAdds(table: String, asOf: Option[Long] = None): Seq[Action] =
-    replayState(table, asOf)._1
+    state(table, asOf).adds
 
   /** Live deletion-vector pointers at `asOf`: data-file path →
     * (sidecar rel path, deleted-row cardinality). Empty for tables
     * no merge-on-read delete ever touched — every pre-DV log replays
     * exactly as before. */
   def dvsAt(table: String, asOf: Option[Long] = None): Map[String, (String, Long)] =
-    replayState(table, asOf)._2
+    state(table, asOf).dvs
 
   private def parseDvToken(st: String): (String, Long) = {
     val i = st.lastIndexOf(':')
     (st.substring(0, i), st.substring(i + 1).toLong)
   }
 
-  /** One-pass log replay: live adds (insertion-ordered) + live DV map.
-    * DV rules: the latest "dv" action per file WINS (writers keep them
-    * cumulative — see [[deleteWhereMerge]]); an "add" or "remove" of the
-    * same path clears its DV (a rewrite starts clean; a removed file
-    * needs none). */
-  private def replayState(table: String, asOf: Option[Long])
-      : (Seq[Action], Map[String, (String, Long)]) = {
-    val vs = versions(table)
-    val target = asOf.getOrElse(vs.lastOption.getOrElse(0L))
-    val cp = checkpoints(table).filter(_ <= target).lastOption
-    val live = scala.collection.mutable.LinkedHashMap[String, Action]()
-    val dvs = scala.collection.mutable.Map[String, (String, Long)]()
-    def apply(a: Action): Unit = a match {
-      case Action("add", p, _, _, _)    => live += p -> a; dvs -= p
-      case Action("remove", p, _, _, _) => live -= p; dvs -= p
-      case Action("dv", p, Some(st), _, _) => dvs(p) = parseDvToken(st)
-      case Action("txn", _, _, _, _)    => () // idempotence marker, no file effect
-      case Action("cdc", _, _, _, _)    => () // change-feed sidecar, no snapshot effect
-      case Action("schema", _, _, _, _) => () // schema declaration, no file effect
-      case Action("commit", _, _, _, _) => () // commit timestamp, no file effect
-      case Action("constraint", _, _, _, _)   => () // CHECK DDL, no file effect
-      case Action("unconstraint", _, _, _, _) => () // CHECK drop, no file effect
-      case Action("bloom", _, _, _, _)  => () // bloom-index DDL, no file effect
-      case Action("rename", _, _, _, _) => () // column-mapping DDL, no file effect
-      case Action("partcols", _, _, _, _) => () // partitioning DDL, no file effect
-      case Action("gencol", _, _, _, _)   => () // generated-column DDL, no file effect
-      case Action("default", _, _, _, _)   => () // DEFAULT declaration, no file effect
-      case Action("undefault", _, _, _, _) => () // DEFAULT drop, no file effect
-      case Action("identity", _, _, _, _) => () // IDENTITY declaration, no file effect
-      case Action("idwm", _, _, _, _)     => () // identity watermark, no file effect
-      case Action("drop", _, _, _, _)     => () // column tombstone, no file effect
-      case Action("property", _, _, _, _)   => () // table property, no file effect
-      case Action("unproperty", _, _, _, _) => () // property unset, no file effect
-      case Action("protocol", feats, _, _, _) => // reader-capability declaration
-        val unknown = feats.split(",").map(_.trim).filter(_.nonEmpty)
-          .filterNot(SupportedFeatures)
-        if (unknown.nonEmpty) throw new UnsupportedOperationException(
-          s"table requires reader features this engine lacks: " +
-            s"${unknown.mkString(", ")} (supported: " +
-            s"${SupportedFeatures.toSeq.sorted.mkString(", ")})")
-      case Action(other, p, _, _, _) =>
-        throw new IllegalStateException(s"unknown log action $other for $p")
+  private type Dvs = Map[String, (String, Long)]
+
+  /** The table's state AS OF `asOf` (default: the latest version). */
+  private def state(table: String, asOf: Option[Long] = None): TableState =
+    new TableState(table, asOf, listLog(table))
+
+  /** A table's state AS OF one version, from ONE listing of its log: the
+    * only replay of the log. Nothing is listed until an accessor first
+    * runs, and each half replays on first use:
+    *  - files: live adds (insertion-ordered) and live DVs, replayed from
+    *    the latest checkpoint at or before the version, so a file-only
+    *    caller reads O(versions since that checkpoint). DV rules: the
+    *    latest "dv" action per file WINS (writers keep them cumulative —
+    *    see [[deleteWhereMerge]]); an "add" or "remove" of the same path
+    *    clears its DV (a rewrite starts clean; a removed file needs none).
+    *    An unknown action or an unsupported protocol feature throws here.
+    *  - metadata: every version up to this one folded in commit order
+    *    ([[MetaFold]]), since checkpoints carry files and DVs only;
+    *    payloads stay encoded until an accessor decodes them, once.
+    * [[at]] moves to another version over the same listing. */
+  private final class TableState(val table: String, val asOf: Option[Long],
+                                 listing: => (Seq[Long], Seq[Long])) {
+    private lazy val log = listing
+    /** Every committed version, ascending — past this state's too. */
+    def versions: Seq[Long] = log._1
+    /** The version this state is AS OF (0 for an empty table). */
+    lazy val version: Long = asOf.getOrElse(versions.lastOption.getOrElse(0L))
+    def at(v: Long): TableState = new TableState(table, Some(v), log)
+
+    private lazy val files: (Seq[Action], Dvs) = {
+      val live = scala.collection.mutable.LinkedHashMap[String, Action]()
+      val dvs = scala.collection.mutable.Map[String, (String, Long)]()
+      def apply(a: Action): Unit = a match {
+        case Action("add", p, _, _, _)    => live += p -> a; dvs -= p
+        case Action("remove", p, _, _, _) => live -= p; dvs -= p
+        case Action("dv", p, Some(st), _, _) => dvs(p) = parseDvToken(st)
+        case Action("protocol", feats, _, _, _) => // reader-capability declaration
+          val unknown = features(feats).filterNot(SupportedFeatures)
+          if (unknown.nonEmpty) throw new UnsupportedOperationException(
+            s"table requires reader features this engine lacks: " +
+              s"${unknown.toSeq.sorted.mkString(", ")} (supported: " +
+              s"${SupportedFeatures.toSeq.sorted.mkString(", ")})")
+        case Action(op, p, _, _, _) => if (!MetadataOps(op))
+          throw new IllegalStateException(s"unknown log action $op for $p")
+      }
+      val cp = log._2.filter(_ <= version).lastOption
+      cp.foreach { c =>
+        CommitStore.of(table).read(table, f"$c%020d.checkpoint.json")
+          .filter(_.nonEmpty)
+          .foreach(line => apply(parseLine(line)))
+      }
+      versions.filter(v => v > cp.getOrElse(0L) && v <= version)
+        .foreach(v => readActions(table, v).foreach(apply))
+      (live.values.toSeq, dvs.toMap)
     }
-    cp.foreach { c =>
-      CommitStore.of(table).read(table, f"$c%020d.checkpoint.json")
-        .filter(_.nonEmpty)
-        .foreach(line => apply(parseLine(line)))
+    def adds: Seq[Action] = files._1
+    def dvs: Dvs = files._2
+    lazy val paths: Seq[String] = adds.map(_.path)
+
+    private lazy val meta: MetaFold = {
+      val m = new MetaFold
+      versions.takeWhile(_ <= version).foreach(v => readActions(table, v).foreach(m.add))
+      m
     }
-    vs.filter(v => v > cp.getOrElse(0L) && v <= target)
-      .foreach(v => readActions(table, v).foreach(apply))
-    (live.values.toSeq, dvs.toMap)
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      meta.schema.map(e => org.apache.spark.sql.types.DataType.fromJson(unb64(e))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    lazy val constraints: Map[String, String] = decoded(meta.constraints)
+    lazy val properties: Map[String, String] = decoded(meta.properties)
+    lazy val protocol: Set[String] = meta.protocol.map(features).getOrElse(Set.empty)
+    lazy val renames: Map[String, String] = meta.renames.toMap
+    /** The "rename" actions in commit order (the chain [[renames]] folds). */
+    def renameChain: Seq[Action] = meta.renameChain.toSeq
+    lazy val dropped: Set[String] = meta.dropped.toSet
+    lazy val bloomCols: Seq[String] = meta.bloom
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+    lazy val generated: Map[String, String] = decoded(meta.generated)
+    lazy val defaults: Map[String, String] = decoded(meta.defaults)
+    lazy val identity: Map[String, (Long, Long, Boolean)] =
+      meta.identity.iterator.map { case (n, e) =>
+        val Array(st, sp, ae) = unb64(e).split(' ')
+        n -> (st.toLong, sp.toLong, ae.toBoolean)
+      }.toMap
+    def watermark(name: String): Option[Long] =
+      meta.watermarks.get(name).map(unb64(_).toLong)
+    /** Identity watermarks, the snapshot a staging pass assigns from. */
+    def watermarks: Map[String, Option[Long]] =
+      identity.keys.map(n => n -> watermark(n)).toMap
+    lazy val partCols: Seq[String] = meta.partCols
+      .map(unb64(_).split('\n').filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
+    def txnSeen(txn: String): Boolean = meta.txns(txn)
+    def cdfEnabled: Boolean = properties.get(CdfProperty).contains("true")
+
+    private def decoded(m: scala.collection.Map[String, String]): Map[String, String] =
+      m.iterator.map { case (k, e) => k -> unb64(e) }.toMap
+  }
+
+  /** Metadata actions: no effect on the file half of a [[TableState]]. */
+  private val MetadataOps = Set("txn", "cdc", "schema", "commit", "constraint",
+    "unconstraint", "bloom", "rename", "partcols", "gencol", "default",
+    "undefault", "identity", "idwm", "drop", "property", "unproperty")
+
+  private def features(list: String): Set[String] =
+    list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+
+  /** The metadata half of a [[TableState]]: its versions' actions folded
+    * in commit order, payloads kept as logged. Latest wins for schema,
+    * protocol, bloom columns and partitioning; keyed kinds add and drop
+    * entries; "rename" (payload `old>new`) re-points a chain whose
+    * values are PHYSICAL names; "drop" tombstones accumulate. */
+  private final class MetaFold {
+    var schema, protocol, bloom, partCols: Option[String] = None
+    val constraints, properties, generated, defaults, identity =
+      scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val watermarks = scala.collection.mutable.Map.empty[String, String]
+    val renames = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val renameChain = scala.collection.mutable.ArrayBuffer.empty[Action]
+    val dropped, txns = scala.collection.mutable.Set.empty[String]
+    def add(a: Action): Unit = a match {
+      case Action("schema", enc, _, _, _)   => schema = Some(enc)
+      case Action("protocol", fs, _, _, _)  => protocol = Some(fs)
+      case Action("bloom", cols, _, _, _)   => bloom = Some(cols)
+      case Action("partcols", enc, _, _, _) => partCols = Some(enc)
+      case Action("constraint", n, Some(enc), _, _) => constraints(n) = enc
+      case Action("unconstraint", n, _, _, _)       => constraints -= n
+      case Action("property", k, Some(enc), _, _)   => properties(k) = enc
+      case Action("unproperty", k, _, _, _)         => properties -= k
+      case Action("gencol", n, Some(enc), _, _)     => generated(n) = enc
+      case Action("default", n, Some(enc), _, _)    => defaults(n) = enc
+      case Action("undefault", n, _, _, _)          => defaults -= n
+      case Action("identity", n, Some(enc), _, _)   => identity(n) = enc
+      case Action("idwm", n, Some(enc), _, _)       => watermarks(n) = enc
+      case Action("drop", p, _, _, _) => dropped += p
+      case Action("txn", m, _, _, _)  => txns += m
+      case Action("rename", payload, _, _, _) =>
+        renameChain += a
+        val i = payload.indexOf('>')
+        val (o, n) = (payload.substring(0, i), payload.substring(i + 1))
+        val phys = renames.getOrElse(o, o)
+        renames -= o
+        if (n != phys) renames(n) = phys else renames -= n
+      case _ => ()
+    }
   }
 
   /** Compact the action history at the current last version: publish
@@ -275,15 +377,15 @@ object TxLog {
     * Idempotent — an existing checkpoint at v wins the link race and
     * this call becomes a no-op. Returns the checkpointed version. */
   def checkpoint(table: String): Long = {
-    val v = versions(table).lastOption.getOrElse(
-      throw new IllegalStateException(s"no commits to checkpoint in $table"))
-    val (adds, dvs) = replayState(table, Some(v))
-    val body = (adds.map(render) ++ dvs.toSeq.sortBy(_._1).map {
+    val st = state(table)
+    if (st.versions.isEmpty)
+      throw new IllegalStateException(s"no commits to checkpoint in $table")
+    val body = (st.adds.map(render) ++ st.dvs.toSeq.sortBy(_._1).map {
       case (p, (s, c)) => render(Action("dv", p, Some(s"$s:$c")))
     }).mkString("\n")
     // idempotent: an existing checkpoint at v wins the race, no-op here
-    CommitStore.of(table).tryPut(table, f"$v%020d.checkpoint.json", body)
-    v
+    CommitStore.of(table).tryPut(table, f"${st.version}%020d.checkpoint.json", body)
+    st.version
   }
 
   // ------------------------------------------------ commit timestamps
@@ -360,19 +462,19 @@ object TxLog {
   /** DESCRIBE DETAIL: one profile row from driver-side log replay only —
     * no data file opens at any table size. */
   def detail(table: String, asOf: Option[Long] = None): Detail = {
-    val (adds, dvs) = replayState(table, asOf)
-    val deleted = dvs.values.map(_._2).sum
-    val statRows = adds.map(_.stats.flatMap(TxStats.decode).map(_.rows))
+    val st = state(table, asOf)
+    val deleted = st.dvs.values.map(_._2).sum
+    val statRows = st.adds.map(_.stats.flatMap(TxStats.decode).map(_.rows))
     val rows =
       if (statRows.exists(_.isEmpty)) None
       else Some(statRows.map(_.get).sum - deleted)
-    val inv = renameMap(table, asOf).map(_.swap)
+    val inv = st.renames.map(_.swap)
     Detail(
-      versions(table).count(v => asOf.forall(v <= _)),
-      adds.size, rows, deleted,
-      constraintsOf(table, asOf).size,
-      bloomColsOf(table, asOf).map(p => inv.getOrElse(p, p)),
-      partColsOf(table, asOf))
+      st.versions.count(v => asOf.forall(v <= _)),
+      st.adds.size, rows, deleted,
+      st.constraints.size,
+      st.bloomCols.map(p => inv.getOrElse(p, p)),
+      st.partCols)
   }
 
   /** Resolve `AS OF TIMESTAMP`: the newest version whose commit
@@ -423,9 +525,7 @@ object TxLog {
 
   /** Has a commit carrying idempotence marker `txn` already landed?
     * (The Delta-protocol appId/version txn action, reduced to a string.) */
-  def txnSeen(table: String, txn: String): Boolean =
-    versions(table).exists(v =>
-      readActions(table, v).exists(a => a.op == "txn" && a.path == txn))
+  def txnSeen(table: String, txn: String): Boolean = state(table).txnSeen(txn)
 
   /** Automatic checkpoint cadence (round 15 — the Delta every-10-commits
     * pattern): each Nth committed version publishes a checkpoint so
@@ -458,26 +558,31 @@ object TxLog {
   private case object Skip extends AtBase
 
   /** Validate-then-claim (FORMAT.md §3), the one commit loop behind every
-    * writer. `pass` reads and stages (None: nothing to commit) and
-    * returns the writer's check at a claim target. Per attempt the loop
-    * reads `base` = last version FIRST, runs the check AS OF base, then
-    * claims base + 1 through [[tryCommit]]; a CAS loss re-reads base and
-    * re-checks, so no commit can slip between a check and its claim (a
-    * check read AFTER the claim target leaves a window where a racer's
-    * rewrite passes unseen — the TxLogSpec storm test). [[Rebase]] re-runs
-    * the pass; its staged files stay unreferenced (vacuum GCs them).
-    * Returns the version this writer published. */
-  private def commitLoop(table: String)(pass: => Option[Long => AtBase]): Option[Long] = {
+    * writer. `pass` reads and stages from the state it is given (None:
+    * nothing to commit) and returns the writer's check at a claim target.
+    * Per attempt the loop lists the log FIRST — `base` is its last
+    * version — runs the check on that state AS OF base, then claims
+    * base + 1 through [[tryCommit]]; a CAS loss re-lists and re-checks,
+    * so no commit can slip between a check and its claim (a check read
+    * AFTER the claim target leaves a window where a racer's rewrite
+    * passes unseen — the TxLogSpec storm test). [[Rebase]] re-runs the
+    * pass on the state it was checked against; its staged files stay
+    * unreferenced (vacuum GCs them). The first pass gets `st0`. Returns
+    * the version this writer published. */
+  private def commitLoop(st0: TableState)(
+      pass: TableState => Option[TableState => AtBase]): Option[Long] = {
+    var st = st0
     while (true) {
-      val atBase = pass match {
+      val atBase = pass(st) match {
         case Some(check) => check
         case None => return None
       }
       var rebase = false
       while (!rebase) {
-        val base = versions(table).lastOption.getOrElse(0L)
-        atBase(base) match {
-          case Claim(acts) => if (tryCommit(table, base + 1, acts)) return Some(base + 1)
+        st = state(st0.table)
+        atBase(st) match {
+          case Claim(acts) =>
+            if (tryCommit(st.table, st.version + 1, acts)) return Some(st.version + 1)
           case Rebase => rebase = true
           case Skip => return None
         }
@@ -486,49 +591,37 @@ object TxLog {
     None // unreachable
   }
 
-  private type Dvs = Map[String, (String, Long)]
-
-  /** Did a commit up to the claim target remove one of `files` or change
-    * its deletion vector? (`state` is the replay AS OF base.) Anything
-    * built from those files' rows would then resurrect or lose a racer's
-    * change: rebase. */
-  private def filesMoved(files: Seq[String], dv0: Dvs,
-                         state: (Seq[Action], Dvs)): Boolean = {
-    val (addsB, dvB) = state
-    val live = addsB.map(_.path).toSet
-    !files.forall(live) || files.exists(f => dvB.get(f) != dv0.get(f))
+  /** Did a commit up to the claim target `st` remove one of `files` or
+    * change its deletion vector? Anything built from those files' rows
+    * would then resurrect or lose a racer's change: rebase. */
+  private def filesMoved(files: Seq[String], dv0: Dvs, st: TableState): Boolean = {
+    val live = st.paths.toSet
+    !files.forall(live) || files.exists(f => st.dvs.get(f) != dv0.get(f))
   }
 
-  /** The CHECK-constraint set a writer last enforced. A DDL commit racing
-    * the write changes the set at the claim target: [[changedAt]] adopts
-    * the new set and reports the move, [[reenforceAt]] re-validates the
-    * rows against it — the mirror image of addConstraint's
-    * validate-then-claim. */
-  private final class Enforced(table: String) {
-    private var cs = constraintsOf(table)
-    def enforce(rows: DataFrame): Unit = enforceConstraints(table, rows, cs)
-    def changedAt(base: Long): Boolean = {
-      val csB = constraintsOf(table, Some(base))
-      val moved = csB != cs
-      cs = csB
+  /** The CHECK-constraint set a writer last enforced, first read from
+    * `st`. A DDL commit racing the write changes the set at the claim
+    * target: [[changedAt]] adopts the new set and reports the move,
+    * [[reenforceAt]] re-validates the rows against it — the mirror image
+    * of addConstraint's validate-then-claim. */
+  private final class Enforced(st: TableState) {
+    private var cs = st.constraints
+    def enforce(rows: DataFrame): Unit = enforceConstraints(st.table, rows, cs)
+    def changedAt(base: TableState): Boolean = {
+      val moved = base.constraints != cs
+      cs = base.constraints
       moved
     }
-    def reenforceAt(base: Long, rows: DataFrame): Unit =
+    def reenforceAt(base: TableState, rows: DataFrame): Unit =
       if (changedAt(base)) enforce(rows)
   }
-
-  /** Identity watermarks now, the snapshot a staging pass assigns from. */
-  private def watermarks(table: String): Map[String, Option[Long]] =
-    identityColsOf(table).keys.map(n => n -> identityWatermark(table, n)).toMap
 
   /** Did a racer advance a watched identity watermark past the pass's
     * snapshot by the claim target? Then assigned ranges would collide and
     * a supplied-column watermark would regress the sequence: restage. */
-  private def watermarkMoved(table: String, base: Long,
-                             wmSnap: Map[String, Option[Long]],
+  private def watermarkMoved(base: TableState, wmSnap: Map[String, Option[Long]],
                              watched: Iterable[String]): Boolean =
-    watched.exists(n =>
-      identityWatermark(table, n, Some(base)) != wmSnap.getOrElse(n, None))
+    watched.exists(n => base.watermark(n) != wmSnap.getOrElse(n, None))
 
   /** The checksum sibling Hadoop's local filesystem writes next to `p`. */
   private def crcOf(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
@@ -596,20 +689,22 @@ object TxLog {
     * an all-null `_change_type` column readers never bind (every reader
     * binds the declared schema, and the stats token leaves the column
     * out), and the change files then move under `cdc/` by metadata-only
-    * renames, the same step that flattens the partition directories. */
-  private def stage(spark: SparkSession, table: String,
+    * renames, the same step that flattens the partition directories.
+    * Column mapping, the declared schema and bloom columns come from `st`. */
+  private def stage(spark: SparkSession, st: TableState,
                     rows: Option[DataFrame], changes: Option[DataFrame],
                     partCols: Seq[String], sized: Boolean = true): StagedFiles = {
     if (rows.isEmpty && changes.isEmpty) return StagedFiles(Nil, Nil)
-    val rm = renameMap(table)
+    val table = st.table
+    val rm = st.renames
     // two writes: column-mapped data files carry physical names and change
     // rows logical ones; a schema-less table's readers bind file columns;
     // a declared `_change_type` or IsCdcCol column would be overwritten
-    val oneWrite = rm.isEmpty && schemaOf(table).exists(
+    val oneWrite = rm.isEmpty && st.schema.exists(
       !_.fieldNames.exists(Set(ChangeTypeCol, IsCdcCol)))
     if (rows.nonEmpty && changes.nonEmpty && !oneWrite) {
-      val data = stage(spark, table, rows, None, partCols, sized)
-      return data.copy(cdc = stage(spark, table, None, changes, partCols, sized).cdc)
+      val data = stage(spark, st, rows, None, partCols, sized)
+      return data.copy(cdc = stage(spark, st, None, changes, partCols, sized).cdc)
     }
     // a CDC-only write lands straight in its cdc directory
     val rel = s"${if (rows.isEmpty) "cdc" else "data"}/${UUID.randomUUID()}"
@@ -679,7 +774,7 @@ object TxLog {
     // declared bloom columns (stored physical) ride as per-write parquet
     // options, so every staged file (append, overwrite, CoW rewrite,
     // optimize, change record) embeds them
-    val bloomOpts = bloomColsOf(table)
+    val bloomOpts = st.bloomCols
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
     try {
       val w = writerSession(spark).table(s"global_temp.$gv")
@@ -807,23 +902,11 @@ object TxLog {
     * latest-first and are never deleted, so the declaration survives
     * checkpointing and vacuum. */
   def schemaOf(table: String, asOf: Option[Long] = None)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    versions(table).filter(_ <= hi).reverseIterator.flatMap { v =>
-      readActions(table, v).reverseIterator.collectFirst {
-        case Action("schema", enc, _, _, _) =>
-          org.apache.spark.sql.types.DataType.fromJson(new String(
-            java.util.Base64.getDecoder.decode(enc), StandardCharsets.UTF_8))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-    }.nextOption()
-  }
+      : Option[org.apache.spark.sql.types.StructType] = state(table, asOf).schema
 
   private def schemaAction(s: org.apache.spark.sql.types.StructType): Action =
-    Action("schema", java.util.Base64.getEncoder.encodeToString(
-      org.apache.spark.sql.types.StructType(
-        s.fields.map(_.copy(nullable = true)))
-        .json.getBytes(StandardCharsets.UTF_8)))
+    Action("schema", b64(org.apache.spark.sql.types.StructType(
+      s.fields.map(_.copy(nullable = true))).json))
 
   /** Schema-on-write enforcement (the lakehouse guarantee a bare parquet
     * directory lacks): compare by name → dataType, nullability ignored
@@ -832,10 +915,10 @@ object TxLog {
     * accepted widening — or throws on an undeclared new column / any
     * type conflict. A SUBSET append (missing columns) is fine as-is:
     * reads bind the DECLARED schema, so absent columns surface as null. */
-  private def enforceSchema(table: String, df: DataFrame,
+  private def enforceSchema(st: TableState, df: DataFrame,
                             mergeSchema: Boolean): Option[Action] = {
     val incoming = df.schema
-    schemaOf(table) match {
+    st.schema match {
       case None => Some(schemaAction(incoming))
       case Some(declared) =>
         val have = declared.map(f => f.name -> f.dataType).toMap
@@ -850,10 +933,10 @@ object TxLog {
           s"TxLog schema mismatch: new columns ${added.map(_.name).mkString(", ")} " +
             "require mergeSchema = true")
         else if (added.map(_.name)
-            .exists(renameMap(table).values.toSet)) throw new
+            .exists(st.renames.values.toSet)) throw new
           IllegalArgumentException("mergeSchema: a new column collides " +
             "with the physical name of a renamed column")
-        else if (added.map(_.name).exists(droppedPhysicalOf(table)))
+        else if (added.map(_.name).exists(st.dropped))
           throw new IllegalArgumentException(
             "mergeSchema: a new column re-declares a DROPped physical " +
               "name still carried by old data files; use a different name")
@@ -868,20 +951,8 @@ object TxLog {
     * Delta-constraints pattern — schema-on-write's semantic sibling).
     * Replayed from "constraint"/"unconstraint" actions, latest wins;
     * the SQL rides base64 (the log codec is a fixed flat shape). */
-  def constraintsOf(table: String, asOf: Option[Long] = None): Map[String, String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val live = scala.collection.mutable.LinkedHashMap[String, String]()
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("constraint", name, Some(enc), _, _) =>
-          live(name) = new String(java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8)
-        case Action("unconstraint", name, _, _, _) => live -= name
-        case _ => ()
-      }
-    }
-    live.toMap
-  }
+  def constraintsOf(table: String, asOf: Option[Long] = None): Map[String, String] =
+    state(table, asOf).constraints
 
   /** Declare a CHECK constraint: every EXISTING row must already
     * satisfy `sqlPredicate` (one validating scan — the add-constraint
@@ -893,17 +964,16 @@ object TxLog {
                     sqlPredicate: String,
                     commitTs: Option[Long] = None): Long = {
     safeField(name, "constraint name")
-    val act = Seq(Action("constraint", name,
-      Some(java.util.Base64.getEncoder.encodeToString(
-        sqlPredicate.getBytes(StandardCharsets.UTF_8)))), tsAction(commitTs, "ADD CONSTRAINT"))
+    val act = Seq(Action("constraint", name, Some(b64(sqlPredicate))),
+      tsAction(commitTs, "ADD CONSTRAINT"))
     // validate-then-claim (the storm-test discipline, applied to DDL):
     // validate the rows AS OF base — an append landing before the claim
     // takes base+1 and the loop REVALIDATES against the new rows, so a
     // racing writer can never slip violating rows under a freshly
     // validated constraint
-    commitLoop(table)(Some { base =>
-      if (base > 0 && snapshot(table, Some(base)).nonEmpty) {
-        val bad = read(spark, table, asOf = Some(base))
+    commitLoop(state(table))(_ => Some { base =>
+      if (base.adds.nonEmpty) {
+        val bad = readState(spark, base)
           .filter(not(coalesce(expr(sqlPredicate), lit(true))))
           .limit(1).count()
         require(bad == 0L,
@@ -918,7 +988,7 @@ object TxLog {
                      commitTs: Option[Long] = None): Long = {
     safeField(name, "constraint name")
     val act = Seq(Action("unconstraint", name), tsAction(commitTs, "DROP CONSTRAINT"))
-    commitLoop(table)(Some(_ => Claim(act))).get
+    commitLoop(state(table))(_ => Some(_ => Claim(act))).get
   }
 
   /** Widenings ALTER COLUMN TYPE accepts: value-preserving AND verified
@@ -957,20 +1027,20 @@ object TxLog {
                   newType: org.apache.spark.sql.types.DataType,
                   commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
-    commitLoop(table)(Some { base =>
+    commitLoop(state(table))(_ => Some { base =>
       // cross-cutting invariants re-read AT THE CLAIM TARGET on every
       // retry (round-14, ADVICE r13 — the dropColumn rationale): racing
       // partition/generated-column DDL must not slip between a one-shot
       // validation and the winning commit
-      require(!partColsOf(table, Some(base)).contains(name),
+      require(!base.partCols.contains(name),
         s"ALTER COLUMN: $name is a partition column of $table; partition " +
           "tuple rendering is pinned at declaration")
-      val gens = generatedColsOf(table, Some(base))
+      val gens = base.generated
       require(!gens.contains(name) &&
         !gens.exists { case (_, e) => referencesCol(e, name) },
         s"ALTER COLUMN: $name is generated or read by a generation " +
           "expression (output types are pinned at declaration)")
-      val declared = schemaOf(table, Some(base)).getOrElse(
+      val declared = base.schema.getOrElse(
         throw new IllegalStateException(s"$table has no declared schema"))
       val field = declared.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
@@ -993,31 +1063,17 @@ object TxLog {
     * free-form metadata the engine never interprets — the Delta
     * TBLPROPERTIES posture (user tags, pipeline provenance, retention
     * hints for external tooling). O(versions) driver metadata. */
-  def propertiesOf(table: String, asOf: Option[Long] = None): Map[String, String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val live = scala.collection.mutable.LinkedHashMap[String, String]()
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("property", k, Some(enc), _, _) =>
-          live(k) = new String(java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8)
-        case Action("unproperty", k, _, _, _) => live -= k
-        case _ => ()
-      }
-    }
-    live.toMap
-  }
+  def propertiesOf(table: String, asOf: Option[Long] = None): Map[String, String] =
+    state(table, asOf).properties
 
   /** SET TBLPROPERTIES: declare/overwrite `props` in one commit. */
   def setProperties(table: String, props: Map[String, String],
                     commitTs: Option[Long] = None): Long = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one pair")
     props.keys.foreach(safeField(_, "property key"))
-    val acts = props.toSeq.map { case (k, v) =>
-      Action("property", k, Some(java.util.Base64.getEncoder.encodeToString(
-        v.getBytes(StandardCharsets.UTF_8))))
-    } :+ tsAction(commitTs, "SET TBLPROPERTIES")
-    commitLoop(table)(Some(_ => Claim(acts))).get
+    val acts = props.toSeq.map { case (k, v) => Action("property", k, Some(b64(v))) } :+
+      tsAction(commitTs, "SET TBLPROPERTIES")
+    commitLoop(state(table))(_ => Some(_ => Claim(acts))).get
   }
 
   /** UNSET TBLPROPERTIES (absent keys are a no-op — idempotent DDL). */
@@ -1027,7 +1083,7 @@ object TxLog {
     keys.foreach(safeField(_, "property key"))
     val acts = keys.map(Action("unproperty", _)) :+
       tsAction(commitTs, "UNSET TBLPROPERTIES")
-    commitLoop(table)(Some(_ => Claim(acts))).get
+    commitLoop(state(table))(_ => Some(_ => Claim(acts))).get
   }
 
   // --------------------------------------- protocol (reader features)
@@ -1047,20 +1103,13 @@ object TxLog {
 
   /** Features declared required by the log at `asOf`. Monotone: each
     * protocol action carries the FULL set (latest wins). */
-  def protocolOf(table: String, asOf: Option[Long] = None): Set[String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    versions(table).filter(_ <= hi).reverseIterator.flatMap { v =>
-      readActions(table, v).reverseIterator.collectFirst {
-        case Action("protocol", feats, _, _, _) =>
-          feats.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      }
-    }.nextOption().getOrElse(Set.empty)
-  }
+  def protocolOf(table: String, asOf: Option[Long] = None): Set[String] =
+    state(table, asOf).protocol
 
   /** The protocol action a feature-introducing commit must carry when
-    * `feature` is not yet declared (None when already present). */
-  private def protocolAction(table: String, feature: String): Option[Action] = {
-    val cur = protocolOf(table)
+    * `feature` is not yet declared in `st` (None when already present). */
+  private def protocolAction(st: TableState, feature: String): Option[Action] = {
+    val cur = st.protocol
     if (cur.contains(feature)) None
     else Some(Action("protocol", (cur + feature).toSeq.sorted.mkString(",")))
   }
@@ -1074,8 +1123,8 @@ object TxLog {
   def addColumns(table: String, cols: org.apache.spark.sql.types.StructType,
                  commitTs: Option[Long] = None): Long = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    commitLoop(table)(Some { base =>
-      val declared = schemaOf(table, Some(base)).getOrElse(
+    commitLoop(state(table))(_ => Some { base =>
+      val declared = base.schema.getOrElse(
         throw new IllegalStateException(
           s"$table has no declared schema to evolve"))
       val clash = cols.fieldNames.filter(declared.fieldNames.contains(_))
@@ -1083,15 +1132,13 @@ object TxLog {
         s"ADD COLUMNS: already declared: ${clash.mkString(", ")}")
       // a new column's physical name is its logical name — it must not
       // collide with the physical name a RENAMEd column still writes
-      val physClash = cols.fieldNames
-        .filter(renameMap(table, Some(base)).values.toSet)
+      val physClash = cols.fieldNames.filter(base.renames.values.toSet)
       require(physClash.isEmpty,
         s"ADD COLUMNS: ${physClash.mkString(", ")} collides with the " +
           "physical name of a renamed column")
       // a tombstoned physical name still lives in pre-drop data files —
       // re-declaring it would resurrect stale values from those files
-      val tomb = cols.fieldNames
-        .filter(droppedPhysicalOf(table, Some(base)))
+      val tomb = cols.fieldNames.filter(base.dropped)
       require(tomb.isEmpty,
         s"ADD COLUMNS: ${tomb.mkString(", ")} was DROPped — old data " +
           "files still carry the physical column; use a different name " +
@@ -1112,22 +1159,8 @@ object TxLog {
     * `old>new`); identity entries are never stored, so the map is empty
     * for tables RENAME never touched and every such path is
     * byte-for-byte the pre-mapping one. */
-  def renameMap(table: String, asOf: Option[Long] = None): Map[String, String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val m = scala.collection.mutable.LinkedHashMap[String, String]()
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("rename", payload, _, _, _) =>
-          val i = payload.indexOf('>')
-          val (o, n) = (payload.substring(0, i), payload.substring(i + 1))
-          val phys = m.getOrElse(o, o)
-          m -= o
-          if (n != phys) m(n) = phys else m -= n
-        case _ => ()
-      }
-    }
-    m.toMap
-  }
+  def renameMap(table: String, asOf: Option[Long] = None): Map[String, String] =
+    state(table, asOf).renames
 
   /** The physical name of logical column `c` (identity when unmapped). */
   private def physicalOf(m: Map[String, String], c: String): String =
@@ -1146,13 +1179,13 @@ object TxLog {
     safeField(oldName, "column name"); safeField(newName, "column name")
     require(!oldName.contains(">") && !newName.contains(">") &&
       oldName.nonEmpty && newName.nonEmpty, "invalid column name")
-    // partition tuples and hive dirs are keyed by the partition column's
-    // declared name — renaming one would orphan every committed tuple
-    require(!partColsOf(table).contains(oldName),
-      s"RENAME COLUMN: $oldName is a partition column of $table; " +
-        "partition columns cannot be renamed (rewrite into a new table)")
-    commitLoop(table)(Some { base =>
-      val declared = schemaOf(table, Some(base)).getOrElse(
+    commitLoop(state(table))(_ => Some { base =>
+      // partition tuples and hive dirs are keyed by the partition column's
+      // declared name — renaming one would orphan every committed tuple
+      require(!base.partCols.contains(oldName),
+        s"RENAME COLUMN: $oldName is a partition column of $table; " +
+          "partition columns cannot be renamed (rewrite into a new table)")
+      val declared = base.schema.getOrElse(
         throw new IllegalStateException(s"$table has no declared schema"))
       require(declared.fieldNames.contains(oldName),
         s"RENAME COLUMN: no column $oldName (have ${declared.fieldNames.mkString(", ")})")
@@ -1163,18 +1196,17 @@ object TxLog {
       // leave identityColsOf naming a dead column and every later write
       // failing enforceSchema (round-16, ADVICE r15 #2): refuse loudly,
       // matching the partition-column rule above
-      require(!identityColsOf(table, Some(base)).contains(oldName),
+      require(!base.identity.contains(oldName),
         s"RENAME COLUMN: $oldName is an IDENTITY column of $table; " +
           "identity columns cannot be renamed (rewrite into a new table)")
       val renamed = org.apache.spark.sql.types.StructType(declared.fields.map(
         f => if (f.name == oldName) f.copy(name = newName) else f))
       // a DEFAULT declaration is keyed by logical name — re-key it in the
       // same commit or it would silently stop applying after the rename
-      val rekeyDefault = defaultsOf(table, Some(base)).get(oldName).toSeq
-        .flatMap { e => Seq(Action("undefault", oldName),
-          Action("default", newName, Some(java.util.Base64.getEncoder
-            .encodeToString(e.getBytes(StandardCharsets.UTF_8))))) }
-      Claim(protocolAction(table, "column-mapping").toSeq ++ rekeyDefault ++
+      val rekeyDefault = base.defaults.get(oldName).toSeq.flatMap { e =>
+        Seq(Action("undefault", oldName), Action("default", newName, Some(b64(e))))
+      }
+      Claim(protocolAction(base, "column-mapping").toSeq ++ rekeyDefault ++
         Seq(Action("rename", s"$oldName>$newName"),
           schemaAction(renamed), tsAction(commitTs, "RENAME COLUMN")))
     }).get
@@ -1187,12 +1219,8 @@ object TxLog {
     * those files — [[addColumns]] refuses instead (the loud-refusal
     * discipline; Delta solves the same hazard with column-mapping ids,
     * here the tombstone set is the cheaper equivalent). */
-  def droppedPhysicalOf(table: String, asOf: Option[Long] = None): Set[String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    versions(table).filter(_ <= hi).flatMap { v =>
-      readActions(table, v).collect { case Action("drop", p, _, _, _) => p }
-    }.toSet
-  }
+  def droppedPhysicalOf(table: String, asOf: Option[Long] = None): Set[String] =
+    state(table, asOf).dropped
 
   /** Crude-but-conservative "does this stored SQL expression mention
     * column `c`" probe (word-boundary match, case-insensitive): used to
@@ -1218,16 +1246,16 @@ object TxLog {
   def dropColumn(table: String, name: String,
                  commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
-    commitLoop(table)(Some { base =>
+    commitLoop(state(table))(_ => Some { base =>
       // cross-cutting invariants re-read AT THE CLAIM TARGET on every
       // retry, like append() does for constraints (round-14, ADVICE r13):
       // a concurrent ADD CONSTRAINT / SET BLOOM / generated-column DDL
       // landing between a one-shot validation and the winning commit
       // would otherwise drop a column new DDL depends on
-      require(!partColsOf(table, Some(base)).contains(name),
+      require(!base.partCols.contains(name),
         s"DROP COLUMN: $name is a partition column of $table; partition " +
           "columns cannot be dropped (rewrite into a new table)")
-      val gens = generatedColsOf(table, Some(base))
+      val gens = base.generated
       require(!gens.contains(name),
         s"DROP COLUMN: $name is GENERATED ALWAYS AS — generation is a " +
           "creation-time property; rewrite into a new table")
@@ -1236,22 +1264,21 @@ object TxLog {
       // assignIdentity injecting a column the schema no longer declares,
       // failing every later write with no recovery (round-16, ADVICE
       // r15 #2): refuse loudly, matching the generated-column guard
-      require(!identityColsOf(table, Some(base)).contains(name),
+      require(!base.identity.contains(name),
         s"DROP COLUMN: $name is an IDENTITY column of $table; identity " +
           "columns cannot be dropped (rewrite into a new table)")
       val genRefs = gens.filter { case (_, e) => referencesCol(e, name) }
       require(genRefs.isEmpty,
         s"DROP COLUMN: generated column(s) ${genRefs.keys.mkString(", ")} " +
           s"read $name")
-      val csRefs = constraintsOf(table, Some(base)).filter { case (_, e) =>
-        referencesCol(e, name) }
+      val csRefs = base.constraints.filter { case (_, e) => referencesCol(e, name) }
       require(csRefs.isEmpty,
         s"DROP COLUMN: CHECK constraint(s) ${csRefs.keys.mkString(", ")} " +
           s"read $name — DROP CONSTRAINT first")
-      val phys = physicalOf(renameMap(table, Some(base)), name)
-      require(!bloomColsOf(table, Some(base)).contains(phys),
+      val phys = physicalOf(base.renames, name)
+      require(!base.bloomCols.contains(phys),
         s"DROP COLUMN: $name is bloom-indexed — SET BLOOM without it first")
-      val declared = schemaOf(table, Some(base)).getOrElse(
+      val declared = base.schema.getOrElse(
         throw new IllegalStateException(s"$table has no declared schema"))
       require(declared.fieldNames.contains(name),
         s"DROP COLUMN: no column $name (have ${declared.fieldNames.mkString(", ")})")
@@ -1269,9 +1296,7 @@ object TxLog {
         if (phys != name) Seq(Action("rename", s"$name>$phys")) else Nil
       // a dropped column's DEFAULT dies with it (applyDefaults would
       // ignore the stale entry, but the log should not carry lies)
-      val undef =
-        if (defaultsOf(table, Some(base)).contains(name))
-          Seq(Action("undefault", name)) else Nil
+      val undef = if (base.defaults.contains(name)) Seq(Action("undefault", name)) else Nil
       Claim(unmap ++ undef ++ Seq(Action("drop", phys),
         schemaAction(narrowed), tsAction(commitTs, "DROP COLUMN")))
     }).get
@@ -1282,15 +1307,8 @@ object TxLog {
   /** Columns whose data files carry parquet BLOOM FILTERS, latest
     * declaration ≤ asOf wins (the schemaOf scan pattern). Empty for
     * tables the DDL never touched. */
-  def bloomColsOf(table: String, asOf: Option[Long] = None): Seq[String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    versions(table).filter(_ <= hi).reverseIterator.flatMap { v =>
-      readActions(table, v).reverseIterator.collectFirst {
-        case Action("bloom", cols, _, _, _) =>
-          cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      }
-    }.nextOption().getOrElse(Seq.empty)
-  }
+  def bloomColsOf(table: String, asOf: Option[Long] = None): Seq[String] =
+    state(table, asOf).bloomCols
 
   /** Declare the bloom-indexed column set (replaces any previous set;
     * empty clears). Every LATER staged write — appends, overwrites, and
@@ -1309,12 +1327,12 @@ object TxLog {
     require(cols.forall(c => !c.contains(",") && c.nonEmpty),
       "bloom column names must be non-empty and comma-free")
     // stored PHYSICAL (what files and footers carry) — stable across
-    // later renames; probes translate logical → physical at read
-    val rm = renameMap(table)
-    val act = Seq(Action("bloom",
-      cols.map(physicalOf(rm, _)).mkString(",")),
-      tsAction(commitTs, "SET BLOOM"))
-    commitLoop(table)(Some(_ => Claim(act))).get
+    // later renames (resolved at the claim target, so a racing RENAME is
+    // seen); probes translate logical → physical at read
+    commitLoop(state(table))(_ => Some { base =>
+      Claim(Seq(Action("bloom", cols.map(physicalOf(base.renames, _)).mkString(",")),
+        tsAction(commitTs, "SET BLOOM")))
+    }).get
   }
 
   // ----------------------------------------------- generated columns
@@ -1324,19 +1342,8 @@ object TxLog {
     * CHECK constraints ("gencol" actions, expression base64 in the
     * stats slot); declaration-only — production formats pin generation
     * expressions at creation, so there is no drop action. */
-  def generatedColsOf(table: String, asOf: Option[Long] = None): Map[String, String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val live = scala.collection.mutable.LinkedHashMap[String, String]()
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("gencol", name, Some(enc), _, _) =>
-          live(name) = new String(java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8)
-        case _ => ()
-      }
-    }
-    live.toMap
-  }
+  def generatedColsOf(table: String, asOf: Option[Long] = None): Map[String, String] =
+    state(table, asOf).generated
 
   /** Declare `name` as GENERATED ALWAYS AS (`sqlExpr`) over the other
     * columns. Writers that omit the column get it MATERIALIZED; writers
@@ -1353,47 +1360,50 @@ object TxLog {
                          sqlExpr: String,
                          commitTs: Option[Long] = None): Long = {
     safeField(name, "generated column name")
-    require(snapshot(table).isEmpty,
-      s"$table has live data; generated columns are declared before any " +
-        "write (CREATE the table, declare, then load)")
-    val declared = schemaOf(table).getOrElse(throw new IllegalStateException(
-      s"$table has no declared schema — CREATE it first"))
-    require(declared.fieldNames.contains(name),
-      s"generated column $name is not in the declared schema " +
-        s"(${declared.fieldNames.mkString(", ")})")
-    val gcs = generatedColsOf(table)
-    require(!gcs.contains(name), s"$name is already generated")
-    // the expression must analyze against the NON-generated columns only
-    val others = org.apache.spark.sql.types.StructType(
-      declared.fields.filterNot(f => f.name == name || gcs.contains(f.name)))
-    val probe = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), others)
-    val resolved = probe.select(expr(sqlExpr)).schema.head.dataType
-    val declaredType = declared(declared.fieldIndex(name)).dataType
-    // value-preserving upcasts wrap automatically (the setColumnDefault
-    // rule — `id * 2` on a BIGINT column where the literal math resolves
-    // narrower); lossy mismatches still refuse
-    val stored =
-      if (resolved == declaredType) sqlExpr
-      else if (org.apache.spark.sql.catalyst.expressions.Cast
-          .canUpCast(resolved, declaredType))
-        s"CAST(($sqlExpr) AS ${declaredType.sql})"
-      else throw new IllegalArgumentException(
-        s"generation expression for $name yields $resolved but the column " +
-          s"is declared $declaredType — cast inside the expression")
-    val enc = java.util.Base64.getEncoder.encodeToString(
-      stored.getBytes(StandardCharsets.UTF_8))
-    val acts = Seq(Action("gencol", name, Some(enc)),
-      tsAction(commitTs, "ADD GENERATED COLUMN"))
-    commitLoop(table)(Some(_ => Claim(acts))).get
+    // every check runs AT THE CLAIM TARGET: an append landing between a
+    // one-shot check and the claim would leave live rows without the
+    // values the declaration promises
+    commitLoop(state(table))(_ => Some { base =>
+      require(base.adds.isEmpty,
+        s"$table has live data; generated columns are declared before any " +
+          "write (CREATE the table, declare, then load)")
+      val declared = base.schema.getOrElse(throw new IllegalStateException(
+        s"$table has no declared schema — CREATE it first"))
+      require(declared.fieldNames.contains(name),
+        s"generated column $name is not in the declared schema " +
+          s"(${declared.fieldNames.mkString(", ")})")
+      val gcs = base.generated
+      require(!gcs.contains(name), s"$name is already generated")
+      // the expression must analyze against the NON-generated columns only
+      val others = org.apache.spark.sql.types.StructType(
+        declared.fields.filterNot(f => f.name == name || gcs.contains(f.name)))
+      val probe = spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), others)
+      val resolved = probe.select(expr(sqlExpr)).schema.head.dataType
+      val declaredType = declared(declared.fieldIndex(name)).dataType
+      // value-preserving upcasts wrap automatically (the setColumnDefault
+      // rule — `id * 2` on a BIGINT column where the literal math resolves
+      // narrower); lossy mismatches still refuse
+      val stored =
+        if (resolved == declaredType) sqlExpr
+        else if (org.apache.spark.sql.catalyst.expressions.Cast
+            .canUpCast(resolved, declaredType))
+          s"CAST(($sqlExpr) AS ${declaredType.sql})"
+        else throw new IllegalArgumentException(
+          s"generation expression for $name yields $resolved but the column " +
+            s"is declared $declaredType — cast inside the expression")
+      Claim(Seq(Action("gencol", name, Some(b64(stored))),
+        tsAction(commitTs, "ADD GENERATED COLUMN")))
+    }).get
   }
 
   /** Apply the table's generated columns to an incoming frame:
     * materialize the absent ones, validate the supplied ones (SQL
     * null-safe equality, so a null generation result must be written as
     * null). Runs BEFORE schema enforcement in every user-facing writer. */
-  private def applyGenerated(table: String, df: DataFrame): DataFrame = {
-    val gcs = generatedColsOf(table)
+  private def applyGenerated(st: TableState, df: DataFrame): DataFrame = {
+    val table = st.table
+    val gcs = st.generated
     if (gcs.isEmpty) return df
     val have = df.columns.toSet
     val (supplied, absent) = gcs.partition { case (n, _) => have(n) }
@@ -1426,20 +1436,8 @@ object TxLog {
     * declaration keep null — reads never backfill history, so the
     * declaration is versioned like schema and costs nothing at read
     * time at any table size. */
-  def defaultsOf(table: String, asOf: Option[Long] = None): Map[String, String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val live = scala.collection.mutable.LinkedHashMap[String, String]()
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("default", name, Some(enc), _, _) =>
-          live(name) = new String(java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8)
-        case Action("undefault", name, _, _, _) => live -= name
-        case _ => ()
-      }
-    }
-    live.toMap
-  }
+  def defaultsOf(table: String, asOf: Option[Long] = None): Map[String, String] =
+    state(table, asOf).defaults
 
   /** `ALTER TABLE … ALTER COLUMN name SET DEFAULT sqlExpr` — a
     * metadata-only commit. The expression must be CONSTANT (analyzed
@@ -1452,13 +1450,13 @@ object TxLog {
   def setColumnDefault(spark: SparkSession, table: String, name: String,
                        sqlExpr: String, commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
-    commitLoop(table)(Some { base =>
-      val declared = schemaOf(table, Some(base)).getOrElse(
+    commitLoop(state(table))(_ => Some { base =>
+      val declared = base.schema.getOrElse(
         throw new IllegalStateException(
           s"$table has no declared schema — CREATE or write first"))
       require(declared.fieldNames.contains(name),
         s"SET DEFAULT: no column $name (have ${declared.fieldNames.mkString(", ")})")
-      require(!generatedColsOf(table, Some(base)).contains(name),
+      require(!base.generated.contains(name),
         s"SET DEFAULT: $name is GENERATED ALWAYS AS — it is always " +
           "computed, a default could never apply")
       val probe = spark.createDataFrame(
@@ -1485,9 +1483,7 @@ object TxLog {
           s"DEFAULT for $name yields ${resolved.simpleString} but the " +
             s"column is declared ${declaredType.simpleString} — cast " +
             "inside the expression")
-      val enc = java.util.Base64.getEncoder.encodeToString(
-        stored.getBytes(StandardCharsets.UTF_8))
-      Claim(Seq(Action("default", name, Some(enc)),
+      Claim(Seq(Action("default", name, Some(b64(stored))),
         tsAction(commitTs, "SET DEFAULT")))
     }).get
   }
@@ -1498,7 +1494,7 @@ object TxLog {
                         commitTs: Option[Long] = None): Long = {
     safeField(name, "column name")
     val acts = Seq(Action("undefault", name), tsAction(commitTs, "DROP DEFAULT"))
-    commitLoop(table)(Some(_ => Claim(acts))).get
+    commitLoop(state(table))(_ => Some(_ => Claim(acts))).get
   }
 
   /** Fill declared DEFAULTs into an incoming frame: absent defaulted
@@ -1506,10 +1502,10 @@ object TxLog {
     * is a fallback, not an invariant — unlike generated columns there is
     * no lie to validate). Scan-local withColumn of a constant — zero
     * shuffle, codegen-folded. */
-  private def applyDefaults(table: String, df: DataFrame): DataFrame = {
-    val ds = defaultsOf(table)
+  private def applyDefaults(st: TableState, df: DataFrame): DataFrame = {
+    val ds = st.defaults
     if (ds.isEmpty) return df
-    val declared = schemaOf(table).getOrElse(return df)
+    val declared = st.schema.getOrElse(return df)
     val have = df.columns.toSet
     ds.filterNot { case (n, _) => have(n) }.foldLeft(df) { case (d, (n, e)) =>
       declared.fields.find(_.name == n)
@@ -1521,9 +1517,10 @@ object TxLog {
   /** The per-writer column-policy gate, in dependency order: DEFAULTs
     * fill first (so generation expressions see defaulted values), then
     * generated columns materialize/validate. Every user-facing writer
-    * routes its incoming frame through here. */
-  private def applyColumnPolicies(table: String, df: DataFrame): DataFrame =
-    applyGenerated(table, applyDefaults(table, df))
+    * routes its incoming frame through here, with the state it commits
+    * from. */
+  private def applyColumnPolicies(st: TableState, df: DataFrame): DataFrame =
+    applyGenerated(st, applyDefaults(st, df))
 
   // ----------------------------------------------- IDENTITY columns
 
@@ -1532,43 +1529,17 @@ object TxLog {
     * IDENTITY pattern ("identity" actions; creation-time like gencol,
     * no drop). */
   def identityColsOf(table: String, asOf: Option[Long] = None)
-      : Map[String, (Long, Long, Boolean)] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val live = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Boolean)]()
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("identity", name, Some(enc), _, _) =>
-          val Array(st, sp, ae) = new String(
-            java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8).split(' ')
-          live(name) = (st.toLong, sp.toLong, ae.toBoolean)
-        case _ => ()
-      }
-    }
-    live.toMap
-  }
+      : Map[String, (Long, Long, Boolean)] = state(table, asOf).identity
 
   /** Last ASSIGNED identity value for `name` at `asOf` ("idwm" actions,
     * latest wins — each assigning commit's own OCC makes the sequence
     * monotone along the committed history). None before any assignment. */
   def identityWatermark(table: String, name: String,
-                        asOf: Option[Long] = None): Option[Long] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    var wm: Option[Long] = None
-    versions(table).filter(_ <= hi).foreach { v =>
-      readActions(table, v).foreach {
-        case Action("idwm", n, Some(enc), _, _) if n == name =>
-          wm = Some(new String(java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8).toLong)
-        case _ => ()
-      }
-    }
-    wm
-  }
+                        asOf: Option[Long] = None): Option[Long] =
+    state(table, asOf).watermark(name)
 
   private def idwmAction(name: String, value: Long): Action =
-    Action("idwm", name, Some(java.util.Base64.getEncoder.encodeToString(
-      value.toString.getBytes(StandardCharsets.UTF_8))))
+    Action("idwm", name, Some(b64(value.toString)))
 
   /** Declare `name` GENERATED { ALWAYS | BY DEFAULT } AS IDENTITY
     * (START WITH `start` INCREMENT BY `step`). Creation-time like
@@ -1587,27 +1558,27 @@ object TxLog {
                         commitTs: Option[Long] = None): Long = {
     safeField(name, "identity column name")
     require(step != 0L, "IDENTITY step must be non-zero")
-    require(snapshot(table).isEmpty,
-      s"$table has live data; identity columns are declared before any " +
-        "write (CREATE the table, declare, then load)")
-    val declared = schemaOf(table).getOrElse(throw new IllegalStateException(
-      s"$table has no declared schema — CREATE it first"))
-    require(declared.fieldNames.contains(name),
-      s"identity column $name is not in the declared schema " +
-        s"(${declared.fieldNames.mkString(", ")})")
-    require(declared(declared.fieldIndex(name)).dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"identity column $name must be declared BIGINT")
-    require(!generatedColsOf(table).contains(name) &&
-      !defaultsOf(table).contains(name),
-      s"$name already carries a generated/default declaration")
-    require(!identityColsOf(table).contains(name),
-      s"$name is already an identity column")
-    val enc = java.util.Base64.getEncoder.encodeToString(
-      s"$start $step $allowExplicitInsert".getBytes(StandardCharsets.UTF_8))
-    val acts = Seq(Action("identity", name, Some(enc)),
-      tsAction(commitTs, "ADD IDENTITY"))
-    commitLoop(table)(Some(_ => Claim(acts))).get
+    // checked AT THE CLAIM TARGET, like addGeneratedColumn: a racing
+    // append must not leave live rows without identity values
+    commitLoop(state(table))(_ => Some { base =>
+      require(base.adds.isEmpty,
+        s"$table has live data; identity columns are declared before any " +
+          "write (CREATE the table, declare, then load)")
+      val declared = base.schema.getOrElse(throw new IllegalStateException(
+        s"$table has no declared schema — CREATE it first"))
+      require(declared.fieldNames.contains(name),
+        s"identity column $name is not in the declared schema " +
+          s"(${declared.fieldNames.mkString(", ")})")
+      require(declared(declared.fieldIndex(name)).dataType ==
+        org.apache.spark.sql.types.LongType,
+        s"identity column $name must be declared BIGINT")
+      require(!base.generated.contains(name) && !base.defaults.contains(name),
+        s"$name already carries a generated/default declaration")
+      require(!base.identity.contains(name),
+        s"$name is already an identity column")
+      Claim(Seq(Action("identity", name, Some(b64(s"$start $step $allowExplicitInsert"))),
+        tsAction(commitTs, "ADD IDENTITY")))
+    }).get
   }
 
   /** Assign identity values into `df` for every declared identity column
@@ -1618,10 +1589,10 @@ object TxLog {
     * what makes the assigned ranges collision-free without any global
     * coordination. Assignment is `base + step·monotonically_increasing_id()`
     * — scan-local, zero shuffle; sparse (gappy) but monotone per commit. */
-  private def assignIdentity(table: String, df: DataFrame,
+  private def assignIdentity(st: TableState, df: DataFrame,
                              wmSnap: Map[String, Option[Long]])
       : (DataFrame, Map[String, Long]) = {
-    val ids = identityColsOf(table)
+    val ids = st.identity
     if (ids.isEmpty) return (df, Map.empty)
     val have = df.columns.toSet
     var out = df
@@ -1663,12 +1634,12 @@ object TxLog {
     * stats-less staging falls back to one bounded scan of just those
     * files. For an explicitly-supplied BY DEFAULT column, advances the
     * watermark past the supplied max the same way. */
-  private def identityWmActions(spark: SparkSession, table: String,
+  private def identityWmActions(spark: SparkSession, st: TableState,
                                 adds: Seq[Action],
                                 assignedBases: Map[String, Long],
                                 suppliedCols: Seq[String],
                                 wmSnap: Map[String, Option[Long]]): Seq[Action] = {
-    val ids = identityColsOf(table)
+    val ids = st.identity
     val watch = (assignedBases.keySet ++
       suppliedCols.filter(ids.contains)).toSeq
     if (watch.isEmpty) return Nil
@@ -1685,7 +1656,7 @@ object TxLog {
       }
     }
     lazy val scanned: Map[String, Long] = {
-      val files = adds.filter(_.op == "add").map(a => absPath(table, a.path))
+      val files = adds.filter(_.op == "add").map(a => absPath(st.table, a.path))
       if (files.isEmpty) Map.empty
       else {
         val aggs = watch.map { n =>
@@ -1739,45 +1710,28 @@ object TxLog {
     * newline-joined base64 (the log codec is a fixed flat shape).
     * Partitioning is declared at FIRST write and immutable after —
     * repartitioning a table is a rewrite, not a DDL flip. */
-  def partColsOf(table: String, asOf: Option[Long] = None): Seq[String] = {
-    val hi = asOf.getOrElse(Long.MaxValue)
-    versions(table).filter(_ <= hi).reverseIterator.flatMap { v =>
-      readActions(table, v).reverseIterator.collectFirst {
-        case Action("partcols", enc, _, _, _) =>
-          new String(java.util.Base64.getDecoder.decode(enc),
-            StandardCharsets.UTF_8).split('\n').filter(_.nonEmpty).toSeq
-      }
-    }.nextOption().getOrElse(Seq.empty)
-  }
+  def partColsOf(table: String, asOf: Option[Long] = None): Seq[String] =
+    state(table, asOf).partCols
 
   private def partColsAction(cols: Seq[String]): Action =
-    Action("partcols", java.util.Base64.getEncoder.encodeToString(
-      cols.mkString("\n").getBytes(StandardCharsets.UTF_8)))
+    Action("partcols", b64(cols.mkString("\n")))
 
   /** Encode one file's partition tuple as the opaque `part` token: one
     * line per column, `b64(name) b64(value)` with `-` for the null
     * sentinel, the whole body base64 (same discipline as [[TxStats]]'s
     * token — names and values may hold anything, the log line may not). */
-  private[graft] def encodePartValues(vals: Seq[(String, Option[String])]): String = {
-    def b(s: String) = java.util.Base64.getEncoder.encodeToString(
-      s.getBytes(StandardCharsets.UTF_8))
-    java.util.Base64.getEncoder.encodeToString(
-      vals.map { case (c, v) => s"${b(c)} ${v.map(b).getOrElse("-")}" }
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-  }
+  private[graft] def encodePartValues(vals: Seq[(String, Option[String])]): String =
+    b64(vals.map { case (c, v) => s"${b64(c)} ${v.map(b64).getOrElse("-")}" }
+      .mkString("\n"))
 
   /** Decode a `part` token; declared order preserved. Throws on a
     * malformed token — partition metadata is written by this engine
     * only, so corruption is a bug, not a compatibility case. */
-  private[graft] def decodePartValues(token: String): Seq[(String, Option[String])] = {
-    def un(s: String) = new String(java.util.Base64.getDecoder.decode(s),
-      StandardCharsets.UTF_8)
-    new String(java.util.Base64.getDecoder.decode(token), StandardCharsets.UTF_8)
-      .split('\n').filter(_.nonEmpty).toSeq.map { line =>
-        val Array(c, v) = line.split(' ')
-        un(c) -> (if (v == "-") None else Some(un(v)))
-      }
-  }
+  private[graft] def decodePartValues(token: String): Seq[(String, Option[String])] =
+    unb64(token).split('\n').filter(_.nonEmpty).toSeq.map { line =>
+      val Array(c, v) = line.split(' ')
+      unb64(c) -> (if (v == "-") None else Some(unb64(v)))
+    }
 
   /** Shared declaration-time validation: partition columns exist in the
     * schema, carry partitionable types, and don't repeat. */
@@ -1808,10 +1762,11 @@ object TxLog {
              commitTs: Option[Long] = None): Long = {
     require(schema.nonEmpty, "CREATE TABLE needs at least one column")
     validatePartCols(schema, partitionBy)
+    // version 1 declares the whole protocol: a table that already has one
+    // loses the claim below
     val acts = (schemaAction(schema) +:
       (if (partitionBy.isEmpty) Seq.empty
-       else partColsAction(partitionBy) +:
-         protocolAction(table, "partitioning").toSeq)) :+
+       else Seq(partColsAction(partitionBy), Action("protocol", "partitioning")))) :+
       tsAction(commitTs, "CREATE TABLE")
     if (!tryCommit(table, 1L, acts)) throw new IllegalStateException(
       s"CREATE TABLE: $table already exists (version 1 is taken)")
@@ -1823,10 +1778,11 @@ object TxLog {
     * declaring partitioning on a table that already has live
     * UNPARTITIONED files is refused (those files carry no partition
     * tuple, so partition-aligned ops over them would be guesses). */
-  private def partDecl(table: String, df: DataFrame,
+  private def partDecl(st: TableState, df: DataFrame,
                        partitionBy: Seq[String],
                        replacesAll: Boolean = false): (Seq[String], Seq[Action]) = {
-    val declared = partColsOf(table)
+    val table = st.table
+    val declared = st.partCols
     if (declared.nonEmpty) {
       require(partitionBy.isEmpty || partitionBy == declared,
         s"$table is partitioned by (${declared.mkString(", ")}); a write " +
@@ -1834,13 +1790,12 @@ object TxLog {
       (declared, Seq.empty)
     } else if (partitionBy.nonEmpty) {
       validatePartCols(df.schema, partitionBy)
-      require(replacesAll || snapshot(table).isEmpty,
+      require(replacesAll || st.adds.isEmpty,
         s"$table already has live unpartitioned files; partitioning must " +
           "be declared on the first write or an OVERWRITE (rewrite into " +
           "a new table to repartition)")
       (partitionBy,
-        partColsAction(partitionBy) +:
-          protocolAction(table, "partitioning").toSeq)
+        partColsAction(partitionBy) +: protocolAction(st, "partitioning").toSeq)
     } else (Seq.empty, Seq.empty)
   }
 
@@ -1867,8 +1822,7 @@ object TxLog {
       case Some(s) =>
         scala.util.Try {
           val token = dt match {
-            case StringType => java.util.Base64.getEncoder
-              .encodeToString(s.getBytes(StandardCharsets.UTF_8))
+            case StringType => b64(s)
             case DateType =>
               java.time.LocalDate.parse(s).toEpochDay.toString
             case BooleanType =>
@@ -1887,9 +1841,11 @@ object TxLog {
     * driver-side metadata only). Partition columns refuse renames, so
     * token names == physical names == logical names. */
   private[graft] def statsResolver(table: String, asOf: Option[Long])
-      : Action => Option[TxStats.FileStats] = {
+      : Action => Option[TxStats.FileStats] = statsResolver(state(table, asOf))
+
+  private def statsResolver(st: TableState): Action => Option[TxStats.FileStats] = {
     val types: Map[String, org.apache.spark.sql.types.DataType] =
-      schemaOf(table, asOf)
+      st.schema
         .map(_.fields.map(f => f.name -> f.dataType).toMap)
         .getOrElse(Map.empty)
     (a: Action) => {
@@ -1923,11 +1879,12 @@ object TxLog {
     * footer row counts net of deletion vectors. Sorted by the rendered
     * tuple for a stable listing. */
   def partitions(table: String, asOf: Option[Long] = None): Seq[PartitionInfo] = {
-    val partCols = partColsOf(table, asOf)
+    val st = state(table, asOf)
+    val partCols = st.partCols
     require(partCols.nonEmpty,
       s"SHOW PARTITIONS requires a partitioned table; $table is unpartitioned")
-    val (adds, dvs) = replayState(table, asOf)
-    adds.groupBy(_.part).toSeq.map { case (tok, as) =>
+    val dvs = st.dvs
+    st.adds.groupBy(_.part).toSeq.map { case (tok, as) =>
       val values = tok.map(decodePartValues).getOrElse(
         partCols.map(_ -> None)) // pre-declaration files (none in practice)
       val rowsPerFile = as.map { a =>
@@ -1945,18 +1902,17 @@ object TxLog {
     * The predicate is resolved and constant-folded by Catalyst against a
     * read of the given files (the parquet relation keeps the Filter node;
     * literal casts fold), then [[partitionRegion]] decides each file. */
-  private def regionFiles(spark: SparkSession, table: String,
+  private def regionFiles(spark: SparkSession, st: TableState,
                           cond: Column, adds: Seq[Action]): Seq[Action] = {
-    val partCols = partColsOf(table)
-    require(partCols.nonEmpty,
-      s"OPTIMIZE WHERE requires a partitioned table; $table is unpartitioned")
-    val base = boundRead(spark, table, adds.map(_.path), None)
+    require(st.partCols.nonEmpty,
+      s"OPTIMIZE WHERE requires a partitioned table; ${st.table} is unpartitioned")
+    val base = boundRead(spark, st, adds.map(_.path))
     val conds = base.filter(cond).queryExecution.optimizedPlan.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }
     require(conds.nonEmpty,
       "OPTIMIZE WHERE predicate resolved to no filter; pass a real region predicate")
-    adds.filter(partitionRegion(table, "OPTIMIZE WHERE", partCols,
+    adds.filter(partitionRegion(st, "OPTIMIZE WHERE",
       conds.reduce(org.apache.spark.sql.catalyst.expressions.And.apply)))
   }
 
@@ -1966,14 +1922,15 @@ object TxLog {
     * provably all-in or all-out by its partition point-stats; anything
     * else fails loudly, naming `verb`, rather than guessing a region
     * boundary. Driver-side metadata, O(files). */
-  private def partitionRegion(table: String, verb: String, partCols: Seq[String],
+  private def partitionRegion(st: TableState, verb: String,
                               pred: org.apache.spark.sql.catalyst.expressions.Expression)
       : Action => Boolean = {
+    val partCols = st.partCols
     val refs = pred.references.map(_.name).toSet
     require(refs.nonEmpty && refs.subsetOf(partCols.toSet),
       s"$verb predicate may reference only partition columns " +
         s"(${partCols.mkString(", ")}); got ${refs.mkString(", ")}")
-    val resolve = statsResolver(table, None)
+    val resolve = statsResolver(st)
     a => {
       val fs = resolve(a).getOrElse(throw new IllegalStateException(
         s"$verb: live file ${a.path} carries no partition tuple"))
@@ -2002,8 +1959,9 @@ object TxLog {
     * committed version. */
   def replaceWhere(spark: SparkSession, table: String, df0: DataFrame,
                    cond: Column, commitTs: Option[Long] = None): Long = {
-    val df1 = applyColumnPolicies(table, df0)
-    val partCols = partColsOf(table)
+    val st0 = state(table)
+    val df1 = applyColumnPolicies(st0, df0)
+    val partCols = st0.partCols
     require(partCols.nonEmpty,
       s"replaceWhere requires a partitioned table; $table is unpartitioned")
     // resolve the predicate against the INCOMING frame (it must carry
@@ -2024,7 +1982,7 @@ object TxLog {
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           e.eval(org.apache.spark.sql.catalyst.InternalRow.empty), e.dataType)
     }
-    val inRegion = partitionRegion(table, "replaceWhere", partCols, pred)
+    val inRegion = partitionRegion(st0, "replaceWhere", pred)
     // Delta's invariant: every incoming row is inside the region
     require(df1.filter(!cond || cond.isNull).limit(1).count() == 0L,
       "replaceWhere: the incoming frame has rows outside the predicate " +
@@ -2032,17 +1990,16 @@ object TxLog {
     // identity: the append snapshot-assign-restage discipline (round-16,
     // ADVICE r15 #1 — replaced-region rows are NEW rows; omitted identity
     // columns assign, explicit BY DEFAULT supply advances the watermark)
-    commitLoop(table) {
-      val s = stageRows(spark, table, df1) { df =>
-        (partCols, enforceSchema(table, df, mergeSchema = false).toSeq)
+    commitLoop(st0) { st =>
+      val s = stageRows(spark, st, df1) { df =>
+        (partCols, enforceSchema(st, df, mergeSchema = false).toSeq)
       }
       val adds = s.actions :+ tsAction(commitTs, "REPLACEWHERE")
       Some { base =>
         if (s.movedAt(base)) Rebase
         else {
-          val (liveAdds, dvs) = replayState(table, Some(base))
-          val victims = liveAdds.filter(inRegion)
-          require(victims.forall(a => !dvs.contains(a.path)),
+          val victims = base.adds.filter(inRegion)
+          require(victims.forall(a => !base.dvs.contains(a.path)),
             "replaceWhere over files carrying deletion vectors: OPTIMIZE " +
               "first to materialize the deletes (the whole-file swap would " +
               "drop the DV state silently otherwise)")
@@ -2111,8 +2068,9 @@ object TxLog {
     * read or touched. Returns the committed version. */
   def overwritePartitions(spark: SparkSession, table: String, df0: DataFrame,
                           commitTs: Option[Long] = None): Long = {
-    val df1 = applyColumnPolicies(table, df0)
-    val partCols = partColsOf(table)
+    val st0 = state(table)
+    val df1 = applyColumnPolicies(st0, df0)
+    val partCols = st0.partCols
     require(partCols.nonEmpty,
       s"overwritePartitions requires a partitioned table; $table is " +
         "unpartitioned (use overwrite)")
@@ -2120,9 +2078,9 @@ object TxLog {
     // ADVICE r15 #1); identity continues across the overwrite like
     // [[overwrite]] — a redefined partition's rows are NEW rows, never a
     // sequence reset
-    commitLoop(table) {
-      val s = stageRows(spark, table, df1) { df =>
-        (partCols, enforceSchema(table, df, mergeSchema = false).toSeq)
+    commitLoop(st0) { st =>
+      val s = stageRows(spark, st, df1) { df =>
+        (partCols, enforceSchema(st, df, mergeSchema = false).toSeq)
       }
       val adds = s.actions :+ tsAction(commitTs, "OVERWRITE PARTITIONS")
       val touched = adds.flatMap(_.part).toSet
@@ -2131,9 +2089,8 @@ object TxLog {
       Some { base =>
         if (s.movedAt(base)) Rebase
         else {
-          val (liveAdds, dvs) = replayState(table, Some(base))
-          val victims = liveAdds.filter(_.part.exists(touched))
-          require(victims.forall(a => !dvs.contains(a.path)),
+          val victims = base.adds.filter(_.part.exists(touched))
+          require(victims.forall(a => !base.dvs.contains(a.path)),
             "overwritePartitions over files carrying deletion vectors: " +
               "OPTIMIZE first to materialize the deletes")
           Claim(victims.map(a => Action("remove", a.path)) ++ adds)
@@ -2155,8 +2112,8 @@ object TxLog {
     (rel: String) => decoded.exists(_.endsWith("/" + rel))
   }
 
-  /** The read half of a copy-on-write verb: of the live files `adds0`
-    * (with DVs `dv0`), those holding a row `matches` keeps — one
+  /** The read half of a copy-on-write verb: of the files live in `st`
+    * (through its DVs), those holding a row `matches` keeps — one
     * distributed `input_file_name()` scan, driver state bounded by FILE
     * count — and a scan of just those files. Both scans bind the
     * DECLARED schema (evolved tables: absent columns surface as null in
@@ -2164,12 +2121,12 @@ object TxLog {
     * through the DVs, so already-deleted rows neither match nor get
     * resurrected. `pruned` lists the files with their commit-log stats
     * so pushed filters skip whole files. None when no file matches. */
-  private def cowRead(spark: SparkSession, table: String, adds0: Seq[Action],
-                      dv0: Dvs, pruned: Boolean)(
+  private def cowRead(spark: SparkSession, st: TableState, pruned: Boolean)(
       matches: DataFrame => DataFrame): Option[(Seq[String], DataFrame)] = {
-    def scan(adds: Seq[Action], dvs: Dvs): DataFrame = applyDvs(spark, table,
-      if (pruned) prunedBoundRead(spark, table, adds, None)
-      else boundRead(spark, table, adds.map(_.path), None), dvs)
+    val (adds0, dv0) = (st.adds, st.dvs)
+    def scan(adds: Seq[Action], dvs: Dvs): DataFrame = applyDvs(spark, st.table,
+      if (pruned) prunedBoundRead(spark, st, adds)
+      else boundRead(spark, st, adds.map(_.path)), dvs)
     if (adds0.isEmpty) None
     else {
       // distinct per partition, not through a shuffle: one job, and the
@@ -2187,19 +2144,16 @@ object TxLog {
     }
   }
 
-  /** Do the files live in `state` (the replay AS OF the claim target)
-    * that the pass did not read carry any of the (broadcast) merge
-    * `keys`? One bounded scan of only those files — zero when none
-    * landed. A MERGE committing beside them would leave two live rows
-    * per matched key: rebase. */
-  private def keysLanded(spark: SparkSession, table: String,
-                         state: (Seq[Action], Dvs), read0: Set[String],
+  /** Do the files live at the claim target `base` that the pass did not
+    * read carry any of the (broadcast) merge `keys`? One bounded scan of
+    * only those files — zero when none landed. A MERGE committing beside
+    * them would leave two live rows per matched key: rebase. */
+  private def keysLanded(spark: SparkSession, base: TableState, read0: Set[String],
                          keys: DataFrame, keyCols: Seq[String]): Boolean = {
-    val (addsB, dvB) = state
-    val newFiles = addsB.map(_.path).filterNot(read0)
+    val newFiles = base.paths.filterNot(read0)
     newFiles.nonEmpty &&
-      applyDvs(spark, table, boundRead(spark, table, newFiles, None),
-        dvB.filter { case (f, _) => newFiles.contains(f) })
+      applyDvs(spark, base.table, boundRead(spark, base, newFiles),
+        base.dvs.filter { case (f, _) => newFiles.contains(f) })
         .join(keys, keyCols, "left_semi").limit(1).count() > 0
   }
 
@@ -2236,32 +2190,32 @@ object TxLog {
     * assignment, the committed idwm and the claim-time check), then the
     * writer's schema/partition declaration, CHECK enforcement BEFORE
     * staging, the staged files and their watermark actions. */
-  private final class Staged(table: String, val rows: DataFrame,
+  private final class Staged(val rows: DataFrame,
                              val actions: Seq[Action], cs: Enforced,
                              wmSnap: Map[String, Option[Long]],
                              watched: Set[String]) {
     /** The shared claim-target check: re-enforce a changed constraint
       * set on the staged rows; true when a racer advanced a watched
       * identity watermark (restage). */
-    def movedAt(base: Long): Boolean = {
+    def movedAt(base: TableState): Boolean = {
       cs.reenforceAt(base, rows)
-      watermarkMoved(table, base, wmSnap, watched)
+      watermarkMoved(base, wmSnap, watched)
     }
   }
 
-  /** Run one [[Staged]] pass over `df1`; `declare` returns the partition
-    * columns to stage by and the declaration actions to commit. */
-  private def stageRows(spark: SparkSession, table: String, df1: DataFrame)(
+  /** Run one [[Staged]] pass over `df1` from `st`; `declare` returns the
+    * partition columns to stage by and the declaration actions to commit. */
+  private def stageRows(spark: SparkSession, st: TableState, df1: DataFrame)(
       declare: DataFrame => (Seq[String], Seq[Action])): Staged = {
-    val wmSnap = watermarks(table)
-    val (df, idBases) = assignIdentity(table, df1, wmSnap)
+    val wmSnap = st.watermarks
+    val (df, idBases) = assignIdentity(st, df1, wmSnap)
     val (partCols, declActs) = declare(df)
-    val cs = new Enforced(table)
+    val cs = new Enforced(st)
     cs.enforce(df)
-    val staged = stage(spark, table, Some(df), None, partCols).adds
-    val idActs = identityWmActions(spark, table, staged, idBases,
+    val staged = stage(spark, st, Some(df), None, partCols).adds
+    val idActs = identityWmActions(spark, st, staged, idBases,
       df1.columns.toSeq, wmSnap)
-    new Staged(table, df, staged ++ declActs ++ idActs, cs, wmSnap,
+    new Staged(df, staged ++ declActs ++ idActs, cs, wmSnap,
       idBases.keySet ++ idActs.map(_.path))
   }
 
@@ -2277,11 +2231,12 @@ object TxLog {
              mergeSchema: Boolean = false,
              commitTs: Option[Long] = None,
              partitionBy: Seq[String] = Nil): Long = {
-    val df1 = applyColumnPolicies(table, df0)
-    commitLoop(table) {
-      val s = stageRows(spark, table, df1) { df =>
-        val decl = enforceSchema(table, df, mergeSchema)
-        val (partCols, partActs) = partDecl(table, df, partitionBy)
+    val st0 = state(table)
+    val df1 = applyColumnPolicies(st0, df0)
+    commitLoop(st0) { st =>
+      val s = stageRows(spark, st, df1) { df =>
+        val decl = enforceSchema(st, df, mergeSchema)
+        val (partCols, partActs) = partDecl(st, df, partitionBy)
         (partCols, decl.toSeq ++ partActs)
       }
       val adds = s.actions :+ tsAction(commitTs, "WRITE")
@@ -2303,12 +2258,13 @@ object TxLog {
                  txn: String, commitTs: Option[Long] = None,
                  partitionBy: Seq[String] = Nil): Option[Long] = {
     safeField(txn, "txn marker") // fail BEFORE staging, not at commit render
-    if (txnSeen(table, txn)) return None
-    val df1 = applyColumnPolicies(table, df0)
-    commitLoop(table) {
-      val s = stageRows(spark, table, df1) { df =>
-        val decl = enforceSchema(table, df, mergeSchema = false)
-        val (partCols, partActs) = partDecl(table, df, partitionBy)
+    val st0 = state(table)
+    if (st0.txnSeen(txn)) return None
+    val df1 = applyColumnPolicies(st0, df0)
+    commitLoop(st0) { st =>
+      val s = stageRows(spark, st, df1) { df =>
+        val decl = enforceSchema(st, df, mergeSchema = false)
+        val (partCols, partActs) = partDecl(st, df, partitionBy)
         (partCols, decl.toSeq ++ partActs)
       }
       val adds = s.actions :+ Action("txn", txn) :+
@@ -2317,7 +2273,7 @@ object TxLog {
       // replay lands between it and the commit, base+1 is taken, the CAS
       // fails, and the loop re-checks — the marker never slips through
       Some { base =>
-        if (txnSeen(table, txn)) Skip
+        if (base.txnSeen(txn)) Skip
         else if (s.movedAt(base)) Rebase
         else Claim(adds)
       }
@@ -2335,8 +2291,8 @@ object TxLog {
     * half. Returns the committed version, or None when already empty
     * (no content commit for a no-op, mirroring the DML family). */
   def truncate(table: String, commitTs: Option[Long] = None): Option[Long] =
-    commitLoop(table)(Some { base =>
-      val live = snapshot(table, Some(base))
+    commitLoop(state(table))(_ => Some { base =>
+      val live = base.paths
       // CDF-enabled tables record the truncated rows as deletes (round-15,
       // ADVICE r14 #2): without a cdc record this commit would wedge every
       // streaming readChangeFeed forever. The SparkSession-free signature
@@ -2344,14 +2300,14 @@ object TxLog {
       // session (one bounded read of the snapshot being dropped, restaged
       // per CAS attempt because the snapshot may have moved).
       lazy val cdc =
-        if (!cdfEnabled(table)) Nil
+        if (!base.cdfEnabled) Nil
         else {
           val s = SparkSession.getActiveSession
             .orElse(SparkSession.getDefaultSession).getOrElse(
               throw new IllegalStateException(
                 s"TRUNCATE of CDF-enabled $table needs an active " +
                   "SparkSession to record the deleted rows"))
-          stageChange(s, table, None)(read(s, table, Some(base))
+          stageChange(s, base, None)(readState(s, base)
             .withColumn(ChangeTypeCol, lit("delete"))).cdc
         }
       if (live.isEmpty) Skip
@@ -2369,7 +2325,7 @@ object TxLog {
                    commitTs: Option[Long] = None): Option[Long] = {
     safeField(txn, "txn marker")
     val acts = Seq(Action("txn", txn), tsAction(commitTs, "TXN MARKER"))
-    commitLoop(table)(Some(_ => if (txnSeen(table, txn)) Skip else Claim(acts)))
+    commitLoop(state(table))(_ => Some(base => if (base.txnSeen(txn)) Skip else Claim(acts)))
   }
 
   /** Transactional overwrite: removes the files of the snapshot the
@@ -2379,21 +2335,22 @@ object TxLog {
   def overwrite(spark: SparkSession, table: String, df0: DataFrame,
                 commitTs: Option[Long] = None,
                 partitionBy: Seq[String] = Nil): Long = {
-    val df1 = applyColumnPolicies(table, df0)
+    val st0 = state(table)
+    val df1 = applyColumnPolicies(st0, df0)
     // identity CONTINUES across an overwrite (a content replace resets
     // rows, never the counter — the SQL sequence rule); same
     // snapshot-assign-restage discipline as append
-    commitLoop(table) {
-      val s = stageRows(spark, table, df1) { df =>
+    commitLoop(st0) { st =>
+      val s = stageRows(spark, st, df1) { df =>
         // a full content replace REDEFINES the schema (no merge flag
         // needed); time travel before it binds the contemporary
         // declaration, so old snapshots keep reading with their own
         // columns/types
         val decl =
-          if (schemaOf(table).exists(d => d.map(f => (f.name, f.dataType)) ==
+          if (st.schema.exists(d => d.map(f => (f.name, f.dataType)) ==
             df.schema.map(f => (f.name, f.dataType)))) None
           else Some(schemaAction(df.schema))
-        val (partCols, partActs) = partDecl(table, df, partitionBy,
+        val (partCols, partActs) = partDecl(st, df, partitionBy,
           replacesAll = true)
         (partCols, decl.toSeq ++ partActs)
       }
@@ -2401,7 +2358,7 @@ object TxLog {
       Some { base =>
         if (s.movedAt(base)) Rebase
         else {
-          val removes = snapshot(table, Some(base)).map(Action("remove", _))
+          val removes = base.paths.map(Action("remove", _))
           // CDF record (round-15, ADVICE r14 #2): a content replace is
           // delete(old rows) + insert(new rows) to a row-level consumer —
           // without it the commit wedges streaming readChangeFeed. Skipped
@@ -2409,9 +2366,9 @@ object TxLog {
           // at read time, the merge() rule); restaged per CAS attempt
           // because the removed snapshot may have moved.
           val cdc =
-            if (removes.isEmpty || !cdfEnabled(table)) Nil
-            else stageChange(spark, table, None)(
-              read(spark, table, Some(base))
+            if (removes.isEmpty || !base.cdfEnabled) Nil
+            else stageChange(spark, base, None)(
+              readState(spark, base)
                 .withColumn(ChangeTypeCol, lit("delete"))
                 .unionByName(s.rows.withColumn(ChangeTypeCol, lit("insert")),
                   allowMissingColumns = true)).cdc
@@ -2461,22 +2418,20 @@ object TxLog {
                         commitTs: Option[Long])(
       matched: DataFrame => DataFrame,
       unmatched: DataFrame => DataFrame): Option[Long] =
-    commitLoop(table) {
-      val (adds0, dv0) = replayState(table, None)
-      cowRead(spark, table, adds0, dv0, pruned = true)(matched).map {
+    commitLoop(state(table)) { st =>
+      cowRead(spark, st, pruned = true)(matched).map {
         case (affected, scanAff) =>
           // the survivors re-stage beside the CDF record (property-gated):
           // exactly the deleted rows — the survivors merely move files,
           // which is not a row change. A wholly deleted file leaves a
           // zero-row staged file (or none): it is no add.
-          val w = stageChange(spark, table, Some(unmatched(scanAff)))(
+          val w = stageChange(spark, st, Some(unmatched(scanAff)))(
             matched(scanAff).withColumn(ChangeTypeCol, lit("delete")))
           val adds = w.adds.filterNot(_.stats.flatMap(TxStats.decode).exists(_.rows == 0))
           val acts = (affected.map(Action("remove", _)) ++ w.cdc :+
             tsAction(commitTs, "DELETE")) ++ adds
-          (base: Long) =>
-            if (filesMoved(affected, dv0, replayState(table, Some(base)))) Rebase
-            else Claim(acts)
+          (base: TableState) =>
+            if (filesMoved(affected, st.dvs, base)) Rebase else Claim(acts)
       }
     }
 
@@ -2522,11 +2477,10 @@ object TxLog {
                   commitTs: Option[Long] = None): Option[Long] = {
     require(assignments.nonEmpty, "updateWhere requires at least one assignment")
     val hit = coalesce(cond, lit(false))
-    commitLoop(table) {
-      val (adds0, dv0) = replayState(table, None)
-      if (adds0.isEmpty) None
+    commitLoop(state(table)) { st =>
+      if (st.adds.isEmpty) None
       else {
-        schemaOf(table).foreach { d =>
+        st.schema.foreach { d =>
           val unknown = assignments.keys.filterNot(d.fieldNames.contains)
           require(unknown.isEmpty,
             s"updateWhere: columns not in the declared schema: ${unknown.mkString(", ")}")
@@ -2535,7 +2489,7 @@ object TxLog {
         // below RECOMPUTES them from the post-assignment row — without
         // this, updating a base column left the stored generated value
         // stale, silently breaking GENERATED ALWAYS AS (round 14)
-        val gens = generatedColsOf(table)
+        val gens = st.generated
         assignments.keys.foreach(k => require(!gens.contains(k),
           s"updateWhere must not assign generated column $k — it is " +
             "recomputed from the post-update row"))
@@ -2543,7 +2497,7 @@ object TxLog {
         // an UPDATE rewriting them could duplicate live ids or regress
         // the watermark contract (round-16, ADVICE r15 #1: the uncovered-
         // verb posture is loud refusal; Delta refuses the same)
-        val idCols = identityColsOf(table)
+        val idCols = st.identity
         assignments.keys.foreach(k => require(!idCols.contains(k),
           s"updateWhere must not assign IDENTITY column $k — identity " +
             "values are engine-assigned and immutable under UPDATE"))
@@ -2567,24 +2521,23 @@ object TxLog {
               .getOrElse(col(f.name))
           }.toIndexedSeq: _*)
         }
-        cowRead(spark, table, adds0, dv0, pruned = true)(_.filter(hit)).map {
+        cowRead(spark, st, pruned = true)(_.filter(hit)).map {
           case (affected, scan) =>
             val rewritten = updated(scan, guarded = true)
-            val cs = new Enforced(table)
+            val cs = new Enforced(st)
             cs.enforce(rewritten)
             // CDF record (property-gated), staged with the rewrite: pre/post
             // image pairs of exactly the hit rows — the unchanged rows of
             // affected files merely move files
-            val w = stageChange(spark, table, Some(rewritten))(
+            val w = stageChange(spark, st, Some(rewritten))(
               scan.filter(hit).withColumn(ChangeTypeCol, lit("update_preimage"))
                 .unionByName(updated(scan.filter(hit), guarded = false)
                   .withColumn(ChangeTypeCol, lit("update_postimage"))))
             val acts = affected.map(Action("remove", _)) ++
               (w.all :+ tsAction(commitTs, "UPDATE"))
-            (base: Long) => {
-              val state = replayState(table, Some(base))
+            (base: TableState) => {
               cs.reenforceAt(base, rewritten)
-              if (filesMoved(affected, dv0, state)) Rebase else Claim(acts)
+              if (filesMoved(affected, st.dvs, base)) Rebase else Claim(acts)
             }
         }
       }
@@ -2618,7 +2571,7 @@ object TxLog {
     * DV-table read's planning cost; past [[DvCompactThreshold]] an
     * [[optimize]] is overdue. */
   def dvCardinality(table: String, asOf: Option[Long] = None): Long =
-    dvsAt(table, asOf).values.map(_._2).sum
+    state(table, asOf).dvs.values.map(_._2).sum
 
   /** Ceiling past which accumulated deletion vectors stop being "a small
     * sidecar" and start costing real driver memory and per-read planning
@@ -2748,15 +2701,14 @@ object TxLog {
   def deleteWhereMerge(spark: SparkSession, table: String, cond: Column,
                        commitTs: Option[Long] = None): Option[Long] = {
     val hit = coalesce(cond, lit(false))
-    val committed = commitLoop(table) {
-      val (adds0, dv0) = replayState(table, None)
-      val read0 = adds0.map(_.path)
+    val committed = commitLoop(state(table)) { st =>
+      val (read0, dv0) = (st.paths, st.dvs)
       if (read0.isEmpty) None
       else {
         // attach the (file-key, position) columns ON the scan (metadata
         // columns resolve only there), THEN anti-join the existing DVs so
         // already-deleted rows can't re-match
-        val keyed = withDvKey(boundRead(spark, table, read0, None))
+        val keyed = withDvKey(boundRead(spark, st, read0))
         val alive =
           if (dv0.isEmpty) keyed
           else keyed.join(
@@ -2812,18 +2764,17 @@ object TxLog {
           val affected = read0.filter(byFile.contains)
           // CDF record (property-gated): the newly-deleted rows in full —
           // the DV delta alone names positions, not content
-          val cdc = stageChange(spark, table, None)(
+          val cdc = stageChange(spark, st, None)(
             alive.filter(hit).drop("_graft_key", "_graft_pos")
               .withColumn(ChangeTypeCol, lit("delete"))).cdc
           val dvActions = affected.map { f =>
             val (rel, n) = byFile(f)
             Action("dv", f, Some(s"$rel:$n"))
-          } ++ cdc ++ protocolAction(table, "deletion-vectors") :+
+          } ++ cdc ++ protocolAction(st, "deletion-vectors") :+
             tsAction(commitTs, "DELETE")
           // a racer rewriting a file or landing a DV on it: rebase
-          Some((base: Long) =>
-            if (filesMoved(affected, dv0, replayState(table, Some(base)))) Rebase
-            else Claim(dvActions))
+          Some((base: TableState) =>
+            if (filesMoved(affected, dv0, base)) Rebase else Claim(dvActions))
         }
       }
     }
@@ -2869,11 +2820,13 @@ object TxLog {
     // the same applyGenerated gate every append-family writer runs
     // (round 14: merge previously accepted a source whose generated
     // values LIED, where append refused)
-    val source = applyColumnPolicies(table, source0)
+    val st0 = state(table)
+    val source = applyColumnPolicies(st0, source0)
     // an identity MERGE KEY the source does not supply has nothing to
     // match on — refuse BEFORE the key-column analysis below would throw
     // an unhelpful unresolved-column error
-    identityColsOf(table).keys.filter(keyCols.contains).foreach { n =>
+    val idDecls = st0.identity
+    idDecls.keys.filter(keyCols.contains).foreach { n =>
       require(source.columns.contains(n),
         s"merge on identity key column $n requires the source to supply it")
     }
@@ -2882,8 +2835,8 @@ object TxLog {
     // columns widen the declaration in the SAME commit (append's
     // evolution rule); survivors null-fill via the allowMissingColumns
     // union below, and readers bind the union declaration
-    val decl = enforceSchema(table, source, mergeSchema)
-    val cs = new Enforced(table)
+    val decl = enforceSchema(st0, source, mergeSchema)
+    val cs = new Enforced(st0)
     cs.enforce(source)
     val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked above
     // ---- IDENTITY (round-16, ADVICE r15 #1): classify supply once.
@@ -2894,7 +2847,6 @@ object TxLog {
     // resolve per outer pass: matched rows INHERIT the target row's id
     // (an upsert is an update, not a re-keying), unmatched rows get
     // fresh monotone values past the watermark snapshot.
-    val idDecls = identityColsOf(table)
     val idSupplied: Map[String, Boolean] =
       idDecls.map { case (name, (_, _, allowExplicit)) =>
         val present = source.columns.contains(name) &&
@@ -2943,13 +2895,12 @@ object TxLog {
       (if (pin) s2.localCheckpoint(true) else s2, bases.toMap)
     }
     val idSuppliedCols = idSupplied.filter(_._2).keys.toSeq
-    commitLoop(table) {
-      val (adds0, dv0) = replayState(table, None)
-      val wmSnap = watermarks(table)
+    commitLoop(st0) { st =>
+      val wmSnap = st.watermarks
       // an empty table has no affected file: MERGE degenerates to an
       // append of the source (its claim-time check still catches a racer
       // appending matching keys first)
-      val hitRead = cowRead(spark, table, adds0, dv0, pruned = false)(
+      val hitRead = cowRead(spark, st, pruned = false)(
         _.join(keys, keyCols, "left_semi"))
       val affected = hitRead.map(_._1).getOrElse(Nil)
       val scanAffOpt = hitRead.map(_._2)
@@ -2974,15 +2925,14 @@ object TxLog {
             scanAff.groupBy(keyCols.map(col): _*)
               .agg(aggs.head, aggs.tail: _*)
           }
-          resolveIds(tIds, wmSnap,
-            pin = scanAffOpt.nonEmpty && cdfEnabled(table))
+          resolveIds(tIds, wmSnap, pin = scanAffOpt.nonEmpty && st.cdfEnabled)
         }
       // stage survivors and source as ONE write so the commit is one
       // atomic unit; column order aligned to the declared schema — the
       // UNION declaration under schema evolution, so source-only columns
       // survive alignment (survivors null-fill in the union below)
       val declared = {
-        val d = schemaOf(table).getOrElse(source.schema)
+        val d = st.schema.getOrElse(source.schema)
         org.apache.spark.sql.types.StructType(d.fields ++
           source.schema.fields.filterNot(f => d.fieldNames.contains(f.name)))
       }
@@ -3001,7 +2951,7 @@ object TxLog {
       // add-only commit whose inserts derive at read time without cdc
       // files.
       val w = scanAffOpt.map { scanAff =>
-        stageChange(spark, table, Some(staged)) {
+        stageChange(spark, st, Some(staged)) {
           val tKeys = scanAff.select(keyCols.map(col): _*)
           val pre = aligned(scanAff)
             .join(keys, keyCols, "left_semi")
@@ -3018,16 +2968,15 @@ object TxLog {
           pre.unionByName(post, allowMissingColumns = true)
             .unionByName(ins, allowMissingColumns = true)
         }
-      }.getOrElse(stage(spark, table, Some(staged), None, partColsOf(table)))
-      val idActs = identityWmActions(spark, table, w.adds, idBases,
+      }.getOrElse(stage(spark, st, Some(staged), None, st.partCols))
+      val idActs = identityWmActions(spark, st, w.adds, idBases,
         idSuppliedCols, wmSnap)
       val adds = (w.adds ++ decl ++ w.cdc ++ idActs) :+
         tsAction(commitTs, "MERGE")
       val watched = idBases.keySet ++ idActs.map(_.path)
       val acts = affected.map(Action("remove", _)) ++ adds
-      val read0 = adds0.map(_.path).toSet
+      val read0 = st.paths.toSet
       Some { base =>
-        val state = replayState(table, Some(base))
         cs.reenforceAt(base, source)
         // rebase when a racer advanced a watched identity watermark
         // (assigned ranges would collide), rewrote an affected file or
@@ -3040,9 +2989,9 @@ object TxLog {
         // files added since the read — zero cost when no append raced.
         // Sustained key-matching append storms could livelock the rebase;
         // that trade (progress-vs-failure) mirrors every rebase loop here.
-        if (watermarkMoved(table, base, wmSnap, watched) ||
-            filesMoved(affected, dv0, state) ||
-            keysLanded(spark, table, state, read0, keys, keyCols)) Rebase
+        if (watermarkMoved(base, wmSnap, watched) ||
+            filesMoved(affected, st.dvs, base) ||
+            keysLanded(spark, base, read0, keys, keyCols)) Rebase
         else Claim(acts)
       }
     }.get
@@ -3141,9 +3090,10 @@ object TxLog {
       s"WHEN NOT MATCHED BY SOURCE clause must be update/delete, got ${c.kind}"))
     require((matched ++ notMatched ++ notMatchedBySource).nonEmpty,
       "MERGE requires at least one WHEN clause")
-    val declared0 = schemaOf(table).getOrElse(throw new IllegalStateException(
+    val st0 = state(table)
+    val declared0 = st0.schema.getOrElse(throw new IllegalStateException(
       s"$table has no declared schema — general MERGE needs one"))
-    val gens = generatedColsOf(table)
+    val gens = st0.generated
     val allClauses = matched ++ notMatched ++ notMatchedBySource
     allClauses.foreach(_.assigns.keys.foreach { k =>
       require(mergeSchema || declared0.fieldNames.contains(k),
@@ -3161,7 +3111,7 @@ object TxLog {
     // column is GENERATED BY DEFAULT. Unassigned identity columns of
     // insert rows draw fresh monotone values past the watermark below
     // (never the NULL the plain insertFallback would produce).
-    val idDecls = identityColsOf(table)
+    val idDecls = st0.identity
     (matched ++ notMatchedBySource).foreach(_.assigns.keys.foreach { k =>
       require(!idDecls.contains(k),
         s"MERGE must not UPDATE identity column $k — identity values " +
@@ -3206,12 +3156,12 @@ object TxLog {
           declared0.fields ++ newFields)
         // reuse the append-path widening gate: rename/tombstone collision
         // checks + the schema action, via a zero-row frame of the union
-        val act = enforceSchema(table,
+        val act = enforceSchema(st0,
           spark.createDataFrame(empty, evolved), mergeSchema = true)
         (evolved, act)
       }
     requireUniqueKeys(source, keyCols, "clause row")
-    val cs = new Enforced(table)
+    val cs = new Enforced(st0)
     // marker column: distinguishes "matched" from "source key columns
     // happen to be null" after the left join
     val srcAliased = source.withColumn("_graft_src_hit", lit(true)).alias("s")
@@ -3247,7 +3197,7 @@ object TxLog {
     }
     // an insert clause's unassigned column takes its declared DEFAULT
     // (round-15, VERDICT r14 #4 — the SQL INSERT (cols) rule), else null
-    val dflts = defaultsOf(table)
+    val dflts = st0.defaults
     def insertFallback(f: org.apache.spark.sql.types.StructField): Column =
       dflts.get(f.name).map(expr).getOrElse(lit(null)).cast(f.dataType)
     def insertCol(f: org.apache.spark.sql.types.StructField,
@@ -3281,13 +3231,12 @@ object TxLog {
     val onCond = residual
       .map(r => onKeys && coalesce(r, lit(false))).getOrElse(onKeys)
 
-    commitLoop(table) {
-      val (adds0, dv0) = replayState(table, None)
-      val read0 = adds0.map(_.path)
+    commitLoop(st0) { st =>
+      val (read0, dv0) = (st.paths, st.dvs)
       // identity: one watermark snapshot per pass feeds assignment, the
       // committed idwm, and the claim-time conflict check (the append
       // discipline); a racer advancing a watched watermark rebases
-      val wmSnap = watermarks(table)
+      val wmSnap = st.watermarks
 
       // ---- inserts: source rows matching NO live target row (key equal
       // AND residual true), through the insert clauses (computed against
@@ -3298,11 +3247,11 @@ object TxLog {
       val unmatchedSrc =
         if (read0.isEmpty) srcAliased
         else if (residual.isEmpty) srcAliased.join(
-          applyDvs(spark, table, boundRead(spark, table, read0, None), dv0)
+          applyDvs(spark, table, boundRead(spark, st, read0), dv0)
             .select(keyCols.map(col): _*).distinct(),
           keyCols, "left_anti")
         else srcAliased.join(
-          applyDvs(spark, table, boundRead(spark, table, read0, None), dv0)
+          applyDvs(spark, table, boundRead(spark, st, read0), dv0)
             .alias("t"),
           onCond, "left_anti")
       val idBases = scala.collection.mutable.Map.empty[String, Long]
@@ -3330,7 +3279,7 @@ object TxLog {
                 lit(base) + lit(step) *
                   org.apache.spark.sql.functions.monotonically_increasing_id()))
             }
-            if (cdfEnabled(table)) i.localCheckpoint(true) else i
+            if (st.cdfEnabled) i.localCheckpoint(true) else i
           }
         }
 
@@ -3338,7 +3287,7 @@ object TxLog {
       // (+ the joined frame of just those, kept for the CDF record below)
       val hitRead =
         if (matched.isEmpty && notMatchedBySource.isEmpty) None
-        else cowRead(spark, table, adds0, dv0, pruned = false)(
+        else cowRead(spark, st, pruned = false)(
           _.alias("t").join(srcAliased, onCond, "left_outer").filter(anyChange))
       val affected = hitRead.map(_._1).getOrElse(Nil)
       val joinedOpt = hitRead.map { case (_, scanAff) =>
@@ -3366,7 +3315,7 @@ object TxLog {
         // firing update clause, deletes per firing delete clause, plus
         // this commit's insert rows
         val w = joinedOpt.map { joined =>
-          stageChange(spark, table, stagedFrame) {
+          stageChange(spark, st, stagedFrame) {
             val allGcs = mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)
             val tCols = declared.fields.map(f =>
               tBase(f).cast(f.dataType).as(f.name)).toIndexedSeq
@@ -3385,8 +3334,8 @@ object TxLog {
               regen(i).withColumn(ChangeTypeCol, lit("insert"))))
               .reduce(_ unionByName _)
           }
-        }.getOrElse(stage(spark, table, stagedFrame, None, partColsOf(table)))
-        val idActs = identityWmActions(spark, table, w.adds, idBases.toMap,
+        }.getOrElse(stage(spark, st, stagedFrame, None, st.partCols))
+        val idActs = identityWmActions(spark, st, w.adds, idBases.toMap,
           idSuppliedCols, wmSnap)
         val acts = affected.map(Action("remove", _)) ++
           ((w.all ++ decl ++ idActs) :+ tsAction(commitTs, "MERGE"))
@@ -3398,13 +3347,12 @@ object TxLog {
         // be subject to BY SOURCE clauses, so with any BY SOURCE clause
         // every new file rebases, otherwise only key-carrying ones
         Some { base =>
-          val state = replayState(table, Some(base))
           if (cs.changedAt(base)) Rebase
-          else if (watermarkMoved(table, base, wmSnap, watched) ||
-              filesMoved(affected, dv0, state) ||
+          else if (watermarkMoved(base, wmSnap, watched) ||
+              filesMoved(affected, dv0, base) ||
               (notMatchedBySource.nonEmpty &&
-                state._1.exists(a => !read0Set(a.path))) ||
-              keysLanded(spark, table, state, read0Set, keys, keyCols)) Rebase
+                base.paths.exists(p => !read0Set(p))) ||
+              keysLanded(spark, base, read0Set, keys, keyCols)) Rebase
           else Claim(acts)
         }
       }
@@ -3458,15 +3406,15 @@ object TxLog {
     require(zorderBy.isEmpty || zorderBy.size == 2,
       "ZORDER BY interleaves exactly two numeric columns (the Morton " +
         "spread is 2-way; N-way needs a different bit stride)")
-    commitLoop(table) {
-      val (all0, dvAll0) = replayState(table, None)
+    commitLoop(state(table)) { st =>
+      val (all0, dvAll0) = (st.adds, st.dvs)
       // OPTIMIZE … WHERE (partition-scoped compaction): rewrite ONLY the
       // files of the named partitions — at 100 TB, compacting today's
       // ingest must not read yesterday's table. Exact by the
       // single-valued-file invariant; non-partition predicates refused.
       val adds0 =
         if (all0.isEmpty) all0
-        else where.fold(all0)(c => regionFiles(spark, table, c, all0))
+        else where.fold(all0)(c => regionFiles(spark, st, c, all0))
       // empty table, or nothing in the named region
       if (adds0.isEmpty) None
       else {
@@ -3481,7 +3429,7 @@ object TxLog {
         // merge-on-read deletes (the rewrite drops the rows; the
         // add-resets-DV replay rule clears the vectors) — the PURGE
         // semantics of the production formats.
-        val rows = applyDvs(spark, table, boundRead(spark, table, read0, None), dv0)
+        val rows = applyDvs(spark, table, boundRead(spark, st, read0), dv0)
         val compact =
           if (zorderBy.nonEmpty) {
             // 2-way Morton interleave of the low 16 bits of each key
@@ -3497,7 +3445,7 @@ object TxLog {
               .drop("_graft_z")
           }
           else if (sortBy.isEmpty) {
-            val partCols = partColsOf(table)
+            val partCols = st.partCols
             if (partCols.isEmpty) rows.coalesce(targetFiles)
             // partitioned: hash on the partition tuple, so each value
             // lands wholly in ONE task and the partitionBy writer emits
@@ -3520,16 +3468,15 @@ object TxLog {
         // false (Delta marks DV-materializing OPTIMIZE the same way).
         // OPTIMIZE's layout (INTO n FILES / per-partition compaction) IS
         // the caller's ask — the stage-side file sizing must not re-merge it
-        val adds = stage(spark, table, Some(compact), None, partColsOf(table),
+        val adds = stage(spark, st, Some(compact), None, st.partCols,
           sized = false).adds
           .map(_.copy(dataChange = false)) :+ tsAction(commitTs, "OPTIMIZE")
         val acts = read0.map(Action("remove", _, None, dataChange = false)) ++ adds
         // a racer removing a read file OR landing a DV on one both
         // invalidate the compacted content (the rewrite would resurrect
         // the racer's deleted rows) — rebase on either
-        Some((base: Long) =>
-          if (filesMoved(read0, dv0, replayState(table, Some(base)))) Rebase
-          else Claim(acts))
+        Some((base: TableState) =>
+          if (filesMoved(read0, dv0, base)) Rebase else Claim(acts))
       }
     }
   }
@@ -3555,13 +3502,14 @@ object TxLog {
   def vacuum(table: String, retainVersions: Int = 2,
              minAgeMillis: Long = 20L * 60 * 1000,
              dryRun: Boolean = false): Seq[String] = {
-    val vs = versions(table)
+    val st = state(table)
+    val vs = st.versions
     if (vs.isEmpty) return Seq.empty
     val retained = vs.takeRight(math.max(1, retainVersions))
-    val states = retained.map(v => replayState(table, Some(v)))
-    val keep = states.flatMap(_._1.map(_.path)).toSet
+    val states = retained.map(st.at)
+    val keep = states.flatMap(_.paths).toSet
     // DV sidecars referenced by any retained snapshot must survive too
-    val keepDv = states.flatMap(_._2.values.map(_._1)).toSet
+    val keepDv = states.flatMap(_.dvs.values.map(_._1)).toSet
     val dataRoot = Paths.get(table, "data")
     if (!Files.isDirectory(dataRoot)) return Seq.empty
     val cutoff = System.currentTimeMillis() - math.max(0L, minAgeMillis)
@@ -3697,9 +3645,10 @@ object TxLog {
     * r14 #2). */
   def restore(table: String, toVersion: Long,
               commitTs: Option[Long] = None): Option[Long] = {
-    require(versions(table).contains(toVersion),
+    val target = state(table, Some(toVersion))
+    require(target.versions.contains(toVersion),
       s"cannot RESTORE $table to version $toVersion: not a committed version")
-    val (addsT, dvT) = replayState(table, Some(toVersion))
+    val (addsT, dvT) = (target.adds, target.dvs)
     val statsT = addsT.map(a => a.path -> a.stats).toMap
     // unrestorable-target check once up front (disk state, not log state)
     val missingData = addsT.map(_.path)
@@ -3710,17 +3659,17 @@ object TxLog {
       s"cannot RESTORE $table to version $toVersion: " +
         s"${(missingData ++ missingDv).size} referenced files were vacuumed " +
         s"(first: ${(missingData ++ missingDv).headOption.getOrElse("")})")
-    val targetSchema = schemaOf(table, Some(toVersion))
-    val targetCs = constraintsOf(table, Some(toVersion))
-    commitLoop(table)(Some { base =>
-      if (renameMap(table, Some(toVersion)) != renameMap(table, Some(base)))
+    val targetSchema = target.schema
+    val targetCs = target.constraints
+    commitLoop(state(table))(_ => Some { base =>
+      if (target.renames != base.renames)
         throw new UnsupportedOperationException(
           s"RESTORE $table to $toVersion crosses a column RENAME — " +
             "rename back first (restoring mapping state is not supported)")
       // a type widening between target and base means files may already
       // carry the WIDE physical type; re-declaring the narrow type over
       // them would mis-decode — refuse (the rename-gate discipline)
-      for (t <- schemaOf(table, Some(toVersion)); b <- schemaOf(table, Some(base))) {
+      for (t <- targetSchema; b <- base.schema) {
         val bTypes = b.fields.map(f => f.name -> f.dataType).toMap
         val changed = t.fields.filter(f =>
           bTypes.get(f.name).exists(_ != f.dataType)).map(_.name)
@@ -3729,7 +3678,7 @@ object TxLog {
             s"(${changed.mkString(", ")}) — files written after the " +
             "widening would mis-decode under the narrow declaration")
       }
-      val (addsB, dvB) = replayState(table, Some(base))
+      val (addsB, dvB) = (base.adds, base.dvs)
       val liveT = statsT.keySet
       val liveB = addsB.map(_.path).toSet
       val removes = addsB.map(_.path).filterNot(liveT)
@@ -3744,17 +3693,15 @@ object TxLog {
         }
       }
       val schemaFix =
-        if (targetSchema.isDefined && targetSchema != schemaOf(table, Some(base)))
+        if (targetSchema.isDefined && targetSchema != base.schema)
           targetSchema.map(schemaAction).toSeq
         else Seq.empty
-      val csB = constraintsOf(table, Some(base))
+      val csB = base.constraints
       val csFixes =
         csB.keysIterator.filterNot(targetCs.contains)
           .map(Action("unconstraint", _)).toSeq ++
         targetCs.collect { case (n, sql) if csB.get(n) != Some(sql) =>
-          Action("constraint", n,
-            Some(java.util.Base64.getEncoder.encodeToString(
-              sql.getBytes(StandardCharsets.UTF_8))))
+          Action("constraint", n, Some(b64(sql)))
         }
       val diff = removes ++ readds ++ dvFixes ++ schemaFix ++ csFixes
       // CDF record (round-15, ADVICE r14 #2): re-surfaced rows ARE new
@@ -3767,7 +3714,7 @@ object TxLog {
       // zero-data-I/O guarantee for exactly this verb, the property's
       // documented price.
       lazy val cdc =
-        if (!cdfEnabled(table) ||
+        if (!base.cdfEnabled ||
             (removes.isEmpty && readds.isEmpty && dvFixes.isEmpty)) Nil
         else {
           val s = SparkSession.getActiveSession
@@ -3781,13 +3728,13 @@ object TxLog {
           val dels =
             if (delPaths.isEmpty) None
             else Some(applyDvs(s, table,
-              boundRead(s, table, delPaths, Some(base)),
+              boundRead(s, base, delPaths),
               dvB.filter { case (f, _) => delPaths.contains(f) })
               .withColumn(ChangeTypeCol, lit("delete")))
           val ins =
             if (insPaths.isEmpty) None
             else Some(applyDvs(s, table,
-              boundRead(s, table, insPaths, Some(toVersion)),
+              boundRead(s, target, insPaths),
               dvT.filter { case (f, _) => insPaths.contains(f) })
               .withColumn(ChangeTypeCol, lit("insert")))
           val frame = (dels, ins) match {
@@ -3798,7 +3745,7 @@ object TxLog {
             case _ => throw new IllegalStateException(
               "unreachable: content diff with no changed files")
           }
-          stageChange(s, table, None)(frame).cdc
+          stageChange(s, base, None)(frame).cdc
         }
       if (diff.isEmpty) Skip
       else Claim((diff ++ cdc) :+ tsAction(commitTs, "RESTORE"))
@@ -3830,7 +3777,8 @@ object TxLog {
                  commitTs: Option[Long] = None): Long = {
     require(versions(dst).isEmpty,
       s"CLONE target $dst already exists (${versions(dst).size} versions)")
-    val (adds, dvs) = replayState(src, asOf)
+    val st = state(src, asOf)
+    val (adds, dvs) = (st.adds, st.dvs)
     require(adds.nonEmpty, s"empty snapshot for $src asOf=$asOf")
     def linkOver(rel: String): Unit = {
       val from = Paths.get(src, rel)
@@ -3847,19 +3795,13 @@ object TxLog {
     // the rename CHAIN is copied verbatim, in commit order — replaying
     // it reproduces the logical→physical map exactly (a flattened form
     // can mis-chain when renames swap names through each other)
-    val hi = asOf.getOrElse(Long.MaxValue)
-    val renames = versions(src).filter(_ <= hi).flatMap(v =>
-      readActions(src, v).filter(_.op == "rename"))
-    val proto = protocolOf(src, asOf)
+    val proto = st.protocol
     val protoActs =
       if (proto.isEmpty) Seq.empty
       else Seq(Action("protocol", proto.toSeq.sorted.mkString(",")))
-    val meta = protoActs ++ renames ++
-      schemaOf(src, asOf).map(schemaAction).toSeq ++
-      constraintsOf(src, asOf).toSeq.sortBy(_._1).map { case (n, sql) =>
-        Action("constraint", n,
-          Some(java.util.Base64.getEncoder.encodeToString(
-            sql.getBytes(StandardCharsets.UTF_8))))
+    val meta = protoActs ++ st.renameChain ++ st.schema.map(schemaAction).toSeq ++
+      st.constraints.toSeq.sortBy(_._1).map { case (n, sql) =>
+        Action("constraint", n, Some(b64(sql)))
       }
     val dvActs = dvs.toSeq.sortBy(_._1).map { case (p, (sc, n)) =>
       Action("dv", p, Some(s"$sc:$n"))
@@ -3892,15 +3834,16 @@ object TxLog {
   def changes(spark: SparkSession, table: String, fromV: Long,
               toV: Option[Long] = None,
               skipChangeCommits: Boolean = false): DataFrame = {
-    val hi = toV.getOrElse(versions(table).lastOption.getOrElse(0L))
+    val st = state(table, toV)
+    val hi = st.version
     val added = cdcAddedBetween(table, fromV, hi, skipChangeCommits)
     if (added.isEmpty) {
-      val s = schemaOf(table, Some(hi)).getOrElse(
+      val s = st.schema.getOrElse(
         throw new IllegalArgumentException(
           s"no adds in ($fromV, $hi] for $table and no declared schema " +
             "to shape an empty increment"))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else boundRead(spark, table, added, Some(hi))
+    } else boundRead(spark, st, added)
   }
 
   /** Relative paths of the files a CDC consumer must deliver for
@@ -3928,15 +3871,6 @@ object TxLog {
       else acts.collect { case Action("add", p, _, true, _) => p }
     }
 
-  /** Pre-round-13 name for the raw add listing (every add in the range,
-    * change commits and compactions included) — still what log-replay
-    * tooling wants; CDC consumers use [[cdcAddedBetween]]. */
-  def addedBetween(table: String, fromV: Long, toV: Long): Seq[String] =
-    versions(table).filter(v => v > fromV && v <= toV)
-      .flatMap(v => readActions(table, v).collect {
-        case Action("add", p, _, _, _) => p
-      })
-
   // -------------------------------------- change data feed (CDF)
 
   /** CDF enablement — the Delta `enableChangeDataFeed` table-property
@@ -3947,8 +3881,6 @@ object TxLog {
     * record derives from the data files — see [[changeFeed]]), so the
     * property's cost lands only on row-level DML. */
   val CdfProperty = "graft.changeDataFeed"
-  private def cdfEnabled(table: String, asOf: Option[Long] = None): Boolean =
-    propertiesOf(table, asOf).get(CdfProperty).contains("true")
 
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -3965,13 +3897,13 @@ object TxLog {
     * meaningful only if the commit publishes — losing CAS rounds orphan
     * theirs, and [[vacuum]] sweeps unreferenced cdc files past the age
     * guard. */
-  private def stageChange(spark: SparkSession, table: String,
+  private def stageChange(spark: SparkSession, st: TableState,
                           rows: Option[DataFrame])(
       changes: => DataFrame): StagedFiles = {
-    val cdc = if (cdfEnabled(table)) Some(changes) else None
-    val w = stage(spark, table, rows, cdc, partColsOf(table))
+    val cdc = if (st.cdfEnabled) Some(changes) else None
+    val w = stage(spark, st, rows, cdc, st.partCols)
     if (cdc.isEmpty) w
-    else w.copy(cdc = w.cdc ++ protocolAction(table, "change-data-feed"))
+    else w.copy(cdc = w.cdc ++ protocolAction(st, "change-data-feed"))
   }
 
   /** STREAMING CDF plan for `(fromV, toV]`: per version, the files a
@@ -4006,7 +3938,7 @@ object TxLog {
         // the two failure shapes are different user errors and get
         // different messages (round-15, ADVICE r14 #2): property off =
         // fix the table; property ON but no record = history predates it
-        else if (cdfEnabled(table, Some(v))) throw new IllegalStateException(
+        else if (state(table, Some(v)).cdfEnabled) throw new IllegalStateException(
           s"version $v of $table is a change commit without a CDC record " +
             s"even though $CdfProperty=true — it was written before the " +
             "property was set (or by a writer without row-level capture); " +
@@ -4057,8 +3989,9 @@ object TxLog {
     * only as far as [[vacuum]] retention, like time travel. */
   def changeFeed(spark: SparkSession, table: String, fromV: Long,
                  toV: Option[Long] = None): DataFrame = {
-    val hi = toV.getOrElse(versions(table).lastOption.getOrElse(0L))
-    val declared = schemaOf(table, Some(hi)).getOrElse(
+    val st = state(table, toV)
+    val hi = st.version
+    val declared = st.schema.getOrElse(
       throw new IllegalArgumentException(
         s"$table has no declared schema — CDF needs one"))
     def shape(df: DataFrame, ct: Option[String], v: Long): DataFrame = {
@@ -4074,8 +4007,9 @@ object TxLog {
         tsCol): _*)
     }
     val frames: Seq[DataFrame] =
-      versions(table).filter(v => v > fromV && v <= hi).flatMap { v =>
+      st.versions.filter(v => v > fromV && v <= hi).flatMap { v =>
         val acts = readActions(table, v)
+        val (at, prev) = (st.at(v), st.at(v - 1))
         val cdcActs = acts.collect { case a @ Action("cdc", _, _, _, _) => a }
         if (cdcActs.nonEmpty) {
           // stats-pruned, schema-bound sidecar scan (round-16, VERDICT
@@ -4086,7 +4020,7 @@ object TxLog {
           // columns declared after v null-fill in shape()
           val entries = cdcActs.map(a =>
             (absPath(table, a.path), a.stats.flatMap(TxStats.decode)))
-          val df = schemaOf(table, Some(v)) match {
+          val df = at.schema match {
             case Some(s) => StatsFileIndex.scan(spark, entries,
               org.apache.spark.sql.types.StructType(s.fields :+
                 org.apache.spark.sql.types.StructField(ChangeTypeCol,
@@ -4102,15 +4036,14 @@ object TxLog {
             p -> parseDvToken(st) }
           val ins =
             if (addActs.isEmpty) Nil
-            else Seq(shape(prunedBoundRead(spark, table, addActs, Some(v)),
+            else Seq(shape(prunedBoundRead(spark, at, addActs),
               Some("insert"), v))
           val dels =
             if (removes.isEmpty) Nil
             else {
-              val priorDvs = dvsAt(table, Some(v - 1))
-                .filter { case (f, _) => removes.contains(f) }
+              val priorDvs = prev.dvs.filter { case (f, _) => removes.contains(f) }
               Seq(shape(applyDvs(spark, table,
-                boundRead(spark, table, removes, Some(v - 1)), priorDvs),
+                boundRead(spark, prev, removes), priorDvs),
                 Some("delete"), v))
             }
           // positions newly dead at v: fresh sidecars MINUS each file's
@@ -4125,8 +4058,7 @@ object TxLog {
             if (dvNew.isEmpty) Nil
             else {
               val freshMap = dvNew.toMap
-              val priorMap = dvsAt(table, Some(v - 1))
-                .filter { case (f, _) => freshMap.contains(f) }
+              val priorMap = prev.dvs.filter { case (f, _) => freshMap.contains(f) }
               // past the threshold the hints are load-bearing, exactly as
               // in applyDvs: an unhinted join would size-estimate the
               // flatMap'd position frames back into driver broadcasts
@@ -4142,7 +4074,7 @@ object TxLog {
                 if (small) org.apache.spark.sql.functions.broadcast(delta)
                 else hinted(delta)
               Seq(shape(withDvKey(
-                boundRead(spark, table, freshMap.keys.toSeq, Some(v - 1)))
+                boundRead(spark, prev, freshMap.keys.toSeq))
                 .join(right, Seq("_graft_key", "_graft_pos"), "left_semi")
                 .drop("_graft_key", "_graft_pos"),
                 Some("delete"), v))
@@ -4179,10 +4111,9 @@ object TxLog {
     * job-count probe showed every CoW verb on a ≥3-append fixture paying
     * two such jobs per call to re-discover files the commit log already
     * names. Driver-side Files.size over the known list replaces them. */
-  private def boundRead(spark: SparkSession, table: String,
-                        files: Seq[String],
-                        asOf: Option[Long]): DataFrame =
-    boundScan(spark, table, files.map(f => (absPath(table, f), None)), asOf)
+  private def boundRead(spark: SparkSession, st: TableState,
+                        files: Seq[String]): DataFrame =
+    boundScan(spark, st, files.map(f => (absPath(st.table, f), None)))
 
   /** [[boundRead]] with planning-time file skipping (round-16, VERDICT
     * r15 #3): the entries carry the commit log's per-file stats (footer
@@ -4191,21 +4122,20 @@ object TxLog {
     * the CDF read path's insert scans skip like the main table does.
     * Conservative like every stats path: stats-less files are never
     * skipped. */
-  private def prunedBoundRead(spark: SparkSession, table: String,
-                              adds: Seq[Action],
-                              asOf: Option[Long]): DataFrame = {
-    val resolve = statsResolver(table, asOf)
-    boundScan(spark, table, adds.map(a => (absPath(table, a.path), resolve(a))), asOf)
+  private def prunedBoundRead(spark: SparkSession, st: TableState,
+                              adds: Seq[Action]): DataFrame = {
+    val resolve = statsResolver(st)
+    boundScan(spark, st, adds.map(a => (absPath(st.table, a.path), resolve(a))))
   }
 
-  /** The one schema-bound scan over (absolute path, stats) entries. A
-    * pre-schema table binds the schema of its first file's footer, read
-    * on the driver (no listing or inference job), so it prunes too. */
-  private def boundScan(spark: SparkSession, table: String,
-                        entries: Seq[(String, Option[TxStats.FileStats])],
-                        asOf: Option[Long]): DataFrame = {
-    val m = renameMap(table, asOf)
-    schemaOf(table, asOf) match {
+  /** The one schema-bound scan over (absolute path, stats) entries, bound
+    * to the schema and column mapping of `st`. A pre-schema table binds
+    * the schema of its first file's footer, read on the driver (no
+    * listing or inference job), so it prunes too. */
+  private def boundScan(spark: SparkSession, st: TableState,
+                        entries: Seq[(String, Option[TxStats.FileStats])]): DataFrame = {
+    val m = st.renames
+    st.schema match {
       case Some(s) if m.nonEmpty =>
         // column mapping: files carry PHYSICAL names; bind the physical
         // schema at the scan, alias to logical above it — pushed filters
@@ -4218,7 +4148,7 @@ object TxLog {
             .map(ln => col(physicalOf(m, ln)).as(ln)): _*)
       case Some(s) => StatsFileIndex.scan(spark, entries, s)
       case None =>
-        require(entries.nonEmpty, s"no files to read in pre-schema table $table")
+        require(entries.nonEmpty, s"no files to read in pre-schema table ${st.table}")
         StatsFileIndex.scan(spark, entries, footerSchema(spark, entries.head._1))
     }
   }
@@ -4242,16 +4172,18 @@ object TxLog {
     * snapshot's deletion vectors applied (no-op for DV-free tables). An
     * empty snapshot (e.g. a fresh overwrite target) raises like an
     * empty parquet read would — callers check `versions` first. */
-  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
-    val (adds, dvs) = replayState(table, asOf)
-    require(adds.nonEmpty, s"empty snapshot for $table asOf=$asOf")
+  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame =
+    readState(spark, state(table, asOf))
+
+  private def readState(spark: SparkSession, st: TableState): DataFrame = {
+    require(st.adds.nonEmpty, s"empty snapshot for ${st.table} asOf=${st.asOf}")
     // the snapshot lists through [[StatsFileIndex]] (same bound-schema
     // semantics as boundRead — see [[prunedBoundRead]]), so WHATEVER
     // filters a query later pushes prune whole files at planning, on
     // DV-carrying, column-mapped and pre-schema tables alike. Data-column
     // predicates push below the DV anti-join into the scan, so the
     // skipping composes with merge-on-read deletes.
-    applyDvs(spark, table, prunedBoundRead(spark, table, adds, asOf), dvs)
+    applyDvs(spark, st.table, prunedBoundRead(spark, st, st.adds), st.dvs)
   }
 
   /** Metadata-only table profile: exact row count and per-column
@@ -4263,23 +4195,23 @@ object TxLog {
     * partial knowledge is refused, never guessed; callers fall back to
     * a scan. */
   def describe(table: String, asOf: Option[Long] = None): Option[TxStats.TableAgg] = {
-    val (adds, dvs) = replayState(table, asOf)
-    if (adds.isEmpty) return None
+    val st = state(table, asOf)
+    if (st.adds.isEmpty) return None
     // footer stats count DV-deleted rows and may bound deleted extrema:
     // partial knowledge is refused, never guessed (the method's contract)
-    if (dvs.nonEmpty) return None
-    val decoded = adds.map(_.stats.flatMap(TxStats.decode))
+    if (st.dvs.nonEmpty) return None
+    val decoded = st.adds.map(_.stats.flatMap(TxStats.decode))
     if (decoded.exists(_.isEmpty)) None
     else TxStats.aggregate(decoded.map(_.get)).map { agg =>
       // stats are keyed by physical names; surface the logical ones
-      val inv = renameMap(table, asOf).map(_.swap)
+      val inv = st.renames.map(_.swap)
       val mapped =
         if (inv.isEmpty) agg
         else agg.copy(cols = agg.cols.map { case (p, c) =>
           inv.getOrElse(p, p) -> c })
       // a DROPped column's stats (still in pre-drop files' tokens) must
       // not surface in the profile of a schema that no longer has it
-      schemaOf(table, asOf) match {
+      st.schema match {
         case Some(s) =>
           val live = s.fieldNames.toSet
           mapped.copy(cols = mapped.cols.filter { case (n, _) => live(n) })
@@ -4302,12 +4234,15 @@ object TxLog {
     * and a bloom step may then skip more. Driver-side metadata work
     * only — O(files), no data I/O. */
   def prune(spark: SparkSession, table: String, cond: Column,
-            asOf: Option[Long] = None): Pruned = {
+            asOf: Option[Long] = None): Pruned =
+    prune(spark, state(table, asOf), cond)
+
+  private def prune(spark: SparkSession, st: TableState, cond: Column): Pruned = {
     import org.apache.spark.sql.catalyst.expressions.And
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
-    val adds = snapshotAdds(table, asOf)
-    require(adds.nonEmpty, s"empty snapshot for $table asOf=$asOf")
-    val base = boundRead(spark, table, adds.map(_.path), asOf)
+    val adds = st.adds
+    require(adds.nonEmpty, s"empty snapshot for ${st.table} asOf=${st.asOf}")
+    val base = boundRead(spark, st, adds.map(_.path))
     val optimized = base.filter(cond).queryExecution.optimizedPlan
     if (optimized.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
       return Pruned(Seq.empty, adds) // predicate folded to false: scan elided
@@ -4315,7 +4250,7 @@ object TxLog {
     if (conds.isEmpty) return Pruned(adds, Seq.empty) // folded to true
     // stats tokens and blooms are keyed by PHYSICAL column names —
     // re-anchor the resolved predicate's attributes before consulting them
-    val rm = renameMap(table, asOf)
+    val rm = st.renames
     val pred = {
       val logical = conds.reduce(And)
       if (rm.isEmpty) logical
@@ -4327,13 +4262,13 @@ object TxLog {
     // footer stats merged with partition point-stats (exact by the
     // single-valued-file invariant) — partition predicates prune even
     // on files whose footer harvest failed
-    val resolve = statsResolver(table, asOf)
+    val resolve = statsResolver(st)
     val (kept, skipped) = adds.partition(a => TxStats.mayMatch(pred, resolve(a)))
     // bloom step: equality conjuncts on declared bloom columns probe the
     // STATS-SURVIVING files' embedded blooms (bounded driver metadata
     // I/O, after range pruning already shrank the candidate set). Only a
     // provable miss in every row group skips; anything else keeps.
-    val bloomCols = bloomColsOf(table, asOf)
+    val bloomCols = st.bloomCols
     val probes =
       if (bloomCols.isEmpty) Seq.empty
       else {
@@ -4354,7 +4289,7 @@ object TxLog {
       val conf = spark.sessionState.newHadoopConf()
       val (keptB, skippedB) = kept.partition { a =>
         !probes.exists { case (c, v) =>
-          TxStats.bloomExcludes(conf, absPath(table, a.path), c, v) }
+          TxStats.bloomExcludes(conf, absPath(st.table, a.path), c, v) }
       }
       Pruned(keptB, skipped ++ skippedB)
     }
@@ -4369,18 +4304,18 @@ object TxLog {
     * change results. */
   def readWhere(spark: SparkSession, table: String, cond: Column,
                 asOf: Option[Long] = None): DataFrame = {
-    val pr = prune(spark, table, cond, asOf)
+    val st = state(table, asOf)
+    val pr = prune(spark, st, cond)
     if (pr.kept.isEmpty) {
       // provably no matching row anywhere: empty frame, table schema
-      val all = snapshotAdds(table, asOf).map(_.path)
-      boundRead(spark, table, all, asOf).filter(lit(false))
+      boundRead(spark, st, st.paths).filter(lit(false))
     } else {
       // footer stats predate DVs, so pruning stays conservative: a kept
       // file whose matching rows were all DV-deleted just filters empty
       val keptSet = pr.kept.map(_.path).toSet
-      val dvs = dvsAt(table, asOf).filter { case (f, _) => keptSet(f) }
+      val dvs = st.dvs.filter { case (f, _) => keptSet(f) }
       applyDvs(spark, table,
-        boundRead(spark, table, pr.kept.map(_.path), asOf),
+        boundRead(spark, st, pr.kept.map(_.path)),
         dvs).filter(cond)
     }
   }

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graft.ListenerBus
 
 import graft.etl.StatsFileIndex
 
@@ -33,7 +34,7 @@ object Scans {
           n.add(t.taskMetrics.inputMetrics.recordsRead)
     }
     spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) } // let the listener bus drain
+    try { body; ListenerBus.drain(spark) }
     finally spark.sparkContext.removeSparkListener(l)
     n.sum()
   }

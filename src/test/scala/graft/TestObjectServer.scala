@@ -11,9 +11,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * <key>` lines, and — round 14, the [[graft.etl.HttpCommitStore]]
   * contract — CONDITIONAL PUT: `If-None-Match: *` answered 412 when the
   * key already exists (putIfAbsent on the backing map, the atomicity S3
-  * itself offers publicly). Bucket-agnostic: keys embed the bucket. */
+  * itself offers publicly). Bucket-agnostic: keys embed the bucket.
+  * `lists` counts the LIST requests served, the round trips a log
+  * listing costs on a real object store. */
 final class TestObjectServer {
   val store = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
+  val lists = new java.util.concurrent.atomic.AtomicLong()
   private var server: HttpServer = _
   var endpoint: String = _
 
@@ -23,6 +26,7 @@ final class TestObjectServer {
     try {
       (ex.getRequestMethod, query) match {
         case ("GET", q) if q.startsWith("list=") =>
+          lists.incrementAndGet()
           val prefix = java.net.URLDecoder.decode(q.stripPrefix("list="), "UTF-8")
           val body = store.entrySet().stream().toArray.toSeq
             .map(_.asInstanceOf[java.util.Map.Entry[String, Array[Byte]]])

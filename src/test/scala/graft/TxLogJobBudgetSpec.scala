@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBus
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,14 +43,14 @@ class TxLogJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = spark.stop()
 
-  /** Jobs started while `body` runs. The listener bus is asynchronous: a
-    * drain sleep before the reset and after the body keeps earlier
+  /** Jobs started while `body` runs. The listener bus is asynchronous:
+    * draining it before the reset and after the body keeps earlier
     * events out and trailing ones in. */
   private def jobsOf(body: => Any): Seq[String] = {
-    Thread.sleep(500)
+    ListenerBus.drain(spark)
     jobs.clear()
     body
-    Thread.sleep(500)
+    ListenerBus.drain(spark)
     jobs.asScala.toSeq
   }
 
