@@ -14,12 +14,37 @@ import org.apache.spark.sql.SparkSession
   *   - nested-schema pruning (the reference projects 4-deep JSON paths;
   *     pruning keeps the parquet/JSON scan narrow),
   *   - shuffle partitions sized for the local harness via `SPARK_GRAFT_CPUS`
-  *     (a real deployment would size this to ~2-3x total executor cores).
+  *     (a real deployment would size this to ~2-3x total executor cores),
+  *   - a generated-class cache that holds the engine's working set
+  *     ([[CodegenCacheEntries]]), so repeated work compiles nothing.
   */
 object GraftSession {
 
   def defaultParallelism: Int =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Capacity of Spark's generated-class cache (`CodeGenerator`'s,
+    * `spark.sql.codegen.cache.maxEntries`, 100 by default in Spark 4.1).
+    * A medallion round (one day through bronze, silver, gold and the
+    * catalog, then two passes of seven catalog queries) touches about 100
+    * distinct classes, so at the default the day and the queries evict
+    * each other: every round compiled again 29-38 classes for the day
+    * and 36-44 for the first catalog pass, 1.4-2.0 s of compile per round
+    * of a 7.8 s round (traced medallion_etl, seed 7, 4 vCPUs). Measured
+    * with the cap out of the way, one whole benchmark run (set-up,
+    * warm-up and every round) compiles 74 distinct classes on floor_mix,
+    * 126 on medallion_etl and 193 on txlog_dml, whose verbs add a few
+    * classes per call for their literals. 1000 is five times the largest
+    * of these: Guava splits the capacity across segments and may evict
+    * from a full segment before the whole cache is full. At 8-11 KB of
+    * source per class on average, a full cache holds tens of MB.
+    *
+    * The cache is ONE per JVM, sized from the session conf on the first
+    * codegen in the JVM; the entry is a static conf, so it takes effect
+    * only through the SparkConf that [[tune]] builds. A session created
+    * without [[tune]] that runs a query first fixes the size (Spark's
+    * default) for the whole JVM, whatever later sessions set. */
+  private val CodegenCacheEntries = 1000
 
   /** Apply engine defaults onto an arbitrary builder (so Verify/Bench can
     * keep their own master/memory settings). */
@@ -49,6 +74,12 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the cache is keyed by the generated source; with the stage id in
+      // the class name, an unchanged pipeline whose AQE stage number
+      // shifts (AQE numbers stages in the order concurrent stages finish)
+      // compiles again under its new name
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Aggressive ContextCleaner cadence for LONG-RUNNING multi-query
     * sessions (Verify's 270+-query dump; any app looping queries for

@@ -9,7 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference globs each `*.parquet` under `gold/` subdirs; Spark
   * reads the directory natively (all part-files, partition discovery), so
-  * discovery is just `listStatus` on the gold root.
+  * discovery is just `listStatus` on the gold root. Each view binds its
+  * schema from one footer ([[ParquetDir.read]]), so registering runs no
+  * Spark job.
   */
 object GoldCatalog {
 
@@ -29,7 +31,7 @@ object GoldCatalog {
   def register(spark: SparkSession, goldDir: String): Seq[String] = {
     val tables = discover(spark, goldDir)
     tables.foreach { t =>
-      spark.read.parquet(s"$goldDir/$t").createOrReplaceTempView(t)
+      ParquetDir.read(spark, s"$goldDir/$t").createOrReplaceTempView(t)
     }
     tables
   }

@@ -29,6 +29,6 @@ object Pipeline {
     BronzeToSilver.write(silverDf, layout.silver)
     val gold = SilverToGold.run(spark, layout.silver, layout.gold, processingDate)
     val tables = GoldCatalog.register(spark, layout.gold)
-    Result(spark.read.parquet(layout.silver), gold, tables)
+    Result(ParquetDir.read(spark, layout.silver), gold, tables)
   }
 }

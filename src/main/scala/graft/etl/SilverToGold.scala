@@ -145,7 +145,7 @@ object SilverToGold {
     * it to match the reference's path-spliced read, SURVEY §2.1 S6). */
   def readSilverPartition(spark: SparkSession, silverDir: String,
                           processingDate: String): DataFrame =
-    spark.read.parquet(silverDir)
+    ParquetDir.read(spark, silverDir)
       .filter(col("_processing_date") === lit(processingDate))
       .drop("_processing_date")
 

@@ -1381,20 +1381,33 @@ object TxLog {
         new java.util.ArrayList[org.apache.spark.sql.Row](), others)
       val resolved = probe.select(expr(sqlExpr)).schema.head.dataType
       val declaredType = declared(declared.fieldIndex(name)).dataType
-      // value-preserving upcasts wrap automatically (the setColumnDefault
-      // rule — `id * 2` on a BIGINT column where the literal math resolves
-      // narrower); lossy mismatches still refuse
-      val stored =
-        if (resolved == declaredType) sqlExpr
-        else if (org.apache.spark.sql.catalyst.expressions.Cast
-            .canUpCast(resolved, declaredType))
-          s"CAST(($sqlExpr) AS ${declaredType.sql})"
-        else throw new IllegalArgumentException(
-          s"generation expression for $name yields $resolved but the column " +
-            s"is declared $declaredType — cast inside the expression")
+      // the setColumnDefault rule: `id * 2` on a BIGINT column where the
+      // literal math resolves narrower wraps in a cast
+      val stored = assignedExpr(sqlExpr, resolved, declaredType,
+        s"generation expression for $name yields $resolved but the column " +
+          s"is declared $declaredType — cast inside the expression")
       Claim(Seq(Action("gencol", name, Some(b64(stored))),
         tsAction(commitTs, "ADD GENERATED COLUMN")))
     }).get
+  }
+
+  /** The expression a DEFAULT or generated column stores for a column
+    * declared `to` when `sqlExpr` resolves to `from`: as written when the
+    * types match, wrapped in a CAST when SQL store assignment loses no
+    * information — a value-preserving upcast, or a DECIMAL on an
+    * approximate (DOUBLE/FLOAT) column, which Spark's own INSERT assigns —
+    * and refused with `refusal` otherwise (`1.5` on INT, a string on INT). */
+  private def assignedExpr(sqlExpr: String,
+                           from: org.apache.spark.sql.types.DataType,
+                           to: org.apache.spark.sql.types.DataType,
+                           refusal: => String): String = {
+    import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
+    val exactToApproximate = from.isInstanceOf[DecimalType] &&
+      (to == DoubleType || to == FloatType)
+    if (from == to) sqlExpr
+    else if (org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, to) ||
+        exactToApproximate) s"CAST(($sqlExpr) AS ${to.sql})"
+    else throw new IllegalArgumentException(refusal)
   }
 
   /** Apply the table's generated columns to an incoming frame:
@@ -1470,19 +1483,12 @@ object TxLog {
               s"references): ${e.getMessage}")
         }
       val declaredType = declared(declared.fieldIndex(name)).dataType
-      // a value-preserving upcast is wrapped automatically (DEFAULT 7 on
-      // a BIGINT column is the SQL-standard spelling — requiring the
-      // user to cast an integer literal would be pedantry); anything
-      // lossy is refused
-      val stored =
-        if (resolved == declaredType) sqlExpr
-        else if (org.apache.spark.sql.catalyst.expressions.Cast
-            .canUpCast(resolved, declaredType))
-          s"CAST(($sqlExpr) AS ${declaredType.sql})"
-        else throw new IllegalArgumentException(
-          s"DEFAULT for $name yields ${resolved.simpleString} but the " +
-            s"column is declared ${declaredType.simpleString} — cast " +
-            "inside the expression")
+      // DEFAULT 7 on a BIGINT column is the SQL-standard spelling —
+      // requiring the user to cast an integer literal would be pedantry
+      val stored = assignedExpr(sqlExpr, resolved, declaredType,
+        s"DEFAULT for $name yields ${resolved.simpleString} but the " +
+          s"column is declared ${declaredType.simpleString} — cast " +
+          "inside the expression")
       Claim(Seq(Action("default", name, Some(b64(stored))),
         tsAction(commitTs, "SET DEFAULT")))
     }).get
@@ -4149,23 +4155,8 @@ object TxLog {
       case Some(s) => StatsFileIndex.scan(spark, entries, s)
       case None =>
         require(entries.nonEmpty, s"no files to read in pre-schema table ${st.table}")
-        StatsFileIndex.scan(spark, entries, footerSchema(spark, entries.head._1))
+        StatsFileIndex.scan(spark, entries, ParquetDir.footerSchema(spark, entries.head._1))
     }
-  }
-
-  /** One parquet file's Spark schema from its footer alone — what
-    * parquet schema inference yields for that file, without its job. */
-  private def footerSchema(spark: SparkSession, file: String)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-    val path = new org.apache.hadoop.fs.Path(file)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path,
-        spark.sessionState.newHadoopConf()))
-    try ParquetFileFormat.readSchemaFromFooter(
-      new org.apache.parquet.hadoop.Footer(path, reader.getFooter),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    finally reader.close()
   }
 
   /** Snapshot read, optionally AS OF a historical version, with the

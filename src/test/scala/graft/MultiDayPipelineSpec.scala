@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -79,5 +83,44 @@ class MultiDayPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dates.count() == dates.select("date_id").distinct().count())
     // fact keeps appending (3 batches: 3 + 5 + 5 rows)
     assert(spark.read.parquet(s"${layout.gold}/fact_asteroid_approach").count() == 13)
+  }
+
+  test("catalog and silver reads bind their schema with no inference job") {
+    val wh = Files.createTempDirectory("graft_wh4").toString
+    val layout = Pipeline.Layout(wh)
+    Pipeline.runFromBronze(spark, fixture("feed_basic.json"), layout,
+      processingDate = "2026-08-14", batchId = 100L)
+    val day2 = Pipeline.runFromBronze(spark, fixture("feed_edge_cases.json"), layout,
+      processingDate = "2026-08-15", batchId = 200L)
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      ListenerBus.drain(spark)
+      jobs.set(0)
+      val out = body
+      ListenerBus.drain(spark)
+      (out, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (tables, registerJobs) = jobsOf(GoldCatalog.register(spark, layout.gold))
+      assert(registerJobs == 0)
+      val (part, partJobs) = jobsOf(
+        SilverToGold.readSilverPartition(spark, layout.silver, "2026-08-15"))
+      assert(partJobs == 0)
+      // the same columns, types and answers as Spark's own inference
+      tables.foreach { t =>
+        val inferred = spark.read.parquet(s"${layout.gold}/$t")
+        assert(spark.table(t).schema == inferred.schema, t)
+        assert(spark.table(t).collect().toSet == inferred.collect().toSet, t)
+      }
+      val silver = spark.read.parquet(layout.silver)
+      assert(day2.silver.schema == silver.schema)
+      assert(day2.silver.collect().toSet == silver.collect().toSet)
+      assert(part.schema == silver.drop("_processing_date").schema)
+      assert(part.count() == 5)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

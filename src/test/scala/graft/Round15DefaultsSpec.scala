@@ -74,6 +74,35 @@ class Round15DefaultsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(eGen.getMessage.contains("GENERATED"), eGen.getMessage)
   }
 
+  test("a decimal literal assigns to DOUBLE/FLOAT; lossy assignments still refuse") {
+    import spark.implicits._
+    val t = tmp()
+    TxLog.create(t, org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, d DOUBLE, f FLOAT, n INT, g DOUBLE"))
+    // exact -> approximate numeric: the SQL store assignment Spark's own
+    // INSERT makes, stored behind a cast
+    TxLog.setColumnDefault(spark, t, "d", "1.5")
+    TxLog.setColumnDefault(spark, t, "f", "2.25")
+    TxLog.addGeneratedColumn(spark, t, "g", "id * 0.5")
+    assert(TxLog.defaultsOf(t) == Map(
+      "d" -> "CAST((1.5) AS DOUBLE)", "f" -> "CAST((2.25) AS FLOAT)"))
+    assert(TxLog.generatedColsOf(t) == Map("g" -> "CAST((id * 0.5) AS DOUBLE)"))
+    // lossy or cross-family assignments keep refusing
+    for (lossy <- Seq("1.5", "'x'")) {
+      val e = intercept[IllegalArgumentException] {
+        TxLog.setColumnDefault(spark, t, "n", lossy)
+      }
+      assert(e.getMessage.contains("declared int"), e.getMessage)
+    }
+    val eGen = intercept[IllegalArgumentException] {
+      TxLog.addGeneratedColumn(spark, t, "n", "id * 0.5")
+    }
+    assert(eGen.getMessage.contains("declared IntegerType"), eGen.getMessage)
+    TxLog.append(spark, t, Seq((4L, 1)).toDF("id", "n").coalesce(1))
+    val r = TxLog.read(spark, t).select("d", "f", "g").head()
+    assert((r.getDouble(0), r.getFloat(1), r.getDouble(2)) == (1.5, 2.25f, 2.0))
+  }
+
   test("defaults fill through merge and mergeClauses inserts") {
     import spark.implicits._
     val t = tmp()
