@@ -27,6 +27,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rule: parallelize compute-heavy projections over small
     // relations (see ParallelizeExpensiveProjection scaladoc)
     ext.injectOptimizerRule(graft.plans.ParallelizeExpensiveProjection.apply)
+    // physical rule: caller literals become generated-class references, so
+    // a plan shape compiles once whatever its values (see BindLiterals)
+    graft.plans.BindLiterals.install(ext)
     // planner strategy: SQL DELETE / UPDATE / MERGE INTO against TxLog
     // tables (see TxLogSqlDml scaladoc; also installable per-session via
     // TxLogSqlDml.install)

@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   *   - shuffle partitions sized for the local harness via `SPARK_GRAFT_CPUS`
   *     (a real deployment would size this to ~2-3x total executor cores),
   *   - a generated-class cache that holds the engine's working set
-  *     ([[CodegenCacheEntries]]), so repeated work compiles nothing.
+  *     ([[CodegenCacheEntries]]), so repeated work compiles nothing,
+  *   - caller literals bound as generated-class references
+  *     ([[graft.plans.BindLiterals]]), so the same plan shape with new
+  *     values compiles nothing either.
   */
 object GraftSession {
 
@@ -33,9 +36,11 @@ object GraftSession {
     * of a 7.8 s round (traced medallion_etl, seed 7, 4 vCPUs). Measured
     * with the cap out of the way, one whole benchmark run (set-up,
     * warm-up and every round) compiles 74 distinct classes on floor_mix,
-    * 126 on medallion_etl and 193 on txlog_dml, whose verbs add a few
-    * classes per call for their literals. 1000 is five times the largest
-    * of these: Guava splits the capacity across segments and may evict
+    * 126 on medallion_etl and 193 on txlog_dml (measured before [[tune]]
+    * bound caller literals; a TxLog verb now compiles once per plan shape,
+    * and the per-call compiles left on txlog_dml are the benchmark's own
+    * `spark.range` sources, whose bounds `RangeExec` spells into the
+    * code). 1000 is five times the largest of these: Guava splits the capacity across segments and may evict
     * from a full segment before the whole cache is full. At 8-11 KB of
     * source per class on average, a full cache holds tens of MB.
     *
@@ -47,9 +52,13 @@ object GraftSession {
   private val CodegenCacheEntries = 1000
 
   /** Apply engine defaults onto an arbitrary builder (so Verify/Bench can
-    * keep their own master/memory settings). */
+    * keep their own master/memory settings). The literal-binding rule is
+    * added through the builder's extensions, so a `spark.sql.extensions`
+    * the caller set still applies; sessions made by `newSession()` share
+    * it. */
   def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    b.withExtensions(graft.plans.BindLiterals.install)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

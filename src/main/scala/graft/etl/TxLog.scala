@@ -2831,12 +2831,62 @@ object TxLog {
     // an identity MERGE KEY the source does not supply has nothing to
     // match on — refuse BEFORE the key-column analysis below would throw
     // an unhelpful unresolved-column error
-    val idDecls = st0.identity
-    idDecls.keys.filter(keyCols.contains).foreach { n =>
+    st0.identity.keys.filter(keyCols.contains).foreach { n =>
       require(source.columns.contains(n),
         s"merge on identity key column $n requires the source to supply it")
     }
-    requireUniqueKeys(source, keyCols, "row")
+    withSourceRows(source, keyCols, "row")(
+      mergeRows(spark, st0, _, keyCols, commitTs, mergeSchema))
+  }
+
+  /** Refuse a MERGE source with duplicate keys (which `winner` wins would
+    * be nondeterministic), then run `body` over the source's rows stored
+    * once: a merge reads its source in the file-finding scan, the staged
+    * write, the change record and the claim-time probe, and each of those
+    * plans would otherwise plan (and compile) the caller's frame again.
+    *
+    * A source the optimizer would broadcast (estimated under the broadcast
+    * threshold) is collected, in its own order, into a local relation, and
+    * the collecting query counts the rows per key, so the key check adds
+    * no job. A larger source is persisted as RDD blocks, released when
+    * `body` returns or throws. Small sources are not stored as blocks: the
+    * staged write's coalesce groups cached partitions by locality rather
+    * than in order, which writes more files per partition value. */
+  private def withSourceRows[T](source: DataFrame, keyCols: Seq[String], winner: String)(
+      body: DataFrame => T): T = {
+    val spark = source.sparkSession
+    val duplicates = s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
+      s"which $winner wins would be nondeterministic"
+    if (source.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold) {
+      val (order, perKey) = ("__graft_source_row", "__graft_key_rows")
+      val rows = source
+        .withColumn(order, org.apache.spark.sql.functions.monotonically_increasing_id())
+        .withColumn(perKey, org.apache.spark.sql.functions.count(lit(1))
+          .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)))
+        .collect()
+      require(rows.forall(_.getAs[Long](perKey) == 1L), duplicates)
+      body(spark.createDataFrame(rows.sortBy(_.getAs[Long](order))
+        .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(2))).toSeq.asJava,
+        source.schema))
+    } else {
+      val (rows, rdd) = org.apache.spark.sql.graft.GraftSqlBridge
+        .persistedRows(source, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // `isEmpty` fetches at most one row without the extra exchange a
+        // global `limit(1).count()` plans
+        require(rows.groupBy(keyCols.map(col): _*).count()
+          .filter(col("count") > 1).isEmpty, duplicates)
+        body(rows)
+      } finally rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** [[merge]] over its policy-applied, key-checked, stored source. */
+  private def mergeRows(spark: SparkSession, st0: TableState, source: DataFrame,
+                        keyCols: Seq[String], commitTs: Option[Long],
+                        mergeSchema: Boolean): Long = {
+    val idDecls = st0.identity
     // mergeSchema = MERGE WITH SCHEMA EVOLUTION (round 14): source-only
     // columns widen the declaration in the SAME commit (append's
     // evolution rule); survivors null-fill via the allowMissingColumns
@@ -2844,7 +2894,7 @@ object TxLog {
     val decl = enforceSchema(st0, source, mergeSchema)
     val cs = new Enforced(st0)
     cs.enforce(source)
-    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked above
+    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked on entry
     // ---- IDENTITY (round-16, ADVICE r15 #1): classify supply once.
     // identity columns must not be merge KEYS with an omitted source
     // column (there would be nothing to match on); explicit supply
@@ -3003,16 +3053,6 @@ object TxLog {
     }.get
   }
 
-  /** Refuse a MERGE source with duplicate keys — otherwise which `winner`
-    * wins is nondeterministic. `isEmpty` fetches at most one row without
-    * the extra exchange a global `limit(1).count()` plans. */
-  private def requireUniqueKeys(source: DataFrame, keyCols: Seq[String],
-                                winner: String): Unit =
-    require(source.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).isEmpty,
-      s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
-        s"which $winner wins would be nondeterministic")
-
   /** One WHEN clause of a general [[mergeClauses]] MERGE. `kind` is
     * "update" / "delete" (matched and not-matched-by-source lists) or
     * "insert" (not-matched list). `condition` and the assignment VALUES
@@ -3096,6 +3136,19 @@ object TxLog {
       s"WHEN NOT MATCHED BY SOURCE clause must be update/delete, got ${c.kind}"))
     require((matched ++ notMatched ++ notMatchedBySource).nonEmpty,
       "MERGE requires at least one WHEN clause")
+    withSourceRows(source, keyCols, "clause row")(mergeClauseRows(spark, table, _, keyCols,
+      matched, notMatched, notMatchedBySource, residual, mergeSchema, commitTs))
+  }
+
+  /** [[mergeClauses]] over its key-checked, stored source. */
+  private def mergeClauseRows(spark: SparkSession, table: String, source: DataFrame,
+                              keyCols: Seq[String],
+                              matched: Seq[MergeClause],
+                              notMatched: Seq[MergeClause],
+                              notMatchedBySource: Seq[MergeClause],
+                              residual: Option[Column],
+                              mergeSchema: Boolean,
+                              commitTs: Option[Long]): Option[Long] = {
     val st0 = state(table)
     val declared0 = st0.schema.getOrElse(throw new IllegalStateException(
       s"$table has no declared schema — general MERGE needs one"))
@@ -3166,12 +3219,11 @@ object TxLog {
           spark.createDataFrame(empty, evolved), mergeSchema = true)
         (evolved, act)
       }
-    requireUniqueKeys(source, keyCols, "clause row")
     val cs = new Enforced(st0)
     // marker column: distinguishes "matched" from "source key columns
     // happen to be null" after the left join
     val srcAliased = source.withColumn("_graft_src_hit", lit(true)).alias("s")
-    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked above
+    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked on entry
 
     // guard_i = base && !cond_1..i-1 && cond_i — ordered first-match-wins,
     // NULL condition results count as false (SQL)

@@ -13,9 +13,11 @@ import graft.etl.{GoldCatalog, Pipeline, TxLog}
 
 /** Spark keeps generated classes in one JVM-wide cache; a session built
   * through [[GraftSession.tune]] sizes it to hold the engine's working
-  * set, so work repeated with the same literals compiles nothing. Counts
-  * are deltas of Spark's compile counter (one per generated class
-  * compiled, driver and local executor threads alike). */
+  * set, so work repeated with the same literals compiles nothing, and
+  * binds caller literals as class references, so a TxLog verb with new
+  * literals compiles nothing either. Counts are deltas of Spark's compile
+  * counter (one per generated class compiled, driver and local executor
+  * threads alike). */
 class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = GraftSession.local("codegen-reuse", cores = 2)
@@ -62,16 +64,23 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again.filter(_._2 != 0) == Nil)
   }
 
-  test("each TxLog verb, run again with the same arguments, compiles no class") {
-    val t = Files.createTempDirectory("graft-codegen-txlog").resolve("t").toString
-    def rows(lo: Long, hi: Long, salt: Long): DataFrame =
-      spark.range(lo, hi + 1).select(
-        col("id"),
-        (col("id") / 1000).cast("long").as("bucket"),
-        ((col("id") + salt) % 50 + 1).cast("double").as("q"),
-        concat(lit("s"), ((col("id") + salt) % 97).cast("string")).as("s"))
+  private def rows(lo: Long, hi: Long, salt: Long): DataFrame =
+    spark.range(lo, hi + 1).select(
+      col("id"),
+      (col("id") / 1000).cast("long").as("bucket"),
+      ((col("id") + salt) % 50 + 1).cast("double").as("q"),
+      concat(lit("s"), ((col("id") + salt) % 97).cast("string")).as("s"))
+
+  /** A CDF-on table partitioned by `bucket`, ids 0-2999 in two files. */
+  private def txTable(prefix: String): String = {
+    val t = Files.createTempDirectory(prefix).resolve("t").toString
     TxLog.setProperties(t, Map(TxLog.CdfProperty -> "true"))
     TxLog.append(spark, t, rows(0, 2999, 0).repartition(2), partitionBy = Seq("bucket"))
+    t
+  }
+
+  test("each TxLog verb, run again with the same arguments, compiles no class") {
+    val t = txTable("graft-codegen-txlog")
     val verbs: Seq[(String, () => Any)] = Seq(
       "append" -> (() => TxLog.append(spark, t, rows(5000, 5099, 0))),
       "updateWhere" -> (() => TxLog.updateWhere(spark, t,
@@ -93,5 +102,47 @@ class CodegenReuseSpec extends AnyFunSuite with BeforeAndAfterAll {
       name -> compiled(run())
     }
     assert(again.filter(_._2 != 0) == Nil)
+  }
+
+  test("each TxLog verb with NEW literal arguments compiles no class") {
+    val t = txTable("graft-codegen-txlog-new")
+    /** Each verb twice, the second time with other literals. */
+    val verbs: Seq[(String, Int => Any)] = Seq(
+      "updateWhere" -> (i => TxLog.updateWhere(spark, t,
+        col("id").between(100 + 200 * i, 149 + 200 * i), Map("q" -> (col("q") + 1.0)))),
+      "deleteWhere" -> (i => TxLog.deleteWhere(spark, t,
+        col("id").between(1000 + 100 * i, 1019 + 100 * i))),
+      "readWhere" -> (i => TxLog.readWhere(spark, t,
+        col("id").between(10 * i, 999 + 10 * i)).agg(sum("q")).collect()),
+      "read as of" -> (i => TxLog.read(spark, t, Some(2L + i)).agg(sum("q")).collect()),
+      "optimize" -> (i => TxLog.optimize(spark, t, where = Some(col("bucket") >= 2 - i))))
+    val again = verbs.map { case (name, run) =>
+      run(0)
+      name -> compiled(run(1))
+    }
+    assert(again.filter(_._2 != 0) == Nil)
+  }
+
+  test("merge and mergeClauses with a new source compile only the source's own stages") {
+    val t = txTable("graft-codegen-merge")
+    // each source is two `spark.range` branches: RangeExec spells its
+    // bounds into its stage's code, so each branch's stage compiles once
+    // where it is planned and once in a task thread (Spark keys its class
+    // cache by the thread's class loader too), and nothing else compiles
+    val sourceClasses = 2L * 2
+    def src(i: Int): DataFrame =
+      rows(300 + 50 * i, 319 + 50 * i, i).unionByName(rows(6000 + 50 * i, 6019 + 50 * i, i))
+    val verbs: Seq[(String, Int => Any)] = Seq(
+      "merge" -> (i => TxLog.merge(spark, t, src(i), Seq("id"))),
+      "mergeClauses" -> (i => TxLog.mergeClauses(spark, t, src(10 + i), Seq("id"),
+        matched = Seq(TxLog.MergeClause("update", None, Map("q" -> expr("s.q + t.q")))),
+        notMatched = Seq(TxLog.MergeClause("insert", None,
+          Map("id" -> col("s.id"), "bucket" -> col("s.bucket"), "q" -> col("s.q"),
+            "s" -> col("s.s")))))))
+    val again = verbs.map { case (name, run) =>
+      run(0)
+      name -> compiled(run(1))
+    }
+    assert(again == verbs.map(_._1 -> sourceClasses))
   }
 }

@@ -29,6 +29,12 @@ class ExtensionsInstallSpec extends AnyFunSuite {
       assert(r.getDouble(1) == 0.0)
       assert(r.getInt(2) == 2)
       assert(r.getInt(3) == 2)
+      // tune adds the literal-binding rule beside the caller's extensions;
+      // GraftExtensions injects it too, and applying it twice is harmless
+      assert(spark.sessionState.columnarRules
+        .count(_.preColumnarTransitions eq graft.plans.BindLiterals) == 2)
+      assert(spark.sql("SELECT sum(id * 3 + 1) FROM range(10) WHERE id > 2")
+        .head().getLong(0) == 133L)
 
       // optimizer rule: a shingle projection over the (tiny) documents
       // relation gains a repartition below the project...
