@@ -2827,66 +2827,16 @@ object TxLog {
     // (round 14: merge previously accepted a source whose generated
     // values LIED, where append refused)
     val st0 = state(table)
-    val source = applyColumnPolicies(st0, source0)
+    val policed = applyColumnPolicies(st0, source0)
     // an identity MERGE KEY the source does not supply has nothing to
     // match on — refuse BEFORE the key-column analysis below would throw
     // an unhelpful unresolved-column error
-    st0.identity.keys.filter(keyCols.contains).foreach { n =>
-      require(source.columns.contains(n),
+    val idDecls = st0.identity
+    idDecls.keys.filter(keyCols.contains).foreach { n =>
+      require(policed.columns.contains(n),
         s"merge on identity key column $n requires the source to supply it")
     }
-    withSourceRows(source, keyCols, "row")(
-      mergeRows(spark, st0, _, keyCols, commitTs, mergeSchema))
-  }
-
-  /** Refuse a MERGE source with duplicate keys (which `winner` wins would
-    * be nondeterministic), then run `body` over the source's rows stored
-    * once: a merge reads its source in the file-finding scan, the staged
-    * write, the change record and the claim-time probe, and each of those
-    * plans would otherwise plan (and compile) the caller's frame again.
-    *
-    * A source the optimizer would broadcast (estimated under the broadcast
-    * threshold) is collected, in its own order, into a local relation, and
-    * the collecting query counts the rows per key, so the key check adds
-    * no job. A larger source is persisted as RDD blocks, released when
-    * `body` returns or throws. Small sources are not stored as blocks: the
-    * staged write's coalesce groups cached partitions by locality rather
-    * than in order, which writes more files per partition value. */
-  private def withSourceRows[T](source: DataFrame, keyCols: Seq[String], winner: String)(
-      body: DataFrame => T): T = {
-    val spark = source.sparkSession
-    val duplicates = s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
-      s"which $winner wins would be nondeterministic"
-    if (source.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        spark.sessionState.conf.autoBroadcastJoinThreshold) {
-      val (order, perKey) = ("__graft_source_row", "__graft_key_rows")
-      val rows = source
-        .withColumn(order, org.apache.spark.sql.functions.monotonically_increasing_id())
-        .withColumn(perKey, org.apache.spark.sql.functions.count(lit(1))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)))
-        .collect()
-      require(rows.forall(_.getAs[Long](perKey) == 1L), duplicates)
-      body(spark.createDataFrame(rows.sortBy(_.getAs[Long](order))
-        .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(2))).toSeq.asJava,
-        source.schema))
-    } else {
-      val (rows, rdd) = org.apache.spark.sql.graft.GraftSqlBridge
-        .persistedRows(source, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // `isEmpty` fetches at most one row without the extra exchange a
-        // global `limit(1).count()` plans
-        require(rows.groupBy(keyCols.map(col): _*).count()
-          .filter(col("count") > 1).isEmpty, duplicates)
-        body(rows)
-      } finally rdd.unpersist(blocking = false)
-    }
-  }
-
-  /** [[merge]] over its policy-applied, key-checked, stored source. */
-  private def mergeRows(spark: SparkSession, st0: TableState, source: DataFrame,
-                        keyCols: Seq[String], commitTs: Option[Long],
-                        mergeSchema: Boolean): Long = {
-    val idDecls = st0.identity
+    val source = uniqueSource(policed, keyCols, "row")
     // mergeSchema = MERGE WITH SCHEMA EVOLUTION (round 14): source-only
     // columns widen the declaration in the SAME commit (append's
     // evolution rule); survivors null-fill via the allowMissingColumns
@@ -2894,7 +2844,7 @@ object TxLog {
     val decl = enforceSchema(st0, source, mergeSchema)
     val cs = new Enforced(st0)
     cs.enforce(source)
-    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked on entry
+    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked above
     // ---- IDENTITY (round-16, ADVICE r15 #1): classify supply once.
     // identity columns must not be merge KEYS with an omitted source
     // column (there would be nothing to match on); explicit supply
@@ -3053,6 +3003,81 @@ object TxLog {
     }.get
   }
 
+  /** Refuse a MERGE source with duplicate keys — otherwise which `winner`
+    * wins is nondeterministic — and return the frame the merge reads its
+    * source from: the file-finding scan, the staged write, the change
+    * record and the claim-time probe each plan it, and planning the
+    * caller's frame in each would compile its stages again.
+    *
+    * A source the optimizer estimates under the broadcast threshold is
+    * collected once, as internal rows in its own order, into a local
+    * relation, by the query that counts its rows per key, so the key check
+    * adds no job. The estimate can be far under the real size (parquet
+    * counts compressed bytes, a Generate keeps its input's size), so the
+    * collected bytes decide: each task keeps its rows only while they fit
+    * its share of the threshold, and when any task runs over, the merge
+    * plans the caller's frame in place, its keys checked all the same.
+    * A source estimated over the threshold is planned in place with a
+    * grouped key check; `isEmpty` fetches at most one row without the
+    * extra exchange a global `limit(1).count()` plans. */
+  private[graft] def uniqueSource(source: DataFrame, keyCols: Seq[String],
+                                  winner: String): DataFrame = {
+    val duplicates = s"merge source has duplicate keys on (${keyCols.mkString(", ")}): " +
+      s"which $winner wins would be nondeterministic"
+    val cap = source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (source.queryExecution.optimizedPlan.stats.sizeInBytes > cap) {
+      require(source.groupBy(keyCols.map(col): _*).count()
+        .filter(col("count") > 1).isEmpty, duplicates)
+      source
+    } else collectUnique(source, cap, keyCols, duplicates)
+  }
+
+  /** [[uniqueSource]] for a source estimated under the broadcast
+    * threshold `cap`: its rows as a local relation, or the source itself
+    * when they do not fit. */
+  private def collectUnique(source: DataFrame, cap: Long, keyCols: Seq[String],
+                            duplicates: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+    val types = source.schema.map(_.dataType)
+    val n = types.size
+    // columns n and n + 1: the row's place in the source, its key's row count
+    val counted = source
+      .withColumn("__graft_source_row", org.apache.spark.sql.functions.monotonically_increasing_id())
+      .withColumn("__graft_key_rows", org.apache.spark.sql.functions.count(lit(1))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)))
+      .queryExecution
+    val parts = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(counted) {
+      val rdd = counted.toRdd
+      val share = cap / math.max(1, rdd.getNumPartitions)
+      source.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+          val trim = UnsafeProjection.create(
+            types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
+          val kept = Array.newBuilder[(Long, Array[Byte])]
+          var (bytes, duplicate) = (0L, false)
+          it.foreach { r =>
+            duplicate ||= r.getLong(n + 1) > 1
+            if (bytes <= share) {
+              val b = trim(r).copy().getBytes
+              bytes += b.length
+              kept += r.getLong(n) -> b
+            }
+          }
+          (duplicate, if (bytes <= share) Some(kept.result()) else None)
+        })
+    }
+    require(!parts.exists(_._1), duplicates)
+    if (parts.exists(_._2.isEmpty)) source
+    else org.apache.spark.sql.graft.GraftSqlBridge.ofRows(source.sparkSession,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(source.schema),
+        parts.flatMap(_._2.get).sortBy(_._1).map { case (_, b) =>
+          val row = new UnsafeRow(n)
+          row.pointTo(b, b.length)
+          row
+        }.toSeq))
+  }
+
   /** One WHEN clause of a general [[mergeClauses]] MERGE. `kind` is
     * "update" / "delete" (matched and not-matched-by-source lists) or
     * "insert" (not-matched list). `condition` and the assignment VALUES
@@ -3136,19 +3161,6 @@ object TxLog {
       s"WHEN NOT MATCHED BY SOURCE clause must be update/delete, got ${c.kind}"))
     require((matched ++ notMatched ++ notMatchedBySource).nonEmpty,
       "MERGE requires at least one WHEN clause")
-    withSourceRows(source, keyCols, "clause row")(mergeClauseRows(spark, table, _, keyCols,
-      matched, notMatched, notMatchedBySource, residual, mergeSchema, commitTs))
-  }
-
-  /** [[mergeClauses]] over its key-checked, stored source. */
-  private def mergeClauseRows(spark: SparkSession, table: String, source: DataFrame,
-                              keyCols: Seq[String],
-                              matched: Seq[MergeClause],
-                              notMatched: Seq[MergeClause],
-                              notMatchedBySource: Seq[MergeClause],
-                              residual: Option[Column],
-                              mergeSchema: Boolean,
-                              commitTs: Option[Long]): Option[Long] = {
     val st0 = state(table)
     val declared0 = st0.schema.getOrElse(throw new IllegalStateException(
       s"$table has no declared schema — general MERGE needs one"))
@@ -3219,11 +3231,12 @@ object TxLog {
           spark.createDataFrame(empty, evolved), mergeSchema = true)
         (evolved, act)
       }
+    val rows = uniqueSource(source, keyCols, "clause row")
     val cs = new Enforced(st0)
     // marker column: distinguishes "matched" from "source key columns
     // happen to be null" after the left join
-    val srcAliased = source.withColumn("_graft_src_hit", lit(true)).alias("s")
-    val keys = broadcast(source.select(keyCols.map(col): _*)) // unique: checked on entry
+    val srcAliased = rows.withColumn("_graft_src_hit", lit(true)).alias("s")
+    val keys = broadcast(rows.select(keyCols.map(col): _*)) // unique: checked above
 
     // guard_i = base && !cond_1..i-1 && cond_i — ordered first-match-wins,
     // NULL condition results count as false (SQL)

@@ -1,24 +1,18 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
-/** Three `private[sql]` seams the TxLog code needs, exposed through the
-  * standard extension-package pattern (a bridge object inside
+/** Two `private[sql]` seams the TxLog SQL-DML strategy needs, exposed
+  * through the standard extension-package pattern (a bridge object inside
   * `org.apache.spark.sql`, as public Spark extensions like Delta do):
   *
   *   - a resolved `LogicalPlan` → `DataFrame` (the MERGE source relation
-  *     must become the [[graft.etl.TxLog.merge]] source frame),
+  *     must become the [[graft.etl.TxLog.merge]] source frame), and
   *   - a catalyst `Expression` → user-facing `Column` (Spark 4 removed
-  *     the public Column(expr) constructor in the column-node refactor),
-  *   - a frame over one persisted RDD of another frame's rows (a merge
-  *     reads its source in several plans; see [[persistedRows]]),
+  *     the public Column(expr) constructor in the column-node refactor).
   *
   * plus one `private[spark]` one:
   *
@@ -36,22 +30,6 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-
-  /** `df`'s rows as a frame over ONE persisted RDD, and that RDD (the
-    * caller unpersists it): every plan built on the frame reads the stored
-    * rows instead of planning `df` again (Delta's merge-source
-    * materialization). Nothing runs here unless `df` has exchanges (AQE
-    * runs those stages); the first job that reads a partition stores it.
-    * The frame keeps `df`'s statistics, so joins and write sizing plan as
-    * they did over `df`. The public `localCheckpoint(eager = false)` is
-    * the near door, but it cuts the lineage, so a lost block cannot be
-    * recomputed, and it runs a job of its own for any partition its first
-    * job left unread. */
-  def persistedRows(df: DataFrame, level: StorageLevel): (DataFrame, RDD[InternalRow]) = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
-    (ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
-  }
 
   /** The inverse of [[ofRows]]: a DataFrame's analyzed logical plan —
     * what a table-valued-function builder must return (the table_changes

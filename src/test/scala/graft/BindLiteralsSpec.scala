@@ -2,14 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.{ColumnarRule, FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBus
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,8 +19,8 @@ import graft.plans.{BindLiterals, BoundLiteral}
 /** The literal-binding rule [[BindLiterals]] that [[GraftSession.tune]]
   * installs: it must fire inside codegen operators, leave every consumer
   * that matches `Literal` (scan pushdown, file and cached-batch pruning,
-  * window frames) as it was, and change no answer. Also: a merge releases
-  * the source rows it stores. */
+  * window frames) as it was, and change no answer. Also: which merge
+  * sources are read as collected rows. */
 class BindLiteralsSpec extends AnyFunSuite with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
 
@@ -102,47 +101,46 @@ class BindLiteralsSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
-  test("a merge releases the source rows it stores, also when it throws") {
+  test("a merge collects a source whose rows fit the broadcast threshold, reads any other in place") {
     val sc = spark.sparkContext
-    // stages that read or store a persisted RDD
-    val persistedStages = new java.util.concurrent.atomic.AtomicInteger()
-    sc.addSparkListener(new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.storageLevel.isValid)) persistedStages.incrementAndGet()
-    })
     def rows(lo: Long, hi: Long): DataFrame =
       spark.range(lo, hi + 1).select(col("id"), (col("id") * 3).as("v"))
-    val dup = rows(10, 20).unionByName(rows(20, 30))
-    /** Runs `verb`; the persistent RDDs are as before it, and `blocks`
-      * says whether it stored its source as RDD blocks. */
-    def releases(blocks: Boolean)(verb: => Any): Unit = {
-      val before = sc.getPersistentRDDs.size
-      ListenerBus.drain(spark)
-      persistedStages.set(0)
-      try verb catch { case _: IllegalArgumentException => () }
-      assert(sc.getPersistentRDDs.size == before)
-      ListenerBus.drain(spark)
-      assert((persistedStages.get > 0) == blocks)
-    }
-    // under the broadcast threshold the source becomes a local relation;
-    // over it, RDD blocks
-    for (blocks <- Seq(false, true)) {
+    // a Generate keeps its input's size estimate: hi - lo + 1 rows
+    // estimated as one
+    def exploded(lo: Long, hi: Long): DataFrame =
+      spark.range(1).select(explode(sequence(lit(lo), lit(hi))).as("id"))
+        .select(col("id"), (col("id") * 3).as("v"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val threshold = spark.conf.get(key)
+    assert(exploded(900, 1099).queryExecution.optimizedPlan.stats.sizeInBytes <= 1000)
+    // (threshold, source, whether the merge reads it as collected rows):
+    // under the threshold; over it by estimate; under it by estimate but
+    // over it by collected bytes
+    val cases = Seq[(String, (Long, Long) => DataFrame, Boolean)](
+      (threshold, rows, true), ("-1", rows, false), ("1000", exploded, false))
+    for ((limit, src, collected) <- cases) {
       val t = Files.createTempDirectory("graft-bind-merge").resolve("t").toString
       TxLog.setProperties(t, Map(TxLog.CdfProperty -> "true"))
       TxLog.append(spark, t, rows(0, 999))
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val threshold = spark.conf.get(key)
-      if (blocks) spark.conf.set(key, "-1")
+      val dup = src(10, 20).unionByName(src(20, 30))
+      val persisted = sc.getPersistentRDDs.size
+      spark.conf.set(key, limit)
       try {
-        releases(blocks)(TxLog.merge(spark, t, rows(900, 1099), Seq("id")))
-        releases(blocks)(TxLog.merge(spark, t, dup, Seq("id")))
-        releases(blocks)(TxLog.mergeClauses(spark, t, rows(1050, 1149), Seq("id"),
+        val read = TxLog.uniqueSource(src(900, 1099), Seq("id"), "row")
+        assert(read.queryExecution.analyzed.isInstanceOf[LocalRelation] == collected, limit)
+        assert(read.collect().toSeq == src(900, 1099).collect().toSeq)
+        TxLog.merge(spark, t, src(900, 1099), Seq("id"))
+        TxLog.mergeClauses(spark, t, src(1050, 1149), Seq("id"),
           matched = Seq(TxLog.MergeClause("delete", None, Map.empty)),
           notMatched = Seq(TxLog.MergeClause("insert", None,
-            Map("id" -> col("s.id"), "v" -> col("s.v"))))))
-        releases(blocks)(TxLog.mergeClauses(spark, t, dup, Seq("id"),
-          matched = Seq(TxLog.MergeClause("delete", None, Map.empty)), notMatched = Nil))
+            Map("id" -> col("s.id"), "v" -> col("s.v")))))
+        for (verb <- Seq[() => Any](
+            () => TxLog.merge(spark, t, dup, Seq("id")),
+            () => TxLog.mergeClauses(spark, t, dup, Seq("id"),
+              matched = Seq(TxLog.MergeClause("delete", None, Map.empty)), notMatched = Nil)))
+          assert(intercept[IllegalArgumentException](verb()).getMessage.contains("duplicate keys"))
       } finally spark.conf.set(key, threshold)
+      assert(sc.getPersistentRDDs.size == persisted)
       val all = TxLog.read(spark, t)
       assert(all.count() == 1050 + 50)
       assert(all.filter(col("id") >= 1050 && col("id") < 1100).count() == 0)
