@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   *     estimator of the true cost under additive noise;
   *   - FLOOR-BOUND queries (best-known < FloorThresholdS) are min-of-two
   *     WITHIN pass 1 (two back-to-back executions, clearCache between):
-  *     round-14 BenchProfile measurement split the ~1.3 s/query session
+  *     a round-14 phase-timer measurement split the ~1.3 s/query session
   *     floor into ~0.1 s Janino + ~0.3-1.3 s first-execution warmup of
   *     the query's own generated classes, which no cross-sf warm pass
   *     can amortize cheaper than a second execution of the same plan —
@@ -106,7 +106,7 @@ object Bench {
   /** Queries whose best-known cost sits below this are FLOOR-BOUND: their
     * wall time is dominated by the per-fresh-plan session floor (HotSpot
     * warmup of the query's own generated classes — measured round 14 with
-    * BenchProfile: Janino compile is ~0.1 s, but the first execution runs
+    * a phase timer, see OPTIMIZATION_r16.md: Janino compile is ~0.1 s, but the first execution runs
     * the fresh codegen classes cold, 0.3-1.3 s above steady state, and no
     * warm pass at a smaller sf can amortize it cheaper than simply
     * executing the query twice). Pass 1 times these as MIN OF TWO

@@ -7,7 +7,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, input_file_name, lit, not, pmod, shiftleft}
+import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, explode, expr, input_file_name, lit, not, pmod, shiftleft, struct}
 
 /** Minimal ACID table format over plain parquet: an ordered commit log of
   * immutable version files, each an atomic unit of add/remove file
@@ -1587,52 +1587,56 @@ object TxLog {
     }).get
   }
 
+  /** Does `df` supply identity column `name`? An ALL-NULL column counts
+    * as omitted (round-16, ADVICE r15 #3): SQL INSERT with the identity
+    * column absent from its column list arrives analyzer-filled with
+    * explicit nulls — storing them would break the non-null contract and
+    * refusing would make identity tables unwritable through SQL. Any
+    * non-null value present means genuinely explicit supply: refused for
+    * GENERATED ALWAYS (`writers` names who must not supply it), and a
+    * MIXED null/non-null supply refuses loudly, never storing null ids. */
+  private def identitySupplied(df: DataFrame, name: String,
+                               allowExplicit: Boolean, writers: String): Boolean = {
+    val supplied = df.columns.contains(name) &&
+      df.filter(col(name).isNotNull).limit(1).count() > 0L
+    if (supplied) {
+      require(allowExplicit,
+        s"column $name is GENERATED ALWAYS AS IDENTITY — $writers must " +
+          "not supply it (declare BY DEFAULT to allow explicit values)")
+      require(df.filter(col(name).isNull).limit(1).count() == 0L,
+        s"explicit values for identity column $name must be non-null")
+    }
+    supplied
+  }
+
+  /** Fresh values for identity column `name` past the watermark snapshot:
+    * the commit's base (the next unassigned value) and the column
+    * `base + step·monotonically_increasing_id()` — scan-local, zero
+    * shuffle; sparse (gappy) but monotone per commit. The caller's CAS
+    * loop re-checks the watermark at the claim target and restarts
+    * (re-assign + re-stage) if a racer advanced it, which is what makes
+    * the assigned ranges collision-free without global coordination. */
+  private def freshIds(name: String, start: Long, step: Long,
+                       wmSnap: Map[String, Option[Long]]): (Long, Column) = {
+    val base = wmSnap.getOrElse(name, None).map(_ + step).getOrElse(start)
+    base -> (lit(base) + lit(step) *
+      org.apache.spark.sql.functions.monotonically_increasing_id())
+  }
+
   /** Assign identity values into `df` for every declared identity column
-    * it omits (and validate explicit supply against the ALWAYS rule).
-    * Returns the frame plus the NEXT-unassigned base per column — the
-    * caller's CAS loop re-checks the watermark at the claim target and
-    * restarts (re-assign + re-stage) if a racer advanced it, which is
-    * what makes the assigned ranges collision-free without any global
-    * coordination. Assignment is `base + step·monotonically_increasing_id()`
-    * — scan-local, zero shuffle; sparse (gappy) but monotone per commit. */
+    * it omits ([[identitySupplied]] validates explicit supply). Returns
+    * the frame plus the NEXT-unassigned base per assigned column. */
   private def assignIdentity(st: TableState, df: DataFrame,
                              wmSnap: Map[String, Option[Long]])
-      : (DataFrame, Map[String, Long]) = {
-    val ids = st.identity
-    if (ids.isEmpty) return (df, Map.empty)
-    val have = df.columns.toSet
-    var out = df
-    val bases = scala.collection.mutable.Map.empty[String, Long]
-    ids.foreach { case (name, (start, step, allowExplicit)) =>
-      // an ALL-NULL supplied column is OMITTED (round-16, ADVICE r15 #3):
-      // SQL INSERT with the identity column absent from its column list
-      // arrives analyzer-filled with explicit nulls — storing them would
-      // break the non-null contract and refusing would make identity
-      // tables unwritable through SQL. Any non-null value present means
-      // genuinely explicit supply (then the ALWAYS/non-null rules below
-      // apply — a MIXED null/non-null supply still refuses loudly).
-      val supplied = have(name) &&
-        out.filter(col(name).isNotNull).limit(1).count() > 0L
-      if (have(name) && !supplied) out = out.drop(name)
-      if (supplied) {
-        require(allowExplicit,
-          s"column $name is GENERATED ALWAYS AS IDENTITY — writers must " +
-            "not supply it (declare BY DEFAULT to allow explicit values)")
-        // nulls are not identity values — a partially-null explicit
-        // supply must refuse loudly, never store null ids
-        require(out.filter(col(name).isNull).limit(1).count() == 0L,
-          s"explicit values for identity column $name must be non-null")
-      } else {
-        val base = wmSnap.getOrElse(name, None)
-          .map(_ + step).getOrElse(start)
-        bases(name) = base
-        out = out.withColumn(name,
-          lit(base) + lit(step) *
-            org.apache.spark.sql.functions.monotonically_increasing_id())
-      }
+      : (DataFrame, Map[String, Long]) =
+    st.identity.foldLeft((df, Map.empty[String, Long])) {
+      case ((out, bases), (name, (start, step, allowExplicit))) =>
+        if (identitySupplied(out, name, allowExplicit, "writers")) (out, bases)
+        else {
+          val (base, fresh) = freshIds(name, start, step, wmSnap)
+          (out.drop(name).withColumn(name, fresh), bases + (name -> base))
+        }
     }
-    (out, bases.toMap)
-  }
 
   /** The watermark actions for a commit that assigned identities: the
     * new last-assigned value per column, read from the STAGED FILES'
@@ -2552,17 +2556,22 @@ object TxLog {
 
   // ------------------------------------------- deletion vectors (MoR)
 
-  // Sidecar FORMAT (written executor-side inside deleteWhereMerge, read
-  // back by readDvPositions / dvFrame): length-prefixed big-endian longs —
-  // writeLong(count) then the SORTED row positions. The name is a fresh
-  // UUID under `dv/`, so no write race exists; the file becomes meaningful
-  // only if its commit publishes.
+  // Sidecar FORMAT: length-prefixed big-endian longs — writeLong(count)
+  // then the SORTED row positions. deleteWhereMerge writes them on
+  // executors; the name is a fresh UUID under `dv/`, so no write race
+  // exists, and the file becomes meaningful only if its commit publishes.
 
-  private[graft] def readDvPositions(table: String, rel: String): Seq[Long] = {
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(table, rel))))
-    try { val n = in.readLong().toInt; Seq.fill(n)(in.readLong()) }
-    finally in.close()
+  /** Read one sidecar's positions (closes `in`). */
+  private def readDv(in: java.io.InputStream): Array[Long] = {
+    val d = new java.io.DataInputStream(new java.io.BufferedInputStream(in))
+    try Array.fill(d.readLong().toInt)(d.readLong()) finally d.close()
+  }
+
+  /** Write one sidecar (closes `out`). */
+  private def writeDv(out: java.io.OutputStream, positions: Array[Long]): Unit = {
+    val d = new java.io.DataOutputStream(new java.io.BufferedOutputStream(out))
+    try { d.writeLong(positions.length.toLong); positions.foreach(d.writeLong) }
+    finally d.close()
   }
 
   /** The table-relative join key a scan row exposes for DV matching:
@@ -2621,7 +2630,7 @@ object TxLog {
       import scala.jdk.CollectionConverters._
       val rows: java.util.List[org.apache.spark.sql.Row] =
         dvs.toSeq.flatMap { case (file, (sidecar, _)) =>
-          readDvPositions(table, sidecar)
+          readDv(Files.newInputStream(Paths.get(table, sidecar)))
             .map(pos => org.apache.spark.sql.Row(file, pos))
         }.asJava
       spark.createDataFrame(rows, schema)
@@ -2638,12 +2647,7 @@ object TxLog {
           math.max(1, spark.sparkContext.defaultParallelism)))
         .as[(String, String)]
         .flatMap { case (key, sidecarPath) =>
-          val in = new java.io.DataInputStream(
-            new java.io.BufferedInputStream(open(sidecarPath)))
-          try {
-            val n = in.readLong().toInt
-            Vector.fill(n)((key, in.readLong()))
-          } finally in.close()
+          readDv(open(sidecarPath)).iterator.map(pos => (key, pos))
         }
         .toDF("_graft_key", "_graft_pos")
     }
@@ -2660,24 +2664,28 @@ object TxLog {
 
   /** Anti-filter a scan of `table`'s files by the given deletion
     * vectors: a (file, row-position) pair named by any DV is dropped.
-    * Zero-cost no-op for DV-free tables. Small DV sets broadcast (no
-    * scan shuffle); past [[DvDistributedThreshold]] the anti-join
-    * shuffles both sides on (file, position) so no single machine ever
-    * holds the full position set — the honest cost of merge-on-read
-    * under delete-heavy history until an optimize materializes it. */
+    * Zero-cost no-op for DV-free tables. */
   private def applyDvs(spark: SparkSession, table: String, df: DataFrame,
-                       dvs: Map[String, (String, Long)]): DataFrame = {
-    if (dvs.isEmpty) return df
-    val total = dvs.values.map(_._2).sum
+                       dvs: Map[String, (String, Long)]): DataFrame =
+    if (dvs.isEmpty) df
+    else withoutDvs(spark, table, withDvKey(df), dvs).drop("_graft_key", "_graft_pos")
+
+  /** [[applyDvs]] over a frame that already carries the DV join columns
+    * ([[withDvKey]]), which it keeps. Small DV sets broadcast (no scan
+    * shuffle); past [[DvDistributedThreshold]] the anti-join shuffles
+    * both sides on (file, position) so no single machine ever holds the
+    * full position set — the honest cost of merge-on-read under
+    * delete-heavy history until an optimize materializes it. */
+  private def withoutDvs(spark: SparkSession, table: String, keyed: DataFrame,
+                         dvs: Map[String, (String, Long)]): DataFrame = {
+    if (dvs.isEmpty) return keyed
     val frame = dvFrame(spark, table, dvs)
     // above the threshold the merge hint is load-bearing: Catalyst cannot
     // size a flatMap output and would happily size-estimate the position
     // set back onto the driver as a broadcast build side
-    val right = if (total <= DvDistributedThreshold) broadcast(frame)
+    val right = if (dvs.values.map(_._2).sum <= DvDistributedThreshold) broadcast(frame)
                 else frame.hint("merge")
-    withDvKey(df)
-      .join(right, Seq("_graft_key", "_graft_pos"), "left_anti")
-      .drop("_graft_key", "_graft_pos")
+    keyed.join(right, Seq("_graft_key", "_graft_pos"), "left_anti")
   }
 
   /** Transactional row-level DELETE, merge-on-READ — the deletion-vector
@@ -2714,12 +2722,7 @@ object TxLog {
         // attach the (file-key, position) columns ON the scan (metadata
         // columns resolve only there), THEN anti-join the existing DVs so
         // already-deleted rows can't re-match
-        val keyed = withDvKey(boundRead(spark, st, read0))
-        val alive =
-          if (dv0.isEmpty) keyed
-          else keyed.join(
-            broadcast(dvFrame(spark, table, dv0)),
-            Seq("_graft_key", "_graft_pos"), "left_anti")
+        val alive = withoutDvs(spark, table, withDvKey(boundRead(spark, st, read0)), dv0)
         // Matched (file, position) pairs are grouped per file, merged with
         // the file's existing DV, sorted and WRITTEN ON EXECUTORS — the
         // driver receives one (fileKey, sidecarRel, cardinality) row per
@@ -2747,20 +2750,11 @@ object TxLog {
           .groupByKey(_._1)
           .mapGroups { (key, it) =>
             val fresh = it.map(_._2).toArray
-            val existing: Array[Long] = priorRel.get(key) match {
-              case Some(rel) =>
-                val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-                  open(s"$tableAbs/$rel")))
-                try { val n = in.readLong().toInt; Array.fill(n)(in.readLong()) }
-                finally in.close()
-              case None => Array.empty[Long]
-            }
+            val existing = priorRel.get(key)
+              .fold(Array.empty[Long])(rel => readDv(open(s"$tableAbs/$rel")))
             val merged = (existing ++ fresh).distinct.sorted
             val rel = s"dv/${UUID.randomUUID()}.bin"
-            val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-              create(s"$tableAbs/$rel")))
-            try { out.writeLong(merged.length.toLong); merged.foreach(out.writeLong) }
-            finally out.close()
+            writeDv(create(s"$tableAbs/$rel"), merged)
             (key, rel, merged.length.toLong)
           }.collect()
         if (written.isEmpty) None
@@ -2789,15 +2783,16 @@ object TxLog {
     committed
   }
 
-  /** Transactional MERGE (keyed upsert), copy-on-write — the
-    * WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT * core of the
-    * production-format MERGE INTO: every target row whose `keyCols`
-    * match a source row is REPLACED by that source row, source rows
-    * matching nothing are INSERTED, and target rows matching nothing
-    * survive untouched. Refuses a source with duplicate keys (the
-    * standard multiple-matches error — otherwise which row "wins" is
-    * nondeterministic); null source keys match nothing (SQL equality)
-    * and therefore insert.
+  /** Transactional keyed upsert, copy-on-write: the target rows whose
+    * `keyCols` match a source row are REPLACED by that one source row
+    * (one row per key afterwards, whatever the target held; columns the
+    * source lacks read null), source rows matching nothing are INSERTED,
+    * and target rows matching nothing survive untouched. SQL MERGE,
+    * which updates each matching row and only the columns it assigns,
+    * plans through [[mergeClauses]] instead. Refuses a source with
+    * duplicate keys (the standard multiple-matches error — otherwise
+    * which row "wins" is nondeterministic); null source keys match
+    * nothing (SQL equality) and therefore insert.
     *
     * Mechanics, file-pruned like [[deleteWhere]]: a distributed
     * `input_file_name()` scan semi-joined to the (broadcastable) source
@@ -2837,10 +2832,10 @@ object TxLog {
         s"merge on identity key column $n requires the source to supply it")
     }
     val source = uniqueSource(policed, keyCols, "row")
-    // mergeSchema = MERGE WITH SCHEMA EVOLUTION (round 14): source-only
-    // columns widen the declaration in the SAME commit (append's
-    // evolution rule); survivors null-fill via the allowMissingColumns
-    // union below, and readers bind the union declaration
+    // mergeSchema (round 14): source-only columns widen the declaration
+    // in the SAME commit (append's evolution rule); survivors null-fill
+    // via the allowMissingColumns union below, and readers bind the
+    // union declaration
     val decl = enforceSchema(st0, source, mergeSchema)
     val cs = new Enforced(st0)
     cs.enforce(source)
@@ -2848,24 +2843,14 @@ object TxLog {
     // ---- IDENTITY (round-16, ADVICE r15 #1): classify supply once.
     // identity columns must not be merge KEYS with an omitted source
     // column (there would be nothing to match on); explicit supply
-    // follows assignIdentity's rules (ALWAYS refuses, BY DEFAULT
+    // follows identitySupplied's rules (ALWAYS refuses, BY DEFAULT
     // validates non-null, all-null counts as omitted). Omitted columns
     // resolve per outer pass: matched rows INHERIT the target row's id
     // (an upsert is an update, not a re-keying), unmatched rows get
     // fresh monotone values past the watermark snapshot.
     val idSupplied: Map[String, Boolean] =
       idDecls.map { case (name, (_, _, allowExplicit)) =>
-        val present = source.columns.contains(name) &&
-          source.filter(col(name).isNotNull).limit(1).count() > 0L
-        if (present) {
-          require(allowExplicit,
-            s"column $name is GENERATED ALWAYS AS IDENTITY — merge " +
-              "sources must not supply it (declare BY DEFAULT to allow " +
-              "explicit values)")
-          require(source.filter(col(name).isNull).limit(1).count() == 0L,
-            s"explicit values for identity column $name must be non-null")
-        }
-        name -> present
+        name -> identitySupplied(source, name, allowExplicit, "merge sources")
       }
     val idToAssign = idDecls.keys.filterNot(idSupplied).toSeq
     idToAssign.foreach(n => require(!keyCols.contains(n),
@@ -2882,23 +2867,19 @@ object TxLog {
     def resolveIds(tIdsOpt: Option[DataFrame],
                    wmSnap: Map[String, Option[Long]],
                    pin: Boolean): (DataFrame, Map[String, Long]) = {
-      if (idToAssign.isEmpty) return (srcBase, Map.empty)
-      val bases = scala.collection.mutable.Map.empty[String, Long]
-      var s2 = tIdsOpt match {
+      val joined = tIdsOpt match {
         case Some(tIds) => srcBase.join(tIds, keyCols, "left")
         case None => idToAssign.foldLeft(srcBase)((d, n) =>
           d.withColumn(s"__t_$n", lit(null).cast("bigint")))
       }
-      idToAssign.foreach { n =>
-        val (start, step, _) = idDecls(n)
-        val base = wmSnap.getOrElse(n, None).map(_ + step).getOrElse(start)
-        bases(n) = base
-        s2 = s2.withColumn(n, coalesce(col(s"__t_$n"),
-          lit(base) + lit(step) *
-            org.apache.spark.sql.functions.monotonically_increasing_id()))
-          .drop(s"__t_$n")
+      val (s2, bases) = idToAssign.foldLeft((joined, Map.empty[String, Long])) {
+        case ((d, bs), n) =>
+          val (start, step, _) = idDecls(n)
+          val (base, fresh) = freshIds(n, start, step, wmSnap)
+          (d.withColumn(n, coalesce(col(s"__t_$n"), fresh)).drop(s"__t_$n"),
+            bs + (n -> base))
       }
-      (if (pin) s2.localCheckpoint(true) else s2, bases.toMap)
+      (if (pin) s2.localCheckpoint(true) else s2, bases)
     }
     val idSuppliedCols = idSupplied.filter(_._2).keys.toSeq
     commitLoop(st0) { st =>
@@ -3120,7 +3101,11 @@ object TxLog {
     * files where `c` fires, not every key-matched file. Affected files
     * are re-read, clause CASE-expressions compute the surviving rows,
     * insert clauses run over the key-anti-joined source, and ONE commit
-    * publishes remove(affected) + add(staged). Driver state stays
+    * publishes remove(affected) + add(staged). When no residual is given
+    * and the last WHEN MATCHED clause is unconditional (the upsert shape,
+    * SQL `UPDATE SET *` / `INSERT *` among it), every key-matched row
+    * lives in an affected file, so the inserts anti-join only the
+    * affected rows' keys instead of the whole table's. Driver state stays
     * O(affected files).
     *
     * Concurrency: the [[merge]] validate-then-claim loop, with the
@@ -3237,6 +3222,13 @@ object TxLog {
     // happen to be null" after the left join
     val srcAliased = rows.withColumn("_graft_src_hit", lit(true)).alias("s")
     val keys = broadcast(rows.select(keyCols.map(col): _*)) // unique: checked above
+    // the rewrite and the change record's images join the source as the
+    // build side, so they share one broadcast; left alone, the images'
+    // inner join would build whichever side estimates smaller
+    val srcBuild =
+      if (rows.queryExecution.optimizedPlan.stats.sizeInBytes >
+          spark.sessionState.conf.autoBroadcastJoinThreshold) srcAliased
+      else broadcast(srcAliased)
 
     // guard_i = base && !cond_1..i-1 && cond_i — ordered first-match-wins,
     // NULL condition results count as false (SQL)
@@ -3279,12 +3271,12 @@ object TxLog {
           .otherwise(e)
       }.cast(f.dataType).as(f.name)
     // recompute generated columns from the post-clause row (Delta's
-    // generated-column MERGE semantics)
+    // generated-column MERGE semantics); other columns pass through
     def regen(df: DataFrame): DataFrame =
       if (gens.isEmpty) df
-      else df.select(declared.fields.map(f =>
-        gens.get(f.name).map(e => expr(e).cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))).toIndexedSeq: _*)
+      else df.select(df.columns.map(c => gens.get(c)
+        .map(e => expr(e).cast(declared(c).dataType).as(c))
+        .getOrElse(col(c))).toIndexedSeq: _*)
     val matchedCol = coalesce(col("_graft_src_hit"), lit(false))
     val mGuards = guards(matched, matchedCol)
     val sGuards = guards(notMatchedBySource, not(matchedCol))
@@ -3301,6 +3293,8 @@ object TxLog {
       .reduce(_ && _)
     val onCond = residual
       .map(r => onKeys && coalesce(r, lit(false))).getOrElse(onKeys)
+    val everyMatchFires =
+      residual.isEmpty && matched.lastOption.exists(_.condition.isEmpty)
 
     commitLoop(st0) { st =>
       val (read0, dv0) = (st.paths, st.dvs)
@@ -3309,14 +3303,28 @@ object TxLog {
       // discipline); a racer advancing a watched watermark rebases
       val wmSnap = st.watermarks
 
+      // ---- affected files: those holding a row some clause would CHANGE
+      // (+ the joined frame of just those, kept for the CDF record below)
+      val hitRead =
+        if (matched.isEmpty && notMatchedBySource.isEmpty) None
+        else cowRead(spark, st, pruned = false)(
+          _.alias("t").join(srcAliased, onCond, "left_outer").filter(anyChange))
+      val affected = hitRead.map(_._1).getOrElse(Nil)
+      val joinedOpt = hitRead.map { case (_, scanAff) =>
+        scanAff.alias("t").join(srcBuild, onCond, "left_outer") }
+
       // ---- inserts: source rows matching NO live target row (key equal
       // AND residual true), through the insert clauses (computed against
       // the read snapshot; the claim check below rebases if new keys land
-      // meanwhile). Without a residual the anti-join needs only the
-      // distinct target keys; with one it must see the target columns the
-      // residual reads — still one broadcastable-source join shape.
+      // meanwhile). When every key-matched row fires a clause (no residual,
+      // last WHEN MATCHED unconditional), the matched rows all live in the
+      // affected files, so the anti-join reads only their keys. Otherwise,
+      // without a residual it needs the distinct target keys; with one it
+      // must see the target columns the residual reads.
       val unmatchedSrc =
         if (read0.isEmpty) srcAliased
+        else if (everyMatchFires) hitRead.fold(srcAliased) { case (_, scanAff) =>
+          srcAliased.join(scanAff.select(keyCols.map(col): _*), keyCols, "left_anti") }
         else if (residual.isEmpty) srcAliased.join(
           applyDvs(spark, table, boundRead(spark, st, read0), dv0)
             .select(keyCols.map(col): _*).distinct(),
@@ -3342,27 +3350,15 @@ object TxLog {
           // cdc record alongside the data staging.
           if (idDecls.isEmpty) i0
           else {
-            var i = i0
-            idDecls.foreach { case (n, (start, step, _)) =>
-              val base = wmSnap.getOrElse(n, None).map(_ + step).getOrElse(start)
+            val i = idDecls.foldLeft(i0) { case (d, (n, (start, step, _))) =>
+              val (base, fresh) = freshIds(n, start, step, wmSnap)
               idBases(n) = base
-              i = i.withColumn(n, coalesce(col(n),
-                lit(base) + lit(step) *
-                  org.apache.spark.sql.functions.monotonically_increasing_id()))
+              d.withColumn(n, coalesce(col(n), fresh))
             }
             if (st.cdfEnabled) i.localCheckpoint(true) else i
           }
         }
 
-      // ---- affected files: those holding a row some clause would CHANGE
-      // (+ the joined frame of just those, kept for the CDF record below)
-      val hitRead =
-        if (matched.isEmpty && notMatchedBySource.isEmpty) None
-        else cowRead(spark, st, pruned = false)(
-          _.alias("t").join(srcAliased, onCond, "left_outer").filter(anyChange))
-      val affected = hitRead.map(_._1).getOrElse(Nil)
-      val joinedOpt = hitRead.map { case (_, scanAff) =>
-        scanAff.alias("t").join(srcAliased, onCond, "left_outer") }
       val rewritten = joinedOpt.map(_.filter(not(deleted))
         .select(declared.fields.map(f => survivorCol(f,
           mGuards.zip(matched) ++ sGuards.zip(notMatchedBySource)))
@@ -3393,15 +3389,23 @@ object TxLog {
             val updateAny = allGcs
               .collect { case (g, c) if c.kind == "update" => g }
               .reduceOption(_ || _).getOrElse(lit(false))
-            val pre = joined.filter(updateAny).select(tCols: _*)
-              .withColumn(ChangeTypeCol, lit("update_preimage"))
-            val post = regen(joined.filter(updateAny)
-              .select(declared.fields.map(f => survivorCol(f, allGcs))
-                .toIndexedSeq: _*))
-              .withColumn(ChangeTypeCol, lit("update_postimage"))
+            // each updated row yields its pre- and post-image from ONE
+            // pass over the join, which then plans the source as the
+            // rewrite does and shares its broadcast
+            val names = declared.fieldNames.toIndexedSeq.filterNot(_ == ChangeTypeCol)
+            def image(cols: Seq[Column], kind: String): Column =
+              struct(cols :+ lit(kind).as(ChangeTypeCol): _*)
+            val images = regen(joined.filter(updateAny).select(
+                declared.fields.toIndexedSeq.map(f => survivorCol(f, allGcs)) ++
+                  declared.fields.map(f => tBase(f).cast(f.dataType)
+                    .as(s"_graft_pre_${f.name}")): _*))
+              .select(explode(array(
+                image(names.map(n => col(s"_graft_pre_$n").as(n)), "update_preimage"),
+                image(names.map(col), "update_postimage"))).as("_graft_image"))
+              .select("_graft_image.*")
             val dels = joined.filter(deleted).select(tCols: _*)
               .withColumn(ChangeTypeCol, lit("delete"))
-            (Seq(pre, post, dels) ++ inserts.map(i =>
+            (Seq(images, dels) ++ inserts.map(i =>
               regen(i).withColumn(ChangeTypeCol, lit("insert"))))
               .reduce(_ unionByName _)
           }
@@ -3450,8 +3454,7 @@ object TxLog {
     * time and sortBy it.) Rows are only reordered, never changed, so
     * snapshot content is identical either way. */
   /** Morton spread: interleave zeros between the low 16 bits (standard
-    * magic-number bit spread, public-domain bit-twiddling — the same
-    * construction as the Lakehouse q76 layout key). */
+    * magic-number bit spread, public-domain bit-twiddling). */
   private def spread16(c: Column): Column = {
     val x0 = c.bitwiseAND(lit(0xFFFFL))
     val x1 = (x0.bitwiseOR(shiftleft(x0, 8))).bitwiseAND(lit(0x00FF00FFL))
@@ -3460,8 +3463,9 @@ object TxLog {
     (x3.bitwiseOR(shiftleft(x3, 1))).bitwiseAND(lit(0x55555555L))
   }
 
-  /** 2-way Morton key over the low 16 bits of two numeric columns. */
-  private def zKey(cols: Seq[String]): Column =
+  /** 2-way Morton key over the low 16 bits of two numeric columns (also
+    * the Lakehouse q76 layout key). */
+  private[graft] def zKey(cols: Seq[String]): Column =
     spread16(pmod(col(cols.head).cast("long"), lit(65536L)))
       .bitwiseOR(shiftleft(
         spread16(pmod(col(cols(1)).cast("long"), lit(65536L))), 1))

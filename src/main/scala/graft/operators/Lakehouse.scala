@@ -128,16 +128,6 @@ object Lakehouse {
       .orderBy(col("o_orderstatus"))
   }
 
-  /** Morton spread: interleave zeros between the low 16 bits of `c`
-    * (standard magic-number bit spread; public domain bit-twiddling). */
-  private def spread16(c: Column): Column = {
-    val x0 = c.bitwiseAND(lit(0xFFFFL))
-    val x1 = (x0.bitwiseOR(shiftleft(x0, 8))).bitwiseAND(lit(0x00FF00FFL))
-    val x2 = (x1.bitwiseOR(shiftleft(x1, 4))).bitwiseAND(lit(0x0F0F0F0FL))
-    val x3 = (x2.bitwiseOR(shiftleft(x2, 2))).bitwiseAND(lit(0x33333333L))
-    (x3.bitwiseOR(shiftleft(x3, 1))).bitwiseAND(lit(0x55555555L))
-  }
-
   // q76 — Z-order (Morton) clustering key over (partkey, suppkey): the
   // multi-dimensional layout primitive — writing the fact sorted by zval
   // (repartitionByRange(zval) + sortWithinPartitions) gives min/max file
@@ -145,9 +135,7 @@ object Lakehouse {
   // Pure integer bit-twiddling: deterministic in any engine.
   def q76ZOrder(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir).filter(col("l_orderkey") <= 400)
-      .withColumn("zval",
-        spread16(pmod(col("l_partkey"), lit(65536L)))
-          .bitwiseOR(shiftleft(spread16(pmod(col("l_suppkey"), lit(65536L))), 1)))
+      .withColumn("zval", graft.etl.TxLog.zKey(Seq("l_partkey", "l_suppkey")))
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_suppkey"), col("zval"))
       .orderBy(col("zval"), col("l_orderkey"), col("l_linenumber"))
@@ -159,9 +147,7 @@ object Lakehouse {
     * the range exchange samples boundaries, every executor writes locally
     * sorted runs, and no global sort materializes. */
   def writeZOrdered(li: DataFrame, out: String, nFiles: Int = 8): Unit =
-    li.withColumn("zval",
-      spread16(pmod(col("l_partkey"), lit(65536L)))
-        .bitwiseOR(shiftleft(spread16(pmod(col("l_suppkey"), lit(65536L))), 1)))
+    li.withColumn("zval", graft.etl.TxLog.zKey(Seq("l_partkey", "l_suppkey")))
       .repartitionByRange(nFiles, col("zval"))
       .sortWithinPartitions(col("zval"))
       .write.mode("overwrite").parquet(out)

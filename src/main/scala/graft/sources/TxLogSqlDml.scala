@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.command.ExecutedCommandExec
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
@@ -26,7 +26,7 @@ import graft.etl.TxLog
   * }}}
   *
   * to the engine halves that already exist ([[TxLog.deleteWhere]],
-  * [[TxLog.updateWhere]], [[TxLog.merge]]) via an injected PLANNER
+  * [[TxLog.updateWhere]], [[TxLog.mergeClauses]]) via an injected PLANNER
   * strategy — the probe-verified seam: stock Spark 4.1 analyzes all three
   * statements against any resolved relation and only fails at physical
   * planning when the table lacks row-level-operation support, so a
@@ -56,16 +56,16 @@ import graft.etl.TxLog
   *   WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ... | DELETE
   * }}}
   *
-  * and WITH SCHEMA EVOLUTION on both forms: star merges widen inside
-  * the commit ([[TxLog.merge]] mergeSchema); explicit clauses evolve
-  * either through the analyzer's catalog route
-  * ([[GraftCatalog.alterTable]]) or inside [[TxLog.mergeClauses]]
-  * (round-15, VERDICT r14 #2). The unconditional residual-free SET * /
-  * INSERT * keyed upsert (and the lone matched DELETE) keep the
-  * [[TxLog.merge]]/[[TxLog.deleteMatched]] fast path; everything else
-  * routes to [[TxLog.mergeClauses]], the general first-match-wins
-  * engine over the same file-pruned CoW. Cite: the reference's posture
-  * is ad-hoc SQL over gold tables
+  * and WITH SCHEMA EVOLUTION, which widens the declaration either
+  * through the analyzer's catalog route ([[GraftCatalog.alterTable]]) or
+  * inside [[TxLog.mergeClauses]] (round-15, VERDICT r14 #2). Every
+  * statement with an UPDATE or INSERT clause is planned by
+  * [[TxLog.mergeClauses]], the first-match-wins engine over the
+  * file-pruned CoW: the analyzer spells a star as by-name assignments,
+  * so `UPDATE SET *` is one more SET list and leaves every unassigned
+  * column as it was. The lone unconditional matched DELETE is
+  * [[TxLog.deleteMatched]], which also serves the CDC apply stream.
+  * Cite: the reference's posture is ad-hoc SQL over gold tables
   * (/root/reference/src/gold_catalog.py:80-84); this extends it to
   * transactional writes. */
 object TxLogSqlDml {
@@ -142,26 +142,6 @@ object TxLogDmlStrategy extends SparkStrategy {
       case other => (Nil, Seq(other))
     }
 
-  /** Is this action list the SET * / INSERT * form? The parser emits
-    * star actions; the analyzer may already have expanded them to
-    * explicit per-column assignments from same-named source attributes —
-    * accept both spellings of the same statement. */
-  private def isStarUpdate(as: Seq[MergeAction]): Boolean = as match {
-    case Seq(UpdateStarAction(None)) => true
-    case Seq(UpdateAction(None, assigns, _)) => assignsAreByName(assigns)
-    case _ => false
-  }
-  private def isStarInsert(as: Seq[MergeAction]): Boolean = as match {
-    case Seq(InsertStarAction(None)) => true
-    case Seq(InsertAction(None, assigns)) => assignsAreByName(assigns)
-    case _ => false
-  }
-  private def assignsAreByName(assigns: Seq[Assignment]): Boolean =
-    assigns.forall {
-      case Assignment(k: AttributeReference, v: AttributeReference) =>
-        k.name == v.name
-      case _ => false
-    }
   private def isDeleteOnly(as: Seq[MergeAction]): Boolean = as match {
     case Seq(org.apache.spark.sql.catalyst.plans.logical.DeleteAction(None)) => true
     case _ => false
@@ -190,30 +170,32 @@ object TxLogDmlStrategy extends SparkStrategy {
         other.sql)
   }
 
-  /** One analyzer MergeAction → one [[TxLog.MergeClause]]. Star actions
-    * expand to every target column taken from the same-named source
-    * column (the analyzer may have done this already — both spellings
-    * land here). */
+  /** One analyzer MergeAction → one [[TxLog.MergeClause]]. The analyzer
+    * expands a star into by-name assignments of every column the source
+    * has; the engine owns some of them. `UPDATE SET *` (an update marked
+    * `fromStar`) leaves generated columns (recomputed) and identity
+    * columns (immutable, the updateWhere rule) alone. An insert clause's
+    * same-named source value for a generated column, which is how
+    * `INSERT *` spells it, is recomputed too; its identity values follow
+    * the insert-clause rules ([[TxLog.mergeClauses]]). */
   private def clauseOf(a: MergeAction, targetOut: AttributeSet,
-                       sourceOut: AttributeSet,
-                       targetCols: Seq[String]): TxLog.MergeClause = {
+                       sourceOut: AttributeSet, generated: Set[String],
+                       identity: Set[String]): TxLog.MergeClause = {
     def rb(e: Expression): Column = rebindTS(e, targetOut, sourceOut)
     def assignMap(assigns: Seq[Assignment]): Map[String, Column] =
       assigns.map(a => assignedName("MERGE", a) -> rb(a.value)).toMap
-    def starAssigns: Map[String, Column] =
-      targetCols.map(c =>
-        c -> org.apache.spark.sql.functions.col(s"s.$c")).toMap
     a match {
-      case UpdateStarAction(cond) =>
-        TxLog.MergeClause("update", cond.map(rb), starAssigns)
-      case UpdateAction(cond, assigns, _) =>
-        TxLog.MergeClause("update", cond.map(rb), assignMap(assigns))
+      case UpdateAction(cond, assigns, fromStar) =>
+        TxLog.MergeClause("update", cond.map(rb), assignMap(assigns)
+          .filter { case (k, _) => !fromStar || !(generated(k) || identity(k)) })
       case org.apache.spark.sql.catalyst.plans.logical.DeleteAction(cond) =>
         TxLog.MergeClause("delete", cond.map(rb), Map.empty)
-      case InsertStarAction(cond) =>
-        TxLog.MergeClause("insert", cond.map(rb), starAssigns)
       case InsertAction(cond, assigns) =>
-        TxLog.MergeClause("insert", cond.map(rb), assignMap(assigns))
+        TxLog.MergeClause("insert", cond.map(rb), assignMap(assigns.filterNot {
+          case Assignment(k: AttributeReference, v: AttributeReference) =>
+            generated(k.name) && k.name == v.name && sourceOut.contains(v)
+          case _ => false
+        }))
       case other => throw new UnsupportedOperationException(
         s"unsupported MERGE action on a TxLog table: $other")
     }
@@ -255,40 +237,28 @@ object TxLogDmlStrategy extends SparkStrategy {
         val sourcePlan = m.sourceTable
         val deleteOnly = residual.isEmpty && isDeleteOnly(m.matchedActions) &&
           m.notMatchedActions.isEmpty && m.notMatchedBySourceActions.isEmpty
-        val starUpsert = residual.isEmpty && isStarUpdate(m.matchedActions) &&
-          isStarInsert(m.notMatchedActions) &&
-          m.notMatchedBySourceActions.isEmpty
-        if (deleteOnly || starUpsert)
-          // fast path: the unconditional keyed upsert/delete core — whole
-          // files replaced by source rows, no per-column CASE machinery.
-          // WITH SCHEMA EVOLUTION rides the star path: source-only
-          // columns widen the declaration in the same commit.
-          command("MERGE", path) { spark =>
-            val source = GraftSqlBridge.ofRows(spark, sourcePlan)
-            if (deleteOnly) TxLog.deleteMatched(spark, path, source, keyCols)
-            else TxLog.merge(spark, path, source, keyCols,
-              mergeSchema = m.withSchemaEvolution)
-          }
-        else {
-          // general grammar (round-14, VERDICT r13 #4): conditional WHEN
-          // clauses, partial-column UPDATE SET, NOT MATCHED BY SOURCE —
-          // rebound into TxLog.MergeClause lists over the t/s join
-          // aliases. WITH SCHEMA EVOLUTION composes (round-15, VERDICT
-          // r14 #2): columns the analyzer already evolved through
+        if (deleteOnly)
+          command("MERGE", path)(spark => TxLog.deleteMatched(spark, path,
+            GraftSqlBridge.ofRows(spark, sourcePlan), keyCols))
+        else
+          // conditional WHEN clauses, SET lists (a star is one), NOT
+          // MATCHED BY SOURCE — rebound into TxLog.MergeClause lists over
+          // the t/s join aliases. WITH SCHEMA EVOLUTION composes (round-15,
+          // VERDICT r14 #2): columns the analyzer already evolved through
           // GraftCatalog.alterTable resolve like any other; any still-new
           // assigned column widens the declaration inside the merge
           // commit via mergeSchema.
-          val targetCols = m.targetTable.output.map(_.name)
-          val mc = m.matchedActions.map(clauseOf(_, targetOut, sourceOut, targetCols))
-          val nc = m.notMatchedActions.map(clauseOf(_, targetOut, sourceOut, targetCols))
-          val sc = m.notMatchedBySourceActions.map(clauseOf(_, targetOut, sourceOut, targetCols))
-          val evolve = m.withSchemaEvolution
           command("MERGE", path) { spark =>
+            val gens = TxLog.generatedColsOf(path).keySet
+            val ids = TxLog.identityColsOf(path).keySet
+            def clauses(as: Seq[MergeAction]) =
+              as.map(clauseOf(_, targetOut, sourceOut, gens, ids))
             TxLog.mergeClauses(spark, path,
-              GraftSqlBridge.ofRows(spark, sourcePlan), keyCols, mc, nc, sc,
-              residual = residual, mergeSchema = evolve)
+              GraftSqlBridge.ofRows(spark, sourcePlan), keyCols,
+              clauses(m.matchedActions), clauses(m.notMatchedActions),
+              clauses(m.notMatchedBySourceActions), residual = residual,
+              mergeSchema = m.withSchemaEvolution)
           }
-        }
       case _ => Nil
     }
 

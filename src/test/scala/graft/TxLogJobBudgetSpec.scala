@@ -39,6 +39,7 @@ class TxLogJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     update(t); delete(t)
     TxLog.deleteMatched(spark, t, rows(300, 310, 0).select("id"), Seq("id"))
     TxLog.merge(spark, t, rows(500, 520, 1).unionByName(rows(7000, 7020, 1)), Seq("id"))
+    upsert(t, rows(600, 620, 1).unionByName(rows(7100, 7120, 1)))
     TxLog.append(spark, t, rows(8000, 8010, 0))
   }
   override def afterAll(): Unit = spark.stop()
@@ -77,6 +78,15 @@ class TxLogJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def delete(t: String) =
     TxLog.deleteWhere(spark, t, col("id").between(4000, 4199))
 
+  /** The star-shape clause MERGE (SQL `UPDATE SET *` / `INSERT *`):
+    * every column from the source, no conditions. */
+  private def upsert(t: String, src: DataFrame) = {
+    val all = src.columns.map(c => c -> col(s"s.$c")).toMap
+    TxLog.mergeClauses(spark, t, src, Seq("id"),
+      matched = Seq(TxLog.MergeClause("update", None, all)),
+      notMatched = Seq(TxLog.MergeClause("insert", None, all)))
+  }
+
   /** Assert `verb` ran within `max` jobs, naming their call sites. */
   private def within(verb: String, max: Int)(body: => Any): Unit = {
     val js = jobsOf(body)
@@ -101,6 +111,14 @@ class TxLogJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     within("merge", 10)(TxLog.merge(spark, cdfOn, src, Seq("id")))
     val a = jobsOf(TxLog.append(spark, cdfOn, rows(6200, 6699, 0)))
     assert(a.size == 1, s"append ran ${a.size} jobs: ${a.mkString("; ")}")
+  }
+
+  test("CDF on: star-shape mergeClauses runs at most 7 jobs, as merge does") {
+    // the inserts anti-join the affected rows' keys (no full-table key
+    // scan), and the rewrite and the change images share one broadcast
+    // of the source
+    val src = rows(3200, 3399, 7).unionByName(rows(9000, 9199, 7))
+    within("mergeClauses", 7)(assert(upsert(cdfOn, src).isDefined))
   }
 
   test("CDF off: updateWhere and deleteWhere run at most 3 jobs each") {
